@@ -32,38 +32,28 @@ from pyspark.sql import SparkSession  # noqa: E402
 def get_profiling_session(event_dir: str) -> SparkSession:
     """Mirror of session.get_session plus event logging (profiling only)."""
     from tp_integ_data_pipeline_spark.session import (
-        AQE_MIN_PARTITION_SIZE,
         DEFAULT_CPUS,
+        ENGINE_CONFS,
+        _install_worker_shim,
         _ship_package,
+        default_driver_memory,
     )
 
     builder = (
         SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName("profile")
         .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            AQE_MIN_PARTITION_SIZE,
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.compress", "false")
         .config("spark.eventLog.dir", event_dir)
     )
+    for key, value in ENGINE_CONFS.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
-    from tp_integ_data_pipeline_spark.session import _install_worker_shim
-
     _install_worker_shim(spark)
     return spark
 

@@ -97,7 +97,7 @@ def test_zipimport_patch_rereads_changed_archive(tmp_path):
 
 def test_scan_spread_gate_and_determinism(spark, sf_dir):
     """The unsplittable-scan spread (sources/fixtures) must fire only
-    for sub-split files above the dim floor, use the FIXED partition
+    for sub-split files above the size floor, use the FIXED partition
     count (layout independent of core count), and be deterministic
     across loads (same rows in the same partitions — the float-fold
     stability contract)."""
@@ -107,24 +107,20 @@ def test_scan_spread_gate_and_determinism(spark, sf_dir):
         load_table,
     )
 
-    # round 16: the spread is consumer-opt-in via session conf (set per
-    # query by plans/registry.apply_query_confs) — OFF by default
+    # the spread is a load-call opt-in: OFF by default, and a corpus
+    # under the size floor stays single-task even when opted in
     d0 = load_table(spark, sf_dir, "documents")
     assert d0.rdd.getNumPartitions() <= 2
+    small = load_table(spark, sf_dir, "documents", spread=True)
+    assert small.rdd.getNumPartitions() <= 2
 
-    spark.conf.set("spark.tp_integ.spreadCorpusScan", "true")
     orig = fixtures._SPREAD_MIN_BYTES
     fixtures._SPREAD_MIN_BYTES = 1
     try:
-        # region at any SF is dim-sized -> single-task scan, no spread
-        # (not an allowlisted corpus table)
-        region = load_table(spark, sf_dir, "region")
-        assert region.rdd.getNumPartitions() <= 2
-
         # force-eligible table: the floor is dropped so documents
         # spreads even at the small test SF; check fixed width +
         # per-partition determinism across two independent loads
-        d1 = load_table(spark, sf_dir, "documents")
+        d1 = load_table(spark, sf_dir, "documents", spread=True)
         assert d1.rdd.getNumPartitions() == _SPREAD_PARTITIONS
         from pyspark.sql import functions as F
 
@@ -136,11 +132,10 @@ def test_scan_spread_gate_and_determinism(spark, sf_dir):
                 .collect()
             )
 
-        d2 = load_table(spark, sf_dir, "documents")
+        d2 = load_table(spark, sf_dir, "documents", spread=True)
         assert layout(d1) == layout(d2)
     finally:
         fixtures._SPREAD_MIN_BYTES = orig
-        spark.conf.set("spark.tp_integ.spreadCorpusScan", "false")
 
 
 def test_parse_bytes():

@@ -1,10 +1,11 @@
-"""Round-16 optimization tests: per-query conf scoping, the shim
+"""Round-16 optimization tests: per-query execution choices, the shim
 engagement probe, the warm-started IRLS trainer, and the 2-trigger
 streaming flush staging."""
 
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
 import numpy as np
 import pytest
@@ -12,56 +13,43 @@ from pyspark.sql import functions as F
 
 
 def test_query_confs_apply_and_reset(spark):
-    """A query with overrides runs under them; the NEXT query (no
-    entry) is restored to baseline — no leakage."""
+    """A dense query runs under the 128k AQE floor; the NEXT query gets
+    the session baseline back — no leakage."""
     from tp_integ_data_pipeline_spark.plans.registry import (
-        BASELINE_CONFS,
-        QUERY_CONFS,
+        DENSE_SHUFFLE_QUERIES,
         apply_query_confs,
     )
+    from tp_integ_data_pipeline_spark.session import AQE_MIN_PARTITION_SIZE
 
     floor_key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    some_dense = next(n for n, c in QUERY_CONFS.items() if floor_key in c)
-    apply_query_confs(spark, some_dense)
-    assert spark.conf.get(floor_key) == QUERY_CONFS[some_dense][floor_key]
-    apply_query_confs(spark, "q01_pricing_summary")  # no overrides
-    assert spark.conf.get(floor_key) == BASELINE_CONFS[floor_key]
-    # spread flag likewise
-    spread_key = "spark.tp_integ.spreadCorpusScan"
-    some_spread = next(n for n, c in QUERY_CONFS.items() if spread_key in c)
-    apply_query_confs(spark, some_spread)
-    assert spark.conf.get(spread_key) == "true"
+    assert "q163_triangle_count" in DENSE_SHUFFLE_QUERIES
+    apply_query_confs(spark, "q163_triangle_count")
+    assert spark.conf.get(floor_key) == "128k"
     apply_query_confs(spark, "q01_pricing_summary")
-    assert spark.conf.get(spread_key) == "false"
+    assert spark.conf.get(floor_key) == AQE_MIN_PARTITION_SIZE
 
 
-def test_query_confs_overrides_subset_of_baseline():
-    """The import-time invariant: every override key has a baseline
-    entry (otherwise an override would leak into the next query)."""
-    from tp_integ_data_pipeline_spark.plans.registry import (
-        BASELINE_CONFS,
-        QUERY_CONFS,
-    )
-
-    for name, confs in QUERY_CONFS.items():
-        assert set(confs) <= set(BASELINE_CONFS), name
-
-
-def test_registered_query_runs_under_its_confs(spark, sf_dir):
-    """The registry wrapper applies confs at invocation: a spread
-    query's loaded corpus scan is actually spread."""
-    from tp_integ_data_pipeline_spark.plans.registry import QUERIES, QUERY_CONFS
+def test_spread_is_bound_in_the_plan(spark, sf_dir):
+    """The corpus-scan spread is part of the consumer's built plan: q57
+    carries the fixed-width round-robin exchange, while q164 (a light
+    consumer) does not, even when built right after q57."""
+    from tp_integ_data_pipeline_spark.plans.registry import QUERIES
     from tp_integ_data_pipeline_spark.sources import fixtures
 
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    spread = f"RoundRobinPartitioning({fixtures._SPREAD_PARTITIONS})"
     orig = fixtures._SPREAD_MIN_BYTES
     fixtures._SPREAD_MIN_BYTES = 1
     try:
-        df = QUERIES["q57_fingerprint"](spark, sf_dir)
-        assert "true" == spark.conf.get("spark.tp_integ.spreadCorpusScan")
-        assert df.count() > 0
+        q57 = QUERIES["q57_fingerprint"](spark, sf_dir)
+        q164 = QUERIES["q164_bm25_topk"](spark, sf_dir)
+        assert spread in plan(q57)
+        assert spread not in plan(q164)
+        assert q57.count() > 0
     finally:
         fixtures._SPREAD_MIN_BYTES = orig
-        spark.conf.set("spark.tp_integ.spreadCorpusScan", "false")
 
 
 def test_worker_shim_engagement_probe(spark):
@@ -103,8 +91,12 @@ def test_irls_warm_start_same_optimum(spark):
     )
     assert np.abs(b0 - b1).max() < 1e-6
     assert s1["collect_rounds"] <= s0["collect_rounds"]
+    # a bad warm start fails before any Spark job (checkpoint, join)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
     with pytest.raises(ValueError, match="beta0"):
         logreg_irls_train(spark, feats, labels, d=d, beta0=np.zeros(d + 3))
+    assert set(tracker.getJobIdsForGroup()) == jobs_before
 
 
 def test_flush_staging_two_files(spark, tmp_path):
@@ -116,8 +108,8 @@ def test_flush_staging_two_files(spark, tmp_path):
 
     spark.createDataFrame(
         [
-            (1, "2024-01-01T00:01:00", 1, "view", 1.0, "{}"),
-            (2, "2024-01-01T00:20:00", 2, "click", 2.0, "{}"),
+            (1, datetime(2024, 1, 1, 0, 1), 1, "view", 1.0, "{}"),
+            (2, datetime(2024, 1, 1, 0, 20), 2, "click", 2.0, "{}"),
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     ).write.parquet(str(tmp_path / "events.parquet"))

@@ -152,7 +152,7 @@ def q93_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     — bounded by the benchmark, not the corpus — and the corpus makes
     one pass: explode row-local-distinct grams, semi-join, re-group.
     """
-    docs = load_table(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "lang", word_ngrams(_words(), 8).alias("g")
     )
     bench_grams = bounded_bench_grams(

@@ -42,7 +42,7 @@ def _corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
+        docs = load_table(spark, sf_dir, "documents", spread=True)
         sh = shingles(docs, "doc_id", "text", k=3)
         return minhash_signatures(
             sh, num_perm=NUM_PERM, with_sizes=True
@@ -55,7 +55,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
+        docs = load_table(spark, sf_dir, "documents", spread=True)
         return minhash_near_dup_pairs(
             docs, "doc_id", "text", k=3, threshold=0.6,
             sig=_corpus_sigs(spark, sf_dir),
@@ -122,7 +122,7 @@ def q40_dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q41_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     # The exact all-pairs path consumes the shingle relation from three
     # branches (self-join a/b + sizes); pinning it lazily is fine HERE
     # because pair_jaccard(pairs=None) is by contract the
@@ -443,7 +443,7 @@ def q105_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on fixed-width rows; the only windows are per-doc."""
     from tp_integ_data_pipeline_spark.operators.substring import duplicated_spans
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     spans = duplicated_spans(docs, "doc_id", "text", k=20)
     return spans.select(
         "id",
@@ -492,7 +492,7 @@ def q106_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         strip_spans,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     spans = duplicated_spans(docs, "doc_id", "text", k=20)
     stripped = strip_spans(docs, spans, "doc_id", "text")
     return stripped.select(
@@ -654,7 +654,7 @@ def q108_substring_winnowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the selection + merge bit-for-bit."""
     from tp_integ_data_pipeline_spark.operators.substring import duplicated_spans
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     spans = duplicated_spans(docs, "doc_id", "text", k=20, winnow=4)
     return spans.select(
         "id",

@@ -6,180 +6,63 @@ Queries without an oracle entry (genuinely non-SQL-expressible ops:
 approximate ANN, SimHash candidates, streaming-internal state) get the
 driver's weaker rows-only check.
 
-Round-16 per-query conf scoping
--------------------------------
-Round 15 shipped two SESSION-GLOBAL performance settings — an AQE
-coalescing floor of 128k and a corpus-scan spread — that won big on
-the compute-dense families (q175 1.7×, q57 2.1×, q185 2.0× in the
-driver's own run) but taxed the small-query tail: against frozen
-same-window controls, 31 keys ran >1.3× slower because every sub-MB
-shuffle got ~8× more task waves and every corpus consumer paid a
-32-way exchange it didn't need (round-15 VERDICT item 1).
+Per-query execution choices
+---------------------------
+Two performance choices vary by query; both are plan-level or scoped
+to one conf, and neither changes a graded result:
 
-The fix is scoping, not reverting: each registered query runs under
-exactly the confs it measured well with.  At invocation the registry
-wrapper (a) restores ``BASELINE_CONFS`` — so no query inherits a
-previous query's overrides — and (b) applies the query's own entry
-from ``QUERY_CONFS``.  The wrapper runs inside the timed region of
-bench.py and inside the correctness harness alike, and the overrides
-are performance-only (partition counts / scan layout); every graded
-output is partition-layout independent (the r4–r6 hardening, re-proven
-by the 3-SF differential on final round-16 code).
+* the corpus-scan spread is a keyword of the load call
+  (``load_table(..., spread=True)``) at the text- and vector-heavy
+  consumers, so it is bound when the plan is built;
+* the AQE coalescing floor is set by ``apply_query_confs`` when the
+  query is built: 128k for the compute-dense joins in
+  ``DENSE_SHUFFLE_QUERIES``, the session baseline for every other
+  query.
 
-Both knobs stay env-overridable for cluster tuning, same as r15.
+Shuffle widths follow the session's ``spark.sql.shuffle.partitions``;
+the registry never writes it.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tp_integ_data_pipeline_spark.session import AQE_MIN_PARTITION_SIZE
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Conf values every registered query starts from.  The AQE coalescing
-# floor returns to Spark's stock 1m default (the r15 128k global was
-# the tail tax's first cause); the corpus-scan spread is OFF unless a
-# query opts in (the second cause).  Values here are what a query gets
-# when it has no QUERY_CONFS entry.
-BASELINE_CONFS: dict[str, str] = {
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"
-    ),
-    "spark.tp_integ.spreadCorpusScan": "false",
-    # mirrors session.get_session/tune_for_session; here so per-query
-    # overrides (streaming state-store width) are always reset too
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-}
-
-# The r15 floor, now scoped: AQE's bytes-only coalescing serializes
-# shuffles whose COMPUTE is far denser than their bytes (candidate-pair
-# relations feeding array_intersect verifies; adjacency intersections;
-# sub-MB sketch/probe stages).  128k lets parallelismFirst actually
-# deliver parallelism there; everywhere else the stock 1m keeps the
-# fewer-larger-partitions discipline (guide §2.2).
-_DENSE = {
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE_DENSE", "128k"
-    )
-}
-# Streaming state-store width: a streaming stateful operator keys its
-# state store off spark.sql.shuffle.partitions at query start, and at
-# fixture scale 32 state partitions is pure per-trigger machinery (32
-# state files + commits per micro-batch for ~100k rows of state).
-# Width should track STATE SIZE, not core count — env-parameterized
-# with a local default; production deployments size it to their state
-# volume (these finite memory-sink streams are fresh per call, so no
-# checkpoint-compat concern). Measured: q232 2.84 -> 1.92 s min-of-3.
-_STREAM_STATE = {
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"
-    )
-}
-
-# Iterative-loop shuffle width: fixed-iteration graph/recursion loops
-# (PageRank, recursive walk) carry NODE-SIZED state through 3-4
-# exchanges per iteration; at the session's corpus-scale width every
-# iteration pays full task waves for kilobyte partitions (the r15
-# scaling block: q141 ran 1.7x FASTER on 8 cores). Width follows the
-# loop state, not the cluster — env-parameterized for deployments
-# whose graphs are data-sized.
-_NARROW = {
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS", "8"
-    )
-}
-
-# The r15 corpus-scan spread (sources/fixtures.py), now opt-in: worth
-# paying only where the consumer's per-row map work dominates (gram /
-# shingle explodes, tokenization, hashing) — measured per key, see
-# OPTIMIZATION_r16.md.
-_SPREAD = {"spark.tp_integ.spreadCorpusScan": "true"}
-
-# Per-query overrides, central so the allowlists are auditable in one
-# place.  Membership is measurement-driven (round-15 interleaved A/Bs +
-# the per-change attribution of the committed r15 snapshots + fresh
-# round-16 A/Bs); keys not listed run on BASELINE_CONFS.
-QUERY_CONFS: dict[str, dict[str, str]] = {
-    # -- scan-spread winners (heavy row-local text/token map work) --
-    "q41_ngram_jaccard_topk": {**_SPREAD},
-    "q42_minhash_lsh_pairs": {**_SPREAD},
-    "q56_lang_id_confusion": {**_SPREAD},
-    "q57_fingerprint": {**_SPREAD},
-    "q90_corpus_dedup": {**_SPREAD},
-    "q93_decontam": {**_SPREAD, **_DENSE},
-    "q105_substring_spans": {**_SPREAD},
-    "q106_substring_strip": {**_SPREAD},
-    "q108_substring_winnowed": {**_SPREAD},
-    "q112_dsir_weights": {**_SPREAD},
-    "q113_trigram_surprisal": {**_SPREAD},
-    "q165_count_min_sketch": {**_SPREAD, **_DENSE},
-    "q184_cdc_chunks": {**_SPREAD, **_DENSE},
-    "q50_knn_bruteforce": {**_SPREAD},
-    "q193_backoff_lm_score": {**_SPREAD},
-    "q195_ngram_diversity": {**_SPREAD},
-    "q197_consecutive_line_collapse": {**_SPREAD},
-    "q198_char_entropy": {**_SPREAD},
-    # round-16 isolated A/Bs (scripts/ab_query.py, min-of-3 interleaved):
-    # q179 2.38 -> 1.95 (spread+dense), q167 1.75 -> 1.36 (spread)
-    "q179_containment_join": {**_SPREAD, **_DENSE},
-    "q167_source_novelty": {**_SPREAD},
-    # -- streaming stateful / micro-batch drains: state-store width --
-    # (q232 2.84 -> 1.92, q60 1.67 -> 1.08, q261 8.49 -> 6.80 min-of-3)
-    "q60_stream_tumbling_window": {**_STREAM_STATE},
-    "q61_stream_dedup": {**_STREAM_STATE},
-    "q64_stateful_counter": {**_STREAM_STATE},
-    "q68_continuous_rollup": {**_STREAM_STATE},
-    "q89_stream_late_dedup": {**_STREAM_STATE},
-    "q91_stream_stream_join": {**_STREAM_STATE},
-    "q122_stream_left_outer_join": {**_STREAM_STATE},
-    "q143_stream_static_join": {**_STREAM_STATE},
-    "q232_stream_session_window": {**_STREAM_STATE},
-    "q235_stream_tumbling_append": {**_STREAM_STATE},
-    "q236_stream_sliding_append": {**_STREAM_STATE},
-    "q261_stream_admission": {**_SPREAD, **_STREAM_STATE},
-    "q267_chain_admission": {**_STREAM_STATE},
-    # -- compute-dense small-shuffle winners (AQE 128k floor) --
-    "q175_prefix_similarity_join": {**_SPREAD, **_DENSE},
-    "q185_cross_source_dup_matrix": {**_SPREAD, **_DENSE},
-    "q163_triangle_count": {**_DENSE, **_NARROW},
-    "q126_embedding_covariance": {**_DENSE},
-    "q103_incremental_neardup": {**_DENSE},
-    # -- iterative loops: bounded per-round state, narrow width --
-    # (min-of-3 interleaved: q141 4.42 -> 3.45, q124 4.16 -> 3.42,
-    #  q163 3.49 -> 3.16; min-of-2: q138 2.94 -> 2.46)
-    "q141_pagerank": {**_NARROW},
-    "q124_recursive_walk": {**_DENSE, **_NARROW},
-    "q138_incremental_view": {**_NARROW},
-    # q153 BPE: learned-merge application — compute-dense sub-MB
-    # shuffles (min-of-2: 3.43 -> 2.82 with the 128k floor)
-    "q153_bpe_tokenizer": {**_DENSE},
-}
-
-
-# The reset invariant: every key any query overrides MUST have a
-# baseline entry, or the override would leak into the next query.
-# Enforced at import so a new entry can't silently break scoping.
-for _n, _c in QUERY_CONFS.items():
-    _extra = set(_c) - set(BASELINE_CONFS)
-    if _extra:
-        raise ValueError(
-            f"QUERY_CONFS[{_n}] overrides {_extra} without a BASELINE_CONFS entry"
-        )
+# Compute-dense joins over sub-MB shuffles: AQE's bytes-only
+# coalescing folds their candidate-pair / adjacency partitions into one
+# or two tasks, so a 128k floor restores the parallelism (local[4],
+# sf0.1, min of 3 interleaved, 1m -> 128k: q163 8.0 -> 4.5 s, q175
+# 6.1 -> 3.2 s, q185 6.9 -> 3.6 s, q184 1.5 -> 1.4 s; the other former
+# floor users tied, see scripts/ab_r17_conf_mechanisms.json). It is not
+# global because on light shuffles it only multiplies task waves.
+DENSE_SHUFFLE_QUERIES = frozenset(
+    {
+        "q163_triangle_count",
+        "q175_prefix_similarity_join",
+        "q184_cdc_chunks",
+        "q185_cross_source_dup_matrix",
+    }
+)
 
 
 def apply_query_confs(spark: SparkSession, name: str) -> None:
-    """Reset BASELINE_CONFS, then apply ``name``'s overrides (if any).
-    Runtime-settable confs only; failures fall back to session values
-    (stock behavior stays correct — these are performance knobs)."""
-    overrides = QUERY_CONFS.get(name, {})
-    for key, value in BASELINE_CONFS.items():
-        try:
-            spark.conf.set(key, overrides.get(key, value))
-        except Exception:  # pragma: no cover - immutable conf in some envs
-            pass
+    """Set the AQE coalescing floor for query ``name``.
+
+    The floor is read when the built plan EXECUTES, so the contract is:
+    a registered query is built, then executed, before the next one is
+    built (bench.py, the oracle harness and perfbench all run that
+    way). The value is always written, so no query inherits the
+    previous one's floor."""
+    spark.conf.set(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        "128k" if name in DENSE_SHUFFLE_QUERIES else AQE_MIN_PARTITION_SIZE,
+    )
 
 
 def query(name: str, oracle: str | None = None):

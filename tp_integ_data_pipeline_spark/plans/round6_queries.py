@@ -128,7 +128,7 @@ def q165_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces every collision exactly.""".format(
         d=_CMS_DEPTH, w=_CMS_WIDTH
     )
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     toks = (
         docs.select(F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -221,7 +221,7 @@ def q167_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly in (0, 1] — no -0.0 trap)."""
     from tp_integ_data_pipeline_spark.plans.curation import word_ngrams
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     grams = (
         docs.select("source", F.split("text", " ").alias("w"))
         .select("source", F.explode(word_ngrams("w", 3)).alias("gram"))
@@ -694,18 +694,17 @@ def q173_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max(c), 6).alias(f"__mx_{c}"),
             # avg via an exact INTEGER-CENTS sum: a float AVG's
             # partial-combine order follows the scan layout (the r15
-            # scan spread exposed a one-ULP ROUND(,6) flip here), and
-            # r15's DECIMAL(38,12) fix was order-independent but paid
-            # Decimal128 arithmetic on all four measures (1.68× the
-            # query, r15 VERDICT item 2). All four fact measures are
-            # exactly 2-decimal at every SF (max |frac(100·c)| ≤ 1e-9,
-            # re-verified round 16), so SUM(CAST(ROUND(c*100) AS LONG))
-            # is exact, order-independent, and runs as codegen'd long
-            # arithmetic; the oracle spells the identical formulation,
-            # and the final double division + ROUND(,6) is the same
-            # IEEE op in both engines. Hash re-proven at 3 SFs.
+            # scan spread exposed a one-ULP ROUND(,6) flip here). All
+            # four fact measures are exactly 2-decimal at every SF (max
+            # |frac(100·c)| ≤ 1e-9, re-verified round 16), so summing
+            # ROUND(c*100) as DECIMAL(38,0) is exact and
+            # order-independent. It is not summed as LONG, which wraps
+            # silently on overflow under non-ANSI mode while the
+            # oracle's SUM(BIGINT) widens to HUGEINT; the decimal sum
+            # costs ~1.8x the LONG one at sf0.1. The final double
+            # division + ROUND(,6) is the same IEEE op in both engines.
             F.round(
-                F.sum(F.round(F.col(c) * 100).cast("long")).cast("double")
+                F.sum(F.round(F.col(c) * 100).cast("decimal(38,0)")).cast("double")
                 / F.lit(100.0)
                 / F.count(F.col(c)),
                 6,
@@ -776,7 +775,7 @@ def _ordered_sets(spark: SparkSession, sf_dir: str) -> "DataFrame":
     from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
 
     def build() -> "DataFrame":
-        docs = load_table(spark, sf_dir, "documents")
+        docs = load_table(spark, sf_dir, "documents", spread=True)
         sh = shingles(docs, "doc_id", "text", k=3).select(
             "id", F.col("sh").alias("tok")
         )
@@ -980,7 +979,7 @@ def q179_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     q93's membership-only decontam. Oracle = naive all-pairs."""
     from tp_integ_data_pipeline_spark.operators.dedup import containment_join, shingles
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     bench = docs.filter(F.col("doc_id") % 83 == 0).select(
         F.col("doc_id").alias("bid"),
         F.expr(

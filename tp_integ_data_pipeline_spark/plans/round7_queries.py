@@ -408,7 +408,7 @@ def q184_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk relation replaces the doc relation at ~17x the row count
     but bounded row width — the unit the incremental near-dup index
     (q103) and RTBF erasure operate on in a chunk-store design."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     toked = docs.select("doc_id", F.split("text", " ").alias("w"))
     flags = F.expr(
         "transform(sequence(1, size(w)), i -> CASE WHEN i >= 4 AND "
@@ -510,7 +510,7 @@ def q185_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.operators.dedup import set_similarity_join
     from tp_integ_data_pipeline_spark.plans.round6_queries import _ordered_sets
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     pairs = set_similarity_join(None, _XSRC_T, ordered=_ordered_sets(spark, sf_dir))
     src = docs.select("doc_id", "source")
     lab = (
@@ -1117,7 +1117,7 @@ def q193_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain equi-joins on the gram key; the only cross join is the 1-row
     (n_tok, vocab) scalar. No window anywhere; output is one row per
     scored doc."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     arr = F.split(F.col("text"), " ")
     pair_structs = F.when(
         F.size(arr) >= 2,
@@ -1321,7 +1321,7 @@ def q195_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable; the uniqueness pass reuses the SAME distinct
     (source, trigram) relation (checkpointed once) keyed by trigram —
     cost tracks the distinct-gram count, never pairs of sources."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     arr = F.split(F.col("text"), " ")
     tri = F.when(
         F.size(arr) >= 3,
@@ -1512,7 +1512,7 @@ def q197_consecutive_line_collapse(spark: SparkSession, sf_dir: str) -> DataFram
     over the token array (no explode, no window, no shuffle beyond
     the output sort). The oracle replays it relationally with
     LAG-over-position; the engine never pays that window."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     lines = F.expr(
         f"""transform(
               sequence(1, (size(split(text, ' ')) + {_LINE_W - 1}) div {_LINE_W}),
@@ -1575,7 +1575,7 @@ def q198_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational rule). Entropy is nonnegative (no −0.0 trap): c·ln(c)
     ≤ N·ln(N) by concavity, exactly 0 for single-char docs on both
     engines."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     # run boundaries: 1-based positions p where sorted[p] != sorted[p-1];
     # the gap to the NEXT boundary (or N+1) is that run's length
     bnds = F.expr(

@@ -69,7 +69,7 @@ def q112_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     target-like data out of a raw crawl. Weight math and hashing in
     operators/selection.dsir_weights (md5-bucketed features, so the
     oracle replays the exact bucketing)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     w = dsir_weights(docs, F.col("lang") == "en")
     return (
         w.select(F.col("id").alias("doc_id"), "weight")
@@ -104,7 +104,7 @@ def q113_trigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram model — the CCNet-style perplexity-filter shape with a
     count LM standing in for KenLM (operators/selection.trigram_
     surprisal; stats-gated vocab broadcast)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     s = trigram_surprisal(docs)
     return (
         s.select(F.col("id").alias("doc_id"), "n_grams", "surprisal")

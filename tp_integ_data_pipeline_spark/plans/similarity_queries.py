@@ -33,7 +33,7 @@ _COS = (
     """,
 )
 def q50_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings", spread=True)
     queries_df = emb.filter(F.col("vec_id") < 10)
     return knn_bruteforce(emb, queries_df, k=5).orderBy("q_id", "rank")
 

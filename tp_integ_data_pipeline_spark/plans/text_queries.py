@@ -94,7 +94,7 @@ def q56_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang_profiles/lang_id operators remain for offline-profile use.
     from tp_integ_data_pipeline_spark.operators.text import lang_profile_and_id
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     pred = lang_profile_and_id(docs, k=3, top_n=20)
     return (
         docs.select(F.col("doc_id").alias("id"), F.col("lang").alias("true_lang"))
@@ -126,7 +126,7 @@ def q57_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form (operators.text.fingerprint) ~1.6×: md5 runs inside
     # whole-stage codegen instead of the interpreted higher-order
     # lambda. Left join keeps shingle-less (short) docs with null fp.
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", spread=True)
     grams = docs.select(
         "doc_id", F.explode(F.array_distinct(char_ngrams("text", k=8))).alias("g")
     )

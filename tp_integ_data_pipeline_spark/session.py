@@ -19,15 +19,46 @@ from pyspark.sql import SparkSession
 # spark.sql.adaptive.coalescePartitions for the rest.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# AQE coalescing floor: round 15 set a GLOBAL 128k floor here (AQE's
-# bytes-only coalescing serializes compute-dense small shuffles —
-# q175/q185/q163 wins), but the frozen-control comparison showed it
-# taxes every OTHER sub-MB shuffle with ~8× more task waves (the r15
-# VERDICT's 31-key tail). Round 16 scopes it per query instead:
-# plans/registry.py restores this baseline (stock 1m) at every query
-# invocation and applies 128k only for the measured winners. The env
-# override tunes the BASELINE for foreign deployments.
-AQE_MIN_PARTITION_SIZE = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")
+# AQE coalescing floor every query starts from: Spark's stock 1m.
+# plans/registry.apply_query_confs lowers it to 128k for the few
+# compute-dense joins that measured a win.
+AQE_MIN_PARTITION_SIZE = "1m"
+
+# Runtime engine confs, shared by get_session (builder) and
+# tune_for_session (an externally created session).
+ENGINE_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": AQE_MIN_PARTITION_SIZE,
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Runtime bloom-filter semi-join reduction: on a selective join
+    # the big side is pre-filtered by a bloom filter built from the
+    # small side — at 100 TB this skips whole row groups before the
+    # shuffle. Catalyst only injects it where estimated-selective,
+    # so locally it is a no-op with zero risk.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
+    # reader rejects; read as long and convert (sources/fixtures.py).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def default_driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half of the host's MemTotal capped
+    at 16g: the driver JVM shares the host with Python workers and the
+    OS, and a heap sized past physical memory fails only under load."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, kb // 2048)}m"
 
 
 def get_session(app_name: str = "tp_integ_data_pipeline_spark", cpus: int | None = None) -> SparkSession:
@@ -36,28 +67,11 @@ def get_session(app_name: str = "tp_integ_data_pipeline_spark", cpus: int | None
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            AQE_MIN_PARTITION_SIZE,
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter semi-join reduction: on a selective join
-        # the big side is pre-filtered by a bloom filter built from the
-        # small side — at 100 TB this skips whole row groups before the
-        # shuffle. Catalyst only injects it where estimated-selective,
-        # so locally it is a no-op with zero risk.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
-        # reader rejects; read as long and convert (sources/fixtures.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
+    for key, value in ENGINE_CONFS.items():
+        builder = builder.config(key, value)
     if os.environ.get("SPARK_GRAFT_WAREHOUSE"):
         builder = builder.config("spark.sql.warehouse.dir", os.environ["SPARK_GRAFT_WAREHOUSE"])
     spark = builder.getOrCreate()
@@ -286,17 +300,12 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     """
     _ship_package(spark)
     _install_worker_shim(spark)
-    for key, value in (
-        ("spark.sql.shuffle.partitions", str(DEFAULT_CPUS)),
-        ("spark.sql.optimizer.runtime.bloomFilter.enabled", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.minPartitionSize", AQE_MIN_PARTITION_SIZE),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    confs = {
+        **ENGINE_CONFS,
+        # widths follow the live session's parallelism, not the env
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+    }
+    for key, value in confs.items():
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - immutable conf in some envs

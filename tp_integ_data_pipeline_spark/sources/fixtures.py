@@ -29,8 +29,16 @@ FIXTURE_TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table; normalizes events.ts to TimestampType."""
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
+) -> DataFrame:
+    """Read one fixture table; normalizes events.ts to TimestampType.
+
+    ``spread=True`` is the consumer's opt-in to the unsplittable-scan
+    spread (see ``_spread_unsplittable_scan``); only the corpus
+    consumers whose row-local work is heavy pass it. Relational facts
+    regressed when spread: their consumers aggregate in the scan stage,
+    so the extra exchange only costs."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
@@ -48,12 +56,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # an instant yields the same values the bigint path produced —
         # one stable events schema across Spark minor versions.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return _spread_unsplittable_scan(spark, df, path, name)
+    return _spread_unsplittable_scan(spark, df, path) if spread else df
 
 
-def _spread_unsplittable_scan(
-    spark: SparkSession, df: DataFrame, path: str, name: str
-) -> DataFrame:
+def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-15 (guide §2.5 input skew): the fixture tables are single
     row-group parquet FILES, so the scan is ONE task and every
     row-local transform before the first exchange — shingle explodes,
@@ -65,9 +71,7 @@ def _spread_unsplittable_scan(
     size ≤ spark.sql.files.maxPartitionBytes), i.e. exactly the case
     where the scan cannot parallelize itself and the redistribution
     shuffle is bounded by ONE split of data — at production scale
-    inputs span many splits/files and this is a no-op. The partition
-    count follows the session's scheduling parallelism, the same
-    scale-adaptive source the shuffle-partition default uses.
+    inputs span many splits/files and this is a no-op.
 
     Every registered query's graded output is partition-layout
     independent (exact/decimal aggregates, deterministic folds for the
@@ -75,26 +79,18 @@ def _spread_unsplittable_scan(
     spreading the scan changes wall-clock only; the full 3-SF oracle
     differential re-proves this on the final round-16 code.
 
-    Round 16: the spread is CONSUMER-OPT-IN via the session conf
-    ``spark.tp_integ.spreadCorpusScan`` (set per query by
-    plans/registry.apply_query_confs).  Round 15 applied it to every
-    corpus consumer and the frozen-control comparison showed the
-    exchange is a net loss for consumers whose map work is light
-    (q240/q164/q239/q237/q158/q200 et al — the r15 VERDICT's 31-key
-    tail); only the gram/shingle/token-explode families keep it."""
+    The spread is a per-consumer choice bound in the plan: the
+    gram/shingle/token and vector consumers win (local[4], sf0.1: q57
+    3.8 -> 1.5 s, q198 3.0 -> 1.2 s), while on consumers whose map work
+    is light the extra exchange costs more than it saves."""
     try:
-        if name not in _SPREAD_TABLES:
-            return df
-        if spark.conf.get("spark.tp_integ.spreadCorpusScan", "false") != "true":
-            return df
         size = os.path.getsize(path)
         max_split = int(
             _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
         )
-        # lower bound: spreading a dim-sized table (region, nation,
-        # supplier) would ADD a 32-task wave to every consumer for no
-        # map-side work worth parallelizing; those stay single-task
-        # (and keep their broadcast-build cost at one partition).
+        # lower bound: on a small file the 32-task wave costs more
+        # than the serial map work it spreads (the sf0.01 corpora stay
+        # single-task)
         if size > max_split or size < _SPREAD_MIN_BYTES:
             return df
         # FIXED partition count, not defaultParallelism: the spread
@@ -105,8 +101,7 @@ def _spread_unsplittable_scan(
         # single-split scan is deterministic (file order in, fixed
         # cycle out, sortBeforeRepartition pinning retries), so a
         # constant count makes every downstream fold identical on any
-        # machine/core count. 32 matches the bench box; override via
-        # SPARK_GRAFT_SPREAD_PARTITIONS for other deployments.
+        # machine/core count.
         return df.repartition(_SPREAD_PARTITIONS)
     except Exception as exc:  # pragma: no cover - conservative fallback
         # A silently-disabled spread looks exactly like a performance
@@ -118,33 +113,11 @@ def _spread_unsplittable_scan(
         return df
 
 
-# The spread is worth paying ONLY where consumers are uniformly
-# row-local-compute-heavy — the unstructured corpora, whose every
-# consumer explodes text into grams/shingles/tokens or folds vectors
-# (documents: q41/q42/q56/q57/q105–q113/q153/q193/q195/q198/…;
-# embeddings: the similarity family). Measured both directions at
-# sf0.1:
-#   * documents consumers: q57 4.3→1.0 s, q56 4.2→1.8 s,
-#     q198 2.6→0.6 s, q41 3.0→1.1 s, q113 2.9→1.4 s (A/B, min-of-2);
-#   * relational facts (lineitem/orders/events) REGRESSED when spread
-#     — their consumers aggregate/sketch in the scan stage with light
-#     map work, so the extra full-table exchange only costs (q202
-#     1.9→4.4 s, q124 4.8→8.2 s, q138 2.6→4.1 s, q171 1.5→2.9 s
-#     across the two bench passes that tried it), exactly like the
-#     dim-fed linkage family (q145 1.6→2.2 s, q176 2.4→3.6 s when
-#     part/customer were spread).
-# So the spread is an allowlist of the corpus tables plus size gates;
-# everything else keeps the plain scan.
-_SPREAD_TABLES = {"documents", "embeddings"}
 _SPREAD_MIN_BYTES = 512 * 1024
 
-# Deterministic spread width (see _spread_unsplittable_scan): constant
-# so the fold layout never follows the environment. NOTE (r15 ADVICE):
-# overriding this voids the float-fold stability guarantee for any
-# output graded through first-level float partials — graded runs must
-# use the default; the override exists for foreign-deployment tuning
-# only.
-_SPREAD_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SPREAD_PARTITIONS", "32"))
+# Deterministic spread width (see _spread_unsplittable_scan): a
+# constant, so the float-fold layout never follows the environment.
+_SPREAD_PARTITIONS = 32
 
 _SPREAD_FALLBACK_WARNED = False
 

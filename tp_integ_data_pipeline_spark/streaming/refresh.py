@@ -90,7 +90,7 @@ _ARRIVAL_STAGING_CACHE: dict[tuple[str, int], str] = {}
 # drain's outputs are integer/boolean relations, so unlike the corpus
 # scan spread there is no float-fold layout contract to pin — the
 # constant only keeps task counts bounded and runs comparable.
-_BATCH_SPREAD = int(os.environ.get("SPARK_GRAFT_STREAM_BATCH_PARTITIONS", "8"))
+_BATCH_SPREAD = 8
 
 
 def _spread_batch(bdf: DataFrame) -> DataFrame:
