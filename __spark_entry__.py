@@ -11,13 +11,17 @@
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from tp_integ_data_pipeline_spark import plans  # noqa: E402
 from tp_integ_data_pipeline_spark.session import tune_for_session  # noqa: E402
@@ -31,49 +35,34 @@ def entry(spark: SparkSession) -> DataFrame:
     return plans.QUERIES["q00_flagship"](spark, SMOKE_SF_DIR)
 
 
-# The driver's correctness run records exactly the FIRST 50 dict
-# entries. Rotate the queries whose driver evidence is STALEST to the
-# front so the capped run re-validates them on current code; combined
-# with earlier rounds, every query then has hard signal.
-# Round-14 front (exactly 50, executing the plan committed at r13 and
-# independently verified by the r13 judge — 22+28=50): the 22
-# remaining r8 keys in ascending key order (q211 q212 q213 q214 q215
-# q216 q217 q218 q219 q220 q221 q222 q223 q224 q225 q226 q227 q228
-# q229 q230 q231 q232) + the 28 OLDEST of the 50-key r9 cohort in
-# ascending key order (q87 q100 q102 q103 q104 q105 q106 q107 q108
-# q109 q110 q111 q114 q115 q116 q117 q119 q120 q121 q123 q124 q125
-# q128 q129 q131 q132 q134 q135) = 50 (22+28). After round 14 the
-# newest-grade floor is r9 (22 r9 keys remain: q136 q137 q138 q140
-# q141 q143 q144 q233 q234 q235 q236 q237 q238 q239 q240 q241 q242
-# q243 q244 q245 q246 q247). Expected r14 no_oracle keys: q225 only
-# (audio silence probe, rows-only by nature).
-# ROUND-15 front plan (exactly 50, checkable against the
-# CORRECTNESS_r01–r14 newest-grade matrix): the 22 remaining r9 keys
-# in ascending key order (q136 q137 q138 q140 q141 q143 q144 q233
-# q234 q235 q236 q237 q238 q239 q240 q241 q242 q243 q244 q245 q246
-# q247) + the 28 OLDEST of the 50-key r10 cohort in ascending key
-# order (q04 q23 q24 q25 q26 q27 q28 q29 q36 q37 q38 q39 q42 q45
-# q46 q47 q48 q49 q52 q53 q54 q62 q101 q122 q139 q142 q145 q146)
-# = 50 (22+28). After round 15 the newest-grade floor is r10 (22
-# r10 keys remain: q147 q148 q149 q150 q151 q152 q154 q155 q156
-# q157 q158 q159 q160 q161 q162 q248 q249 q250 q251 q252 q253 q254
-# = 15+7) — round 16 fronts those and fills from the oldest r11
-# cohort. Expected r15 no_oracle keys: q52 q122 q139 (IVF / stream
-# left-outer / IVF-PQ, rows-only by nature; q101 and q26 were
-# upgraded to invariant hash checks in round 14).
-_ROTATE_FRONT = (
-    "q211 q212 q213 q214 q215 q216 q217 q218 q219 q220 q221 q222 "
-    "q223 q224 q225 q226 q227 q228 q229 q230 q231 q232 "
-    "q87 q100 q102 q103 q104 q105 q106 q107 q108 q109 q110 q111 "
-    "q114 q115 q116 q117 q119 q120 q121 q123 q124 q125 q128 q129 "
-    "q131 q132 q134 q135"
-).split()
+# The external correctness run over queries() grades only the FIRST 50
+# entries.
+FRONT_SIZE = 50
+
+
+def _last_graded() -> dict[str, int]:
+    """Key -> round of the newest committed CORRECTNESS_r{N}.json that
+    grades it."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            with open(path) as fh:
+                for key in json.load(fh):
+                    last[key] = max(last.get(key, 0), int(m.group(1)))
+    return last
 
 
 def _ordered_names() -> list[str]:
-    first = [n for n in plans.QUERIES if n.split("_")[0] in _ROTATE_FRONT]
-    rest = [n for n in plans.QUERIES if n.split("_")[0] not in _ROTATE_FRONT]
-    return first + rest
+    """Registry order, with the FRONT_SIZE keys whose newest committed
+    grade is oldest rotated to the front (never graded counts as
+    oldest; ties keep registry order), so the capped run re-validates
+    the stalest evidence. Without any CORRECTNESS file this is plain
+    registry order."""
+    last = _last_graded()
+    front = sorted(plans.QUERIES, key=lambda n: last.get(n, -1))[:FRONT_SIZE]
+    chosen = set(front)
+    return front + [n for n in plans.QUERIES if n not in chosen]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,8 +1,8 @@
-"""Round-agnostic canonical bench builder — the standing successor to
-scripts/build_canonical_r14.py (kept as the frozen round-14 record).
-It PINS the eligibility rule the r13 forensics established (r13
-verdict item 4), so "canonical = two best fresh runs" is code, not
-convention:
+"""Round-agnostic canonical bench script. It superseded the per-round
+scripts (build_canonical_r13.py, build_canonical_r14.py); their frozen
+records are in git history. It PINS the eligibility rule the r13
+forensics established (r13 verdict item 4), so "canonical = two best
+fresh runs" is code, not convention:
 
   * a run is canonical-ELIGIBLE iff its self-labels are in band:
       - cpu_spin_ms <= SPIN_BAND (1.15) x the minimum spin across all

@@ -91,7 +91,7 @@ def test_jdbc_merge_passthrough_matches_scd1(spark, tmp_path):
     scd1_upsert's Spark-computed end state row-for-row."""
     import datetime
 
-    from tp_integ_data_pipeline_spark.operators.merge import scd1_upsert
+    from tp_integ_data_pipeline_spark.operators.merge_ops import scd1_upsert
     from tp_integ_data_pipeline_spark.sources.catalog import (
         jdbc_append,
         jdbc_execute,

@@ -14,7 +14,7 @@ from tp_integ_data_pipeline_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from tp_integ_data_pipeline_spark.operators.joins import asof_join
-from tp_integ_data_pipeline_spark.operators.merge import insert_if_absent, scd1_upsert
+from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
 from tp_integ_data_pipeline_spark.operators.similarity import cosine_pairs, knn_bruteforce
 
 
@@ -68,7 +68,7 @@ def test_merge_ops_with_empty_sides(spark):
 
 
 def test_bucketed_merge_empty_stage_is_noop(spark, tmp_path):
-    from tp_integ_data_pipeline_spark.operators.merge import BucketedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import BucketedParquetTable
 
     tbl = BucketedParquetTable(spark, str(tmp_path / "wh"), keys=["k"], n_buckets=4)
     base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
@@ -93,7 +93,7 @@ def test_zorder_empty_and_degenerate(spark):
 
 
 def test_vacuum_and_history_on_empty_table(spark, tmp_path):
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
     tbl = VersionedParquetTable(spark, str(tmp_path / "vt"))
     assert tbl.history() == []
@@ -190,7 +190,7 @@ def test_round4_ops_on_empty(spark):
     from tp_integ_data_pipeline_spark.operators.graph import pagerank
     from tp_integ_data_pipeline_spark.operators.ivm import apply_delta, delta_aggregate
     from tp_integ_data_pipeline_spark.operators.linkage import edit_distance_join
-    from tp_integ_data_pipeline_spark.operators.merge import scd2_upsert
+    from tp_integ_data_pipeline_spark.operators.merge_ops import scd2_upsert
     from tp_integ_data_pipeline_spark.operators.privacy import pseudonymize
     from tp_integ_data_pipeline_spark.operators.quantize import (
         codes_to_array,

@@ -116,11 +116,11 @@ def test_empty_feed_is_noop(spark):
 
 
 # ---------------------------------------------------------------------------
-# SCD2 history-keeping upsert (operators/merge.scd2_upsert) — kept here
+# SCD2 history-keeping upsert (operators/merge_ops.scd2_upsert) — kept here
 # with the other state-evolution ops (IVM maintains aggregates across
 # commits; SCD2 maintains row history across merges)
 # ---------------------------------------------------------------------------
-from tp_integ_data_pipeline_spark.operators.merge import scd2_upsert  # noqa: E402
+from tp_integ_data_pipeline_spark.operators.merge_ops import scd2_upsert  # noqa: E402
 
 _T = "k long, attr string, bal double, valid_from date, valid_to date, is_current boolean"
 _S = "k long, attr string, bal double"

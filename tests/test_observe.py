@@ -49,7 +49,7 @@ def test_with_audit_rejects_empty_metrics(spark):
 # CHECK-constrained commits (observe.constrained_overwrite)
 # ---------------------------------------------------------------------------
 def test_constrained_overwrite_commits_clean_data(spark, tmp_path):
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.operators.observe import constrained_overwrite
 
     tbl = VersionedParquetTable(spark, str(tmp_path / "ct"))
@@ -67,7 +67,7 @@ def test_constrained_overwrite_rejects_and_leaves_no_trace(spark, tmp_path):
 
     import pytest as _pytest
 
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.operators.observe import (
         CheckViolation,
         constrained_overwrite,

@@ -47,7 +47,7 @@ def test_rtbf_composition_lake_and_index(spark, tmp_path):
     an erasure request actually requires (deleting only the row store
     leaves the doc discoverable through the similarity index)."""
     from pyspark.sql import functions as F
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.operators.neardup_index import NearDupIndex
 
     docs = spark.createDataFrame(

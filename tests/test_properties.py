@@ -8,7 +8,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tp_integ_data_pipeline_spark.functions.reference import wind_cardinal
-from tp_integ_data_pipeline_spark.operators.merge import insert_if_absent
+from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent
 
 
 def reference_cardinal(g: float) -> str:

@@ -235,7 +235,7 @@ def test_rollup_maintenance_multibatch_equals_direct(spark, tmp_path):
 def test_rollup_replay_is_idempotent(spark, tmp_path):
     """Crash-after-overwrite, before checkpoint commit → the replayed
     epoch must NOT be merge-added a second time (no double counting)."""
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.streaming.rollup import fold_batch, read_rollup
 
     batch = spark.createDataFrame(
@@ -264,7 +264,7 @@ def test_fold_batch_into_bucketed_table_rewrites_only_dirty_buckets(spark, tmp_p
     batch's windows touch, clean buckets are carried forward by
     reference; the epoch replay guard works through the bucketed
     table's meta just like the versioned one."""
-    from tp_integ_data_pipeline_spark.operators.merge import BucketedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import BucketedParquetTable
     from tp_integ_data_pipeline_spark.streaming.rollup import fold_batch
 
     table = BucketedParquetTable(
@@ -304,7 +304,7 @@ def test_fold_batch_folds_into_concurrent_commit(spark, tmp_path, monkeypatch):
     and its own commit (e.g. a batch backfill into the same rollup)
     must be folded INTO via CAS retry, not silently overwritten."""
     import tp_integ_data_pipeline_spark.streaming.rollup as rollup_mod
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.streaming.rollup import fold_batch, read_rollup
 
     batch = spark.createDataFrame(
@@ -352,7 +352,7 @@ def test_rollup_recreated_checkpoint_resets_guard(spark, tmp_path):
     silently skipped."""
     import shutil
 
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.streaming.rollup import fold_batch, read_rollup
 
     batch = spark.createDataFrame(

@@ -6,10 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.operators.merge import (
-    VersionedParquetTable,
-    table_changes,
-)
+from tp_integ_data_pipeline_spark.operators.change_feed import table_changes
+from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
 
 def _tbl(spark, tmp_path, rows):

@@ -1,6 +1,6 @@
 """Incremental view maintenance (IVM) over a change data feed.
 
-Composes with ``operators/merge.table_changes`` (the CDF between two
+Composes with ``operators/change_feed.table_changes`` (the CDF between two
 commits of a Versioned/Bucketed parquet table): instead of re-scanning
 the 100 TB base to refresh a grouped-agg materialized view, apply the
 delta — work is O(|changes| + |touched groups|), never O(|base|).

@@ -1,5 +1,4 @@
 """Versioned parquet table store: CAS commit log, copy-on-write and
-
 bucket-scoped MERGE tables, vacuum, time travel, merge-on-read deletes.
 
 The reference gets transactions for free from PostgreSQL; on plain
@@ -45,8 +44,7 @@ def _load_state(path: str) -> tuple[int, dict]:
     The manifest is a commit LOG: `_commits/{version:020d}.json`, the
     live state being the highest version. Readers see only fully
     written manifests (writers publish via hard-link of a fsync'd temp
-    file). (0, {}) for an empty table; a legacy single-file
-    `_MANIFEST.json` (pre-CAS layout) reads as version 0.
+    file). (0, {}) for an empty table.
     """
     cdir = _commits_dir(path)
     if os.path.isdir(cdir):
@@ -64,36 +62,37 @@ def _load_state(path: str) -> tuple[int, dict]:
                     return int(latest[: -len(".json")]), json.load(fh)
             except FileNotFoundError:
                 continue
-    legacy = os.path.join(path, "_MANIFEST.json")
-    if os.path.exists(legacy):
-        with open(legacy) as fh:
-            return 0, json.load(fh)
     return 0, {}
 
 
 def _commit_history(path: str) -> list[tuple[int, dict]]:
-    """All commits, ascending by version. Empty for a fresh table; the
-    legacy single-manifest layout reads as a single version-0 entry.
+    """All commits, ascending by version; empty for a fresh table.
     Same FileNotFoundError handling as `_load_state`: a commit file a
     concurrent vacuum pruned mid-walk is simply skipped (it was below
     the retained window by definition)."""
     cdir = _commits_dir(path)
-    if os.path.isdir(cdir):
-        out = []
-        for f in sorted(os.listdir(cdir)):
-            if f.endswith(".json"):
-                try:
-                    with open(os.path.join(cdir, f)) as fh:
-                        out.append((int(f[: -len(".json")]), json.load(fh)))
-                except FileNotFoundError:
-                    continue
-        if out:
-            return out
-    legacy = os.path.join(path, "_MANIFEST.json")
-    if os.path.exists(legacy):
-        with open(legacy) as fh:
-            return [(0, json.load(fh))]
-    return []
+    if not os.path.isdir(cdir):
+        return []
+    out = []
+    for f in sorted(os.listdir(cdir)):
+        if f.endswith(".json"):
+            try:
+                with open(os.path.join(cdir, f)) as fh:
+                    out.append((int(f[: -len(".json")]), json.load(fh)))
+            except FileNotFoundError:
+                continue
+    return out
+
+
+def _manifest_at(path: str, version: int | None) -> dict:
+    """The latest manifest, or — time travel — commit ``version``'s (as
+    listed by ``history()``; vacuumed versions are gone)."""
+    if version is None:
+        return _load_state(path)[1]
+    manifests = dict(_commit_history(path))
+    if version not in manifests:
+        raise ValueError(f"version {version} not in commit log (have {sorted(manifests)})")
+    return manifests[version]
 
 
 def _floor_path(path: str) -> str:
@@ -155,16 +154,17 @@ def _manifest_frame(spark, manifest: dict) -> DataFrame | None:
     return df
 
 
-def _merged_meta(manifest: dict, meta: dict | None) -> dict | None:
-    """Commit meta for incremental writers: shallow-merge over the
-    previous commit's meta so durable keys a DIFFERENT writer owns
-    (e.g. the streaming rollup's last_epoch replay guard) survive
-    interleaved merges/deletes that don't set them. Blind replaces
-    (overwrite / commit_staged_dir) intentionally reset meta instead."""
-    out = dict(manifest.get("meta", {}))
-    if meta:
-        out.update(meta)
-    return out or None
+def _with_meta(new_manifest: dict, manifest: dict, meta: dict | None) -> dict:
+    """``new_manifest`` carrying the commit meta of an incremental
+    writer: ``meta`` shallow-merged over the previous commit's, so
+    durable keys a DIFFERENT writer owns (e.g. the streaming rollup's
+    last_epoch replay guard) survive interleaved merges/deletes that
+    don't set them. Blind replaces (overwrite / commit_staged_dir)
+    intentionally reset meta instead."""
+    out = {**manifest.get("meta", {}), **(meta or {})}
+    if out:
+        new_manifest["meta"] = out
+    return new_manifest
 
 
 def vacuum(path: str, keep_last: int = 1, retention_seconds: float = 3600.0) -> list[str]:
@@ -275,6 +275,57 @@ def _try_commit(path: str, expected_version: int, manifest: dict) -> bool:
     return True
 
 
+MAX_COMMIT_RETRIES = 5
+
+
+def _commit_loop(path: str, attempt, what: str, staged: str | None = None) -> None:
+    """The commit protocol every writer shares: re-read the latest
+    manifest, let ``attempt(manifest)`` build the next one, and publish
+    it with `_try_commit`. ``attempt`` returns ``(new_manifest,
+    data_dir)``, ``data_dir`` being the directory that attempt wrote
+    (or None). On a lost race that directory is removed and the writer
+    recomputes against the winner's state; after MAX_COMMIT_RETRIES
+    lost races the ``staged`` directory (data the writer wrote once,
+    before the loop) is removed too and ConcurrentWriteError is raised:
+    nothing is published."""
+    for _ in range(MAX_COMMIT_RETRIES):
+        version, manifest = _load_state(path)
+        new_manifest, data_dir = attempt(manifest)
+        # module-global lookup at call time: wrappers that replace
+        # `_try_commit` (fault injection, commit counting) see every commit
+        if _try_commit(path, version, new_manifest):
+            return
+        if data_dir is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+    if staged is not None:
+        shutil.rmtree(staged, ignore_errors=True)
+    raise ConcurrentWriteError(f"{what} lost {MAX_COMMIT_RETRIES} commit races")
+
+
+def _new_version_dir(path: str) -> str:
+    """A fresh version-directory path inside the table root, named
+    ``v{time_ns}``: vacuum's age check parses the name."""
+    return os.path.join(path, f"v{time.time_ns()}")
+
+
+# Combines shared by both table classes: (current, stage) -> new state,
+# where current is None for a table with no data yet.
+def _insert_if_absent_combine(keys: list[str]):
+    return lambda cur, stg: stg if cur is None else insert_if_absent(cur, stg, keys)
+
+
+def _scd1_combine(keys: list[str], **kwargs):
+    # The first write still routes through scd1_upsert (empty target) so
+    # audit columns exist from version 1, like the reference's CREATE
+    # TABLE with audit cols + first MERGE (transf.py:179-206).
+    return lambda cur, stg: scd1_upsert(
+        cur if cur is not None else stg.limit(0), stg, keys, **kwargs
+    )
+
+
+def _delete_keys_combine(keys: list[str]):
+    return lambda cur, stg: stg.limit(0) if cur is None else cur.join(stg, keys, "left_anti")
+
 
 class VersionedParquetTable:
     """MERGE-capable warehouse table on plain parquet.
@@ -285,15 +336,14 @@ class VersionedParquetTable:
     same copy-on-write + optimistic-concurrency idea as a Delta commit.
     Concurrent merges serialize: the loser of a commit race re-reads
     the winner's table, recomputes its merge, and retries (bounded by
-    ``max_retries``); no committed rows are ever lost. Remaining
+    ``MAX_COMMIT_RETRIES``); no committed rows are ever lost. Remaining
     limitation vs a real log: full-table rewrite per merge (see
     BucketedParquetTable for the partition-scoped variant).
     """
 
-    def __init__(self, spark: SparkSession, path: str, max_retries: int = 5):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.max_retries = max_retries
         os.makedirs(path, exist_ok=True)
 
     def current_version_dir(self) -> str | None:
@@ -308,18 +358,9 @@ class VersionedParquetTable:
         """Current table state, or — time travel — the state as of
         commit ``version`` (as listed by ``history()``; vacuumed
         versions are gone)."""
-        if version is None:
-            manifest = _load_state(self.path)[1]
-        else:
-            manifests = dict(_commit_history(self.path))
-            if version not in manifests:
-                raise ValueError(
-                    f"version {version} not in commit log (have {sorted(manifests)})"
-                )
-            manifest = manifests[version]
         # merge-on-read: tombstone key sets (delete_keys_mor) anti-join
         # at read time — deletes cost O(|keys|) I/O, not a table rewrite
-        return _manifest_frame(self.spark, manifest)
+        return _manifest_frame(self.spark, _manifest_at(self.path, version))
 
     def history(self) -> list[dict]:
         """Commit log, ascending: version + manifest per commit."""
@@ -332,25 +373,19 @@ class VersionedParquetTable:
         """Publish an already-written data directory as the new
         current version (last-committed-wins CAS retry; the staged dir
         is removed on a lost race so a failed publish leaves no
-        readable or orphaned state). The single commit-protocol
-        implementation — overwrite() and any external staged writer
-        (e.g. observe.constrained_overwrite) route through here."""
+        readable or orphaned state). overwrite() and any external
+        staged writer (e.g. observe.constrained_overwrite) publish
+        through here."""
         manifest = {"current": new_dir}
         if meta is not None:
             manifest["meta"] = meta
-        for _ in range(self.max_retries):
-            version, _cur = _load_state(self.path)
-            if _try_commit(self.path, version, manifest):
-                return
-        shutil.rmtree(new_dir, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"commit to {self.path} lost {self.max_retries} commit races"
+        _commit_loop(
+            self.path, lambda _m: (manifest, None), f"commit to {self.path}", staged=new_dir
         )
 
     def staged_dir(self) -> str:
-        """A fresh version-directory path inside the table root (the
-        ``v{time_ns}`` naming vacuum's age check relies on)."""
-        return os.path.join(self.path, f"v{time.time_ns()}")
+        """A fresh version-directory path inside the table root."""
+        return _new_version_dir(self.path)
 
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> None:
         """Blind replace (no read-modify-write): the data directory is
@@ -381,56 +416,28 @@ class VersionedParquetTable:
         if old is None:
             # the version is real but empty: publish an empty commit
             # (no current dir) so read() returns None again
-            for _ in range(self.max_retries):
-                v, _cur = _load_state(self.path)
-                if _try_commit(
-                    self.path, v, {"meta": {"op": "restore", "restored_from": version}}
-                ):
-                    return
-            raise ConcurrentWriteError(
-                f"restore of {self.path} lost {self.max_retries} commit races"
-            )
+            empty = {"meta": {"op": "restore", "restored_from": version}}
+            _commit_loop(self.path, lambda _m: (empty, None), f"restore of {self.path}")
+            return
         self.overwrite(old, meta={"op": "restore", "restored_from": version})
 
     def _merge(self, stage: DataFrame, combine, meta: dict | None = None) -> None:
-        for _ in range(self.max_retries):
-            version, manifest = _load_state(self.path)
+        def attempt(manifest):
             # tombstone-aware snapshot: a merge after delete_keys_mor
             # sees (and materializes out) the deletions, never the raw
             # data dir — the committed manifest then needs no tombstones
-            cur = _manifest_frame(self.spark, manifest)
-            merged = combine(cur, stage)
-            new_dir = os.path.join(self.path, f"v{time.time_ns()}")
+            merged = combine(_manifest_frame(self.spark, manifest), stage)
+            new_dir = _new_version_dir(self.path)
             merged.write.mode("overwrite").parquet(new_dir)
-            new_manifest = {"current": new_dir}
-            carried = _merged_meta(manifest, meta)
-            if carried is not None:
-                new_manifest["meta"] = carried
-            if _try_commit(self.path, version, new_manifest):
-                return
-            # Lost the race: drop this attempt's data dir and re-merge
-            # against the winner's committed state.
-            shutil.rmtree(new_dir, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"merge into {self.path} lost {self.max_retries} commit races"
-        )
+            return _with_meta({"current": new_dir}, manifest, meta), new_dir
+
+        _commit_loop(self.path, attempt, f"merge into {self.path}")
 
     def merge_scd1(self, stage: DataFrame, keys: list[str], **kwargs) -> None:
-        # First write still routes through scd1_upsert (empty target) so
-        # audit columns exist from version 1, like the reference's
-        # CREATE TABLE with audit cols + first MERGE (transf.py:179-206).
-        self._merge(
-            stage,
-            lambda cur, stg: scd1_upsert(
-                cur if cur is not None else stg.limit(0), stg, keys, **kwargs
-            ),
-        )
+        self._merge(stage, _scd1_combine(keys, **kwargs))
 
     def merge_insert_if_absent(self, stage: DataFrame, keys: list[str]) -> None:
-        self._merge(
-            stage,
-            lambda cur, stg: stg if cur is None else insert_if_absent(cur, stg, keys),
-        )
+        self._merge(stage, _insert_if_absent_combine(keys))
 
     def delete_keys(self, stage: DataFrame, keys: list[str]) -> None:
         """Targeted delete (right-to-be-forgotten / retraction): remove
@@ -442,12 +449,7 @@ class VersionedParquetTable:
         destruction."""
         if self.read() is None:
             return
-        self._merge(
-            stage.select(*keys).distinct(),
-            lambda cur, stg: (
-                stg.limit(0) if cur is None else cur.join(stg, keys, "left_anti")
-            ),
-        )
+        self._merge(stage.select(*keys).distinct(), _delete_keys_combine(keys))
 
     def delete_keys_mor(self, stage: DataFrame, keys: list[str]) -> None:
         """Merge-on-read delete (deletion-vector semantics): write ONLY
@@ -461,20 +463,16 @@ class VersionedParquetTable:
         :meth:`delete_keys`."""
         if self.current_version_dir() is None:
             return
-        ts_dir = os.path.join(self.path, f"v{time.time_ns()}")
+        ts_dir = _new_version_dir(self.path)
         stage.select(*keys).distinct().write.mode("overwrite").parquet(ts_dir)
         entry = {"dir": ts_dir, "keys": list(keys)}
-        for _ in range(self.max_retries):
-            version, manifest = _load_state(self.path)
-            new_manifest = dict(manifest)
-            new_manifest["tombstones"] = list(manifest.get("tombstones", [])) + [entry]
-            new_manifest["meta"] = _merged_meta(manifest, {"op": "delete_mor"})
-            if _try_commit(self.path, version, new_manifest):
-                return
-        shutil.rmtree(ts_dir, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"delete_keys_mor of {self.path} lost {self.max_retries} commit races"
-        )
+
+        def attempt(manifest):
+            tombstones = [*manifest.get("tombstones", []), entry]
+            new_manifest = {**manifest, "tombstones": tombstones}
+            return _with_meta(new_manifest, manifest, {"op": "delete_mor"}), None
+
+        _commit_loop(self.path, attempt, f"delete_keys_mor of {self.path}", staged=ts_dir)
 
     def compact_tombstones(self) -> int:
         """Materialize the tombstone-filtered state into a plain
@@ -528,13 +526,11 @@ class BucketedParquetTable:
         path: str,
         keys: list[str],
         n_buckets: int = 64,
-        max_retries: int = 5,
     ):
         self.spark = spark
         self.path = path
         self.keys = keys
         self.n_buckets = n_buckets
-        self.max_retries = max_retries
         os.makedirs(path, exist_ok=True)
         # The bucket layout on disk is a function of (keys, n_buckets):
         # reopening with different values would hash stage rows to dirty
@@ -578,14 +574,8 @@ class BucketedParquetTable:
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current table state, or the state as of commit ``version``
         (time travel over the bucket manifests)."""
-        if version is None:
-            return self._read_buckets(list(self.bucket_dirs().values()))
-        manifests = dict(_commit_history(self.path))
-        if version not in manifests:
-            raise ValueError(
-                f"version {version} not in commit log (have {sorted(manifests)})"
-            )
-        return self._read_buckets(list(manifests[version].get("buckets", {}).values()))
+        buckets = _manifest_at(self.path, version).get("buckets", {})
+        return self._read_buckets(list(buckets.values()))
 
     def history(self) -> list[dict]:
         return [{"version": v, **m} for v, m in _commit_history(self.path)]
@@ -604,16 +594,18 @@ class BucketedParquetTable:
         dirty = sorted(
             r[0] for r in stage_b.select(self.BUCKET_COL).distinct().collect()
         )
-        for _ in range(self.max_retries):
-            version, manifest = _load_state(self.path)
+
+        def attempt(manifest):
             # re-validate per attempt: a racing writer created the table
-            # between our __init__ and this commit loop
+            # between our __init__ and this commit loop. A retry re-reads
+            # the winner's manifest, which may have rewritten some of OUR
+            # dirty buckets.
             self._check_bucket_spec(manifest)
             buckets = dict(manifest.get("buckets", {}))
             cur_dirty_dirs = [buckets[str(b)] for b in dirty if str(b) in buckets]
             target = self._read_buckets(cur_dirty_dirs)
             merged = combine(target, stage_b.drop(self.BUCKET_COL))
-            new_dir = os.path.join(self.path, f"v{time.time_ns()}")
+            new_dir = _new_version_dir(self.path)
             # one hive-partitioned write; each dirty bucket becomes its
             # own subdir the manifest can point at individually
             self._with_bucket(merged).write.partitionBy(self.BUCKET_COL).mode(
@@ -635,35 +627,15 @@ class BucketedParquetTable:
                 "buckets": buckets,
                 "bucket_spec": {"keys": list(self.keys), "n_buckets": self.n_buckets},
             }
-            carried = _merged_meta(manifest, meta)
-            if carried is not None:
-                # same writer-metadata contract as VersionedParquetTable:
-                # shallow-merge so durable keys another writer owns
-                # (e.g. a streaming sink's epoch replay guard) survive
-                new_manifest["meta"] = carried
-            if _try_commit(self.path, version, new_manifest):
-                return
-            # Lost the race: the winner may have rewritten some of OUR
-            # dirty buckets — re-read its manifest and re-merge against
-            # the committed state before retrying.
-            shutil.rmtree(new_dir, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"merge into {self.path} lost {self.max_retries} commit races"
-        )
+            return _with_meta(new_manifest, manifest, meta), new_dir
+
+        _commit_loop(self.path, attempt, f"merge into {self.path}")
 
     def merge_scd1(self, stage: DataFrame, **kwargs) -> None:
-        self._merge(
-            stage,
-            lambda target, stg: scd1_upsert(
-                target if target is not None else stg.limit(0), stg, self.keys, **kwargs
-            ),
-        )
+        self._merge(stage, _scd1_combine(self.keys, **kwargs))
 
     def merge_insert_if_absent(self, stage: DataFrame) -> None:
-        self._merge(
-            stage,
-            lambda target, stg: stg if target is None else insert_if_absent(target, stg, self.keys),
-        )
+        self._merge(stage, _insert_if_absent_combine(self.keys))
 
     def delete_keys(self, stage: DataFrame) -> None:
         """Targeted delete at 100 TB cost: only the key-buckets the
@@ -674,11 +646,6 @@ class BucketedParquetTable:
         historical copies."""
         if self.read() is None:
             return
-        self._merge(
-            stage.select(*self.keys).distinct(),
-            lambda target, stg: (
-                stg.limit(0) if target is None else target.join(stg, self.keys, "left_anti")
-            ),
-        )
+        self._merge(stage.select(*self.keys).distinct(), _delete_keys_combine(self.keys))
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.operators.merge import insert_if_absent, scd1_upsert
+from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_dir
 
@@ -145,17 +145,15 @@ def q71_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q132_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change data feed across three commits of a VersionedParquetTable
     (overwrite base → overwrite updated+inserted → targeted delete),
-    diffed with operators/merge.table_changes: one full-outer key join
+    diffed with operators/change_feed.table_changes: one full-outer key join
     of the two AS-OF states, change rows emitted by a row-local
     when/explode (never four filtered re-evaluations of the join). The
     oracle reconstructs both states with set algebra and derives the
     same feed — insert/delete/update_pre/update_post all hash-checked.
     """
     
-    from tp_integ_data_pipeline_spark.operators.merge import (
-        VersionedParquetTable,
-        table_changes,
-    )
+    from tp_integ_data_pipeline_spark.operators.change_feed import table_changes
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -222,10 +220,8 @@ def q138_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (transf.py:215-273) is the shape this replaces at 100 TB."""
     
     from tp_integ_data_pipeline_spark.operators.ivm import apply_delta, delta_aggregate
-    from tp_integ_data_pipeline_spark.operators.merge import (
-        VersionedParquetTable,
-        table_changes,
-    )
+    from tp_integ_data_pipeline_spark.operators.change_feed import table_changes
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -309,7 +305,7 @@ def q138_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q142_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD Type-2 history-keeping merge (operators/merge.scd2_upsert):
+    """SCD Type-2 history-keeping merge (operators/merge_ops.scd2_upsert):
     changed keys close their current version (valid_to = effective
     date) AND append a new one; unchanged stage rows (the %11 branch)
     produce NO spurious version — null-safe attribute compare; new
@@ -317,7 +313,7 @@ def q142_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-equi-join + output-sized unions, same end-state-as-SELECT
     contract as q70's Type-1. Extends the reference's MERGE
     (transf.py:215-273) with the history dimension it drops."""
-    from tp_integ_data_pipeline_spark.operators.merge import scd2_upsert
+    from tp_integ_data_pipeline_spark.operators.merge_ops import scd2_upsert
 
     c = load_table(spark, sf_dir, "customer")
     target = c.select(
@@ -406,7 +402,7 @@ def q150_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scd2_upsert itself (balances changed for custkey%7 at 1995-06-01,
     mid-way through TPC-H's 1992-1998 order dates), so every order
     straddling the change date exercises the historical branch."""
-    from tp_integ_data_pipeline_spark.operators.merge import scd2_upsert
+    from tp_integ_data_pipeline_spark.operators.merge_ops import scd2_upsert
 
     c = load_table(spark, sf_dir, "customer")
     target = c.select(
@@ -447,14 +443,14 @@ def q150_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q151_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read retraction end state: two stacked deletion-vector
-    commits (operators/merge.delete_keys_mor — tombstone key sets
+    commits (operators/table_store.delete_keys_mor — tombstone key sets
     only, the 10-GB-of-keys-not-100-TB-of-rewrite shape) applied at
     read time as lazy anti-joins. The oracle is the plain residue
     SELECT, so the read-side tombstone application — including the
     stacking order — is hash-checked end-to-end, not just
     pytest-checked."""
     
-    from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"

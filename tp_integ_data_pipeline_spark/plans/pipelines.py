@@ -26,7 +26,7 @@ from tp_integ_data_pipeline_spark.functions.reference import (
     wind_cardinal,
 )
 from tp_integ_data_pipeline_spark.operators.joins import enrich
-from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 from tp_integ_data_pipeline_spark.sources.http_json import (
     Fetcher,
     geocoding_endpoint,

@@ -6,7 +6,7 @@ Re-expresses the reference's `PgSql` class (main.py:328-454):
 - S11 CREATE TABLE from a col→type dict (optional auto-id) →
   `CREATE TABLE IF NOT EXISTS ... USING parquet`; primary keys are
   metadata-only in Spark — uniqueness is enforced by the MERGE key
-  (operators/merge.py), exactly how the reference's staged MERGE
+  (operators/merge_ops.py), exactly how the reference's staged MERGE
   uses them.
 - S12 TRUNCATE, S13 raw SQL passthrough → `spark.sql`
 - S8/S9 JDBC sink/scan → thin wrappers over the built-in JDBC source
@@ -75,7 +75,7 @@ def jdbc_scan(spark: SparkSession, url: str, table: str, **options) -> DataFrame
 def jdbc_append(df: DataFrame, url: str, table: str, batchsize: int = 1000, **options) -> None:
     """S8 over real JDBC; batchsize ≙ reference chunksize=1000
     (main.py:413). MERGE cannot be pushed through the plain JDBC
-    writer — use operators/merge.py end-state + overwrite, or push
+    writer — use operators/merge_ops.py end-state + overwrite, or push
     MERGE SQL via a server-side statement (documented limitation,
     SURVEY §2.8)."""
     writer = (

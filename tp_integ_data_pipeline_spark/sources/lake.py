@@ -14,6 +14,7 @@ Re-expresses the reference's `DataLake` (main.py:20-150):
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,7 +168,8 @@ class DataLake:
 
         `batch_skip=True` reproduces the reference's policy verbatim
         (main.py:127-133: if ANY id already present, skip the whole
-        batch); default is the per-row anti-join improvement.
+        batch); default is the per-row anti-join improvement, null-safe
+        like the reference's `isin` (NaN counts as present).
         """
         existing = self.read(table)
         if existing is not None:
@@ -178,9 +180,8 @@ class DataLake:
                 if len(overlap.take(1)) > 0:
                     return
             else:
-                df = df.join(existing.select(*dedup_keys).distinct(), dedup_keys, "left_anti")
+                df = self._dedup_against_existing(df, existing, dedup_keys, None)
         df.write.mode("append").parquet(self._path(table))
-
 
     def compact(
         self, table: str, target_partitions: int = 1, zorder_cols: list[str] | None = None
@@ -189,25 +190,21 @@ class DataLake:
         `target_partitions` files per hive partition (incremental
         appends leave one file-set per micro-batch — at 100 TB the
         file count, not the byte count, kills scan planning).
-        Copy-on-write: rewrite to a fresh dir, then swap.
+        Copy-on-write: rewrite to a sibling of the live dir (same
+        filesystem), then swap with two renames.
 
         `zorder_cols` additionally clusters rows on the interleaved
         z-value during the rewrite (operators/layout.py), so the
         compacted files carry tight parquet min/max envelopes on every
         listed column — compaction and OPTIMIZE ZORDER in one pass,
         like Delta's."""
-        import shutil
-        import tempfile
-
         current = self.read(table)
         if current is None:
             return
-        partition_cols = [
-            f.name
-            for f in current.schema.fields
-            if f.name in self._partition_dirs(table)
-        ]
-        staging = tempfile.mkdtemp(prefix=f"compact_{table}_")
+        hive_cols = self._partition_dirs(table)
+        partition_cols = [f.name for f in current.schema.fields if f.name in hive_cols]
+        live = self._path(table)
+        staging = live + ".compact"
         if zorder_cols:
             from tp_integ_data_pipeline_spark.operators.layout import zorder_dataframe
 
@@ -220,10 +217,9 @@ class DataLake:
         if partition_cols:
             w = w.partitionBy(*partition_cols)
         w.parquet(staging)
-        live = self._path(table)
         backup = live + ".old"
-        shutil.move(live, backup)
-        shutil.move(staging, live)
+        os.rename(live, backup)
+        os.rename(staging, live)
         shutil.rmtree(backup)
 
     def _partition_dirs(self, table: str) -> set[str]:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tp_integ_data_pipeline_spark.operators.merge import VersionedParquetTable
+from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
 ROLLUP_COLS = ("win_start", "event_type", "n", "total_value")
 
