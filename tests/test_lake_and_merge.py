@@ -615,6 +615,8 @@ def test_lake_read_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "x", "score"}
     rows = {r["id"]: r["score"] for r in merged.collect()}
     assert rows == {1: None, 2: 9.5}
+    # the widening write dropped the recorded schema: plain inference
+    assert lake.read("t").schema == spark.read.parquet(str(tmp_path / "lk_evo" / "t")).schema
 
 
 def test_lake_read_tolerates_corrupt_file(spark, tmp_path):
@@ -841,3 +843,139 @@ def test_zorder_interleave_stays_inside_long_sign_bit(spark, sf_dir):
     )
     out = zorder_dataframe(df, [f"c{i}" for i in range(5)], n_files=4, bits=16)
     assert out.count() == 512  # clamps instead of raising
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, number of Spark jobs it started)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+_STAGE = "k long, v string, d string"
+
+
+@pytest.mark.parametrize(
+    "write",
+    [
+        pytest.param(lambda t, df: t.merge_insert_if_absent(df, ["k"]), id="insert_if_absent"),
+        pytest.param(
+            lambda t, df: t.merge_scd1(df, ["k"], merge_date="2024-01-02", origin_date_col="d"),
+            id="scd1",
+        ),
+        pytest.param(lambda t, df: t.overwrite(df), id="overwrite"),
+        pytest.param(lambda t, df: t.restore(1), id="restore"),
+        pytest.param(lambda t, df: t.delete_keys_mor(df.filter("k = 1"), ["k"]), id="delete_keys_mor"),
+    ],
+)
+def test_warehouse_read_uses_recorded_schema(spark, tmp_path, write):
+    """Every commit that writes data records its schema: read() then
+    starts no footer-inference job and equals plain inference."""
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1, "a", "2024-01-01")], _STAGE))
+    write(t, spark.createDataFrame([(1, "b", "2024-01-01"), (2, "c", "2024-01-01")], _STAGE))
+    df, jobs = _jobs_started(spark, t.read)
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(t.current_version_dir()).schema
+
+
+def test_warehouse_manifest_without_schema_still_reads(spark, tmp_path):
+    """A commit without the "schema" key (older commits, external
+    commit_staged_dir callers) falls back to inference."""
+    import json
+    import os
+
+    path = str(tmp_path / "t")
+    t = VersionedParquetTable(spark, path)
+    t.merge_insert_if_absent(spark.createDataFrame([(1, "a", "2024-01-01")], _STAGE), ["k"])
+    [commit] = os.listdir(os.path.join(path, "_commits"))
+    commit = os.path.join(path, "_commits", commit)
+    with open(commit) as fh:
+        manifest = json.load(fh)
+    del manifest["schema"]
+    with open(commit, "w") as fh:
+        json.dump(manifest, fh)
+    df, jobs = _jobs_started(spark, t.read)
+    assert jobs >= 1  # footer inference
+    assert [tuple(r) for r in df.collect()] == [(1, "a", "2024-01-01")]
+
+
+@pytest.mark.parametrize("partition_cols", [["p"], []], ids=["partitioned", "unpartitioned"])
+def test_lake_read_uses_recorded_schema(spark, weather_batch, tmp_path, partition_cols):
+    """A lake read after this instance's own writes starts no job and
+    has the schema plain inference gives (partition column included)."""
+    lake = DataLake(spark, str(tmp_path))
+    batch = weather_batch.withColumnRenamed("fecha_partic", "p")
+    if partition_cols:
+        lake.write_incremental("t", batch, partition_cols, ["time", "p"])
+        lake.write_incremental("t", batch, partition_cols, ["time", "p"])
+    else:
+        lake.write_full("t", batch, ["time"])
+        lake.write_full("t", batch, ["time"])
+    df, jobs = _jobs_started(spark, lambda: lake.read("t"))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(str(tmp_path / "t")).schema
+    assert df.count() == 3
+
+
+def test_lake_empty_append_probes_nothing(spark, weather_batch, tmp_path):
+    """An empty batch to an existing partitioned table costs the one
+    partition collect: no full-lake probe, no write."""
+    import os
+
+    lake = DataLake(spark, str(tmp_path))
+    lake.write_incremental("r", weather_batch, ["fecha_partic"], ["time"], probe_partitions=True)
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(tmp_path / "r") for f in fs)
+
+    before = files()
+    empty = weather_batch.filter(F.col("temperature_2m") < 0)
+    _, jobs = _jobs_started(
+        spark,
+        lambda: lake.write_incremental(
+            "r", empty, ["fecha_partic"], ["time"], probe_partitions=True
+        ),
+    )
+    assert jobs == 1
+    assert files() == before
+
+
+def test_lake_compact_keeps_columns_of_every_file(spark, tmp_path):
+    """Compaction of a table whose files carry different schemas keeps
+    the union: a fresh instance (no recorded schema) must not rewrite
+    with the schema of whichever file inference picks first."""
+    import os
+
+    root = str(tmp_path / "lk")
+    DataLake(spark, root).write_full(
+        "t", spark.createDataFrame([(1, "a")], "id long, x string"), ["id"]
+    )
+    tdir = os.path.join(root, "t")
+    for f in os.listdir(tdir):  # the (id, x) files sort first
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(tdir, f), os.path.join(tdir, "a-" + f))
+    lake = DataLake(spark, root)
+    lake.write_full(
+        "t", spark.createDataFrame([(2, "b", 9.5)], "id long, x string, score double"), ["id"]
+    )
+    lake.compact("t")
+    rows = {r["id"]: r["score"] for r in lake.read("t", merge_schema=True).collect()}
+    assert rows == {1: None, 2: 9.5}
+    # one schema after compaction: recorded, so the default read agrees
+    assert lake.read("t").schema == spark.read.parquet(tdir).schema
+
+
+def test_anti_join_probe_side_duplicates_do_not_fan_out(spark):
+    """insert_if_absent and scd1_upsert anti-join without a distinct on
+    the probe side: duplicate probe keys change nothing."""
+    target = spark.createDataFrame([(1, "a"), (1, "a2"), (2, "b")], ["k", "v"])
+    stage = spark.createDataFrame([(1, "X"), (3, "c"), (3, "c")], ["k", "v"])
+    out = insert_if_absent(target, stage, ["k"])
+    assert sorted(out.collect()) == [(1, "a"), (1, "a2"), (2, "b"), (3, "c"), (3, "c")]
+
+    stage = spark.createDataFrame([(1, "X"), (1, "X")], ["k", "v"])
+    out = scd1_upsert(target, stage, ["k"], merge_date="2024-01-02")
+    got = sorted((r.k, r.v) for r in out.collect())
+    assert got == [(1, "X"), (1, "X"), (2, "b")]

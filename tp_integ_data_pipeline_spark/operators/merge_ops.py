@@ -40,7 +40,7 @@ def scd1_upsert(
     really "last seen"), and `audit_modified` gets the merge date.
     """
     merge_date_col = F.lit(merge_date).cast("date") if merge_date is not None else F.current_date()
-    untouched = target.join(stage.select(*keys).distinct(), keys, "left_anti")
+    untouched = target.join(stage.select(*keys), keys, "left_anti")
     upserted = stage
     if origin_date_col is not None:
         upserted = upserted.withColumn(audit_origin, F.col(origin_date_col).cast("date"))
@@ -152,7 +152,7 @@ def scd2_upsert(
 def insert_if_absent(target: DataFrame, stage: DataFrame, keys: list[str]) -> DataFrame:
     """M2: append stage rows whose key is absent from the target;
     matched rows DO NOTHING. Idempotent by construction."""
-    fresh = stage.join(target.select(*keys).distinct(), keys, "left_anti")
+    fresh = stage.join(target.select(*keys), keys, "left_anti")
     return target.unionByName(fresh.select(*target.columns))
 
 

@@ -88,5 +88,7 @@ def constrained_overwrite(table, df: DataFrame, checks: dict[str, str]) -> dict:
     if any(counts.values()):
         shutil.rmtree(new_dir, ignore_errors=True)
         raise CheckViolation(counts)
-    table.commit_staged_dir(new_dir, meta={"op": "constrained", "checks": counts})
+    table.commit_staged_dir(
+        new_dir, meta={"op": "constrained", "checks": counts}, schema=df.schema
+    )
     return counts

@@ -21,6 +21,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tp_integ_data_pipeline_spark.operators.merge_ops import (
     insert_if_absent,
@@ -148,10 +149,22 @@ def _manifest_frame(spark, manifest: dict) -> DataFrame | None:
     cur = manifest.get("current")
     if not cur:
         return None
-    df = spark.read.parquet(cur)
+    df = _read_data_dir(spark, cur, manifest.get("schema"))
     for t in manifest.get("tombstones", []):
-        df = df.join(spark.read.parquet(t["dir"]), t["keys"], "left_anti")
+        df = df.join(_read_data_dir(spark, t["dir"], t.get("schema")), t["keys"], "left_anti")
     return df
+
+
+def _read_data_dir(spark, path: str, schema: dict | None) -> DataFrame:
+    """Read a version or tombstone directory with the schema its commit
+    recorded (``df.schema.jsonValue()`` of the frame written there).
+    Version directories are write-once, so the record is exact and the
+    read starts no footer-inference job; a commit without the key (older
+    commits, external ``commit_staged_dir`` callers) is inferred."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
 
 
 def _with_meta(new_manifest: dict, manifest: dict, meta: dict | None) -> dict:
@@ -369,14 +382,19 @@ class VersionedParquetTable:
     def vacuum(self, keep_last: int = 1, retention_seconds: float = 3600.0) -> list[str]:
         return vacuum(self.path, keep_last, retention_seconds)
 
-    def commit_staged_dir(self, new_dir: str, meta: dict | None = None) -> None:
+    def commit_staged_dir(
+        self, new_dir: str, meta: dict | None = None, schema: StructType | None = None
+    ) -> None:
         """Publish an already-written data directory as the new
         current version (last-committed-wins CAS retry; the staged dir
         is removed on a lost race so a failed publish leaves no
         readable or orphaned state). overwrite() and any external
         staged writer (e.g. observe.constrained_overwrite) publish
-        through here."""
+        through here. ``schema`` is the schema of the frame written to
+        ``new_dir``; without it readers infer it from the files."""
         manifest = {"current": new_dir}
+        if schema is not None:
+            manifest["schema"] = schema.jsonValue()
         if meta is not None:
             manifest["meta"] = meta
         _commit_loop(
@@ -394,7 +412,7 @@ class VersionedParquetTable:
         torn manifest."""
         new_dir = self.staged_dir()
         df.write.mode("overwrite").parquet(new_dir)
-        self.commit_staged_dir(new_dir, meta)
+        self.commit_staged_dir(new_dir, meta, df.schema)
 
     def restore(self, version: int) -> None:
         """RESTORE TABLE ... TO VERSION AS OF: roll the table back to a
@@ -429,7 +447,8 @@ class VersionedParquetTable:
             merged = combine(_manifest_frame(self.spark, manifest), stage)
             new_dir = _new_version_dir(self.path)
             merged.write.mode("overwrite").parquet(new_dir)
-            return _with_meta({"current": new_dir}, manifest, meta), new_dir
+            new_manifest = {"current": new_dir, "schema": merged.schema.jsonValue()}
+            return _with_meta(new_manifest, manifest, meta), new_dir
 
         _commit_loop(self.path, attempt, f"merge into {self.path}")
 
@@ -464,8 +483,9 @@ class VersionedParquetTable:
         if self.current_version_dir() is None:
             return
         ts_dir = _new_version_dir(self.path)
-        stage.select(*keys).distinct().write.mode("overwrite").parquet(ts_dir)
-        entry = {"dir": ts_dir, "keys": list(keys)}
+        key_set = stage.select(*keys).distinct()
+        key_set.write.mode("overwrite").parquet(ts_dir)
+        entry = {"dir": ts_dir, "keys": list(keys), "schema": key_set.schema.jsonValue()}
 
         def attempt(manifest):
             tombstones = [*manifest.get("tombstones", []), entry]

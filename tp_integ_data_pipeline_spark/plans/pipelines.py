@@ -65,13 +65,15 @@ def transform_weather(weather: DataFrame, localities: DataFrame) -> DataFrame:
     hPa→mmHg → is_day bool → broadcast left join dims → rename/reorder.
     """
     local_ts = shift_gmt3(F.col("time"))
-    derived = (
-        weather.drop("fecha_partic")  # P1, transf.py:43
-        .withColumn("date", date_ddmmyyyy(local_ts))  # F4
-        .withColumn("winddir_cardinal_10m", wind_cardinal("winddirection_10m"))  # F8
-        .withColumn("pressure_msl", hpa_to_mmhg("pressure_msl"))  # F6
-        .withColumn("is_day", int_to_bool("is_day"))  # F7
-        .withColumn("time", time_hhmm(local_ts))  # F5 (overwrites, transf.py:51)
+    # one projection: every expression reads only input columns
+    derived = weather.drop("fecha_partic").withColumns(  # P1, transf.py:43
+        {
+            "date": date_ddmmyyyy(local_ts),  # F4
+            "winddir_cardinal_10m": wind_cardinal("winddirection_10m"),  # F8
+            "pressure_msl": hpa_to_mmhg("pressure_msl"),  # F6
+            "is_day": int_to_bool("is_day"),  # F7
+            "time": time_hhmm(local_ts),  # F5 (overwrites, transf.py:51)
+        }
     )
     joined = enrich(  # J1: tiny dim → broadcast (transf.py:94-99)
         derived,
@@ -88,10 +90,13 @@ def transform_localities(localities: DataFrame, load_date=None) -> DataFrame:
     """EP2 locality branch (transf.py:113-132): postcodes list → text
     (F9), 'None'→null on admin1..4 (F10), load-date stamp (F12/P4)."""
     date_col = F.lit(load_date).cast("date") if load_date is not None else F.current_date()
-    out = localities.withColumn("postcodes", format_postcodes("postcodes"))
-    for col in ("admin1", "admin2", "admin3", "admin4"):
-        out = out.withColumn(col, none_to_null(col))
-    return out.withColumn("fecha_actualizacion", date_col)
+    return localities.withColumns(
+        {
+            "postcodes": format_postcodes("postcodes"),
+            **{col: none_to_null(col) for col in ("admin1", "admin2", "admin3", "admin4")},
+            "fecha_actualizacion": date_col,
+        }
+    )
 
 
 def run_extraction(

@@ -18,6 +18,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class DataLake:
@@ -26,6 +27,12 @@ class DataLake:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # table -> data schema (non-partition columns) shared by every
+        # file of a table this instance created or compacted, for `read`
+        # to pass instead of inferring it from a footer (one Spark job
+        # per read). In memory only: a sidecar file would go stale when
+        # anything else writes the directory.
+        self._schemas: dict[str, StructType] = {}
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -56,15 +63,35 @@ class DataLake:
         instead of failing the scan (a 100 TB landing zone always has
         a torn upload somewhere; losing one file beats losing the
         query). Both default OFF: silent skipping/widening is a policy
-        the caller must opt into, not a default."""
+        the caller must opt into, not a default.
+
+        A table this instance created or compacted, and has since
+        written only with the same data schema, is read with that
+        schema; partition columns keep their types from directory
+        inference."""
         if not self.exists(table):
             return None
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        elif table in self._schemas:
+            reader = reader.schema(self._schemas[table])
         if tolerate_corrupt:
             reader = reader.option("ignoreCorruptFiles", "true")
         return reader.parquet(self._path(table))
+
+    def _note_write(
+        self, table: str, df: DataFrame, partition_cols: list[str], whole_table: bool
+    ) -> None:
+        """Keep the recorded data schema of ``table`` after writing
+        ``df`` to it: set when this write produced every file of the
+        table (it created or compacted it), kept while later writes
+        carry the same data schema, cleared by any other."""
+        data = StructType([f for f in df.schema.fields if f.name not in partition_cols])
+        if whole_table or self._schemas.get(table) == data:
+            self._schemas[table] = data
+        else:
+            self._schemas.pop(table, None)
 
     def _dedup_against_existing(
         self,
@@ -72,7 +99,7 @@ class DataLake:
         existing: DataFrame,
         dedup_keys: list[str],
         partition_cols: list[str] | None = None,
-    ) -> DataFrame:
+    ) -> DataFrame | None:
         """Anti-join `df` against the existing lake, probing ONLY the
         hive partitions the incoming batch touches.
 
@@ -90,32 +117,37 @@ class DataLake:
         skipping on plain parquet). Callers whose dedup keys do NOT
         determine the partition value must pass partition_cols=None to
         probe the full lake.
+
+        Returns None when the partition collect finds the batch empty:
+        there is nothing to append, and no probe to run.
         """
         probe = existing
         if partition_cols:
             combos = df.select(*partition_cols).distinct().collect()
-            if combos:
-                disjuncts = []
-                for row in combos:
-                    conj = F.lit(True)
-                    for k in partition_cols:
-                        # eqNullSafe: a NULL partition value must still
-                        # probe the lake's null partition
-                        # (__HIVE_DEFAULT_PARTITION__); plain == yields
-                        # NULL there and would skip it, re-appending
-                        # null-keyed duplicates.
-                        conj = conj & F.col(k).eqNullSafe(F.lit(row[k]))
-                    disjuncts.append(conj)
-                cond = disjuncts[0]
-                for d in disjuncts[1:]:
-                    cond = cond | d
-                probe = existing.filter(cond)
+            if not combos:
+                return None
+            disjuncts = []
+            for row in combos:
+                conj = F.lit(True)
+                for k in partition_cols:
+                    # eqNullSafe: a NULL partition value must still
+                    # probe the lake's null partition
+                    # (__HIVE_DEFAULT_PARTITION__); plain == yields
+                    # NULL there and would skip it, re-appending
+                    # null-keyed duplicates.
+                    conj = conj & F.col(k).eqNullSafe(F.lit(row[k]))
+                disjuncts.append(conj)
+            cond = disjuncts[0]
+            for d in disjuncts[1:]:
+                cond = cond | d
+            probe = existing.filter(cond)
         # Null-safe anti-join: dedup must treat NULL key components as
         # equal (SQL DISTINCT semantics) — a plain equi-join's NULL ≠
         # NULL would re-append every null-keyed re-delivery forever.
         # eqNullSafe still plans as a hash join (EqualNullSafe is an
-        # equi-join key), so this costs nothing vs `on=dedup_keys`.
-        probe_keys = probe.select(*dedup_keys).distinct().alias("__probe")
+        # equi-join key), so this costs nothing vs `on=dedup_keys`. No
+        # distinct on the probe side: an anti-join only tests existence.
+        probe_keys = probe.select(*dedup_keys).alias("__probe")
         incoming = df.alias("__in")
         cond = F.lit(True)
         for k in dedup_keys:
@@ -153,13 +185,17 @@ class DataLake:
         - ``False``: always probe the full lake.
         """
         existing = self.read(table)
+        deduped = df
         if existing is not None:
             if probe_partitions is None:
                 probe_partitions = set(partition_cols) <= set(dedup_keys)
-            df = self._dedup_against_existing(
+            deduped = self._dedup_against_existing(
                 df, existing, dedup_keys, partition_cols if probe_partitions else None
             )
-        df.write.mode("append").partitionBy(*partition_cols).parquet(self._path(table))
+            if deduped is None:  # empty batch
+                return
+        deduped.write.mode("append").partitionBy(*partition_cols).parquet(self._path(table))
+        self._note_write(table, df, partition_cols, whole_table=existing is None)
 
     def write_full(
         self, table: str, df: DataFrame, dedup_keys: list[str], batch_skip: bool = False
@@ -172,6 +208,7 @@ class DataLake:
         like the reference's `isin` (NaN counts as present).
         """
         existing = self.read(table)
+        deduped = df
         if existing is not None:
             if batch_skip:
                 overlap = df.join(
@@ -180,8 +217,9 @@ class DataLake:
                 if len(overlap.take(1)) > 0:
                     return
             else:
-                df = self._dedup_against_existing(df, existing, dedup_keys, None)
-        df.write.mode("append").parquet(self._path(table))
+                deduped = self._dedup_against_existing(df, existing, dedup_keys, None)
+        deduped.write.mode("append").parquet(self._path(table))
+        self._note_write(table, df, [], whole_table=existing is None)
 
     def compact(
         self, table: str, target_partitions: int = 1, zorder_cols: list[str] | None = None
@@ -198,7 +236,10 @@ class DataLake:
         compacted files carry tight parquet min/max envelopes on every
         listed column — compaction and OPTIMIZE ZORDER in one pass,
         like Delta's."""
-        current = self.read(table)
+        # Without a recorded schema the files may differ (evolved
+        # appends): read their union, or the rewrite would drop every
+        # column the file that inference picks lacks.
+        current = self.read(table, merge_schema=table not in self._schemas)
         if current is None:
             return
         hive_cols = self._partition_dirs(table)
@@ -221,6 +262,7 @@ class DataLake:
         os.rename(live, backup)
         os.rename(staging, live)
         shutil.rmtree(backup)
+        self._note_write(table, current, partition_cols, whole_table=True)
 
     def _partition_dirs(self, table: str) -> set[str]:
         """Partition column names inferred from hive-style dir names."""
