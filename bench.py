@@ -641,7 +641,7 @@ def scale_probe(spark, sf_dir: str) -> dict:
     # plan is one text-keyed window + one broadcast semi-join +
     # row-local expressions; healthy wall is near-linear. Superlinear
     # flags the bench-gram broadcast or the dup window degenerating.
-    from tp_integ_data_pipeline_spark.plans.round9_queries import funnel_verdicts
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import funnel_verdicts
 
     full = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "n_chars", "text"
@@ -681,7 +681,7 @@ def scale_probe(spark, sf_dir: str) -> dict:
     # — is match-count-independent to first order. Near-linear is
     # healthy; superlinear flags the dedup-probe join or the bench-gram
     # broadcast degenerating.
-    from tp_integ_data_pipeline_spark.plans.round10_queries import (
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import (
         existing_kept,
         refresh_admission_verdicts,
     )

@@ -228,15 +228,15 @@ GLOBAL_WINDOW_ALLOWED = {
     # centered 7-day moving average over the per-DAY summary
     "q229_seasonal_decompose": "centered MA over per-day rows, span-bounded",
     # running remainder over the funnel stage summary: <= 6 rows (the
-    # stage count is a code constant, plans/round9_queries._STAGES)
+    # stage count is a code constant, plans/curation.FUNNEL_STAGES)
     "q248_filter_funnel": "waterfall remainder over the <=6-row stage summary",
     # packing continuation via packing.global_cumsum: the only
     # partitionless window is its <= n_buckets offset table
     "q257_refresh_packing": "prefix-sum offset table, n_buckets rows",
     # running remainder over the admission stage summary: <= 7 rows
-    # (stage count is a code constant, plans/round10_queries._R_STAGES)
+    # (stage count is a code constant, plans/curation.ADMISSION_STAGES)
     "q258_refresh_waterfall": "waterfall remainder over the <=7-row stage summary",
-    # chained packing continuation (round12): two packing.global_cumsum
+    # chained packing continuation: two packing.global_cumsum
     # calls (one per refresh) — each's only partitionless window is its
     # <= n_buckets offset table
     "q268_chain_packing": "prefix-sum offset tables (x2), n_buckets rows each",

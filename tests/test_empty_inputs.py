@@ -13,7 +13,7 @@ from tp_integ_data_pipeline_spark.operators.dedup import (
     shingles,
     simhash_near_dup_pairs,
 )
-from tp_integ_data_pipeline_spark.operators.joins import asof_join
+from tp_integ_data_pipeline_spark.operators.asof import asof_join
 from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
 from tp_integ_data_pipeline_spark.operators.similarity import cosine_pairs, knn_bruteforce
 
@@ -53,7 +53,10 @@ def test_asof_join_empty_right(spark):
     right = left.filter(F.lit(False)).withColumnRenamed("k", "k2").select(
         F.col("k2").alias("k"), "ts", F.lit(1).alias("payload")
     )
-    out = asof_join(left, right, on=["k"], left_ts="ts", right_ts="ts", right_cols=["payload"])
+    out = asof_join(
+        left, right.withColumn("asof_ts", F.col("ts")), key="k", left_ts="ts",
+        right_ts="ts", right_seq="payload", right_vals=["asof_ts", "payload"],
+    )
     rows = out.collect()
     assert len(rows) == 1 and rows[0].asof_ts is None and rows[0].payload is None
 
@@ -251,7 +254,7 @@ def test_round4_ops_on_empty(spark):
 def test_funnel_verdicts_on_empty(spark):
     """Empty corpus → empty verdict relation with the full schema (the
     r9 family's builder; every report then returns 0 rows)."""
-    from tp_integ_data_pipeline_spark.plans.round9_queries import funnel_verdicts
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import funnel_verdicts
 
     docs = spark.createDataFrame(
         [],
@@ -273,13 +276,11 @@ def test_chain_admission_core_and_carry_on_empty(spark):
     from pyspark.sql import types as T
 
     from tp_integ_data_pipeline_spark.plans.curation import (
+        admission_core,
         bounded_bench_grams,
         word_ngrams,
     )
-    from tp_integ_data_pipeline_spark.plans.round10_queries import (
-        _carry_report,
-        admission_core,
-    )
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import _carry_report
 
     schema = T.StructType(
         [

@@ -12,13 +12,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-from tp_integ_data_pipeline_spark.plans.round10_queries import (
-    _ADMIT_IDX,
-    _PACK_BUDGET,
-    _R_STAGES,
-    _admission,
-    _exist_kept,
+from tp_integ_data_pipeline_spark.plans.curation import (
+    ADMISSION_STAGES as _R_STAGES,
+    ADMIT_IDX as _ADMIT_IDX,
+    PACK_BUDGET as _PACK_BUDGET,
 )
+from tp_integ_data_pipeline_spark.plans.refresh_queries import _admission, _exist_kept
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
 _PRIORITY = [

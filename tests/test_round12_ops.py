@@ -294,10 +294,8 @@ def test_q268_layout_is_one_continuous_cumsum(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.round10_queries import (
-        _PACK_BUDGET,
-        _exist_kept,
-    )
+    from tp_integ_data_pipeline_spark.plans.curation import PACK_BUDGET as _PACK_BUDGET
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import _exist_kept
 
     rows = sorted(
         QUERIES["q268_chain_packing"](spark, sf_dir).collect(),
@@ -326,14 +324,12 @@ def test_q269_carry_from_row_equals_rescan(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.round10_queries import (
-        _ADMIT_IDX,
+    from tp_integ_data_pipeline_spark.plans.curation import ADMIT_IDX as _ADMIT_IDX
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import (
         _carry_report,
-        _exist_kept,
-    )
-    from tp_integ_data_pipeline_spark.plans.round12_queries import (
         _chain_adm1,
         _chain_adm2,
+        _exist_kept,
     )
     from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -370,7 +366,7 @@ def test_q271_retro_sweep_recomputed_in_python(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.round12_queries import _chain_kept1
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import _chain_kept1
     from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
     def grams(text):
@@ -427,8 +423,8 @@ def test_random_chain_batch_equals_streamed(spark, seed):
     neither path was tuned for."""
     import random
 
-    from tp_integ_data_pipeline_spark.plans.round10_queries import (
-        _ADMIT_IDX,
+    from tp_integ_data_pipeline_spark.plans.curation import (
+        ADMIT_IDX as _ADMIT_IDX,
         admission_core,
     )
 
@@ -564,11 +560,11 @@ def test_streamed_chain_reproduces_graded_chain_relations(spark, sf_dir):
     foreachBatch machinery, not just in the synthetic/randomized
     corpora."""
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.round10_queries import _exist_kept
-    from tp_integ_data_pipeline_spark.plans.round12_queries import (
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import (
         _chain_adm1,
         _chain_adm2,
         _chain_kept1,
+        _exist_kept,
     )
     from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 

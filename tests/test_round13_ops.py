@@ -38,14 +38,12 @@ from tp_integ_data_pipeline_spark.plans.curation import (
     MIN_DISTINCT_RATIO,
     MIN_WORDS,
     PACK_BUDGET,
+    admission_core,
     bounded_bench_grams,
     word_ngrams,
 )
-from tp_integ_data_pipeline_spark.plans.round10_queries import (
-    _ADMIT_IDX,
-    _carry_report_from_scalars,
-    admission_core,
-)
+from tp_integ_data_pipeline_spark.plans.curation import ADMIT_IDX as _ADMIT_IDX
+from tp_integ_data_pipeline_spark.plans.refresh_queries import _carry_report_from_scalars
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 from tp_integ_data_pipeline_spark.streaming.refresh import (
     run_refresh_drain,

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-from tp_integ_data_pipeline_spark.plans.round9_queries import _KEPT_IDX, _STAGES
+from tp_integ_data_pipeline_spark.plans.curation import FUNNEL_STAGES as _STAGES, KEPT_IDX as _KEPT_IDX
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
 _PRIORITY = [("f_dup", 2), ("f_short", 3), ("f_quality", 4), ("f_contam", 5)]
@@ -269,3 +269,23 @@ def test_q250_source_waterfall_slices_q248(spark, sf_dir):
         for r in QUERIES["q248_filter_funnel"](spark, sf_dir).collect()
     }
     assert {r.stage_idx: (r.n_docs, r.n_chars) for r in per_source} == global_rows
+
+
+def test_funnel_bench_grams_carry_the_suite_guard(spark, monkeypatch):
+    """The one-shot funnel broadcasts its benchmark grams through the
+    same suite-size guard as every refresh path: over the bound the
+    query fails loudly. Collected, not counted — under count() Catalyst
+    prunes the contamination join, so no guard runs on any path."""
+    import pytest
+
+    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import funnel_verdicts
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(0, text, "en", "s1", 55), (1, text, "en", "s1", 55), (2, "one two", "en", "s2", 7)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 0)
+    with pytest.raises(Exception, match="USER_RAISED_EXCEPTION"):
+        funnel_verdicts(docs).select("doc_id", "contaminated", "stage_idx").collect()

@@ -1,10 +1,10 @@
 """Join operators (SURVEY.md §2.3).
 
 The reference performs one join — a left equi-join enriching the fact
-table from a tiny dimension (transf.py:94-99) — plus anti-join
-*semantics* for dedup-before-write (main.py:101-133, hand-rolled as
-scalar compares). The engine exposes the full `how` surface through
-these thin, broadcast-aware wrappers.
+table from a tiny dimension (transf.py:94-99). The engine exposes it
+through a broadcast-aware wrapper that gates the hint on Catalyst's
+size estimate. (Anti-join dedup-before-write lives in
+operators/merge_ops.py; the as-of join in operators/asof.py.)
 """
 
 from __future__ import annotations
@@ -100,68 +100,3 @@ def enrich(
     elif broadcast_dim:
         d = F.broadcast(d)
     return fact.join(d, fact[fact_key] == d[dim_key], how)
-
-
-def anti_join(df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
-    """J2: rows of `df` whose key is NOT present in `existing`.
-
-    This replaces the reference's driver-side membership list
-    (`r in list(prev['id'])`, main.py:131 — the anti-pattern at scale)
-    with a distributed left_anti join.
-    """
-    return df.join(existing.select(*keys).distinct(), keys, "left_anti")
-
-
-def semi_join(df: DataFrame, other: DataFrame, keys: list[str]) -> DataFrame:
-    """EXISTS semantics."""
-    return df.join(other.select(*keys).distinct(), keys, "left_semi")
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Backward as-of join: for each left row, the most recent right
-    row with right_ts <= left_ts per `on` key.
-
-    Spark has no native as-of join; this is the single-pass union +
-    carry-forward-window formulation — one shuffle on (on, ts), no
-    range explosion, no per-group pandas (`merge_asof`) needed. At
-    100 TB this beats bucketed range joins whenever both sides share
-    the key partitioning. Right-side payload travels as one struct so
-    `last(ignorenulls)` carries all columns atomically. Ties
-    (right_ts == left_ts) match, with right rows sorting before left.
-    Appends `asof_ts` + the requested right columns to left rows.
-    """
-    from pyspark.sql import Window as W
-
-    payload = F.struct(F.col(right_ts).alias("__ts"), *[F.col(c) for c in right_cols])
-    r = right.select(*on, F.col(right_ts).alias("__t"), F.lit(0).alias("__side"), payload.alias("__r"))
-    l_cols = left.columns
-    l = left.select(*l_cols, F.col(left_ts).alias("__t"), F.lit(1).alias("__side")).withColumn(
-        "__r", F.lit(None).cast(dict(r.dtypes)["__r"])
-    )
-    for c in l_cols:
-        if c not in r.columns:
-            r = r.withColumn(c, F.lit(None).cast(dict(l.dtypes)[c]))
-    unioned = l.select(*l_cols, "__t", "__side", "__r").unionByName(
-        r.select(*l_cols, "__t", "__side", "__r")
-    )
-    # __r as final sort key: deterministic winner among right rows that
-    # share (key, ts) — struct ordering is (ts, right_cols...).
-    w = (
-        W.partitionBy(*on)
-        .orderBy("__t", "__side", "__r")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    carried = unioned.withColumn("__last", F.last("__r", ignorenulls=True).over(w))
-    out = carried.filter(F.col("__side") == 1).select(
-        *l_cols,
-        F.col("__last.__ts").alias("asof_ts"),
-        *[F.col(f"__last.{c}").alias(c) for c in right_cols],
-    )
-    return out

@@ -1,26 +1,20 @@
-"""Data-layout operators: Z-order (Morton) clustering for multi-column
-file skipping, and co-located bucketed tables for exchange-free joins.
+"""Data-layout operator: N-column Z-order (Morton) clustering for
+multi-column file skipping — attacking the 100 TB I/O cost from the
+STORAGE side, which is where a lakehouse wins or loses.
 
-Both attack the same 100 TB cost — I/O and shuffle volume — from the
-STORAGE side, which is where a lakehouse wins or loses:
-
-- Z-order: a box predicate on (x, y) after a 1-D sort on either column
-  prunes on that column only; sorting by the interleaved-bit Morton
-  value makes files cover LOCAL RECTANGLES of the (x, y) space, so
-  parquet min/max stats skip most files for 2-D box queries (Delta
-  OPTIMIZE ZORDER's mechanism). The curve value is a pure bit-
-  interleave expression — JVM-side, oracle-reproducible arithmetic.
-- Bucketed tables: two tables bucketed (and sorted) by the join key
-  with the same bucket count join WITHOUT any Exchange — the shuffle
-  happened once at write time and is amortized over every subsequent
-  join (the classic warehouse fact-fact pattern).
+A box predicate on (x, y) after a 1-D sort on either column prunes on
+that column only; sorting by the interleaved-bit Morton value makes
+files cover LOCAL RECTANGLES of the key space, so parquet min/max
+stats skip most files for multi-column box queries (Delta OPTIMIZE
+ZORDER's mechanism). The curve value is a pure bit-interleave
+expression — JVM-side arithmetic, no UDF.
 
 No reference-repo counterpart — SURVEY.md §2.10 extension surface.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_BITS = 16  # per-column resolution for zorder_dataframe's quantized path
@@ -39,9 +33,7 @@ def _quantize(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
 
 def zorder_interleave(quantized: list[Column], bits: int = Z_BITS) -> Column:
     """Bit-interleave already-quantized [0, 2^bits) columns into one
-    z-value: output bit (i·n_cols + j) = bit i of column j. N-column
-    general form; the 2-column SQL-reproducible variant is
-    ``zorder_value`` below.
+    z-value: output bit (i·n_cols + j) = bit i of column j.
 
     Requires ``len(quantized) * bits <= 63``: bit 63 is the sign bit
     of a LongType, so letting the interleave reach it would make the
@@ -96,74 +88,3 @@ def zorder_dataframe(
         .drop(*[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
     )
     return with_z.repartitionByRange(n_files, "__z").sortWithinPartitions("__z").drop("__z")
-
-
-def zorder_value(x: Column, y: Column, bits: int = 10) -> Column:
-    """Morton (Z-order) interleave of the low ``bits`` bits of two
-    non-negative ints: x's bit i lands at position 2i, y's at 2i+1.
-    Built as a fixed sum of shift/mask terms — whole-stage-codegen
-    arithmetic, no UDF, and exactly reproducible in ANSI SQL."""
-    z: Column = F.lit(0).cast("long")
-    for i in range(bits):
-        xbit = F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1))
-        ybit = F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1))
-        z = z + xbit * F.lit(1 << (2 * i)) + ybit * F.lit(1 << (2 * i + 1))
-    return z
-
-
-def zorder_value_sql(x: str, y: str, bits: int = 10) -> str:
-    """The identical Morton interleave as an ANSI-SQL expression string
-    (for oracles / engines without bit-shift builtins): each term is
-    ((col // 2^i) % 2) * 2^(2i [+1])."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(({x} // {1 << i}) % 2) * {1 << (2 * i)}")
-        terms.append(f"(({y} // {1 << i}) % 2) * {1 << (2 * i + 1)}")
-    return "(" + " + ".join(terms) + ")"
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    bits: int = 10,
-    n_files: int = 16,
-) -> None:
-    """Cluster ``df`` on the (x, y) Morton curve and write ``n_files``
-    parquet files, each covering a contiguous curve segment (≈ a local
-    rectangle of the key space). Range-partition + in-partition sort on
-    the curve value puts every file's (x, y) min/max stats in a tight
-    box, so a reader's 2-D box predicate skips most files — verified by
-    the pruning test (tests/test_round5_ops.py)."""
-    with_z = df.withColumn("__z", zorder_value(F.col(x), F.col(y), bits))
-    (
-        with_z.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    path: str,
-    keys: list[str],
-    n_buckets: int = 8,
-) -> None:
-    """Persist ``df`` as an external BUCKETED table (hash-bucketed and
-    sorted by ``keys`` into ``n_buckets`` per-bucket files at ``path``).
-    The write pays one shuffle; every later equi-join between tables
-    bucketed the same way runs with NO Exchange on either side — the
-    join co-location is durable table metadata, not a per-query hint."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *keys)
-        .sortBy(*keys)
-        .saveAsTable(table)
-    )

@@ -30,7 +30,4 @@ from tp_integ_data_pipeline_spark.plans import round5_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import round6_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import round7_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import round8_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round9_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round10_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round11_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round12_queries  # noqa: E402,F401
+from tp_integ_data_pipeline_spark.plans import refresh_queries  # noqa: E402,F401

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.operators.joins import asof_join
+from tp_integ_data_pipeline_spark.operators.asof import asof_join
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.relational import _dsum
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, register_views
@@ -274,15 +274,19 @@ def q26_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q27_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "event_id")
+    # click_id breaks ties between clicks at one ts; the click's ts is
+    # the carried right value
     clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
+        "user_id",
+        "ts",
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("last_click_ts"),
     )
     joined = asof_join(
-        purchases, clicks, on=["user_id"], left_ts="ts", right_ts="ts", right_cols=["click_id"]
+        purchases, clicks, key="user_id", left_ts="ts", right_ts="ts",
+        right_seq="click_id", right_vals=["last_click_ts"],
     )
-    return joined.select(
-        "event_id", "user_id", F.col("asof_ts").alias("last_click_ts")
-    ).orderBy("event_id")
+    return joined.select("event_id", "user_id", "last_click_ts").orderBy("event_id")
 
 
 # --------------------------------------------------------------------------

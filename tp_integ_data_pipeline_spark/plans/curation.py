@@ -43,17 +43,39 @@ def _words(text_col: str = "text") -> F.Column:
 # eval battery, still ~10⁴× smaller than a 100 TB corpus.
 MAX_BENCH_SUITE_DOCS = 1_000_000
 
-# Admission-funnel thresholds shared by the batch funnels (round9's
-# funnel_verdicts, round10's refresh family) and the streaming refresh
-# (streaming/refresh.py) — ONE definition, so the proven batch ==
-# streaming parity cannot silently desync if a threshold is ever
-# retuned. The DuckDB oracles interpolate the SAME constants into
-# their SQL, so both engines move together by construction.
+# Admission-funnel thresholds read by admission_core below — the one
+# funnel behind the one-shot funnel (q248–q254), the single and chained
+# refreshes (q255–q260, q267–q271) and the streamed drain
+# (streaming/refresh.py, q261–q266). The DuckDB oracles interpolate the
+# SAME constants into their SQL, so both engines move together.
 MIN_WORDS = 10  # docs below this word count are too_short
 MEAN_WORDLEN_LO = 3.0  # quality gate: mean word length band
 MEAN_WORDLEN_HI = 10.0
 MIN_DISTINCT_RATIO = 0.3  # quality gate: distinct-word ratio floor
 PACK_BUDGET = 512  # tokens per training sequence (q100 convention)
+
+# admission_core's first-fail stage ladders (stage_idx = position + 1).
+# Without a standing corpus there is no dup_vs_corpus stage, so the
+# one-shot funnel grades 6 stages and every refresh grades 7.
+FUNNEL_STAGES = [
+    "bench_holdout",
+    "exact_dup",
+    "too_short",
+    "low_quality",
+    "contaminated",
+    "kept",
+]
+ADMISSION_STAGES = [
+    "bench_holdout",
+    "dup_in_batch",
+    "dup_vs_corpus",
+    "too_short",
+    "low_quality",
+    "contaminated",
+    "admitted",
+]
+KEPT_IDX = len(FUNNEL_STAGES)  # stage_idx of one-shot survivors
+ADMIT_IDX = len(ADMISSION_STAGES)  # stage_idx of admitted arrivals
 
 
 def bounded_bench_grams(bench_docs: DataFrame, grams_col) -> DataFrame:
@@ -112,6 +134,116 @@ def word_ngrams(words_col, n: int) -> F.Column:
     )
     return F.when(F.size(w) >= n, grams).otherwise(
         F.array().cast("array<string>")
+    )
+
+
+def doc_grams() -> F.Column:
+    """Distinct word-8-grams of the split-words column ``w`` (q93's rule)."""
+    return F.array_distinct(word_ngrams(F.col("w"), 8))
+
+
+def suite_grams(bench_docs: DataFrame) -> DataFrame:
+    """The benchmark-gram set of ``bench_docs`` (a ``text`` column):
+    every distinct word-8-gram, behind bounded_bench_grams' suite-size
+    guard. Every admission_core caller builds its grams here."""
+    return bounded_bench_grams(
+        bench_docs.select(F.split("text", " ").alias("w")), doc_grams()
+    )
+
+
+def admission_core(
+    arrival: DataFrame,
+    kept: DataFrame | None,
+    bench_grams: DataFrame,
+    seen: DataFrame | None = None,
+) -> DataFrame:
+    """The per-doc admission funnel, written once for the one-shot
+    funnel, the single and chained refreshes and the streamed drain.
+
+    ``arrival`` needs (doc_id, text); its other columns pass through in
+    order (lang/n_chars for the batch families, batch_id for the
+    stream). Bench membership is the doc_id % 97 convention and bench
+    docs are held out at stage 1. ``bench_grams`` is a suite_grams
+    relation. ``kept`` is the standing kept corpus (a ``text`` column,
+    unique texts): when given, a doc whose text it holds fails
+    ``dup_corpus`` and the ladder is ADMISSION_STAGES; when None there
+    is no such stage and the ladder is FUNNEL_STAGES. ``seen`` (a
+    ``text`` column) is the streamed drain's cross-batch state: a text
+    in it counts as an earlier copy, so the doc fails ``dup_batch``.
+
+    Returns the arrival's pass-through columns, then n_words, is_bench,
+    dup_batch, [dup_corpus,] too_short, low_quality, contaminated and
+    stage_idx (the first failing stage, or the survivor index). Shape:
+    ONE text-keyed keep-first window, one text-keyed equi-join per
+    state relation, one broadcast semi-join against the bounded
+    benchmark grams, all else row-local."""
+    keep = [c for c in arrival.columns if c != "text"]
+    base = arrival.select(
+        *keep,
+        "text",
+        F.split("text", " ").alias("w"),
+        (F.col("doc_id") % 97 == 0).alias("is_bench"),
+    )
+    nb = base.filter(~F.col("is_bench"))
+    hits = (
+        nb.select("doc_id", F.explode(doc_grams()).alias("gram"))
+        .join(F.broadcast(bench_grams), "gram", "left_semi")
+        .select("doc_id")
+        .distinct()
+        .withColumn("__hit", F.lit(1))
+    )
+    n_words = F.size("w")
+    sum_len = F.aggregate(
+        F.transform("w", lambda x: F.length(x)),
+        F.lit(0).cast("long"),
+        lambda a, x: a + x,
+    )
+    mean_wl = sum_len * F.lit(1.0) / n_words
+    distinct_ratio = F.size(F.array_distinct("w")) * F.lit(1.0) / n_words
+    verd = nb.withColumn(
+        "rn", F.row_number().over(W.partitionBy("text").orderBy("doc_id"))
+    ).join(hits, "doc_id", "left")
+    dup = F.col("rn") > 1
+    if seen is not None:
+        verd = verd.join(
+            seen.select("text").withColumn("__seen", F.lit(1)), "text", "left"
+        )
+        dup = dup | F.col("__seen").isNotNull()
+    flags = [("dup_batch", dup)]
+    if kept is not None:
+        # kept texts are unique (keep-first), so the probe cannot fan out
+        verd = verd.join(
+            kept.select("text").withColumn("__ck", F.lit(1)), "text", "left"
+        )
+        flags.append(("dup_corpus", F.col("__ck").isNotNull()))
+    flags += [
+        ("too_short", n_words < MIN_WORDS),
+        (
+            "low_quality",
+            ~(
+                mean_wl.between(MEAN_WORDLEN_LO, MEAN_WORDLEN_HI)
+                & (distinct_ratio >= MIN_DISTINCT_RATIO)
+            ),
+        ),
+        ("contaminated", F.col("__hit").isNotNull()),
+    ]
+    verd = verd.select(
+        *keep,
+        n_words.alias("n_words"),
+        F.lit(False).alias("is_bench"),
+        *[c.alias(name) for name, c in flags],
+    )
+    bench_rows = base.filter("is_bench").select(
+        *keep,
+        n_words.alias("n_words"),
+        F.lit(True).alias("is_bench"),
+        *[F.lit(False).alias(name) for name, _ in flags],
+    )
+    stage_idx = F.when(F.col("is_bench"), 1)
+    for i, (name, _) in enumerate(flags, start=2):
+        stage_idx = stage_idx.when(F.col(name), i)
+    return verd.unionByName(bench_rows).withColumn(
+        "stage_idx", stage_idx.otherwise(len(flags) + 2).cast("int")
     )
 
 

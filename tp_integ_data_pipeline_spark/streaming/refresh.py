@@ -1,17 +1,16 @@
 """Streaming corpus refresh: q255's admission funnel driven through
 the T1 micro-batch path (streaming/ingest.py's foreachBatch loop), so
-the round-10 refresh capstone's batch and streaming answers are proven
-EQUAL — the q232 discipline (streaming session windows vs batch q63)
+the refresh family's batch and streaming answers are proven EQUAL — the q232 discipline (streaming session windows vs batch q63)
 applied to the engine's own flagship composition.
 
 The reference's operating mode is a periodic re-run (main.py:80-114
-re-fetches and inserts only unseen rows); the batch capstone
-(plans/round10_queries.q255-q260) expresses one refresh as ONE lazy
-plan. This module is the third form: the arriving half lands as K
+re-fetches and inserts only unseen rows); the batch refresh
+(plans/refresh_queries.q255-q260) expresses one refresh as ONE lazy
+plan. This module is the streamed form: the arriving half lands as K
 doc_id-ordered micro-batches (file source, mtime-ordered,
 maxFilesPerTrigger=1 — the q232 staging recipe) and each batch passes
-the SAME admission funnel with the cross-batch state threaded through
-the loop:
+the SAME funnel (plans/curation.admission_core) with the cross-batch
+state threaded through the loop:
 
 1. seen-texts state — the exact-text analog of NearDupIndex.add
    (q109's ingest path maintains a MinHash index; q255's funnel is
@@ -66,13 +65,10 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.plans.curation import (
-    MEAN_WORDLEN_HI,
-    MEAN_WORDLEN_LO,
-    MIN_DISTINCT_RATIO,
-    MIN_WORDS,
+    ADMIT_IDX,
     PACK_BUDGET,
-    bounded_bench_grams,
-    word_ngrams,
+    admission_core,
+    suite_grams,
 )
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 
@@ -283,8 +279,6 @@ def stream_refresh_admission(
     docs: DataFrame,
     kept: DataFrame,
     n_batches: int = 4,
-    min_words: int = MIN_WORDS,
-    pack_budget: int = PACK_BUDGET,
     cache_key: str | None = None,
     arriving: DataFrame | None = None,
     bench_docs: DataFrame | None = None,
@@ -339,22 +333,13 @@ def stream_refresh_admission(
     # old + new bench docs). Both are per-refresh state, not per-batch.
     if bench_docs is None:
         bench_docs = docs.filter(F.col("doc_id") % 97 == 0)
-    bench_grams = bounded_bench_grams(
-        bench_docs.select(F.split("text", " ").alias("w")),
-        F.array_distinct(word_ngrams(F.col("w"), 8)),
-    ).localCheckpoint(eager=True)
+    bench_grams = suite_grams(bench_docs).localCheckpoint(eager=True)
     kept_texts = kept.select("text").localCheckpoint(eager=True)
     tokens_before = int(
         kept.agg(F.coalesce(F.sum("n_words"), F.lit(0))).first()[0]
     )
     return run_refresh_drain(
-        spark,
-        staging,
-        kept_texts,
-        bench_grams,
-        tokens_before,
-        min_words=min_words,
-        pack_budget=pack_budget,
+        spark, staging, kept_texts, bench_grams, tokens_before
     )
 
 
@@ -367,8 +352,6 @@ def run_refresh_drain(
     *,
     sink: str | None = None,
     ckpt: str | None = None,
-    min_words: int = MIN_WORDS,
-    pack_budget: int = PACK_BUDGET,
     fault_hook=None,
 ) -> DataFrame:
     """The micro-batch drain itself, restartable: stages in
@@ -394,7 +377,6 @@ def run_refresh_drain(
     # cross-batch state: recovered from the sink on (re)start — a
     # fresh run finds no committed partitions and starts empty
     state = recover_drain_state(spark, sink, staging, tokens_before)
-    grams_of = lambda: F.array_distinct(word_ngrams(F.col("w"), 8))  # noqa: E731
 
     def admit_batch(bdf: DataFrame, epoch_id: int) -> None:
         # foreachBatch is at-least-once: a trigger that fails after its
@@ -410,98 +392,16 @@ def run_refresh_drain(
         if epoch_id <= state["last_epoch"]:
             return
         bdf = _spread_batch(bdf)
-        is_bench = F.col("doc_id") % 97 == 0
-        base = bdf.select(
-            "doc_id",
-            "source",
-            "batch_id",
-            F.split("text", " ").alias("w"),
-            F.col("text"),
-            is_bench.alias("is_bench"),
-        )
-        nb = base.filter(~F.col("is_bench"))
-        # contamination: distinct grams -> bounded broadcast semi-join
-        hits = (
-            nb.select("doc_id", F.explode(grams_of()).alias("gram"))
-            .join(F.broadcast(bench_grams), "gram", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .withColumn("__hit", F.lit(1))
-        )
-        n_words = F.size("w")
-        sum_len = F.aggregate(
-            F.transform("w", lambda x: F.length(x)),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        mean_wl = sum_len * F.lit(1.0) / n_words
-        distinct_ratio = F.size(F.array_distinct("w")) * F.lit(1.0) / n_words
-        seen = state["seen"].withColumn("__seen", F.lit(1))
-        ck = kept_texts.withColumn("__ck", F.lit(1))
-        # dup_batch = earlier doc_id with the same text — an earlier
-        # micro-batch (seen state) or an earlier row of THIS batch (the
-        # same keep-first window q255 uses, scoped to the micro-batch)
-        verd = (
-            nb.withColumn(
-                "rn",
-                F.row_number().over(W.partitionBy("text").orderBy("doc_id")),
-            )
-            .join(hits, "doc_id", "left")
-            .join(seen, "text", "left")
-            .join(ck, "text", "left")
-            .select(
-                "doc_id",
-                "source",
-                "batch_id",
-                n_words.alias("n_words"),
-                F.lit(False).alias("is_bench"),
-                ((F.col("rn") > 1) | F.col("__seen").isNotNull()).alias(
-                    "dup_batch"
-                ),
-                F.col("__ck").isNotNull().alias("dup_corpus"),
-                (n_words < min_words).alias("too_short"),
-                (
-                    ~(
-                        mean_wl.between(MEAN_WORDLEN_LO, MEAN_WORDLEN_HI)
-                        & (distinct_ratio >= MIN_DISTINCT_RATIO)
-                    )
-                ).alias("low_quality"),
-                F.col("__hit").isNotNull().alias("contaminated"),
-            )
-        )
-        bench_rows = base.filter("is_bench").select(
-            "doc_id",
-            "source",
-            "batch_id",
-            n_words.alias("n_words"),
-            F.lit(True).alias("is_bench"),
-            *[
-                F.lit(False).alias(c)
-                for c in (
-                    "dup_batch",
-                    "dup_corpus",
-                    "too_short",
-                    "low_quality",
-                    "contaminated",
-                )
-            ],
-        )
-        stage_idx = (
-            F.when(F.col("is_bench"), 1)
-            .when(F.col("dup_batch"), 2)
-            .when(F.col("dup_corpus"), 3)
-            .when(F.col("too_short"), 4)
-            .when(F.col("low_quality"), 5)
-            .when(F.col("contaminated"), 6)
-            .otherwise(7)
-        )
-        all_rows = verd.unionByName(bench_rows).withColumn(
-            "stage_idx", stage_idx.cast("int")
+        # the one-shot funnel, with the seen-texts state standing in for
+        # the earlier micro-batches: a doc whose text arrived in one is
+        # dup_batch, exactly as the one-shot window's rn > 1 says
+        all_rows = admission_core(
+            bdf, kept_texts, bench_grams, seen=state["seen"]
         )
         # packing continuation: admitted tokens BEFORE this row within
         # the batch (micro-batch-bounded unkeyed window — bounded by
         # the trigger size, never the corpus) + the carried offset
-        admitted = F.col("stage_idx") == 7
+        admitted = F.col("stage_idx") == ADMIT_IDX
         cum_w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
         cum_before = F.coalesce(
             F.sum(F.when(admitted, F.col("n_words")).otherwise(0)).over(cum_w),
@@ -513,20 +413,9 @@ def run_refresh_drain(
             F.when(admitted, F.col("n_words").cast("long")).alias("n_tokens"),
             F.when(admitted, (off + cum_before)).alias("_pos"),
         ).select(
-            "doc_id",
-            "source",
-            "n_words",
-            "is_bench",
-            "dup_batch",
-            "dup_corpus",
-            "too_short",
-            "low_quality",
-            "contaminated",
-            "stage_idx",
-            "batch_id",
-            "n_tokens",
-            F.expr(f"_pos div {pack_budget}").alias("seq_id"),
-            (F.col("_pos") % pack_budget).cast("long").alias("seq_offset"),
+            *SINK_COLS[:-2],
+            F.expr(f"_pos div {PACK_BUDGET}").alias("seq_id"),
+            (F.col("_pos") % PACK_BUDGET).cast("long").alias("seq_offset"),
         )
         # the batch DataFrame is only valid inside this call — pin the
         # results before they leave it
@@ -536,12 +425,12 @@ def run_refresh_drain(
                 F.coalesce(F.sum(F.when(admitted, F.col("n_words"))), F.lit(0))
             ).first()[0]
         )
-        # one eager checkpoint per batch: the union references nb (only
+        # one eager checkpoint per batch: the union references bdf (only
         # valid inside this call), so materializing the merged state
         # here both pins it and dedups in a single job
         new_seen = (
             state["seen"]
-            .unionByName(nb.select("text"))
+            .unionByName(bdf.filter(F.col("doc_id") % 97 != 0).select("text"))
             .distinct()
             .localCheckpoint(eager=True)
         )
