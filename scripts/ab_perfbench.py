@@ -15,9 +15,11 @@ checkout, e.g. ``git archive`` of the parent commit unpacked into a
 scratch directory, and the working tree.
 
 The artifact has the shape of ``scripts/ab_worker_shim.json`` (one
-record per run, in the order run, with the run's box-health labels)
-plus a ``summary``: per workload and metric, each side's median and
-quartiles and the change's wins over the pairs. It is rewritten after
+record per run, in the order run, with the run's box-health labels
+and its wall-clock figures: ``wall_s`` and ``op_p50_s``, and for
+``lake_etl`` the slowest cycle ``cycle_max_s``) plus a ``summary``: per
+workload and metric, each side's median and quartiles and the change's
+wins over the pairs. It is rewritten after
 every run, so an interrupted A/B keeps its finished pairs.
 """
 
@@ -31,6 +33,9 @@ import subprocess
 import sys
 
 METRICS = ("setup_s", "pass_cpu_s", "op_cpu_p50_s", "peak_rss_mb")
+# wall-clock figures from the run's details line, summarized beside the
+# end-to-end metrics: a CPU-second metric cannot show lost parallelism
+WALL = ("wall_s", "op_p50_s", "cycle_max_s")
 SECONDS = 10
 RUN_TIMEOUT_S = 1800
 
@@ -62,6 +67,8 @@ def run_once(tree: str, workload: str, seed: int) -> dict:
     for label in ("cpu_spin_ms", "loadavg_1m_start", "timed_steal_s"):
         if label in details:
             out[label] = round(details[label], 2)
+    wall = {**details, **{k.split(".")[-1]: v for k, v in details.get("lake", {}).items()}}
+    out.update({k: round(wall[k], 3) for k in WALL if k in wall})
     return out
 
 
@@ -83,7 +90,9 @@ def summarize(runs: list[dict], base: str, change: str) -> dict:
                 pairs.setdefault(r["seed"], {})[r["variant"]] = r
         pairs = {s: p for s, p in pairs.items() if len(p) == 2}
         per_metric = {}
-        for m in METRICS:
+        for m in METRICS + WALL:
+            if not all(m in p[v] for p in pairs.values() for v in (base, change)):
+                continue
             a = [p[base][m] for p in pairs.values()]
             b = [p[change][m] for p in pairs.values()]
             per_metric[m] = {

@@ -166,8 +166,10 @@ BNLJ_ALLOWED = {
     # totals) joined into the single carry-state row
     "q259_refresh_carry_state": {"scalar_aggs": 1, "filtered_batches": []},
     # 1-row split-point scalar attached lazily to select the NEW
-    # half's bench docs (the q254/q257 rule — no construction job)
-    "q260_refresh_retro_contam": {"scalar_aggs": 1, "filtered_batches": []},
+    # half's bench docs (the q254/q257 rule — no construction job).
+    # Appears twice: the new-suite grams and their suite-size guard
+    # count (curation.bounded_bench_grams) both read those bench docs.
+    "q260_refresh_retro_contam": {"scalar_aggs": 2, "filtered_batches": []},
     # two 1-row bookkeeping rollups (kept-corpus totals × streamed
     # batch totals) joined into the single carry-state row — the
     # streaming twin of q259's attach
@@ -188,8 +190,9 @@ BNLJ_ALLOWED = {
     # <=|sources|-row rollup (shared _mixture_report)
     "q270_chain_mixture": {"scalar_aggs": 1, "filtered_batches": []},
     # post-chain retro sweep: 1-row m2 split-point scalar attached
-    # lazily to select refresh-2's bench docs (q260's shape one link up)
-    "q271_chain_retro_contam": {"scalar_aggs": 1, "filtered_batches": []},
+    # lazily to select refresh-2's bench docs (q260's shape one link
+    # up, so twice: the grams and their suite-size guard count)
+    "q271_chain_retro_contam": {"scalar_aggs": 2, "filtered_batches": []},
 }
 
 # Queries whose plan legitimately contains a Window with NO data-column

@@ -979,3 +979,82 @@ def test_anti_join_probe_side_duplicates_do_not_fan_out(spark):
     out = scd1_upsert(target, stage, ["k"], merge_date="2024-01-02")
     got = sorted((r.k, r.v) for r in out.collect())
     assert got == [(1, "X"), (1, "X"), (2, "b")]
+
+
+# Byte-sized writes. Frames built from pandas carry a Catalyst size
+# estimate (a list-built frame has none and is written unsized).
+def _pdf(spark, rows, schema):
+    import pandas as pd
+
+    names = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
+def _data_files(d):
+    import os
+
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_small_versioned_merges_write_one_file_per_version(spark, tmp_path):
+    """A small warehouse version is one file, whatever partition count
+    fed the merge, and the table holds the merge_ops end state."""
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    want = None
+    for i in range(3):
+        stage = _pdf(spark, [(k, f"v{k}", "2024-01-01") for k in range(5 * i, 5 * i + 8)], _STAGE)
+        t.merge_insert_if_absent(stage, ["k"])
+        want = stage if want is None else insert_if_absent(want, stage, ["k"])
+        assert len(_data_files(t.current_version_dir())) == 1
+    for i in range(3):
+        stage = _pdf(spark, [(k, f"w{k}", "2024-01-03") for k in range(4 * i, 4 * i + 6)], _STAGE)
+        t.merge_scd1(stage, ["k"], merge_date="2024-01-04", origin_date_col="d")
+        want = scd1_upsert(want, stage, ["k"], merge_date="2024-01-04", origin_date_col="d")
+        assert len(_data_files(t.current_version_dir())) == 1
+    assert t.read().columns == want.columns
+    assert sorted(t.read().collect()) == sorted(want.collect())
+
+
+def test_merge_past_one_open_cost_keeps_its_partitions(spark, tmp_path):
+    """Only a frame that fits in one scan split (openCostInBytes) is
+    written as one file; lower the limit and the same merge keeps the
+    partitions its plan gives it."""
+    key = "spark.sql.files.openCostInBytes"
+    stage = spark.range(0, 20000, numPartitions=4).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    t = VersionedParquetTable(spark, str(tmp_path / "default"))
+    t.merge_insert_if_absent(stage, ["k"])
+    assert len(_data_files(t.current_version_dir())) == 1
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        t = VersionedParquetTable(spark, str(tmp_path / "lowered"))
+        t.merge_insert_if_absent(stage, ["k"])
+        assert len(_data_files(t.current_version_dir())) == 4
+    finally:
+        spark.conf.set(key, old)
+    assert t.read().count() == 20000
+
+
+def test_write_full_appends_one_file_per_batch(spark, tmp_path):
+    """Each write_full that brings new rows adds one file, however many
+    partitions fed it."""
+    lake = DataLake(spark, str(tmp_path))
+    for i in range(5):
+        batch = spark.range(3 * i, 3 * i + 4, numPartitions=4).selectExpr(
+            "id", "concat('n', id) AS name"
+        )
+        lake.write_full("localid", batch, ["id"])
+        assert len(_data_files(str(tmp_path / "localid"))) == i + 1
+    got = sorted(lake.read("localid").collect())
+    assert got == [(k, f"n{k}") for k in range(16)]
+
+
+def test_write_full_new_column_appends(spark, tmp_path):
+    """A batch with another schema appends a file, and a merge_schema
+    read returns the union."""
+    lake = DataLake(spark, str(tmp_path))
+    lake.write_full("t", _pdf(spark, [(1, "a")], "id long, x string"), ["id"])
+    lake.write_full("t", _pdf(spark, [(2, "b", 9.5)], "id long, x string, score double"), ["id"])
+    assert len(_data_files(str(tmp_path / "t"))) == 2
+    rows = {r["id"]: (r["x"], r["score"]) for r in lake.read("t", merge_schema=True).collect()}
+    assert rows == {1: ("a", None), 2: ("b", 9.5)}

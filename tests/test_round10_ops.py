@@ -287,3 +287,25 @@ def test_q260_no_new_bench_means_no_retro(spark, tmp_path):
     docs.toPandas().to_parquet(str(tmp_path / "documents.parquet"))
     rows = QUERIES["q260_refresh_retro_contam"](spark, str(tmp_path)).collect()
     assert rows and all(r.n_retro_contaminated == 0 and r.retro_rate == 0.0 for r in rows)
+
+
+def test_q260_new_suite_grams_carry_the_suite_guard(spark, monkeypatch):
+    """The retroactive sweep (q260, q266, q271) broadcasts the new
+    suite's grams through the suite-size guard: over the bound the
+    report fails loudly. Collected, not counted — under count()
+    Catalyst prunes the gram semi-join and the guard with it."""
+    import pytest
+
+    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.plans.refresh_queries import _retro_contam_report
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    kept = spark.createDataFrame(
+        [(1, "s1", text), (2, "s2", "one two three")], "doc_id long, source string, text string"
+    )
+    new_bench = spark.createDataFrame([(text,)], "text string").select(
+        F.split("text", " ").alias("w")
+    )
+    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 0)
+    with pytest.raises(Exception, match="USER_RAISED_EXCEPTION"):
+        _retro_contam_report(kept, new_bench).collect()

@@ -1,6 +1,7 @@
-"""Data-layout operator: N-column Z-order (Morton) clustering for
-multi-column file skipping — attacking the 100 TB I/O cost from the
-STORAGE side, which is where a lakehouse wins or loses.
+"""Data-layout operators: N-column Z-order (Morton) clustering for
+multi-column file skipping, and one-file writes of small frames —
+attacking the 100 TB I/O cost from the STORAGE side, which is where a
+lakehouse wins or loses.
 
 A box predicate on (x, y) after a 1-D sort on either column prunes on
 that column only; sorting by the interleaved-bit Morton value makes
@@ -9,6 +10,10 @@ stats skip most files for multi-column box queries (Delta OPTIMIZE
 ZORDER's mechanism). The curve value is a pure bit-interleave
 expression — JVM-side arithmetic, no UDF.
 
+``sized_for_write`` writes a small frame as one file, however many
+partitions happen to feed it — the small-file half of Delta's optimized
+writes, without the extra shuffle.
+
 No reference-repo counterpart — SURVEY.md §2.10 extension surface.
 """
 
@@ -16,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tp_integ_data_pipeline_spark.operators.joins import _parse_size_bytes, plan_size_bytes
 
 Z_BITS = 16  # per-column resolution for zorder_dataframe's quantized path
 
@@ -88,3 +95,32 @@ def zorder_dataframe(
         .drop(*[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
     )
     return with_z.repartitionByRange(n_files, "__z").sortWithinPartitions("__z").drop("__z")
+
+
+def _read_size_bytes(df: DataFrame) -> int | None:
+    """Bytes of the relations the frame's optimized plan reads: the sum
+    of its leaves' size estimates (file sizes, for a scan)."""
+    try:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return sum(int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size()))
+    except Exception:
+        return None
+
+
+def sized_for_write(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to one partition when it fits in one scan split,
+    so a small warehouse version or lake batch is written as one file
+    and every later scan of it is one task.
+
+    Spark splits a scan of at most ``spark.sql.files.openCostInBytes``
+    (read from the live session) into one partition, so that is the
+    limit. The frame's size is the smaller of Catalyst's estimate for
+    it and the bytes of the relations it reads: join estimates multiply
+    their sides, and a merge writes no more than it reads (a frame that
+    fans out, e.g. by an explode, can outgrow its inputs and then lands
+    as one larger file). A larger frame, or one with no estimate, is
+    returned unchanged, so a mid-size or large write keeps the
+    parallelism its plan gives it."""
+    sizes = [s for s in (plan_size_bytes(df), _read_size_bytes(df)) if s is not None]
+    limit = _parse_size_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
+    return df.coalesce(1) if sizes and min(sizes) <= limit else df

@@ -75,6 +75,8 @@ def constrained_overwrite(table, df: DataFrame, checks: dict[str, str]) -> dict:
 
     from pyspark.sql import functions as F
 
+    from tp_integ_data_pipeline_spark.operators.layout import sized_for_write
+
     metrics = {
         name: F.sum(
             (~F.coalesce(F.expr(pred), F.lit(False))).cast("long")
@@ -83,7 +85,7 @@ def constrained_overwrite(table, df: DataFrame, checks: dict[str, str]) -> dict:
     }
     new_dir = table.staged_dir()
     observed, obs = with_audit(df, metrics)
-    observed.write.mode("overwrite").parquet(new_dir)
+    sized_for_write(observed).write.mode("overwrite").parquet(new_dir)
     counts = {k: int(v or 0) for k, v in dict(obs.get).items()}
     if any(counts.values()):
         shutil.rmtree(new_dir, ignore_errors=True)

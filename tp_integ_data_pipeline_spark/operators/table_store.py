@@ -9,6 +9,13 @@ commit, scoped to what the engine needs. `VersionedParquetTable`
 rewrites the whole table per merge (the no-log price);
 `BucketedParquetTable` is the 100 TB path: hash-bucketed on the merge
 key, rewriting only dirty buckets.
+
+Every data write (merge, overwrite, restore, tombstone key set, dirty
+buckets) goes through `layout.sized_for_write`: a write that fits in
+one scan split (`spark.sql.files.openCostInBytes`) is one file,
+whatever the partition count of the plan feeding it, so every later
+scan of a small version is one task. A larger write keeps its plan's
+partitions.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tp_integ_data_pipeline_spark.operators.layout import sized_for_write
 from tp_integ_data_pipeline_spark.operators.merge_ops import (
     insert_if_absent,
     scd1_upsert,
@@ -349,9 +357,11 @@ class VersionedParquetTable:
     same copy-on-write + optimistic-concurrency idea as a Delta commit.
     Concurrent merges serialize: the loser of a commit race re-reads
     the winner's table, recomputes its merge, and retries (bounded by
-    ``MAX_COMMIT_RETRIES``); no committed rows are ever lost. Remaining
-    limitation vs a real log: full-table rewrite per merge (see
-    BucketedParquetTable for the partition-scoped variant).
+    ``MAX_COMMIT_RETRIES``); no committed rows are ever lost. Each
+    version is one file while it fits in one scan split
+    (``layout.sized_for_write``). Remaining limitation vs a real
+    log: full-table rewrite per merge (see BucketedParquetTable for the
+    partition-scoped variant).
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -411,7 +421,7 @@ class VersionedParquetTable:
         concurrent overwrites serialize as last-committed-wins with no
         torn manifest."""
         new_dir = self.staged_dir()
-        df.write.mode("overwrite").parquet(new_dir)
+        sized_for_write(df).write.mode("overwrite").parquet(new_dir)
         self.commit_staged_dir(new_dir, meta, df.schema)
 
     def restore(self, version: int) -> None:
@@ -446,7 +456,7 @@ class VersionedParquetTable:
             # data dir — the committed manifest then needs no tombstones
             merged = combine(_manifest_frame(self.spark, manifest), stage)
             new_dir = _new_version_dir(self.path)
-            merged.write.mode("overwrite").parquet(new_dir)
+            sized_for_write(merged).write.mode("overwrite").parquet(new_dir)
             new_manifest = {"current": new_dir, "schema": merged.schema.jsonValue()}
             return _with_meta(new_manifest, manifest, meta), new_dir
 
@@ -484,7 +494,7 @@ class VersionedParquetTable:
             return
         ts_dir = _new_version_dir(self.path)
         key_set = stage.select(*keys).distinct()
-        key_set.write.mode("overwrite").parquet(ts_dir)
+        sized_for_write(key_set).write.mode("overwrite").parquet(ts_dir)
         entry = {"dir": ts_dir, "keys": list(keys), "schema": key_set.schema.jsonValue()}
 
         def attempt(manifest):
@@ -536,6 +546,8 @@ class BucketedParquetTable:
     winner's manifest — including any buckets the winner rewrote — and
     re-merges, so two concurrent merges (even to disjoint buckets)
     serialize instead of one silently dropping the other's buckets.
+    The dirty buckets are written in one write: while they fit in one
+    scan split, one task writes one file per dirty bucket.
     """
 
     BUCKET_COL = "__bucket"
@@ -628,9 +640,9 @@ class BucketedParquetTable:
             new_dir = _new_version_dir(self.path)
             # one hive-partitioned write; each dirty bucket becomes its
             # own subdir the manifest can point at individually
-            self._with_bucket(merged).write.partitionBy(self.BUCKET_COL).mode(
-                "overwrite"
-            ).parquet(new_dir)
+            sized_for_write(self._with_bucket(merged)).write.partitionBy(
+                self.BUCKET_COL
+            ).mode("overwrite").parquet(new_dir)
             for b in dirty:
                 bdir = os.path.join(new_dir, f"{self.BUCKET_COL}={b}")
                 if os.path.isdir(bdir):

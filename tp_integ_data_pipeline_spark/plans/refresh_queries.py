@@ -56,6 +56,7 @@ from tp_integ_data_pipeline_spark.plans.curation import (
     MIN_WORDS,
     PACK_BUDGET,
     admission_core,
+    bounded_bench_grams,
     doc_grams,
     suite_grams,
 )
@@ -741,9 +742,10 @@ def _retro_contam_report(kept, new_bench_w) -> DataFrame:
     docs): per-source kept counts, how many are now hit by the new
     suite's 8-grams, and the rate. ``new_bench_w`` needs only a ``w``
     split-words column — shared by q260, streamed q266 and chained
-    q271."""
+    q271. The new-suite grams are broadcast, so they carry the
+    suite-size guard (``curation.bounded_bench_grams``)."""
     grams = doc_grams()
-    new_grams = new_bench_w.select(F.explode(grams).alias("gram")).distinct()
+    new_grams = bounded_bench_grams(new_bench_w, grams)
     kw = kept.select("doc_id", "source", F.split("text", " ").alias("w"))
     hits = (
         kw.select("doc_id", F.explode(grams).alias("gram"))

@@ -9,6 +9,9 @@ Re-expresses the reference's `DataLake` (main.py:20-150):
   compares scalars / membership lists (main.py:101-107, 127-133) — at
   scale that is O(lake) per write; the engine uses `left_anti` joins
   (and documents the reference's batch-skip policies as options).
+
+Every append goes through `layout.sized_for_write`: a small batch lands
+as one file, however many partitions fed it.
 """
 
 from __future__ import annotations
@@ -19,6 +22,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from tp_integ_data_pipeline_spark.operators.layout import sized_for_write
 
 
 class DataLake:
@@ -194,7 +199,9 @@ class DataLake:
             )
             if deduped is None:  # empty batch
                 return
-        deduped.write.mode("append").partitionBy(*partition_cols).parquet(self._path(table))
+        sized_for_write(deduped).write.mode("append").partitionBy(*partition_cols).parquet(
+            self._path(table)
+        )
         self._note_write(table, df, partition_cols, whole_table=existing is None)
 
     def write_full(
@@ -218,7 +225,7 @@ class DataLake:
                     return
             else:
                 deduped = self._dedup_against_existing(df, existing, dedup_keys, None)
-        deduped.write.mode("append").parquet(self._path(table))
+        sized_for_write(deduped).write.mode("append").parquet(self._path(table))
         self._note_write(table, df, [], whole_table=existing is None)
 
     def compact(
