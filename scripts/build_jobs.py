@@ -1,0 +1,85 @@
+"""Census of the Spark jobs each registered query starts while it is
+being BUILT: the registry callable runs, nothing is collected.
+
+    python scripts/build_jobs.py <testdata>/sf0.001 [--tree <checkout>] --out <file.json>
+
+Each fixture table is loaded once first, so a key's count is its
+steady-state cost, not the first read of a table in the process. Keys
+are then built in registry order, each under its own ``setJobGroup``;
+a key's count is the number of jobs in its group once the listener bus
+has drained. Micro-batches of a streaming drain run under the stream's
+own job group and are not counted. ``--tree`` censuses another source
+checkout (e.g. the parent commit) with this script.
+
+The output is ``{"sf": ..., "keys": n, "keys_with_jobs": n,
+"build_jobs": total, "per_key": {key: jobs}}``. ``tests/test_build_jobs.py`` runs the same
+census as a Tier-1 gate against ``tests/build_job_budget.json``.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def jobs_started(spark, group: str, fn) -> int:
+    """Run ``fn()`` under job group ``group``; return how many jobs it
+    started, counted once the listener bus has drained (job-start
+    events reach the status store asynchronously)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def census(spark, sf_dir: str) -> dict[str, int]:
+    """{key: jobs started while building it} for every registered key,
+    after one priming load of each fixture table."""
+    from tp_integ_data_pipeline_spark import plans
+    from tp_integ_data_pipeline_spark.sources.fixtures import FIXTURE_TABLES, load_table
+
+    for name in FIXTURE_TABLES:
+        load_table(spark, sf_dir, name)
+    return {
+        key: jobs_started(spark, f"build:{key}", lambda fn=fn: fn(spark, sf_dir))
+        for key, fn in list(plans.QUERIES.items())
+    }
+
+
+def main(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", help="fixture dir, e.g. <testdata>/sf0.001")
+    ap.add_argument("--tree", default=REPO, help="source checkout to census")
+    ap.add_argument("--out", required=True)
+    args = ap.parse_args(argv)
+    sys.path.insert(0, os.path.abspath(args.tree))
+    from tp_integ_data_pipeline_spark.session import get_session
+
+    spark = get_session("build-jobs", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    spark.sparkContext.setLogLevel("ERROR")
+    per_key = census(spark, args.sf_dir)
+    record = {
+        "sf": os.path.basename(os.path.normpath(args.sf_dir)).removeprefix("sf"),
+        "keys": len(per_key),
+        "keys_with_jobs": sum(1 for n in per_key.values() if n),
+        "build_jobs": sum(per_key.values()),
+        "per_key": per_key,
+    }
+    with open(args.out, "w") as fh:
+        json.dump(record, fh, indent=1)
+        fh.write("\n")
+    print(json.dumps({k: v for k, v in record.items() if k != "per_key"}))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -1058,3 +1058,50 @@ def test_write_full_new_column_appends(spark, tmp_path):
     assert len(_data_files(str(tmp_path / "t"))) == 2
     rows = {r["id"]: (r["x"], r["score"]) for r in lake.read("t", merge_schema=True).collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
+
+
+@pytest.mark.parametrize("crash_at", ["second_rename", "rmtree"])
+def test_compact_recovers_from_a_crashed_swap(spark, tmp_path, monkeypatch, crash_at):
+    """A crash inside compact's swap loses no rows. After the first
+    rename the live dir is missing: exists/read/compact rename ``.old``
+    back. After the second, ``.old`` is stale beside the new live dir:
+    it is removed, so the next compact's first rename succeeds."""
+    import os
+
+    from tp_integ_data_pipeline_spark.sources import lake as lake_mod
+
+    root = str(tmp_path / "lk")
+    lake = DataLake(spark, root)
+    for i in range(3):
+        lake.write_full("t", spark.range(3 * i, 3 * i + 3).selectExpr("id", "id * 2 AS v"), ["id"])
+    want = sorted(lake.read("t").collect())
+    live = os.path.join(root, "t")
+
+    real_rename, renames = os.rename, []
+
+    def rename(src, dst):
+        renames.append(src)
+        if crash_at == "second_rename" and len(renames) == 2:
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    def rmtree(path, *a, **kw):
+        raise OSError("crash in the removal")
+
+    monkeypatch.setattr(lake_mod.os, "rename", rename)
+    if crash_at == "rmtree":
+        monkeypatch.setattr(lake_mod.shutil, "rmtree", rmtree)
+    with pytest.raises(OSError, match="crash"):
+        lake.compact("t")
+    monkeypatch.undo()
+    assert os.path.isdir(live + ".old")
+    assert os.path.isdir(live) == (crash_at == "rmtree")
+
+    fresh = DataLake(spark, root)  # a restarted process
+    assert fresh.exists("t")
+    assert not os.path.exists(live + ".old")
+    assert sorted(fresh.read("t").collect()) == want
+    fresh.compact("t")
+    fresh.write_full("t", spark.range(100, 101).selectExpr("id", "id * 2 AS v"), ["id"])
+    assert sorted(fresh.read("t").collect()) == sorted(want + [(100, 200)])
+    assert not os.path.exists(live + ".old")

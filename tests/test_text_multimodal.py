@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.multimodal import (
@@ -41,6 +42,29 @@ def test_char_ngrams_and_fingerprint(spark):
     assert rows[1].g == ["abcdefgh"]
     assert rows[1].fp == hashlib.md5(b"abcdefgh").hexdigest()
     assert rows[2].g == [] and rows[2].fp is None
+
+
+# NULL, "", shorter than k, exactly k, embedded newlines and other line
+# terminators, trailing spaces, multi-byte and supplementary-plane text
+_GRAM_TEXTS = [
+    None, "", "a", "ab", "abc", "abcdefgh", "ab\ncd\nef", "x\r\ny z\u0085w\u2028v",
+    "trail   ", "  ", "héllo wörld", "日本語のテキスト", "a😀b😀c😀d", "😀😀😀", "𝔘𝔫𝔦😀ab",
+]
+
+
+@pytest.mark.parametrize("k", [2, 3, 8])
+def test_char_ngrams_equals_substr_lambda(spark, k):
+    """The regex kernel yields exactly the grams of the substr lambda it
+    replaced, code point by code point."""
+    lam = F.when(
+        F.length("text") >= k,
+        F.expr(f"transform(sequence(1, length(text) - {k - 1}), i -> substr(text, i, {k}))"),
+    ).otherwise(F.array().cast("array<string>"))
+    df = spark.createDataFrame(list(enumerate(_GRAM_TEXTS)), "id int, text string")
+    rows = df.select("id", char_ngrams("text", k).alias("g"), lam.alias("want")).collect()
+    assert len(rows) == len(_GRAM_TEXTS)
+    for r in rows:
+        assert r.g == r.want, (_GRAM_TEXTS[r.id], r.g, r.want)
 
 
 def test_lang_id_deterministic_and_total(spark, sf_dir):

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
+from tp_integ_data_pipeline_spark.operators.text import char_ngrams
 
 
 def hash_bucket(col: F.Column, n_buckets: int) -> F.Column:
@@ -135,11 +136,8 @@ def trigram_surprisal(
     join instead of OOMing. One exploded base feeds both the count agg
     and the scoring join (lazy checkpoint), mirroring ``dsir_weights``.
     """
-    tri = F.expr(
-        f"transform(sequence(1, length({text_col}) - 2), i -> substr({text_col}, i, 3))"
-    )
-    base = docs.filter(F.length(text_col) >= 3).select(
-        F.col(id_col).alias("id"), F.explode(tri).alias("gram")
+    base = docs.select(
+        F.col(id_col).alias("id"), F.explode(char_ngrams(text_col, 3)).alias("gram")
     ).localCheckpoint(eager=False)
     counts = base.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("__N"))
@@ -164,19 +162,12 @@ def bpe_pair_counts(
     shuffle on the word), so the quadratic-ish char-pair explode runs
     over the VOCABULARY (≪ corpus tokens; Heaps' law), not over every
     token occurrence — the same vocabulary-not-corpus trick real BPE
-    trainers use. Pairs are substr-based (no split-on-empty-string
-    engine quirks), expression-level, and the final rollup is the
-    second and last shuffle."""
+    trainers use. Pairs are the character 2-grams of each word
+    (``text.char_ngrams``: empty for single-char words), and the final
+    rollup is the second and last shuffle."""
     words = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("wf"))
-    # Guard single-char words explicitly: Spark's sequence(1, 0) yields
-    # a DESCENDING [1, 0], not an empty array, which would fabricate
-    # bogus pairs; the when() keeps the transform total-order safe.
-    pair_arr = F.when(
-        F.length("word") >= 2,
-        F.expr("transform(sequence(1, length(word) - 1), i -> substr(word, i, 2))"),
-    ).otherwise(F.array().cast("array<string>"))
-    pairs = vocab.select("wf", F.explode(pair_arr).alias("pair"))
+    pairs = vocab.select("wf", F.explode(char_ngrams("word", 2)).alias("pair"))
     return pairs.groupBy("pair").agg(F.sum("wf").cast("long").alias("cnt"))
 
 

@@ -49,14 +49,20 @@ def quality_score(text_col: str = "text") -> Column:
 
 
 def char_ngrams(text_col: str = "text", k: int = 3) -> Column:
-    """Character k-gram array (empty when text shorter than k)."""
-    return F.when(
-        F.length(F.col(text_col)) >= k,
-        F.expr(
-            f"transform(sequence(1, length({text_col}) - {k - 1}), "
-            f"i -> substr({text_col}, i, {k}))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """Character k-gram array, one gram per code-point offset (empty
+    when the text is shorter than k or NULL).
+
+    A ``transform(sequence(...), i -> substr(...))`` lambda runs
+    interpreted (higher-order functions have no whole-stage codegen);
+    ``regexp_extract_all`` is codegen'd. Each match consumes ONE code
+    point and captures the k code points starting there in a lookahead:
+    a purely zero-width pattern would make the matcher step one UTF-16
+    unit after each empty match and emit grams starting inside a
+    surrogate pair. ``(?s)`` lets windows span line terminators."""
+    return F.coalesce(
+        F.regexp_extract_all(F.col(text_col), F.lit(f"(?s)(?=(.{{{k}}}))."), F.lit(1)),
+        F.array().cast("array<string>"),
+    )
 
 
 def lang_profiles(labeled: DataFrame, text_col="text", lang_col="lang", k=3, top_n=20) -> DataFrame:

@@ -15,10 +15,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.relational import dsum_sql
-from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
+from tp_integ_data_pipeline_spark.sources.fixtures import file_schema, scratch_dir
 from tp_integ_data_pipeline_spark.streaming.ingest import run_stream_to_memory
 
 
@@ -34,6 +35,13 @@ def _normalize_ts(stream: DataFrame) -> DataFrame:
     return stream
 
 
+def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
+    """The events fixture's file schema, from the batch loader's memo:
+    every staged copy (and the sentinel-carrying rewrite, whose columns
+    are the fixture's own) is read with it, so staging infers nothing."""
+    return file_schema(spark, f"{sf_dir}/events.parquet")
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events fixture with the same ns→µs
     timestamp normalization as the batch loader."""
@@ -43,8 +51,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     staging = scratch_dir(prefix="events_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(staging, "events.parquet"))
-    schema = spark.read.parquet(staging).schema
-    stream = spark.readStream.schema(schema).parquet(staging)
+    stream = spark.readStream.schema(_events_schema(spark, sf_dir)).parquet(staging)
     return _normalize_ts(stream)
 
 
@@ -124,7 +131,7 @@ def q89_stream_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     staging = scratch_dir(prefix="events_late_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(staging, "a_events.parquet"))
-    raw = spark.read.parquet(staging)
+    raw = spark.read.schema(_events_schema(spark, sf_dir)).parquet(staging)
     dup_tmp = scratch_dir(prefix="events_dup_")
     raw.filter(F.col("event_id") % 10 == 0).coalesce(1).write.mode("overwrite").parquet(dup_tmp)
     part = next(f for f in os.listdir(dup_tmp) if f.endswith(".parquet"))
@@ -384,18 +391,16 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> "DataFrame":
     import glob as _glob
     import time
 
+    schema = _events_schema(spark, sf_dir)
     cached = _FLUSH_STAGING_CACHE.get(sf_dir)
     if cached is not None:
-        raw = spark.read.parquet(cached)
         return _normalize_ts(
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(cached)
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(cached)
         )
     staging = scratch_dir(prefix="events_flush_")
     src = f"{sf_dir}/events.parquet"
     now = time.time()
-    src_raw = spark.read.parquet(src)
+    src_raw = spark.read.schema(schema).parquet(src)
     ts_type = dict(src_raw.dtypes)["ts"]  # TIMESTAMP(NANOS): ns-long or NTZ
     mx = src_raw.agg(F.max("ts").alias("ts"))
 
@@ -428,13 +433,10 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> "DataFrame":
     flush = os.path.join(staging, "zz_flush2.parquet")
     shutil.move(_glob.glob(os.path.join(tmp, "*.parquet"))[0], flush)
     os.utime(flush, (now + 2, now + 2))
-    raw = spark.read.parquet(staging)
     _FLUSH_STAGING_CACHE[sf_dir] = staging  # staged data + sentinels are
     # pure functions of the fixture dir — reuse across queries in-process
     return _normalize_ts(
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staging)
     )
 
 

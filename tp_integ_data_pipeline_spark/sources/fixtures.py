@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FIXTURE_TABLES = (
     "region",
@@ -33,6 +34,8 @@ def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
     """Read one fixture table; normalizes events.ts to TimestampType.
+    The read passes the memoized file schema (``file_schema``), so it
+    starts no footer-inference job after the first in the process.
 
     ``spread=True`` is the consumer's opt-in to the unsplittable-scan
     spread (see ``_spread_unsplittable_scan``); only the corpus
@@ -44,7 +47,7 @@ def load_table(
     except Exception:
         pass
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = spark.read.schema(file_schema(spark, path)).parquet(path)
     ts_type = dict(df.dtypes).get("ts") if name == "events" else None
     if ts_type == "bigint":
         # ns → µs integer division (`div`, not `/`: double would lose
@@ -57,6 +60,35 @@ def load_table(
         # one stable events schema across Spark minor versions.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return _spread_unsplittable_scan(spark, df, path) if spread else df
+
+
+# Confs that change the schema Parquet inference yields for a file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per
+    process: inference reads the footer in a Spark job, so every read
+    after the first passes the schema and starts none (the fixture-read
+    counterpart of ``DataLake``'s schema record). The key is the file's
+    identity (path, size, mtime) plus the live values of the confs that
+    change inference, so a rewritten file or a changed conf re-infers."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(c, None) for c in _INFERENCE_CONFS
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
 
 
 def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:

@@ -42,7 +42,25 @@ class DataLake:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def _recover(self, table: str) -> None:
+        """Settle a ``compact`` swap that a crash interrupted. The swap
+        renames the live dir to ``<table>.old``, renames the rewrite in,
+        then removes ``.old``: with the live dir missing, the first
+        rename is undone; beside a live dir, ``.old`` is stale."""
+        live = self._path(table)
+        backup = live + ".old"
+        if not os.path.isdir(backup):
+            return
+        if os.path.isdir(live):
+            shutil.rmtree(backup)
+        else:
+            os.rename(backup, live)
+
     def exists(self, table: str) -> bool:
+        """Whether ``table`` has data; runs ``_recover`` first, so
+        ``read``, ``compact`` and every write, which all ask this,
+        never see a half-done swap."""
+        self._recover(table)
         p = self._path(table)
         if not os.path.isdir(p):
             return False
