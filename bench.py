@@ -747,7 +747,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
     # 1-minute load BEFORE any work starts: the true co-residency
     # label. The at-completion loadavg_1m (kept below for continuity)
-    # mixes in the bench's OWN local[32] work, and the round-15 code
+    # mixes in the bench's OWN local[N] work, and the round-15 code
     # legitimately runs hotter (more parallel stages after the scan
     # spread / AQE floor), so completion load no longer separates
     # co-resident contamination from healthy self-load.

@@ -416,7 +416,7 @@ def main() -> None:
     from tp_integ_data_pipeline_spark import plans
     from tp_integ_data_pipeline_spark.session import get_session
 
-    spark = get_session("plan-audit", cpus=8)
+    spark = get_session("plan-audit")
     sf_dir = "/root/testdata/sf0.01"
     lines = [
         "# PLANS — physical-plan audit (generated by scripts/audit_plans.py)",

@@ -64,7 +64,7 @@ def main(argv: list[str]) -> int:
     sys.path.insert(0, os.path.abspath(args.tree))
     from tp_integ_data_pipeline_spark.session import get_session
 
-    spark = get_session("build-jobs", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    spark = get_session("build-jobs")
     spark.sparkContext.setLogLevel("ERROR")
     per_key = census(spark, args.sf_dir)
     record = {

@@ -44,7 +44,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_session("oracle-check", cpus=8)
+    spark = get_session("oracle-check")
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -29,7 +29,12 @@ import json
 import os
 import re
 import subprocess
+import sys
 from collections import Counter, defaultdict
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable  # noqa: E402
 
 METRICS = (
     "exec.jobs", "exec.tasks", "exec.task_s", "sources.lake.files_written",
@@ -85,10 +90,10 @@ def files_at_end(run_dir: str) -> dict:
 
     out = {"lake/localid": n_parquet(os.path.join(run_dir, "lake", "localid"))}
     for table in ("meteor_proc", "loc_proc"):
-        commits = os.path.join(run_dir, "warehouse", table, "_commits")
-        latest = max(f for f in os.listdir(commits) if f.endswith(".json"))
-        with open(os.path.join(commits, latest)) as fh:
-            out[f"warehouse/{table} current version"] = n_parquet(json.load(fh)["current"])
+        # current_version_dir reads only the commit log: no session needed
+        table_dir = os.path.join(run_dir, "warehouse", table)
+        cur = VersionedParquetTable(None, table_dir).current_version_dir()
+        out[f"warehouse/{table} current version"] = n_parquet(cur) if cur else 0
     return out
 
 

@@ -71,13 +71,13 @@ def test_merge_ops_with_empty_sides(spark):
 
 
 def test_bucketed_merge_empty_stage_is_noop(spark, tmp_path):
-    from tp_integ_data_pipeline_spark.operators.table_store import BucketedParquetTable
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 
-    tbl = BucketedParquetTable(spark, str(tmp_path / "wh"), keys=["k"], n_buckets=4)
+    tbl = VersionedParquetTable(spark, str(tmp_path / "wh"), bucket_keys=["k"], n_buckets=4)
     base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    tbl.merge_insert_if_absent(base)
+    tbl.merge_insert_if_absent(base, ["k"])
     before = tbl.bucket_dirs()
-    tbl.merge_insert_if_absent(base.limit(0))
+    tbl.merge_insert_if_absent(base.limit(0), ["k"])
     assert tbl.bucket_dirs() == before  # no bucket touched
     assert tbl.read().count() == 2
 

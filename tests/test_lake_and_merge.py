@@ -3,15 +3,19 @@ the reference's core guarantees (SURVEY.md §5 test strategy #3)."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
-from tp_integ_data_pipeline_spark.operators.table_store import (
-    BucketedParquetTable,
-    VersionedParquetTable,
-)
+from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
 from tp_integ_data_pipeline_spark.sources.lake import DataLake
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+import build_jobs  # noqa: E402
 
 
 @pytest.fixture()
@@ -164,9 +168,9 @@ def test_bucketed_merge_rewrites_only_dirty_buckets(spark, tmp_path):
     import hashlib
     import os
 
-    tbl = BucketedParquetTable(spark, str(tmp_path / "wh"), keys=["k"], n_buckets=8)
+    tbl = VersionedParquetTable(spark, str(tmp_path / "wh"), bucket_keys=["k"], n_buckets=8)
     base = spark.createDataFrame([(i, f"v{i}") for i in range(200)], ["k", "v"])
-    tbl.merge_insert_if_absent(base)
+    tbl.merge_insert_if_absent(base, ["k"])
     dirs_before = tbl.bucket_dirs()
     assert len(dirs_before) > 1  # data spread over several buckets
 
@@ -181,7 +185,7 @@ def test_bucketed_merge_rewrites_only_dirty_buckets(spark, tmp_path):
     digests_before = {b: dir_digest(d) for b, d in dirs_before.items()}
 
     one = spark.createDataFrame([(0, "UPDATED"), (1000, "NEW")], ["k", "v"])
-    tbl.merge_scd1(one, merge_date="2024-07-01")
+    tbl.merge_scd1(one, ["k"], merge_date="2024-07-01")
     dirs_after = tbl.bucket_dirs()
 
     stage_b = tbl._with_bucket(one)
@@ -203,13 +207,13 @@ def test_bucketed_merge_rewrites_only_dirty_buckets(spark, tmp_path):
 def test_bucketed_merge_matches_versioned_end_state(spark, tmp_path):
     """Same stage sequence through both tables → same end state."""
     vt = VersionedParquetTable(spark, str(tmp_path / "vt"))
-    bt = BucketedParquetTable(spark, str(tmp_path / "bt"), keys=["k"], n_buckets=4)
+    bt = VersionedParquetTable(spark, str(tmp_path / "bt"), bucket_keys=["k"], n_buckets=4)
     s1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     s2 = spark.createDataFrame([(2, "CHANGED"), (3, "c")], ["k", "v"])
     vt.merge_insert_if_absent(s1, ["k"])
     vt.merge_insert_if_absent(s2, ["k"])
-    bt.merge_insert_if_absent(s1)
-    bt.merge_insert_if_absent(s2)
+    bt.merge_insert_if_absent(s1, ["k"])
+    bt.merge_insert_if_absent(s2, ["k"])
     assert sorted((r.k, r.v) for r in vt.read().collect()) == sorted(
         (r.k, r.v) for r in bt.read().collect()
     )
@@ -220,10 +224,10 @@ def test_concurrent_bucketed_merges_serialize_no_lost_buckets(spark, tmp_path):
     must re-merge against the winner's state — both writers' rows land,
     no bucket is silently dropped (the pre-CAS last-writer-wins bug)."""
     path = str(tmp_path / "wh")
-    t1 = BucketedParquetTable(spark, path, keys=["k"], n_buckets=8)
-    t2 = BucketedParquetTable(spark, path, keys=["k"], n_buckets=8)
+    t1 = VersionedParquetTable(spark, path, bucket_keys=["k"], n_buckets=8)
+    t2 = VersionedParquetTable(spark, path, bucket_keys=["k"], n_buckets=8)
     base = spark.createDataFrame([(i, "base") for i in range(10)], ["k", "v"])
-    t1.merge_insert_if_absent(base)
+    t1.merge_insert_if_absent(base, ["k"])
 
     stage_a = spark.createDataFrame([(200, "a")], ["k", "v"])
     stage_b = spark.createDataFrame([(100, "b")], ["k", "v"])
@@ -239,12 +243,12 @@ def test_concurrent_bucketed_merges_serialize_no_lost_buckets(spark, tmp_path):
     def racing_commit(p, expected_version, manifest):
         if not fired["done"]:
             fired["done"] = True
-            t2.merge_insert_if_absent(stage_b)  # t2 wins the race
+            t2.merge_insert_if_absent(stage_b, ["k"])  # t2 wins the race
         return real_commit(p, expected_version, manifest)
 
     merge_mod._try_commit = racing_commit
     try:
-        t1.merge_insert_if_absent(stage_a)
+        t1.merge_insert_if_absent(stage_a, ["k"])
     finally:
         merge_mod._try_commit = real_commit
 
@@ -302,8 +306,8 @@ def _versioned_with_empty_version(spark, path):
 
 
 def _bucketed(spark, path):
-    t = BucketedParquetTable(spark, path, ["k"], n_buckets=4)
-    t.merge_insert_if_absent(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
+    t = VersionedParquetTable(spark, path, bucket_keys=["k"], n_buckets=4)
+    t.merge_insert_if_absent(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"])
     return t
 
 
@@ -321,8 +325,12 @@ def _bucketed(spark, path):
             _versioned_with_empty_version, lambda t, df: t.restore(2), id="restore_empty"
         ),
         pytest.param(
-            _bucketed, lambda t, df: t.merge_insert_if_absent(df), id="bucketed_merge"
+            _bucketed, lambda t, df: t.merge_insert_if_absent(df, ["k"]), id="bucketed_merge"
         ),
+        pytest.param(
+            _bucketed, lambda t, df: t.delete_keys_mor(df, ["k"]), id="bucketed_delete_keys_mor"
+        ),
+        pytest.param(_bucketed, lambda t, df: t.overwrite(df), id="bucketed_overwrite"),
     ],
 )
 def test_writer_that_always_loses_fails_cleanly(spark, tmp_path, monkeypatch, make_table, write):
@@ -403,10 +411,10 @@ def test_bucketed_table_time_travel_and_vacuum(spark, tmp_path):
     carried-forward clean bucket of a kept commit."""
     import os
 
-    tbl = BucketedParquetTable(spark, str(tmp_path / "bt"), keys=["k"], n_buckets=8)
+    tbl = VersionedParquetTable(spark, str(tmp_path / "bt"), bucket_keys=["k"], n_buckets=8)
     base = spark.createDataFrame([(i, "base") for i in range(50)], ["k", "v"])
-    tbl.merge_insert_if_absent(base)
-    tbl.merge_scd1(spark.createDataFrame([(0, "UPD")], ["k", "v"]), merge_date="2024-07-01")
+    tbl.merge_insert_if_absent(base, ["k"])
+    tbl.merge_scd1(spark.createDataFrame([(0, "UPD")], ["k", "v"]), ["k"], merge_date="2024-07-01")
     assert tbl.read(version=1).count() == 50
     rows_v2 = {r.k: r.v for r in tbl.read(version=2).collect()}
     assert rows_v2[0] == "UPD"
@@ -419,7 +427,7 @@ def test_bucketed_table_time_travel_and_vacuum(spark, tmp_path):
     assert rows[0] == "UPD" and len(rows) == 50
     # a third merge orphans nothing kept → vacuum drops v-dirs only when
     # every kept manifest stops referencing them
-    tbl.merge_scd1(base, merge_date="2024-07-02")  # rewrites ALL buckets
+    tbl.merge_scd1(base, ["k"], merge_date="2024-07-02")  # rewrites ALL buckets
     removed = tbl.vacuum(keep_last=1, retention_seconds=0)
     assert len(removed) == 2  # v1 and v2 dirs now unreferenced
     assert {r.v for r in tbl.read().collect()} == {"base"}
@@ -430,11 +438,6 @@ def test_delete_keys_versioned_and_bucketed(spark, tmp_path):
     """Targeted delete on both MERGE tables: rows gone from the current
     version, pre-delete state still time-travelable, and — bucketed —
     only the buckets holding the deleted keys rewritten."""
-    from tp_integ_data_pipeline_spark.operators.table_store import (
-        BucketedParquetTable,
-        VersionedParquetTable,
-    )
-
     rows = [(i, f"v{i}") for i in range(20)]
     df = spark.createDataFrame(rows, ["k", "v"])
     doomed = spark.createDataFrame([(3, "x"), (7, "y"), (99, "z")], ["k", "v"])
@@ -451,10 +454,10 @@ def test_delete_keys_versioned_and_bucketed(spark, tmp_path):
     # pre-delete state still readable via time travel
     assert vt.read(version=v_before).count() == 20
 
-    bt = BucketedParquetTable(spark, str(tmp_path / "bt"), keys=["k"], n_buckets=8)
-    bt.merge_insert_if_absent(df)
+    bt = VersionedParquetTable(spark, str(tmp_path / "bt"), bucket_keys=["k"], n_buckets=8)
+    bt.merge_insert_if_absent(df, ["k"])
     dirs_before = bt.bucket_dirs()
-    bt.delete_keys(doomed)
+    bt.delete_keys(doomed, ["k"])
     assert sorted(r.k for r in bt.read().collect()) == sorted(set(range(20)) - {3, 7})
     dirs_after = bt.bucket_dirs()
     # only the buckets hashing keys 3/7/99 may change
@@ -806,15 +809,84 @@ def test_bucketed_table_rejects_mismatched_bucket_spec(spark, tmp_path):
     # (keys, n_buckets) define the on-disk hash layout; reopening with a
     # different spec must fail loudly, not silently mis-bucket merges
     p = str(tmp_path / "bspec")
-    tbl = BucketedParquetTable(spark, p, keys=["k"], n_buckets=8)
-    tbl.merge_insert_if_absent(spark.createDataFrame([(1, "a")], ["k", "v"]))
+    tbl = VersionedParquetTable(spark, p, bucket_keys=["k"], n_buckets=8)
+    tbl.merge_insert_if_absent(spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"])
     with pytest.raises(ValueError, match="n_buckets"):
-        BucketedParquetTable(spark, p, keys=["k"], n_buckets=16)
+        VersionedParquetTable(spark, p, bucket_keys=["k"], n_buckets=16)
     with pytest.raises(ValueError, match="keys"):
-        BucketedParquetTable(spark, p, keys=["v"], n_buckets=8)
+        VersionedParquetTable(spark, p, bucket_keys=["v"], n_buckets=8)
     # identical spec reopens fine and sees the committed rows
-    again = BucketedParquetTable(spark, p, keys=["k"], n_buckets=8)
+    again = VersionedParquetTable(spark, p, bucket_keys=["k"], n_buckets=8)
     assert again.read().count() == 1
+
+
+def _bucketed_base(spark, path):
+    t = VersionedParquetTable(spark, path, bucket_keys=["k"], n_buckets=8)
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(50)], ["k", "v"])
+    t.merge_insert_if_absent(base, ["k"])
+    return t, base
+
+
+def test_bucketed_read_starts_no_job(spark, tmp_path):
+    """A bucketed read passes each bucket's recorded schema: no footer
+    inference, also once an SCD1 merge gave only the buckets it
+    rewrote the audit columns (two schemas, unioned by name)."""
+    t, _ = _bucketed_base(spark, str(tmp_path / "bt"))
+    assert build_jobs.jobs_started(spark, f"{tmp_path}:read1", t.read) == 0
+    before = t.bucket_dirs()
+    t.merge_scd1(spark.createDataFrame([(0, "UPD")], ["k", "v"]), ["k"], merge_date="2024-07-01")
+    assert set(before.values()) & set(t.bucket_dirs().values())  # clean buckets kept
+    assert build_jobs.jobs_started(spark, f"{tmp_path}:read2", t.read) == 0
+    df = t.read()
+    assert df.columns[:2] == ["k", "v"] and "fecha_actualizacion" in df.columns
+    rows = {r.k: r for r in df.collect()}
+    assert len(rows) == 50 and rows[0].v == "UPD"
+    assert str(rows[0].fecha_actualizacion) == "2024-07-01"
+    assert all(r.fecha_actualizacion is None for k, r in rows.items() if k)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        pytest.param(lambda t, df: t.merge_insert_if_absent(df, ["v"]), id="insert_if_absent"),
+        pytest.param(
+            lambda t, df: t.merge_scd1(df, ["k", "v"], merge_date="2024-07-01"), id="scd1"
+        ),
+        pytest.param(lambda t, df: t.delete_keys(df, ["v"]), id="delete_keys"),
+        pytest.param(lambda t, df: t.delete_keys_mor(df, ["v"]), id="delete_keys_mor"),
+    ],
+)
+def test_bucketed_table_rejects_other_merge_keys(spark, tmp_path, call):
+    """Merges and deletes on a bucketed table must use its bucket keys:
+    on other keys the dirty-bucket scoping would miss rows. The misuse
+    raises before any Spark job and commits nothing."""
+    t, _ = _bucketed_base(spark, str(tmp_path / "bt"))
+    stage = spark.createDataFrame([(1, "v1")], ["k", "v"])
+
+    def misuse():
+        with pytest.raises(ValueError, match="bucketed on"):
+            call(t, stage)
+
+    assert build_jobs.jobs_started(spark, f"{tmp_path}:misuse", misuse) == 0
+    assert len(t.history()) == 1
+
+
+def test_bucketed_mor_delete_survives_partial_merge(spark, tmp_path):
+    """On a bucketed table a merge folds the tombstones out of the
+    buckets it rewrites and keeps them for the others: a deleted key in
+    a clean bucket stays deleted, a deleted key the merge re-inserts
+    is back, and compaction clears the rest."""
+    t, base = _bucketed_base(spark, str(tmp_path / "bt"))
+    bucket = {r.k: r[t.BUCKET_COL] for r in t._with_bucket(base).collect()}
+    other = next(k for k in range(50) if bucket[k] != bucket[3])
+    t.delete_keys_mor(spark.createDataFrame([(3,), (other,)], ["k"]), ["k"])
+    assert {r.k for r in t.read().collect()} == set(range(50)) - {3, other}
+    t.merge_insert_if_absent(spark.createDataFrame([(3, "back")], ["k", "v"]), ["k"])
+    rows = {r.k: r.v for r in t.read().collect()}
+    assert rows[3] == "back" and other not in rows and len(rows) == 49
+    assert t.compact_tombstones() == 1
+    assert {r.k: r.v for r in t.read().collect()} == rows
+    assert t.compact_tombstones() == 0
 
 
 def test_zorder_interleave_stays_inside_long_sign_bit(spark, sf_dir):
@@ -881,7 +953,7 @@ def test_warehouse_read_uses_recorded_schema(spark, tmp_path, write):
 
 
 def test_warehouse_manifest_without_schema_still_reads(spark, tmp_path):
-    """A commit without the "schema" key (older commits, external
+    """A data entry without the "schema" key (external
     commit_staged_dir callers) falls back to inference."""
     import json
     import os
@@ -893,7 +965,7 @@ def test_warehouse_manifest_without_schema_still_reads(spark, tmp_path):
     commit = os.path.join(path, "_commits", commit)
     with open(commit) as fh:
         manifest = json.load(fh)
-    del manifest["schema"]
+    del manifest["buckets"]["0"]["schema"]
     with open(commit, "w") as fh:
         json.dump(manifest, fh)
     df, jobs = _jobs_started(spark, t.read)

@@ -259,16 +259,16 @@ def test_rollup_replay_is_idempotent(spark, tmp_path):
 
 
 def test_fold_batch_into_bucketed_table_rewrites_only_dirty_buckets(spark, tmp_path):
-    """The 100 TB rollup shape: fold_batch against a BucketedParquetTable
-    keyed on the rollup grain — a fold rewrites only the key-buckets the
+    """The 100 TB rollup shape: fold_batch against a table bucketed on
+    the rollup grain — a fold rewrites only the key-buckets the
     batch's windows touch, clean buckets are carried forward by
     reference; the epoch replay guard works through the bucketed
-    table's meta just like the versioned one."""
-    from tp_integ_data_pipeline_spark.operators.table_store import BucketedParquetTable
+    table's meta just like the unbucketed one."""
+    from tp_integ_data_pipeline_spark.operators.table_store import VersionedParquetTable
     from tp_integ_data_pipeline_spark.streaming.rollup import fold_batch
 
-    table = BucketedParquetTable(
-        spark, str(tmp_path / "roll"), keys=["win_start", "event_type"], n_buckets=8
+    table = VersionedParquetTable(
+        spark, str(tmp_path / "roll"), bucket_keys=["win_start", "event_type"], n_buckets=8
     )
     ckpt = str(tmp_path / "ckpt")
     b1 = spark.createDataFrame(

@@ -20,8 +20,8 @@ def table_changes(table, v_from: int, v_to: int, keys: list[str]) -> DataFrame:
     minimum any version diff needs without per-commit row tracking),
     then a row-local when/explode to emit 0–2 change rows per key —
     the four change kinds come out of a single evaluation of the join,
-    not four filtered re-evaluations. Works on VersionedParquetTable
-    and BucketedParquetTable alike (both expose ``read(version=)``).
+    not four filtered re-evaluations. Works on any
+    VersionedParquetTable, bucketed or not (``read(version=)``).
 
     PRECONDITION: ``keys`` must be unique within each compared version
     (the standard CDF contract — same as :func:`scd2_upsert`'s stage

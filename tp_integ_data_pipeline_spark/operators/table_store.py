@@ -1,14 +1,16 @@
-"""Versioned parquet table store: CAS commit log, copy-on-write and
-bucket-scoped MERGE tables, vacuum, time travel, merge-on-read deletes.
+"""Versioned parquet table store: CAS commit log, copy-on-write MERGE
+tables (optionally bucket-scoped), vacuum, time travel, merge-on-read
+deletes.
 
 The reference gets transactions for free from PostgreSQL; on plain
 files the equivalent is an append-only commit log with optimistic
 concurrency (`_try_commit`'s os.link CAS), copy-on-write version
 directories, and manifest-level tombstones — the same ideas as a Delta
-commit, scoped to what the engine needs. `VersionedParquetTable`
-rewrites the whole table per merge (the no-log price);
-`BucketedParquetTable` is the 100 TB path: hash-bucketed on the merge
-key, rewriting only dirty buckets.
+commit, scoped to what the engine needs. A manifest maps bucket ids to
+data directories, each with its recorded schema. An unbucketed table
+has one bucket and rewrites the whole table per merge (the no-log
+price); a table bucketed on its merge key rewrites only the buckets a
+merge touches.
 
 Every data write (merge, overwrite, restore, tombstone key set, dirty
 buckets) goes through `layout.sized_for_write`: a write that fits in
@@ -25,6 +27,7 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,48 +134,56 @@ def _version_component(p: str) -> str | None:
 
 def _manifest_version_dirs(manifest: dict) -> set[str]:
     """NAMES of the version directories a manifest references (a
-    bucketed manifest points at per-bucket subdirs inside one). Names,
-    not full paths: ``v{time_ns}`` is globally unique, while a manifest
-    written under one spelling of the table root (relative vs absolute)
-    would never string-match a maintenance job's other spelling — and a
-    full-path compare would then delete LIVE directories."""
-    names = set()
-    dirs = [manifest.get("current")] + list(manifest.get("buckets", {}).values())
-    dirs += [t.get("dir") for t in manifest.get("tombstones", [])]
-    for d in dirs:
-        if d:
-            v = _version_component(d)
-            if v:
-                names.add(v)
-    return names
+    bucket's data dir may sit inside one). Names, not full paths:
+    ``v{time_ns}`` is globally unique, while a manifest written under
+    one spelling of the table root (relative vs absolute) would never
+    string-match a maintenance job's other spelling — and a full-path
+    compare would then delete LIVE directories."""
+    dirs = [e["dir"] for e in manifest.get("buckets", {}).values()]
+    dirs += [t["dir"] for t in manifest.get("tombstones", [])]
+    return {v for v in map(_version_component, dirs) if v}
 
 
-def _manifest_frame(spark, manifest: dict) -> DataFrame | None:
-    """Materialize a manifest's logical state: the current data dir
-    with every tombstone key set (merge-on-read deletes) anti-joined
-    away. THE single definition of 'what this commit contains' —
-    read(), time travel, and every copy-on-write merge go through it,
-    so an interleaved delete_keys_mor can never be resurrected by a
-    writer that only looked at the raw data dir."""
-    cur = manifest.get("current")
-    if not cur:
-        return None
-    df = _read_data_dir(spark, cur, manifest.get("schema"))
-    for t in manifest.get("tombstones", []):
-        df = df.join(_read_data_dir(spark, t["dir"], t.get("schema")), t["keys"], "left_anti")
-    return df
+def _manifest_frame(spark, manifest: dict, only: set[str] | None = None) -> DataFrame | None:
+    """Materialize a manifest's logical state — or that of the buckets
+    in ``only`` — with every tombstone key set (merge-on-read deletes)
+    anti-joined away from the buckets it still applies to. THE single
+    definition of 'what this commit contains': read(), time travel, and
+    every copy-on-write merge go through it, so an interleaved
+    delete_keys_mor can never be resurrected by a writer that only
+    looked at the raw data dirs.
+
+    Buckets sharing a recorded schema and a tombstone set are one scan;
+    scans with different schemas (a merge added columns to the buckets
+    it rewrote) are unioned by name, newest first, so the columns come
+    in the order of the latest write. None when no bucket holds data."""
+    tombstones = manifest.get("tombstones", [])
+    groups: dict[tuple, list[str]] = {}
+    entries = sorted(manifest.get("buckets", {}).items(), key=lambda be: be[1]["dir"], reverse=True)
+    for b, e in entries:
+        if only is None or b in only:
+            applied = tuple(i for i, t in enumerate(tombstones) if b in t["buckets"])
+            groups.setdefault((json.dumps(e.get("schema")), applied), []).append(e["dir"])
+    frames = []
+    for (schema, applied), dirs in groups.items():
+        df = _read_data_dir(spark, dirs, json.loads(schema))
+        for i in applied:
+            t = tombstones[i]
+            df = df.join(_read_data_dir(spark, [t["dir"]], t.get("schema")), t["keys"], "left_anti")
+        frames.append(df)
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames) if frames else None
 
 
-def _read_data_dir(spark, path: str, schema: dict | None) -> DataFrame:
-    """Read a version or tombstone directory with the schema its commit
+def _read_data_dir(spark, paths: list[str], schema: dict | None) -> DataFrame:
+    """Read data or tombstone directories with the schema their commit
     recorded (``df.schema.jsonValue()`` of the frame written there).
     Version directories are write-once, so the record is exact and the
-    read starts no footer-inference job; a commit without the key (older
-    commits, external ``commit_staged_dir`` callers) is inferred."""
+    read starts no footer-inference job; an entry without one (external
+    ``commit_staged_dir`` callers that pass no schema) is inferred."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(path)
+    return reader.parquet(*paths)
 
 
 def _with_meta(new_manifest: dict, manifest: dict, meta: dict | None) -> dict:
@@ -329,8 +340,8 @@ def _new_version_dir(path: str) -> str:
     return os.path.join(path, f"v{time.time_ns()}")
 
 
-# Combines shared by both table classes: (current, stage) -> new state,
-# where current is None for a table with no data yet.
+# Merge combines: (current, stage) -> new state, where current is None
+# for a table (or set of buckets) with no data yet.
 def _insert_if_absent_combine(keys: list[str]):
     return lambda cur, stg: stg if cur is None else insert_if_absent(cur, stg, keys)
 
@@ -359,18 +370,79 @@ class VersionedParquetTable:
     the winner's table, recomputes its merge, and retries (bounded by
     ``MAX_COMMIT_RETRIES``); no committed rows are ever lost. Each
     version is one file while it fits in one scan split
-    (``layout.sized_for_write``). Remaining limitation vs a real
-    log: full-table rewrite per merge (see BucketedParquetTable for the
-    partition-scoped variant).
+    (``layout.sized_for_write``).
+
+    The manifest maps bucket ids to data directories. Unbucketed (the
+    default) is the one-bucket case: every merge reads and rewrites
+    the whole table into one data dir. Opened with ``bucket_keys`` and
+    ``n_buckets``, rows are hash-bucketed on the merge key —
+    ``pmod(xxhash64(bucket_keys), n_buckets)`` — and a merge rewrites
+    ONLY the buckets its stage touches: every clean bucket's data
+    directory is carried forward by reference, byte-identical on disk,
+    so merge I/O drops from O(table) to O(table × dirty / n_buckets).
+    The one extra driver action per bucketed merge is collecting the
+    stage's DISTINCT bucket ids — bounded by ``n_buckets``, a
+    partition-pruning list like Delta's file-skipping stats. The dirty
+    buckets are written in one hive-partitioned write. Merges and
+    deletes on a bucketed table must use the bucket keys: on other
+    keys, rows in buckets the merge does not rewrite would be missed.
     """
 
-    def __init__(self, spark: SparkSession, path: str):
+    BUCKET_COL = "__bucket"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        bucket_keys: list[str] | None = None,
+        n_buckets: int = 64,
+    ):
         self.spark = spark
         self.path = path
+        self.bucket_keys = list(bucket_keys) if bucket_keys else None
+        self.n_buckets = n_buckets if bucket_keys else 1
+        self.bucket_spec = (
+            {"keys": self.bucket_keys, "n_buckets": n_buckets} if bucket_keys else None
+        )
         os.makedirs(path, exist_ok=True)
+        self._check_bucket_spec(_load_state(path)[1])
+
+    def _check_bucket_spec(self, manifest: dict) -> None:
+        # The layout on disk is a function of the bucket spec: a handle
+        # with another spec (or none) would hash stage rows to buckets
+        # laid out under the committed scheme — insert_if_absent would
+        # silently duplicate keys and scd1 miss updates. Fail loudly.
+        if "current" in manifest:
+            # the one-directory manifest that preceded bucket entries:
+            # read as empty, a merge would drop the table's rows
+            raise ValueError(f"table at {self.path} has a pre-bucket manifest; re-create it")
+        committed = manifest.get("bucket_spec")
+        if manifest.get("buckets") and committed != self.bucket_spec:
+            raise ValueError(
+                f"table at {self.path} was committed with bucket spec {committed}; "
+                f"opened with {self.bucket_spec} — a mismatched bucket layout "
+                "silently corrupts merges"
+            )
+
+    def _check_keys(self, keys: list[str]) -> None:
+        if self.bucket_keys is not None and set(keys) != set(self.bucket_keys):
+            raise ValueError(
+                f"table at {self.path} is bucketed on {self.bucket_keys}: a merge or "
+                f"delete on {list(keys)} would miss rows in the buckets it does not rewrite"
+            )
+
+    def bucket_dirs(self) -> dict[int, str]:
+        """Bucket id -> data dir of the current version (an unbucketed
+        table's one bucket is 0)."""
+        buckets = _load_state(self.path)[1].get("buckets", {})
+        return {int(b): e["dir"] for b, e in buckets.items()}
 
     def current_version_dir(self) -> str | None:
-        return _load_state(self.path)[1].get("current")
+        """The data dir of an unbucketed table (None while it holds no
+        data); a bucketed table has one per bucket (``bucket_dirs``)."""
+        if self.bucket_spec is not None:
+            raise ValueError(f"table at {self.path} is bucketed: use bucket_dirs()")
+        return self.bucket_dirs().get(0)
 
     def meta(self) -> dict:
         """Writer-supplied metadata from the last committed version
@@ -392,24 +464,55 @@ class VersionedParquetTable:
     def vacuum(self, keep_last: int = 1, retention_seconds: float = 3600.0) -> list[str]:
         return vacuum(self.path, keep_last, retention_seconds)
 
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        return df.withColumn(
+            self.BUCKET_COL,
+            F.pmod(F.xxhash64(*map(F.col, self.bucket_keys)), F.lit(self.n_buckets)).cast("int"),
+        )
+
+    def _write(self, df: DataFrame, new_dir: str, buckets) -> dict:
+        """Write ``df`` into ``new_dir``; return {bucket id: manifest
+        entry} for every id in ``buckets`` that got rows (an unbucketed
+        table's one bucket always does)."""
+        if self.bucket_spec is None:
+            sized_for_write(df).write.mode("overwrite").parquet(new_dir)
+            dirs = {"0": new_dir}
+        else:
+            # one hive-partitioned write: each bucket becomes its own
+            # subdir the manifest can point at. A bucket left with no
+            # rows (e.g. delete_keys emptied it) gets no subdir and
+            # leaves the manifest.
+            sized_for_write(self._with_bucket(df)).write.partitionBy(
+                self.BUCKET_COL
+            ).mode("overwrite").parquet(new_dir)
+            dirs = {b: os.path.join(new_dir, f"{self.BUCKET_COL}={b}") for b in buckets}
+            dirs = {b: d for b, d in dirs.items() if os.path.isdir(d)}
+        schema = df.schema.jsonValue()
+        return {b: {"dir": d, "schema": schema} for b, d in dirs.items()}
+
+    def _publish(self, buckets: dict, meta: dict | None, staged: str | None) -> None:
+        """Blind replace: commit ``buckets`` as the whole table (last
+        committed wins; the ``staged`` dir is removed on a lost race so a
+        failed publish leaves no readable or orphaned state)."""
+        manifest = {"buckets": buckets, "bucket_spec": self.bucket_spec}
+        if meta is not None:
+            manifest["meta"] = meta
+        _commit_loop(
+            self.path, lambda _m: (manifest, None), f"commit to {self.path}", staged=staged
+        )
+
     def commit_staged_dir(
         self, new_dir: str, meta: dict | None = None, schema: StructType | None = None
     ) -> None:
         """Publish an already-written data directory as the new
-        current version (last-committed-wins CAS retry; the staged dir
-        is removed on a lost race so a failed publish leaves no
-        readable or orphaned state). overwrite() and any external
-        staged writer (e.g. observe.constrained_overwrite) publish
-        through here. ``schema`` is the schema of the frame written to
-        ``new_dir``; without it readers infer it from the files."""
-        manifest = {"current": new_dir}
-        if schema is not None:
-            manifest["schema"] = schema.jsonValue()
-        if meta is not None:
-            manifest["meta"] = meta
-        _commit_loop(
-            self.path, lambda _m: (manifest, None), f"commit to {self.path}", staged=new_dir
-        )
+        current version of an unbucketed table. External staged writers
+        (e.g. observe.constrained_overwrite) publish through here.
+        ``schema`` is the schema of the frame written to ``new_dir``;
+        without it readers infer it from the files."""
+        if self.bucket_spec is not None:
+            raise ValueError(f"table at {self.path} is bucketed: a staged dir has no buckets")
+        entry = {"dir": new_dir, "schema": schema.jsonValue() if schema is not None else None}
+        self._publish({"0": entry}, meta, new_dir)
 
     def staged_dir(self) -> str:
         """A fresh version-directory path inside the table root."""
@@ -421,8 +524,8 @@ class VersionedParquetTable:
         concurrent overwrites serialize as last-committed-wins with no
         torn manifest."""
         new_dir = self.staged_dir()
-        sized_for_write(df).write.mode("overwrite").parquet(new_dir)
-        self.commit_staged_dir(new_dir, meta, df.schema)
+        buckets = self._write(df, new_dir, [str(b) for b in range(self.n_buckets)])
+        self._publish(buckets, meta, new_dir)
 
     def restore(self, version: int) -> None:
         """RESTORE TABLE ... TO VERSION AS OF: roll the table back to a
@@ -441,56 +544,89 @@ class VersionedParquetTable:
         state by publishing a data-less commit manifest — the two cases
         are distinct, not conflated."""
         old = self.read(version)  # raises ValueError on unknown version
+        meta = {"op": "restore", "restored_from": version}
         if old is None:
-            # the version is real but empty: publish an empty commit
-            # (no current dir) so read() returns None again
-            empty = {"meta": {"op": "restore", "restored_from": version}}
-            _commit_loop(self.path, lambda _m: (empty, None), f"restore of {self.path}")
-            return
-        self.overwrite(old, meta={"op": "restore", "restored_from": version})
+            # the version is real but empty: publish a commit with no
+            # buckets so read() returns None again
+            self._publish({}, meta, None)
+        else:
+            self.overwrite(old, meta)
 
-    def _merge(self, stage: DataFrame, combine, meta: dict | None = None) -> None:
+    def _merge(self, stage: DataFrame | None, combine, meta: dict | None = None) -> None:
+        """Commit ``combine(current, stage)`` over the buckets ``stage``
+        hashes into (every bucket when ``stage`` is None); clean buckets
+        are carried by reference."""
+        if self.bucket_spec is None:
+            dirty = {"0"}
+        elif stage is None:
+            dirty = None
+        else:
+            # bounded driver action: ≤ n_buckets ids
+            rows = self._with_bucket(stage).select(self.BUCKET_COL).distinct().collect()
+            dirty = {str(r[0]) for r in rows}
+
         def attempt(manifest):
+            # re-validate per attempt: a racing writer may have created
+            # the table since __init__. A retry re-reads the winner's
+            # manifest, which may have rewritten some of our buckets.
+            self._check_bucket_spec(manifest)
+            buckets = manifest.get("buckets", {})
+            rewrite = set(buckets) if dirty is None else dirty
             # tombstone-aware snapshot: a merge after delete_keys_mor
-            # sees (and materializes out) the deletions, never the raw
-            # data dir — the committed manifest then needs no tombstones
-            merged = combine(_manifest_frame(self.spark, manifest), stage)
+            # sees (and materializes out) the deletions in the buckets
+            # it rewrites, never their raw data dirs
+            merged = combine(_manifest_frame(self.spark, manifest, rewrite), stage)
             new_dir = _new_version_dir(self.path)
-            sized_for_write(merged).write.mode("overwrite").parquet(new_dir)
-            new_manifest = {"current": new_dir, "schema": merged.schema.jsonValue()}
+            new_buckets = {b: e for b, e in buckets.items() if b not in rewrite}
+            new_buckets.update(self._write(merged, new_dir, rewrite))
+            # a tombstone is done once every bucket it applied to is rewritten
+            tombstones = []
+            for t in manifest.get("tombstones", []):
+                left = [b for b in t["buckets"] if b not in rewrite]
+                if left:
+                    tombstones.append({**t, "buckets": left})
+            new_manifest = {
+                "buckets": new_buckets, "bucket_spec": self.bucket_spec, "tombstones": tombstones
+            }
             return _with_meta(new_manifest, manifest, meta), new_dir
 
         _commit_loop(self.path, attempt, f"merge into {self.path}")
 
     def merge_scd1(self, stage: DataFrame, keys: list[str], **kwargs) -> None:
+        self._check_keys(keys)
         self._merge(stage, _scd1_combine(keys, **kwargs))
 
     def merge_insert_if_absent(self, stage: DataFrame, keys: list[str]) -> None:
+        self._check_keys(keys)
         self._merge(stage, _insert_if_absent_combine(keys))
 
     def delete_keys(self, stage: DataFrame, keys: list[str]) -> None:
         """Targeted delete (right-to-be-forgotten / retraction): remove
         every row whose ``keys`` match a stage row. Same CAS commit
-        path as the merges; deleting from a non-existent table is a
-        no-op (serializes as delete-before-create). Time travel still
-        reads the pre-delete versions until ``vacuum`` retires them —
-        run vacuum with retention 0 when the point is actual data
-        destruction."""
-        if self.read() is None:
+        path as the merges — on a bucketed table only the buckets the
+        doomed keys hash into are read and rewritten. Deleting from a
+        non-existent table is a no-op (serializes as
+        delete-before-create). Time travel still reads the pre-delete
+        versions until ``vacuum`` retires them — run vacuum with
+        retention 0 when the point is actual data destruction."""
+        self._check_keys(keys)
+        if not self.bucket_dirs():
             return
         self._merge(stage.select(*keys).distinct(), _delete_keys_combine(keys))
 
     def delete_keys_mor(self, stage: DataFrame, keys: list[str]) -> None:
         """Merge-on-read delete (deletion-vector semantics): write ONLY
         the tombstone key set — O(|stage|) I/O instead of the
-        copy-on-write table rewrite of :meth:`delete_keys` — and append
-        it to the manifest; every ``read()`` anti-joins the tombstones
-        lazily. The 100 TB shape for high-rate retraction streams;
-        fold the read-side debt back to zero with
-        :meth:`compact_tombstones` on a maintenance cadence. Deleting
-        from a non-existent table is a no-op, matching
+        copy-on-write rewrite of :meth:`delete_keys` — and append it to
+        the manifest; every ``read()`` anti-joins the tombstones
+        lazily. A tombstone applies to the buckets the table holds when
+        it commits, until a merge rewrites them. The 100 TB shape for
+        high-rate retraction streams; fold the read-side debt back to
+        zero with :meth:`compact_tombstones` on a maintenance cadence.
+        Deleting from a non-existent table is a no-op, matching
         :meth:`delete_keys`."""
-        if self.current_version_dir() is None:
+        self._check_keys(keys)
+        if not self.bucket_dirs():
             return
         ts_dir = _new_version_dir(self.path)
         key_set = stage.select(*keys).distinct()
@@ -498,7 +634,8 @@ class VersionedParquetTable:
         entry = {"dir": ts_dir, "keys": list(keys), "schema": key_set.schema.jsonValue()}
 
         def attempt(manifest):
-            tombstones = [*manifest.get("tombstones", []), entry]
+            applies = {**entry, "buckets": sorted(manifest.get("buckets", {}))}
+            tombstones = [*manifest.get("tombstones", []), applies]
             new_manifest = {**manifest, "tombstones": tombstones}
             return _with_meta(new_manifest, manifest, {"op": "delete_mor"}), None
 
@@ -506,15 +643,16 @@ class VersionedParquetTable:
 
     def compact_tombstones(self) -> int:
         """Materialize the tombstone-filtered state into a plain
-        copy-on-write commit (read-side anti-join debt back to zero);
-        returns the number of tombstone sets folded (as of the first
-        snapshot — a tombstone landing mid-compact is still folded,
-        the count in the commit meta is just conservative). Routed
-        through ``_merge``, NOT a read-then-overwrite: a lost commit
-        race re-reads the winner's manifest and re-materializes, so a
-        concurrent delete_keys_mor can never be erased by the compact.
-        The old tombstone dirs stay referenced by PRIOR commits only,
-        so a later vacuum retires them with the old versions."""
+        copy-on-write commit of every bucket (read-side anti-join debt
+        back to zero); returns the number of tombstone sets folded (as
+        of the first snapshot — a tombstone landing mid-compact is
+        still folded, the count in the commit meta is just
+        conservative). Routed through ``_merge``, NOT a
+        read-then-overwrite: a lost commit race re-reads the winner's
+        manifest and re-materializes, so a concurrent delete_keys_mor
+        can never be erased by the compact. The old tombstone dirs stay
+        referenced by PRIOR commits only, so a later vacuum retires
+        them with the old versions."""
         n = len(_load_state(self.path)[1].get("tombstones", []))
         if n:
             self._merge(
@@ -523,161 +661,3 @@ class VersionedParquetTable:
                 meta={"op": "compact_tombstones", "folded": n},
             )
         return n
-
-
-class BucketedParquetTable:
-    """Partition-scoped MERGE on plain parquet — the 100 TB path.
-
-    ``VersionedParquetTable`` rewrites the WHOLE table per merge (the
-    price of no transaction log); at 100 TB a full copy-on-write per
-    1000-row stage batch is a scale-killer. This variant hash-buckets
-    the table on the merge key — ``pmod(xxhash64(keys), n_buckets)`` —
-    and a merge rewrites ONLY the buckets the stage touches: every
-    clean bucket's data directory is carried forward by reference in
-    the manifest, byte-identical on disk. With a well-sized
-    ``n_buckets``, merge I/O drops from O(table) to
-    O(table × dirty_buckets / n_buckets) ≈ O(stage × table/bucket).
-
-    The one driver action per merge is collecting the stage's DISTINCT
-    bucket ids — bounded by ``n_buckets`` (it's a partition-pruning
-    list, same role as Delta's file-skipping stats, not a data
-    collect). Commits go through the same CAS commit log as
-    `VersionedParquetTable`: a merge that loses the race re-reads the
-    winner's manifest — including any buckets the winner rewrote — and
-    re-merges, so two concurrent merges (even to disjoint buckets)
-    serialize instead of one silently dropping the other's buckets.
-    The dirty buckets are written in one write: while they fit in one
-    scan split, one task writes one file per dirty bucket.
-    """
-
-    BUCKET_COL = "__bucket"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        keys: list[str],
-        n_buckets: int = 64,
-    ):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-        self.n_buckets = n_buckets
-        os.makedirs(path, exist_ok=True)
-        # The bucket layout on disk is a function of (keys, n_buckets):
-        # reopening with different values would hash stage rows to dirty
-        # buckets laid out under the OLD scheme — insert_if_absent would
-        # silently duplicate keys and scd1 miss updates. Fail loudly
-        # instead (round-5 advice, table_store.py:530).
-        self._check_bucket_spec(_load_state(self.path)[1])
-
-    def _check_bucket_spec(self, manifest: dict) -> None:
-        spec = manifest.get("bucket_spec")
-        if spec is not None and (
-            spec.get("keys") != list(self.keys) or spec.get("n_buckets") != self.n_buckets
-        ):
-            raise ValueError(
-                f"bucketed table at {self.path} was committed with "
-                f"keys={spec.get('keys')} n_buckets={spec.get('n_buckets')}; "
-                f"constructor got keys={list(self.keys)} n_buckets={self.n_buckets} — "
-                "a mismatched bucket layout silently corrupts merges"
-            )
-
-    def bucket_dirs(self) -> dict[int, str]:
-        return {
-            int(k): v for k, v in _load_state(self.path)[1].get("buckets", {}).items()
-        }
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            self.BUCKET_COL,
-            F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)).cast("int"),
-        )
-
-    def _read_buckets(self, dirs: list[str]) -> DataFrame | None:
-        if not dirs:
-            return None
-        # mergeSchema: clean buckets keep the schema they were written
-        # with; a later merge that adds columns (e.g. scd1 audit cols
-        # after an insert-only load) must not silently drop them for
-        # rows read from pre-evolution bucket files.
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
-
-    def read(self, version: int | None = None) -> DataFrame | None:
-        """Current table state, or the state as of commit ``version``
-        (time travel over the bucket manifests)."""
-        buckets = _manifest_at(self.path, version).get("buckets", {})
-        return self._read_buckets(list(buckets.values()))
-
-    def history(self) -> list[dict]:
-        return [{"version": v, **m} for v, m in _commit_history(self.path)]
-
-    def meta(self) -> dict:
-        """Writer-supplied metadata from the last committed version —
-        same contract as VersionedParquetTable.meta."""
-        return _load_state(self.path)[1].get("meta", {})
-
-    def vacuum(self, keep_last: int = 1, retention_seconds: float = 3600.0) -> list[str]:
-        return vacuum(self.path, keep_last, retention_seconds)
-
-    def _merge(self, stage: DataFrame, combine, meta: dict | None = None) -> None:
-        stage_b = self._with_bucket(stage)
-        # bounded driver action: ≤ n_buckets ids (partition pruning list)
-        dirty = sorted(
-            r[0] for r in stage_b.select(self.BUCKET_COL).distinct().collect()
-        )
-
-        def attempt(manifest):
-            # re-validate per attempt: a racing writer created the table
-            # between our __init__ and this commit loop. A retry re-reads
-            # the winner's manifest, which may have rewritten some of OUR
-            # dirty buckets.
-            self._check_bucket_spec(manifest)
-            buckets = dict(manifest.get("buckets", {}))
-            cur_dirty_dirs = [buckets[str(b)] for b in dirty if str(b) in buckets]
-            target = self._read_buckets(cur_dirty_dirs)
-            merged = combine(target, stage_b.drop(self.BUCKET_COL))
-            new_dir = _new_version_dir(self.path)
-            # one hive-partitioned write; each dirty bucket becomes its
-            # own subdir the manifest can point at individually
-            sized_for_write(self._with_bucket(merged)).write.partitionBy(
-                self.BUCKET_COL
-            ).mode("overwrite").parquet(new_dir)
-            for b in dirty:
-                bdir = os.path.join(new_dir, f"{self.BUCKET_COL}={b}")
-                if os.path.isdir(bdir):
-                    buckets[str(b)] = bdir
-                else:
-                    # combine produced no surviving rows for this
-                    # bucket (e.g. delete_keys emptied it): the
-                    # partitioned write creates no dir, so the bucket
-                    # must leave the manifest or reads hit a missing
-                    # path. Bounded check: one isdir per dirty bucket.
-                    buckets.pop(str(b), None)
-            new_manifest = {
-                **manifest,
-                "buckets": buckets,
-                "bucket_spec": {"keys": list(self.keys), "n_buckets": self.n_buckets},
-            }
-            return _with_meta(new_manifest, manifest, meta), new_dir
-
-        _commit_loop(self.path, attempt, f"merge into {self.path}")
-
-    def merge_scd1(self, stage: DataFrame, **kwargs) -> None:
-        self._merge(stage, _scd1_combine(self.keys, **kwargs))
-
-    def merge_insert_if_absent(self, stage: DataFrame) -> None:
-        self._merge(stage, _insert_if_absent_combine(self.keys))
-
-    def delete_keys(self, stage: DataFrame) -> None:
-        """Targeted delete at 100 TB cost: only the key-buckets the
-        stage hashes into are read and rewritten (the merge machinery's
-        dirty-bucket scoping applies unchanged — an anti-join over the
-        dirty buckets, clean buckets carried by reference). Run
-        ``vacuum`` afterwards when the deletion must also destroy the
-        historical copies."""
-        if self.read() is None:
-            return
-        self._merge(stage.select(*self.keys).distinct(), _delete_keys_combine(self.keys))
-
-

@@ -16,8 +16,9 @@ from pyspark.sql import SparkSession
 # At 100 TB scale, shuffle partitions should target ~128-200 MB
 # post-AQE; AQE coalescing makes the static number a ceiling, so we
 # set it near total cores locally and rely on
-# spark.sql.adaptive.coalescePartitions for the rest.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# spark.sql.adaptive.coalescePartitions for the rest. Without
+# SPARK_GRAFT_CPUS the width is the cores this process may run on.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # AQE coalescing floor every query starts from: Spark's stock 1m.
 # plans/registry.apply_query_confs lowers it to 128k for the few

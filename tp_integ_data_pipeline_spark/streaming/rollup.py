@@ -94,12 +94,12 @@ def fold_batch(
     restarts at 0, and with no checkpoint there is no replay to guard
     against — so the guard is scoped via ``_checkpoint_instance``.
 
-    ``table`` is either a ``VersionedParquetTable`` (full copy-on-write
-    per fold — fine for small rollups) or a ``BucketedParquetTable``
-    keyed on the rollup grain (win_start, event_type) — the 100 TB
-    shape, where a fold rewrites ONLY the key-buckets the batch's
-    windows touch; both expose the same ``meta()`` /
-    ``_merge(stage, combine, meta)`` contract.
+    ``table`` is a ``VersionedParquetTable``: unbucketed (full
+    copy-on-write per fold — fine for small rollups) or bucketed on the
+    rollup grain (``bucket_keys=["win_start", "event_type"]``) — the
+    100 TB shape, where a fold rewrites ONLY the key-buckets the
+    batch's windows touch. Either way the fold goes through the same
+    ``meta()`` / ``_merge(stage, combine, meta)`` contract.
     """
     scope = _checkpoint_instance(checkpoint_dir) if checkpoint_dir is not None else ""
     if checkpoint_dir is not None:
