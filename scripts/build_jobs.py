@@ -5,11 +5,12 @@ being BUILT: the registry callable runs, nothing is collected.
 
 Each fixture table is loaded once first, so a key's count is its
 steady-state cost, not the first read of a table in the process. Keys
-are then built in registry order, each under its own ``setJobGroup``;
-a key's count is the number of jobs in its group once the listener bus
-has drained. Micro-batches of a streaming drain run under the stream's
-own job group and are not counted. ``--tree`` censuses another source
-checkout (e.g. the parent commit) with this script.
+are then built in registry order, one at a time; a key's count is the
+number of jobs the application started while it was being built,
+whatever their job group: the micro-batches of a streaming drain (run
+under the stream's own group) and broadcast exchanges count too.
+``--tree`` censuses another source checkout (e.g. the parent commit)
+with this script.
 
 The output is ``{"sf": ..., "keys": n, "keys_with_jobs": n,
 "build_jobs": total, "per_key": {key: jobs}}``. ``tests/test_build_jobs.py`` runs the same
@@ -27,18 +28,22 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def jobs_started(spark, group: str, fn) -> int:
-    """Run ``fn()`` under job group ``group``; return how many jobs it
-    started, counted once the listener bus has drained (job-start
-    events reach the status store asynchronously)."""
+    """Run ``fn()`` under job group ``group``; return how many jobs the
+    application started meanwhile, in any job group. The count is the
+    change in the scheduler's job-id counter, which every submitted job
+    advances synchronously, so nothing waits on the listener bus. Jobs
+    of another thread running at the same time (a stream left running)
+    would count too; the census builds one key at a time."""
     sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return scheduler.numTotalJobs() - before
 
 
 def census(spark, sf_dir: str) -> dict[str, int]:

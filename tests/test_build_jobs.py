@@ -59,7 +59,10 @@ def test_rewritten_fixture_is_reinferred(spark, tmp_path):
 def test_building_a_query_starts_no_job_outside_the_budget(spark, sf_dir):
     """Every registered key is built at sf0.001 (nothing collected). A
     key outside the budget starts no job; a key inside starts at most
-    its budget. The budget may only shrink."""
+    its budget. The counts include every job started during the build,
+    whatever its job group: a streaming query's micro-batches run under
+    the query's own group and count too, so the streaming keys carry
+    their measured counts. The budget may only shrink."""
     with open(BUDGET) as fh:
         budget = {k: n for keys in json.load(fh).values() for k, n in keys.items()}
     confs = spark.conf.getAll

@@ -845,6 +845,21 @@ def test_bucketed_read_starts_no_job(spark, tmp_path):
     assert all(r.fecha_actualizacion is None for k, r in rows.items() if k)
 
 
+@pytest.mark.parametrize("n_buckets", [33, 64])
+def test_wide_bucketed_read_starts_no_job(spark, tmp_path, n_buckets):
+    """Past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    paths one scan lists its dirs with a parallel listing job; a read of
+    more bucket dirs than that is a union of narrower scans and starts
+    none, with the same rows."""
+    t = VersionedParquetTable(spark, str(tmp_path / "bt"), bucket_keys=["k"], n_buckets=n_buckets)
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(1000)], ["k", "v"])
+    t.merge_insert_if_absent(base, ["k"])
+    assert len(t.bucket_dirs()) > 32
+    reads = []
+    assert build_jobs.jobs_started(spark, f"{tmp_path}:wide", lambda: reads.append(t.read())) == 0
+    assert sorted(tuple(r) for r in reads[0].collect()) == [(i, f"v{i}") for i in range(1000)]
+
+
 @pytest.mark.parametrize(
     "call",
     [

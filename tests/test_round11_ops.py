@@ -168,7 +168,7 @@ def test_replayed_micro_batches_are_idempotent(spark, monkeypatch):
     foreachBatch, and require the drain to produce exactly the
     single-delivery answer: no duplicated sink rows, no double-counted
     packing offset (the per-epoch overwrite partitions + the
-    last-committed-epoch state guard in admit_batch)."""
+    commit-marker replay guard in admit_batch)."""
     from pyspark.sql.streaming import DataStreamWriter
 
     clean = "alpha bravo chars delta echos foxtr golfs hotel india julie kilos limas"

@@ -1,7 +1,7 @@
 """Round-12: multi-refresh chaining and crash recovery.
 
 1. Crash recovery: the foreachBatch atomic-commit ordering — a crash
-   at ANY point around the sink-write / marker-commit / state boundary
+   at ANY point around the sink-write / marker-commit boundary
    must converge to the single-delivery drain when the run is
    restarted with the same (staging, sink, checkpoint). Complements
    round 11's same-run redelivery test with the driver-restart case.
@@ -27,7 +27,8 @@ from tp_integ_data_pipeline_spark.plans.curation import (
 )
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 from tp_integ_data_pipeline_spark.streaming.refresh import (
-    recover_drain_state,
+    carried_offset,
+    committed_epochs,
     run_refresh_drain,
     split_arrival,
     stage_arrival,
@@ -57,8 +58,8 @@ _ARRIVAL = [
 ]
 
 
-def _crash_fixture(spark):
-    staging = _stage(spark, _ARRIVAL)
+def _crash_fixture(spark, arrival=_ARRIVAL):
+    staging = _stage(spark, arrival)
     kept_texts = spark.createDataFrame(
         [("another kept doc",)], "text string"
     ).localCheckpoint(eager=True)
@@ -77,17 +78,21 @@ def _crash_fixture(spark):
 )
 def test_crash_recovery_converges_to_single_delivery(spark, crash_phase):
     """Kill the drain once at each point around the sink-write /
-    marker-commit / state boundary on epoch 1 of 4, then restart with
+    marker-commit boundary on epoch 1 of 4, then restart with
     the same dirs: the resumed run must produce exactly the crash-free
     answer. after_sink_write is the torn case — the epoch's partition
     EXISTS but the drain-owned commit marker was never written, so
     recovery must classify it uncommitted and the replay overwrite it
     (not count it half-way). after_commit_marker is the case the r11
-    verdict called out — the epoch is durably committed but driver
-    state never advanced; recovery must treat the marked partition as
+    verdict called out — the epoch is durably committed but the batch
+    never returned; the restart must treat the marked partition as
     committed (skip the replay, count its tokens) rather than
-    replaying against reset state and double-counting the offset."""
-    staging, kept_texts, bench = _crash_fixture(spark)
+    replaying it and double-counting the offset.
+    Doc 116 (batch 4, after the crash point) repeats doc 100's text
+    (batch 1, committed before the crash): the resumed run must still
+    flag it dup_batch."""
+    arrival = _ARRIVAL + [(116, "s1", _CLEAN + " one")]
+    staging, kept_texts, bench = _crash_fixture(spark, arrival)
     reference = sorted(
         run_refresh_drain(spark, staging, kept_texts, bench, 500).collect()
     )
@@ -108,11 +113,10 @@ def test_crash_recovery_converges_to_single_delivery(spark, crash_phase):
         )
     assert fired == [1]
 
-    # the restart's recovered state must reflect the crash point:
+    # the restart's committed epochs must reflect the crash point:
     # epoch 0 always committed; epoch 1 committed iff the MARKER landed
     # (a data partition without the marker is uncommitted by design)
-    rec = recover_drain_state(spark, sink, staging, 500)
-    assert rec["last_epoch"] == (
+    assert committed_epochs(sink)[-1] == (
         1 if crash_phase == "after_commit_marker" else 0
     )
 
@@ -122,14 +126,16 @@ def test_crash_recovery_converges_to_single_delivery(spark, crash_phase):
         ).collect()
     )
     assert resumed == reference
-    assert len(resumed) == len(_ARRIVAL)
+    assert len(resumed) == len(arrival)
+    by_id = {r.doc_id: r for r in resumed}
+    assert (by_id[116].batch_id, by_id[116].dup_batch) == (4, True)
+    assert not by_id[100].dup_batch
 
 
-def test_recovered_offset_and_seen_match_committed_prefix(spark):
-    """recover_drain_state's arithmetic, checked directly after a crash
-    that committed epochs 0-1 of 4: offset = tokens_before + the
-    committed admitted tokens; seen = the committed batches' non-bench
-    texts; the uncommitted tail is absent from both."""
+def test_recovered_offset_matches_committed_prefix(spark):
+    """committed_epochs and carried_offset, checked directly after a
+    crash that committed epochs 0-1 of 4: offset = tokens_before + the
+    committed admitted tokens; the uncommitted tail is absent."""
     staging, kept_texts, bench = _crash_fixture(spark)
     sink = scratch_dir(prefix="crash_sink_")
     ckpt = scratch_dir(prefix="crash_ckpt_")
@@ -143,13 +149,10 @@ def test_recovered_offset_and_seen_match_committed_prefix(spark):
             spark, staging, kept_texts, bench, 500,
             sink=sink, ckpt=ckpt, fault_hook=boom,
         )
-    rec = recover_drain_state(spark, sink, staging, 500)
+    committed = committed_epochs(sink)
     # batches 1-2 carry docs 100 and 104 (13 admitted tokens each)
-    assert rec["last_epoch"] == 1
-    assert rec["offset"] == 500 + 26
-    assert sorted(r.text for r in rec["seen"].collect()) == sorted(
-        [_CLEAN + " one", _CLEAN + " two"]
-    )
+    assert committed == [0, 1]
+    assert carried_offset(spark, sink, committed, 500).first()._off == 500 + 26
 
 
 def test_explicit_arriving_rejects_cache_key(spark):

@@ -18,7 +18,7 @@ boolean, so a hash-green q181/q101 genuinely certifies the invariant.
    (a~b, b~c, a!~c) pins the lower-id-ANY-neighbor rule — the
    kept-neighbor phrasing would wrongly expect c kept.
 
-3. Marker-migration guard (r13 ADVICE): recover_drain_state must
+3. Marker-migration guard (r13 ADVICE): committed_epochs must
    refuse a sink written by pre-_DRAIN_COMMITTED code (epochs with
    _SUCCESS but no marker below/at the marker high-water mark, or more
    than one such epoch) instead of silently repacking at wrong
@@ -157,34 +157,37 @@ def _fake_sink(spark, marked, unmarked_success):
 
 
 def test_recover_refuses_legacy_premarker_sink(spark):
-    from tp_integ_data_pipeline_spark.streaming.refresh import recover_drain_state
+    from tp_integ_data_pipeline_spark.streaming.refresh import committed_epochs
 
     # pre-marker code: every epoch has _SUCCESS, none has the marker
     sink = _fake_sink(spark, marked=[], unmarked_success=[0, 1])
     with pytest.raises(RuntimeError, match="pre-_DRAIN_COMMITTED"):
-        recover_drain_state(spark, sink, "/nonexistent-staging", 0)
+        committed_epochs(sink)
 
 
 def test_recover_refuses_unmarked_epoch_below_high_water(spark):
-    from tp_integ_data_pipeline_spark.streaming.refresh import recover_drain_state
+    from tp_integ_data_pipeline_spark.streaming.refresh import committed_epochs
 
     # epoch 0 unmarked below a marked epoch 1: sequential drains can
     # never leave this shape — must be a foreign/mixed sink
     sink = _fake_sink(spark, marked=[1], unmarked_success=[0])
     with pytest.raises(RuntimeError, match="pre-_DRAIN_COMMITTED"):
-        recover_drain_state(spark, sink, "/nonexistent-staging", 0)
+        committed_epochs(sink)
 
 
 def test_recover_accepts_single_trailing_crash_window_epoch(spark):
-    from tp_integ_data_pipeline_spark.streaming.refresh import recover_drain_state
+    from tp_integ_data_pipeline_spark.streaming.refresh import (
+        carried_offset,
+        committed_epochs,
+    )
 
     # one trailing unmarked epoch with NO committed prefix = a first-
     # epoch crash between the parquet commit and the marker write; the
     # replay recomputes it, so recovery reports a clean empty state
     sink = _fake_sink(spark, marked=[], unmarked_success=[0])
-    rec = recover_drain_state(spark, sink, "/nonexistent-staging", 500)
-    assert rec["last_epoch"] == -1
-    assert rec["offset"] == 500
+    committed = committed_epochs(sink)
+    assert committed == []
+    assert carried_offset(spark, sink, committed, 500).first()._off == 500
 
 
 def test_semantic_dedup_chain_rule_is_any_lower_neighbor(spark):

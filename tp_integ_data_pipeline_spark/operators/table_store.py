@@ -156,8 +156,13 @@ def _manifest_frame(spark, manifest: dict, only: set[str] | None = None) -> Data
     Buckets sharing a recorded schema and a tombstone set are one scan;
     scans with different schemas (a merge added columns to the buckets
     it rewrote) are unioned by name, newest first, so the columns come
-    in the order of the latest write. None when no bucket holds data."""
+    in the order of the latest write. A scan lists at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` dirs
+    (larger groups are unioned from several scans): past it Spark lists
+    the paths with a parallel listing job. None when no bucket holds
+    data."""
     tombstones = manifest.get("tombstones", [])
+    width = max(1, int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")))
     groups: dict[tuple, list[str]] = {}
     entries = sorted(manifest.get("buckets", {}).items(), key=lambda be: be[1]["dir"], reverse=True)
     for b, e in entries:
@@ -166,7 +171,11 @@ def _manifest_frame(spark, manifest: dict, only: set[str] | None = None) -> Data
             groups.setdefault((json.dumps(e.get("schema")), applied), []).append(e["dir"])
     frames = []
     for (schema, applied), dirs in groups.items():
-        df = _read_data_dir(spark, dirs, json.loads(schema))
+        scans = [
+            _read_data_dir(spark, dirs[k : k + width], json.loads(schema))
+            for k in range(0, len(dirs), width)
+        ]
+        df = reduce(DataFrame.unionByName, scans)
         for i in applied:
             t = tombstones[i]
             df = df.join(_read_data_dir(spark, [t["dir"]], t.get("schema")), t["keys"], "left_anti")

@@ -18,7 +18,7 @@ Four query groups share that funnel:
   sweep the grown suite forces;
 - **streamed refresh** (q261–q266): the same arrival drained as K=4
   doc_id-ordered micro-batches through streaming/refresh.py, which
-  calls the same funnel per batch with its seen-texts state, so every
+  calls the same funnel per batch with the earlier batches' texts, so every
   verdict and packing slot equals the one-shot plan's;
 - **chained refresh** (q267–q271): refresh N+1 consuming refresh N's
   emitted corpus, suite and carry row (m = max div 2, m2 = 3*(max

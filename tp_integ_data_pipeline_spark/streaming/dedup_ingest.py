@@ -48,6 +48,7 @@ from tp_integ_data_pipeline_spark.operators.dedup import (
 )
 from tp_integ_data_pipeline_spark.operators.neardup_index import NearDupIndex
 from tp_integ_data_pipeline_spark.sources.lake import DataLake
+from tp_integ_data_pipeline_spark.streaming.ingest import _start_file_stream
 
 
 def dedup_ingest_batch(
@@ -169,11 +170,6 @@ def start_neardup_ingest(
     """T1-shape wrapper: file-source micro-batches through
     :func:`dedup_ingest_batch`. ``interval_seconds=None`` drains with
     availableNow (test/backfill mode); a positive interval polls."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         dedup_ingest_batch(
@@ -181,11 +177,6 @@ def start_neardup_ingest(
             verify=verify,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if interval_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{interval_seconds} seconds")
-    return writer.start()
+    return _start_file_stream(
+        spark, source_dir, schema, sink, max_files_per_trigger, checkpoint_dir, interval_seconds
+    )

@@ -20,7 +20,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tp_integ_data_pipeline_spark.sources.lake import DataLake
@@ -63,12 +62,6 @@ def start_microbatch_ingest(
     keys and partitions, a pruned probe would miss re-deliveries that
     land under a different partition value.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df if transform is None else transform(batch_df)
         batch = batch.dropDuplicates(dedup_keys)
@@ -76,11 +69,37 @@ def start_microbatch_ingest(
             table, batch, partition_cols, dedup_keys, probe_partitions=probe_partitions
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
+    # Restart-safe with a checkpoint: source offsets are checkpointed,
+    # and the anti-join dedup inside the sink makes batch replay
+    # idempotent → effectively-once lake appends across crashes.
+    return _start_file_stream(
+        spark, source_dir, schema, sink, max_files_per_trigger, checkpoint_dir, interval_seconds
+    )
+
+
+def _start_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    sink: Callable[[DataFrame, int], None],
+    max_files_per_trigger: int,
+    checkpoint_dir: str | None,
+    interval_seconds: int | None,
+) -> StreamingQuery:
+    """The one parquet file-source starter: reads ``source_dir`` with
+    ``schema`` at most ``max_files_per_trigger`` files per trigger and
+    hands each micro-batch to ``sink(batch_df, epoch_id)`` through
+    foreachBatch. ``checkpoint_dir`` (optional) makes the query
+    restartable; ``interval_seconds=None`` drains with availableNow,
+    a positive interval polls."""
+    writer = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(sink)
+        .outputMode("append")
+    )
     if checkpoint_dir is not None:
-        # Restart-safe: source offsets are checkpointed, and the
-        # anti-join dedup inside the sink makes batch replay idempotent
-        # → effectively-once lake appends across crashes.
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if interval_seconds is None:
         writer = writer.trigger(availableNow=True)

@@ -9,48 +9,51 @@ re-fetches and inserts only unseen rows); the batch refresh
 plan. This module is the streamed form: the arriving half lands as K
 doc_id-ordered micro-batches (file source, mtime-ordered,
 maxFilesPerTrigger=1 — the q232 staging recipe) and each batch passes
-the SAME funnel (plans/curation.admission_core) with the cross-batch
-state threaded through the loop:
+the SAME funnel (plans/curation.admission_core). Every cross-batch
+input of a micro-batch is already on disk when the batch runs:
 
-1. seen-texts state — the exact-text analog of NearDupIndex.add
-   (q109's ingest path maintains a MinHash index; q255's funnel is
-   exact-text, so the ingest-time index is simply the distinct texts
-   that already arrived). A doc whose text appeared in an EARLIER
-   micro-batch is dup_in_batch, exactly as the one-shot window's
-   rn > 1 says it must be; within a micro-batch the same window rule
-   applies locally. doc_id-ordered batches make the two views agree.
-2. the standing kept corpus — static for the whole refresh (in
+1. seen texts: the staged arrival's non-bench texts whose batch_id is
+   below the current batch's (a lazy filter of the staging dir). A
+   doc whose text appeared in an EARLIER micro-batch is dup_batch,
+   exactly as the one-shot window's rn > 1 says it must be; within a
+   micro-batch the same window rule applies locally. doc_id-ordered
+   batches make the two views agree.
+2. the standing kept corpus: static for the whole refresh (in
    production: the lake table), probed per batch with the one
    irreducible text-keyed equi-join.
-3. the benchmark-gram set — fixed when the refresh begins (the suite
+3. the benchmark-gram set: fixed when the refresh begins (the suite
    for refresh N is published before admission starts; old + new
    bench docs are both in the arrival manifest), broadcast per batch.
-4. the packing offset — ONE integer carried batch to batch
-   (operators/packing.py's incremental contract): each batch packs
-   its admitted docs continuing from the running total, so the
-   streamed layout is bit-identical to one-shot q257.
+4. the packing offset: the standing corpus' token total plus the
+   admitted tokens of the committed epoch partitions in the sink (a
+   lazy one-row frame crossed into the batch), so each batch packs
+   its admitted docs continuing from the running total
+   (operators/packing.py's incremental contract) and the streamed
+   layout is bit-identical to one-shot q257.
 
-Parity argument: stage flags are row-local or joins against state
-that, at each doc's batch, equals exactly "everything with a smaller
+Parity argument: stage flags are row-local or joins against inputs
+that, at each doc's batch, equal exactly "everything with a smaller
 doc_id" (seen texts) or "the standing corpus" (static) — the same
 predicates the one-shot plan evaluates. Packing order = (batch asc,
 doc_id asc) = global doc_id order. Hence every output row matches the
 batch capstone's, and q261-q264's oracles are the SAME DuckDB refresh
-CTE the batch family grades against.
+CTE the batch family grades against. Both the seen texts and the
+offset rely on batches draining in batch_id order, which the staging
+(one mtime-ordered file per batch, one file per trigger) guarantees.
 
-Driver-side state is bounded and documented: the token offset (one
-integer), the per-batch admitted-token sum (one scalar per batch),
-and the seen-texts relation (eagerly checkpointed per batch — bounded
-by the arriving batch, never the corpus). foreachBatch is the
-imperative seam of Structured Streaming; these scalars are the same
-kind dedup_ingest_batch's stats counters already are.
+The driver holds no state across micro-batches: the replay guard is
+the sink's commit markers, so the sink write is the one Spark action
+of a batch and a restart recovers by listing the sink's epoch dirs.
 
 Scale shape at 100 TB: per micro-batch cost is (batch-sized window) +
 (batch x kept equi-join, shuffle bounded by batch side after the
-kept side is storage-backed) + (bounded gram broadcast) — nothing
-corpus-quadratic; the staging global row_number is TEST HARNESS only
-(real deployments' batches arrive pre-split; the splitter exists so
-DuckDB can replay the batch assignment deterministically).
+kept side is storage-backed) + (bounded gram broadcast) + (a scan of
+the staged arrival for the seen texts and of the committed sink
+partitions' n_tokens column for the offset, both bounded by the
+arrival) — nothing corpus-quadratic; the staging global row_number
+is TEST HARNESS only (real deployments' batches arrive pre-split; the
+splitter exists so DuckDB can replay the batch assignment
+deterministically).
 """
 
 from __future__ import annotations
@@ -71,6 +74,7 @@ from tp_integ_data_pipeline_spark.plans.curation import (
     suite_grams,
 )
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
+from tp_integ_data_pipeline_spark.streaming.ingest import _start_file_stream
 
 # Staged arrival dirs reused across queries in-process (the q232
 # staging-cache pattern). CONTRACT: a cache_key must fully determine
@@ -103,7 +107,7 @@ def _spread_batch(bdf: DataFrame) -> DataFrame:
     return bdf
 
 # Drain-owned per-epoch commit marker, written by admit_batch AFTER the
-# epoch's parquet job committed and checked by recover_drain_state. The
+# epoch's parquet job committed and listed by committed_epochs. The
 # Hadoop committer's _SUCCESS file is NOT used as the commit signal: it
 # exists only while mapreduce.fileoutputcommitter.marksuccessfuljobs
 # stays at its default, which object-store committers commonly disable
@@ -190,29 +194,20 @@ SINK_COLS = [
 ]
 
 
-def recover_drain_state(
-    spark: SparkSession, sink: str, staging: str, tokens_before: int
-) -> dict:
-    """Rebuilds the drain's cross-batch state from the sink — the
-    recovery a driver RESTART needs (the in-process epoch guard alone
-    only covers same-run redelivery). An epoch counts as committed iff
-    its partition carries the DRAIN-OWNED ``_DRAIN_COMMITTED`` marker,
-    which admit_batch writes only after the epoch's parquet job
-    committed — deliberately NOT the Hadoop committer's ``_SUCCESS``
-    file, whose presence depends on a foreign config (see
-    _COMMIT_MARKER). The marker is the durable commit point, so a
-    crash at ANY point yields: marker present → replay skipped,
-    partition is the complete single-delivery answer; marker absent
-    (even with a fully written partition) → partition ignored here and
-    recomputed-then-overwritten by the replay, which also rewrites the
-    marker because overwrite mode clears the epoch dir first.
+def committed_epochs(sink: str) -> list[int]:
+    """The sink's committed epochs, ascending: an epoch counts as
+    committed iff its partition carries the DRAIN-OWNED
+    ``_DRAIN_COMMITTED`` marker, which admit_batch writes only after
+    the epoch's parquet job committed — deliberately NOT the Hadoop
+    committer's ``_SUCCESS`` file, whose presence depends on a foreign
+    config (see _COMMIT_MARKER). The marker is the durable commit
+    point, so a crash at ANY point yields: marker present → replay
+    skipped, partition is the complete single-delivery answer; marker
+    absent (even with a fully written partition) → partition ignored
+    and recomputed-then-overwritten by the replay, which also rewrites
+    the marker because overwrite mode clears the epoch dir first.
 
-    Recovered state: ``offset`` = tokens_before + the committed
-    partitions' admitted-token sum; ``seen`` = the non-bench texts of
-    the staged batches those partitions cover (the staging files keep
-    ``batch_id``, and each epoch drains exactly one staged batch);
-    ``last_epoch`` = max committed epoch. Costs one bounded scan of
-    the (batch-sized) sink and staging — never the corpus."""
+    A file-system listing: starts no Spark job."""
     epoch_dirs = {
         int(os.path.basename(d).split("=")[1]): d
         for d in glob.glob(os.path.join(sink, "epoch=*"))
@@ -247,31 +242,24 @@ def recover_drain_state(
             f"{_COMMIT_MARKER} in each fully-committed epoch dir, or "
             "start a fresh sink."
         )
+    return committed
+
+
+def carried_offset(
+    spark: SparkSession, sink: str, committed: list[int], tokens_before: int
+) -> DataFrame:
+    """The packing offset the next epoch continues from, as a lazy
+    one-row frame ``(_off long)``: ``tokens_before`` plus the admitted
+    tokens of the ``committed`` epoch partitions. The partitions are
+    read with an explicit schema, so building the frame starts no
+    footer-inference job."""
+    before = F.lit(tokens_before).cast("long")
     if not committed:
-        return {
-            "seen": spark.createDataFrame([], "text string"),
-            "offset": tokens_before,
-            "last_epoch": -1,
-        }
-    done = spark.read.option("basePath", sink).parquet(
+        return spark.range(1).select(before.alias("_off"))
+    done = spark.read.schema("n_tokens long").parquet(
         *[os.path.join(sink, f"epoch={e}") for e in committed]
     )
-    extra = int(done.agg(F.coalesce(F.sum("n_tokens"), F.lit(0))).first()[0])
-    # bounded driver pull: ≤ n_batches distinct ids
-    drained = [r[0] for r in done.select("batch_id").distinct().collect()]
-    seen = (
-        spark.read.parquet(staging)
-        .filter(F.col("batch_id").isin(drained))
-        .filter(~(F.col("doc_id") % 97 == 0))
-        .select("text")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    return {
-        "seen": seen,
-        "offset": tokens_before + extra,
-        "last_epoch": committed[-1],
-    }
+    return done.agg((before + F.coalesce(F.sum("n_tokens"), F.lit(0))).alias("_off"))
 
 
 def stream_refresh_admission(
@@ -356,48 +344,51 @@ def run_refresh_drain(
 ) -> DataFrame:
     """The micro-batch drain itself, restartable: stages in
     ``staging`` stream through the admission funnel one file per
-    trigger, cross-batch state threads through the loop, and the
-    per-doc relation is read back from ``sink``. Pass the SAME
-    (staging, sink, ckpt) again after a crash and the run resumes:
-    state is recovered from the sink's committed epoch partitions
-    (recover_drain_state), Structured Streaming's checkpoint replays
-    the uncommitted trigger, and the epoch guard skips everything
-    already committed — so any crash point converges to the
-    single-delivery answer (exercised by the round-12 crash tests).
+    trigger, and the per-doc relation is read back from ``sink``.
+    Each batch reads its cross-batch inputs from disk: the seen texts
+    from the earlier batches in ``staging``, the packing offset from
+    ``tokens_before`` and the committed epoch partitions of ``sink``
+    (carried_offset), and the replay guard from their commit markers
+    (committed_epochs). Pass the SAME (staging, sink, ckpt) again
+    after a crash and the run resumes: Structured Streaming's
+    checkpoint replays the uncommitted trigger and the guard skips
+    everything already committed — so any crash point converges to
+    the single-delivery answer (exercised by the round-12 crash
+    tests).
 
     ``fault_hook(epoch_id, phase)`` is a TEST-ONLY seam called at
     phases "before_sink_write", "after_sink_write" (data written,
     commit marker not yet — the epoch is still uncommitted) and
-    "after_commit_marker" (the epoch is durably committed, in-memory
-    state not yet advanced) inside each batch; raising from it
-    simulates a crash around the sink-write / marker-commit / state
-    boundary. Never set in production paths."""
+    "after_commit_marker" (the epoch is durably committed, the batch
+    not yet returned) inside each batch; raising from it simulates a
+    crash around the sink-write / marker-commit boundary. Never set in
+    production paths."""
     sink = sink or scratch_dir(prefix="refresh_sink_")
     ckpt = ckpt or scratch_dir(prefix="refresh_ckpt_")
-    # cross-batch state: recovered from the sink on (re)start — a
-    # fresh run finds no committed partitions and starts empty
-    state = recover_drain_state(spark, sink, staging, tokens_before)
+    staged = spark.read.parquet(staging)
 
     def admit_batch(bdf: DataFrame, epoch_id: int) -> None:
         # foreachBatch is at-least-once: a trigger that fails after its
-        # side effects can be REPLAYED with the same epoch_id — within
-        # this run (guarded here) or after a driver restart (guarded by
-        # recover_drain_state, which rebuilds this dict from the sink's
-        # committed partitions). Output is idempotent (each epoch
-        # overwrites its own partition below) and driver state commits
-        # atomically after all fallible work, so a replay of a
-        # committed epoch is a no-op and a replay of an uncommitted one
-        # recomputes from unchanged state — the offset never
-        # double-counts.
-        if epoch_id <= state["last_epoch"]:
+        # side effects can be REPLAYED with the same epoch_id, within
+        # this run or after a driver restart. Output is idempotent
+        # (each epoch overwrites its own partition below) and the
+        # commit marker is the guard, so a replay of a committed epoch
+        # is a no-op and a replay of an uncommitted one recomputes from
+        # the same on-disk inputs — the offset never double-counts.
+        committed = committed_epochs(sink)
+        if committed and epoch_id <= committed[-1]:
             return
-        bdf = _spread_batch(bdf)
-        # the one-shot funnel, with the seen-texts state standing in for
-        # the earlier micro-batches: a doc whose text arrived in one is
-        # dup_batch, exactly as the one-shot window's rn > 1 says
-        all_rows = admission_core(
-            bdf, kept_texts, bench_grams, seen=state["seen"]
+        # the earlier micro-batches' non-bench texts: a doc whose text
+        # arrived in one is dup_batch, exactly as the one-shot window's
+        # rn > 1 says (unique per text — admission_core left-joins it)
+        cur = bdf.agg(F.min("batch_id").alias("_cur"))
+        seen = (
+            staged.filter(F.col("doc_id") % 97 != 0)
+            .join(F.broadcast(cur), F.col("batch_id") < F.col("_cur"))
+            .select("text")
+            .distinct()
         )
+        all_rows = admission_core(_spread_batch(bdf), kept_texts, bench_grams, seen=seen)
         # packing continuation: admitted tokens BEFORE this row within
         # the batch (micro-batch-bounded unkeyed window — bounded by
         # the trigger size, never the corpus) + the carried offset
@@ -407,32 +398,16 @@ def run_refresh_drain(
             F.sum(F.when(admitted, F.col("n_words")).otherwise(0)).over(cum_w),
             F.lit(0),
         ).cast("long")
-        off = F.lit(state["offset"]).cast("long")
-        out = all_rows.select(
+        out = all_rows.crossJoin(
+            F.broadcast(carried_offset(spark, sink, committed, tokens_before))
+        ).select(
             "*",
             F.when(admitted, F.col("n_words").cast("long")).alias("n_tokens"),
-            F.when(admitted, (off + cum_before)).alias("_pos"),
+            F.when(admitted, F.col("_off") + cum_before).alias("_pos"),
         ).select(
             *SINK_COLS[:-2],
             F.expr(f"_pos div {PACK_BUDGET}").alias("seq_id"),
             (F.col("_pos") % PACK_BUDGET).cast("long").alias("seq_offset"),
-        )
-        # the batch DataFrame is only valid inside this call — pin the
-        # results before they leave it
-        out = out.localCheckpoint(eager=True)
-        batch_tokens = int(
-            out.agg(
-                F.coalesce(F.sum(F.when(admitted, F.col("n_words"))), F.lit(0))
-            ).first()[0]
-        )
-        # one eager checkpoint per batch: the union references bdf (only
-        # valid inside this call), so materializing the merged state
-        # here both pins it and dedups in a single job
-        new_seen = (
-            state["seen"]
-            .unionByName(bdf.filter(F.col("doc_id") % 97 != 0).select("text"))
-            .distinct()
-            .localCheckpoint(eager=True)
         )
         if fault_hook is not None:
             fault_hook(int(epoch_id), "before_sink_write")
@@ -456,23 +431,8 @@ def run_refresh_drain(
             pass
         if fault_hook is not None:
             fault_hook(int(epoch_id), "after_commit_marker")
-        # everything fallible is done — commit the epoch's state
-        state["offset"] += batch_tokens
-        state["seen"] = new_seen
-        state["last_epoch"] = epoch_id
 
-    raw = spark.read.parquet(staging)
-    q = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(admit_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _start_file_stream(spark, staging, staged.schema, admit_batch, 1, ckpt, None).awaitTermination()
     # epoch=N partition dirs exist only for write idempotency — select
     # the explicit data-column list (never drop("epoch"), which would
     # eat a real column of that name) so callers see the batch schema
