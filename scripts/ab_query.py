@@ -3,15 +3,16 @@ alternative session confs (same session, variants interleaved, min over
 reps, session caches cleared before every timed run so shared prework
 is charged consistently).
 
-Each variant's confs are set on the session around a call to the raw
-registered function (``QUERIES[name].__wrapped__``, so the registry's
-own per-query choice does not override them) and the previous values
-are restored afterwards. Prints one JSON line per variant.
+Each variant's confs are set on the session around a call to the
+registered function (a query build writes no session conf, so nothing
+overrides them) and the previous values are restored afterwards.
+Prints one JSON line per variant. ``scripts/ab_tree_query.py`` A/Bs
+two source trees instead.
 
 Usage:
     python scripts/ab_query.py <query> '<json list of conf dicts>' [reps]
 
-Example (the AQE floor against the stock 1m):
+Example (an AQE coalescing floor against the stock 1m):
     python scripts/ab_query.py q163_triangle_count \
       '[{"spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m"},
         {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k"}]' 3
@@ -50,8 +51,8 @@ def session_confs(spark, confs: dict[str, str]):
 
 
 def time_once(spark, name: str, sf_dir: str, confs: dict[str, str]) -> float:
-    """Build and execute (noop sink) the raw query under ``confs``."""
-    fn = plans.QUERIES[name].__wrapped__
+    """Build and execute (noop sink) the query under ``confs``."""
+    fn = plans.QUERIES[name]
     session_cache._CACHES.clear()
     gc.collect()
     with session_confs(spark, confs):

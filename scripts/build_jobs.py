@@ -12,9 +12,12 @@ under the stream's own group) and broadcast exchanges count too.
 ``--tree`` censuses another source checkout (e.g. the parent commit)
 with this script.
 
-The output is ``{"sf": ..., "keys": n, "keys_with_jobs": n,
-"build_jobs": total, "per_key": {key: jobs}}``. ``tests/test_build_jobs.py`` runs the same
-census as a Tier-1 gate against ``tests/build_job_budget.json``.
+The census also lists the session confs each build changed, which
+should be none: a built query carries its execution choices in its
+plan. The output is ``{"sf": ..., "keys": n, "keys_with_jobs": n,
+"build_jobs": total, "conf_writes": {key: [conf]}, "per_key": {key:
+jobs}}``. ``tests/test_build_jobs.py`` runs the same census as a Tier-1
+gate against ``tests/build_job_budget.json``.
 """
 
 from __future__ import annotations
@@ -46,18 +49,31 @@ def jobs_started(spark, group: str, fn) -> int:
     return scheduler.numTotalJobs() - before
 
 
-def census(spark, sf_dir: str) -> dict[str, int]:
-    """{key: jobs started while building it} for every registered key,
-    after one priming load of each fixture table."""
+def census(spark, sf_dir: str) -> tuple[dict[str, int], dict[str, list[str]]]:
+    """({key: jobs started while building it}, {key: session confs its
+    build changed}) for every registered key, after one priming load of
+    each fixture table. A build should write no conf; the confs one
+    changed are restored before the next key is built, so every key is
+    built on the same session settings."""
     from tp_integ_data_pipeline_spark import plans
     from tp_integ_data_pipeline_spark.sources.fixtures import FIXTURE_TABLES, load_table
 
     for name in FIXTURE_TABLES:
         load_table(spark, sf_dir, name)
-    return {
-        key: jobs_started(spark, f"build:{key}", lambda fn=fn: fn(spark, sf_dir))
-        for key, fn in list(plans.QUERIES.items())
-    }
+    confs = spark.conf.getAll
+    per_key, conf_writes = {}, {}
+    for key, fn in list(plans.QUERIES.items()):
+        per_key[key] = jobs_started(spark, f"build:{key}", lambda fn=fn: fn(spark, sf_dir))
+        now = spark.conf.getAll
+        changed = sorted(k for k in confs.keys() | now.keys() if confs.get(k) != now.get(k))
+        if changed:
+            conf_writes[key] = changed
+            for k in changed:
+                if k in confs:
+                    spark.conf.set(k, confs[k])
+                else:
+                    spark.conf.unset(k)
+    return per_key, conf_writes
 
 
 def main(argv: list[str]) -> int:
@@ -71,12 +87,13 @@ def main(argv: list[str]) -> int:
 
     spark = get_session("build-jobs")
     spark.sparkContext.setLogLevel("ERROR")
-    per_key = census(spark, args.sf_dir)
+    per_key, conf_writes = census(spark, args.sf_dir)
     record = {
         "sf": os.path.basename(os.path.normpath(args.sf_dir)).removeprefix("sf"),
         "keys": len(per_key),
         "keys_with_jobs": sum(1 for n in per_key.values() if n),
         "build_jobs": sum(per_key.values()),
+        "conf_writes": conf_writes,
         "per_key": per_key,
     }
     with open(args.out, "w") as fh:

@@ -1,15 +1,18 @@
-"""Building a query starts no Spark job: the fixture-schema memo and the
-per-key build-job gate (``scripts/build_jobs.py``)."""
+"""Building a query starts no Spark job and writes no session conf: the
+fixture-schema memo, the per-key build-job gate
+(``scripts/build_jobs.py``) and the dense plans' explicit-count exchanges."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from tp_integ_data_pipeline_spark import plans
 from tp_integ_data_pipeline_spark.sources import fixtures
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -62,19 +65,39 @@ def test_building_a_query_starts_no_job_outside_the_budget(spark, sf_dir):
     its budget. The counts include every job started during the build,
     whatever its job group: a streaming query's micro-batches run under
     the query's own group and count too, so the streaming keys carry
-    their measured counts. The budget may only shrink."""
+    their measured counts. The budget may only shrink.
+
+    A build also writes no session conf: every execution choice is in
+    the built plan, so ``spark.conf.getAll`` is the same after each
+    key's build as before the census."""
     with open(BUDGET) as fh:
         budget = {k: n for keys in json.load(fh).values() for k, n in keys.items()}
-    confs = spark.conf.getAll
-    try:
-        per_key = build_jobs.census(spark, sf_dir)
-    finally:  # the builds set query confs; later tests expect the session's
-        for k, v in spark.conf.getAll.items():
-            if k.startswith("spark.sql.") and confs.get(k) != v:
-                if k in confs:
-                    spark.conf.set(k, confs[k])
-                else:
-                    spark.conf.unset(k)
+    per_key, conf_writes = build_jobs.census(spark, sf_dir)
+    assert not conf_writes, f"query builds changed session confs: {conf_writes}"
     assert not set(budget) - set(per_key), "budget names unregistered keys"
     over = {k: (n, budget.get(k, 0)) for k, n in per_key.items() if n > budget.get(k, 0)}
     assert not over, f"build jobs over budget (jobs, budget): {over}"
+
+
+# The compute-dense joins over sub-MB shuffles.
+DENSE_KEYS = (
+    "q163_triangle_count",
+    "q175_prefix_similarity_join",
+    "q185_cross_source_dup_matrix",
+)
+
+
+def test_dense_plans_carry_a_session_width_exchange(spark, sf_dir):
+    """The dense keys' built plans hold an explicit-count exchange at
+    the session's ``spark.sql.shuffle.partitions``, which AQE does not
+    coalesce; the plans are built on a session whose width differs from
+    the local cores, so the count is read from the session."""
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        for key in DENSE_KEYS:
+            df = plans.QUERIES[key](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert re.search(r"hashpartitioning\([^)]*, 7\), REPARTITION_BY_NUM", plan), key
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)

@@ -1,4 +1,4 @@
-"""Round-16 optimization tests: per-query execution choices, the shim
+"""Round-16 optimization tests: the plan-bound corpus-scan spread, the shim
 engagement probe, the warm-started IRLS trainer, and the 2-trigger
 streaming flush staging."""
 
@@ -10,23 +10,6 @@ from datetime import datetime
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_query_confs_apply_and_reset(spark):
-    """A dense query runs under the 128k AQE floor; the NEXT query gets
-    the session baseline back — no leakage."""
-    from tp_integ_data_pipeline_spark.plans.registry import (
-        DENSE_SHUFFLE_QUERIES,
-        apply_query_confs,
-    )
-    from tp_integ_data_pipeline_spark.session import AQE_MIN_PARTITION_SIZE
-
-    floor_key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    assert "q163_triangle_count" in DENSE_SHUFFLE_QUERIES
-    apply_query_confs(spark, "q163_triangle_count")
-    assert spark.conf.get(floor_key) == "128k"
-    apply_query_confs(spark, "q01_pricing_summary")
-    assert spark.conf.get(floor_key) == AQE_MIN_PARTITION_SIZE
 
 
 def test_spread_is_bound_in_the_plan(spark, sf_dir):

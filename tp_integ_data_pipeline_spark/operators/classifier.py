@@ -26,36 +26,11 @@ Shape, at 100 TB:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def _scoped_conf(spark: SparkSession, confs: dict[str, str]):
-    """Set runtime confs for an EAGER region and restore on exit.
-    Only valid around code that runs its actions inside the region
-    (the IRLS loop collects every iteration, so it qualifies)."""
-    saved: dict[str, str | None] = {}
-    for key, v in confs.items():
-        try:
-            saved[key] = spark.conf.get(key, None)
-            spark.conf.set(key, v)
-        except Exception:  # pragma: no cover - immutable conf
-            pass
-    try:
-        yield
-    finally:
-        for key, old in saved.items():
-            try:
-                if old is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, old)
-            except Exception:  # pragma: no cover
-                pass
+from tp_integ_data_pipeline_spark.operators.joins import session_width_repartition
 
 
 def feature_bucket(col: F.Column, n_buckets: int) -> F.Column:
@@ -121,7 +96,6 @@ def logreg_irls_train(
     d: int,
     n_iters: int = 10,
     l2: float = 1.0,
-    train_partitions: int = 4,
     tol: float | None = None,
     stats: dict | None = None,
     beta0: "np.ndarray | list[float] | None" = None,
@@ -152,12 +126,10 @@ def logreg_irls_train(
       those rows, fused into the Hessian groupBy as a conditional sum.
     - weights enter as a LITERAL array (element_at), not a join — no
       broadcast build per step.
-    - everything is co-partitioned by id up front (repartition(P,
-      "id")), so the per-doc margin aggregate and the pair⋈margin
-      join run exchange-free; only the final ≤ d² (j, k) rollup
-      shuffles. The SAMPLE is bounded by design (train-on-sample,
-      score-everything), so P is small; raise ``train_partitions``
-      for genuinely large training sets.
+    - everything is co-partitioned by id up front, at an explicit
+      count (the session's shuffle width), so the per-doc margin
+      aggregate and the pair⋈margin join run exchange-free; only the
+      final ≤ d² (j, k) rollup shuffles.
 
     ``tol`` enables early stopping: the gradient needed for the check
     is already in the per-iteration collected partials, so when
@@ -178,83 +150,67 @@ def logreg_irls_train(
             raise ValueError(f"beta0 must have shape ({d},), got {beta.shape}")
     else:
         beta = np.zeros(d)
-    feats = (
-        features.repartition(train_partitions, "id").localCheckpoint(eager=True)
-    )
-    lab = labels.repartition(train_partitions, "id").localCheckpoint(eager=True)
-    # Everything from the pair build onward reduces MODEL-SIZED
-    # relations (≤ d² rows per iteration), yet inherited the session's
-    # corpus-scale shuffle width — at bench scale that is pure task-
-    # wave scheduling per Newton step (the r15 scaling block showed
-    # q242 running 2.3× FASTER on 8 cores than 32). The loop is eager
-    # (one collect per iteration), so a scoped conf is exact: size the
-    # only remaining exchange — the (j, k) rollup — to the
-    # co-partitioned relation width instead. Scale-correct by
-    # construction: the rollup's input is bounded by d², never by the
-    # corpus, so its width follows train_partitions, not cluster size.
-    spark_sess = features.sparkSession
-    with _scoped_conf(
-        spark_sess, {"spark.sql.shuffle.partitions": str(train_partitions)}
-    ):
-        # the per-doc feature outer product is ITERATION-INDEPENDENT —
-        # build the (id, j, k, xx) pair relation once (id-keyed self
-        # equi-join, row-locally bounded by per-doc distinct features,
-        # exchange-free on the co-partitioned input) and checkpoint it;
-        # each Newton step then only re-weights it.
-        pairs = (
-            feats.alias("a")
-            .join(feats.alias("b"), F.col("a.id") == F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id"),
-                F.col("a.j").alias("j"),
-                F.col("b.j").alias("k"),
-                (F.col("a.x") * F.col("b.x")).alias("xx"),
-            )
-            .join(lab, "id")
-            .localCheckpoint(eager=True)
+    feats = session_width_repartition(features, "id").localCheckpoint(eager=True)
+    lab = session_width_repartition(labels, "id").localCheckpoint(eager=True)
+    # the per-doc feature outer product is ITERATION-INDEPENDENT —
+    # build the (id, j, k, xx) pair relation once (id-keyed self
+    # equi-join, row-locally bounded by per-doc distinct features,
+    # exchange-free on the co-partitioned input) and checkpoint it;
+    # each Newton step then only re-weights it.
+    pairs = (
+        feats.alias("a")
+        .join(feats.alias("b"), F.col("a.id") == F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id"),
+            F.col("a.j").alias("j"),
+            F.col("b.j").alias("k"),
+            (F.col("a.x") * F.col("b.x")).alias("xx"),
         )
-        bias_j = d - 1
-        iters_run = 0
-        for _ in range(n_iters):
-            iters_run += 1
-            blit = F.lit([float(b) for b in beta])
-            m = feats.groupBy("id").agg(
-                F.sum(F.col("x") * F.element_at(blit, F.col("j") + 1)).alias("z")
+        .join(lab, "id")
+        .localCheckpoint(eager=True)
+    )
+    bias_j = d - 1
+    iters_run = 0
+    for _ in range(n_iters):
+        iters_run += 1
+        blit = F.lit([float(b) for b in beta])
+        m = feats.groupBy("id").agg(
+            F.sum(F.col("x") * F.element_at(blit, F.col("j") + 1)).alias("z")
+        )
+        m = m.select(
+            "id", (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z")))).alias("p")
+        )
+        rows = (
+            pairs.join(m, "id")
+            .groupBy("j", "k")
+            .agg(
+                F.sum(F.col("p") * (1.0 - F.col("p")) * F.col("xx")).alias("h"),
+                F.sum(
+                    F.when(
+                        F.col("k") == bias_j, (F.col("y") - F.col("p")) * F.col("xx")
+                    )
+                ).alias("g"),
             )
-            m = m.select(
-                "id", (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z")))).alias("p")
+            .collect()
+        )
+        # the gradient rides exclusively on k = bias rows: features
+        # built WITHOUT the bias row would silently train to β = 0
+        # (g ≡ −λβ = 0 from the start) — fail loudly instead
+        if rows and not any(r["k"] == bias_j for r in rows):
+            raise ValueError(
+                "logreg_irls_train: features carry no bias row "
+                f"(j = {bias_j}); build them with "
+                "hashed_word_features(..., bias=True) and d = n_buckets + 1"
             )
-            rows = (
-                pairs.join(m, "id")
-                .groupBy("j", "k")
-                .agg(
-                    F.sum(F.col("p") * (1.0 - F.col("p")) * F.col("xx")).alias("h"),
-                    F.sum(
-                        F.when(
-                            F.col("k") == bias_j, (F.col("y") - F.col("p")) * F.col("xx")
-                        )
-                    ).alias("g"),
-                )
-                .collect()
-            )
-            # the gradient rides exclusively on k = bias rows: features
-            # built WITHOUT the bias row would silently train to β = 0
-            # (g ≡ −λβ = 0 from the start) — fail loudly instead
-            if rows and not any(r["k"] == bias_j for r in rows):
-                raise ValueError(
-                    "logreg_irls_train: features carry no bias row "
-                    f"(j = {bias_j}); build them with "
-                    "hashed_word_features(..., bias=True) and d = n_buckets + 1"
-                )
-            g = -l2 * beta
-            H = l2 * np.eye(d)
-            for r in rows:
-                H[r["j"], r["k"]] += r["h"]
-                if r["k"] == bias_j and r["g"] is not None:
-                    g[r["j"]] += r["g"]
-            if tol is not None and np.abs(g).max() < tol:
-                break
-            beta = beta + np.linalg.solve(H, g)
+        g = -l2 * beta
+        H = l2 * np.eye(d)
+        for r in rows:
+            H[r["j"], r["k"]] += r["h"]
+            if r["k"] == bias_j and r["g"] is not None:
+                g[r["j"]] += r["g"]
+        if tol is not None and np.abs(g).max() < tol:
+            break
+        beta = beta + np.linalg.solve(H, g)
     if stats is not None:
         # cluster reduces run (the last one is the convergence check)
         stats["collect_rounds"] = iters_run

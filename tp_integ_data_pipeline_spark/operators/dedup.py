@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.joins import session_width_repartition
+
 # --------------------------------------------------------------------------
 # Exact dedup (X1)
 # --------------------------------------------------------------------------
@@ -837,6 +839,11 @@ def set_similarity_join(
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .distinct()
     )
+    # The verification below (two array attaches and an intersect per
+    # pair) is compute-dense over a sub-MB relation: an explicit-count
+    # exchange keeps it one task per core, where AQE would coalesce the
+    # distinct's exchange into one.
+    cand = session_width_repartition(cand, "a")
     withsets = (
         cand.join(ordered.select(F.col("id").alias("a"), F.col("toks").alias("__ta")), "a")
         .join(ordered.select(F.col("id").alias("b"), F.col("toks").alias("__tb")), "b")

@@ -110,7 +110,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     bench's most expensive plan. collect_list here is bounded by the
     orientation (≤ O(sqrt(m)) ids per node), not data-sized.
     """
-    from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
+    from tp_integ_data_pipeline_spark.operators.joins import (
+        maybe_broadcast,
+        session_width_repartition,
+    )
     # canon feeds the degree agg AND the orientation join; directed is
     # consumed THREE times (both wedge sides + closing edge). Without
     # lineage bounding the whole canon-distinct -> degree -> orient
@@ -146,9 +149,14 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     ).localCheckpoint(eager=False)
     adj = directed.groupBy("s").agg(F.array_sort(F.collect_list("t")).alias("nbrs"))
     # node-sized relation: stats-gated broadcast (sf-test scale fits; a
-    # billion-node graph degrades to two edge-keyed shuffle joins)
+    # billion-node graph degrades to two edge-keyed shuffle joins). The
+    # per-edge intersect is compute-dense over a sub-MB edge set, so an
+    # explicit-count exchange (AQE leaves it unmerged) keeps it one task
+    # per core; it sits past the checkpoint, so the build runs no more
+    # stages.
     joined = (
-        directed.join(maybe_broadcast(adj.select("s", F.col("nbrs").alias("__ns"))), "s")
+        session_width_repartition(directed, "s")
+        .join(maybe_broadcast(adj.select("s", F.col("nbrs").alias("__ns"))), "s")
         .join(
             maybe_broadcast(adj.select(F.col("s").alias("t"), F.col("nbrs").alias("__nt"))),
             "t",

@@ -42,6 +42,16 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def session_width_repartition(df: DataFrame, *cols: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` to an explicit count: the
+    session's ``spark.sql.shuffle.partitions``, read when the plan is
+    built. AQE coalesces only exchanges without an explicit count, so a
+    compute-dense join over a sub-MB relation keeps one partition per
+    core instead of being folded into one task by its byte size."""
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(width, *cols)
+
+
 def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFrame:
     """Stats-gated broadcast hint.
 

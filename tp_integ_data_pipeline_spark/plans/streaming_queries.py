@@ -45,10 +45,6 @@ def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events fixture with the same ns→µs
     timestamp normalization as the batch loader."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     staging = scratch_dir(prefix="events_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(staging, "events.parquet"))
     stream = spark.readStream.schema(_events_schema(spark, sf_dir)).parquet(staging)
@@ -125,10 +121,6 @@ def q89_stream_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalization of the reference's duplicate-poll suppression,
     main.py:101-107). The streamed result must equal the plain batch
     aggregation over the original events (the oracle)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     staging = scratch_dir(prefix="events_late_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(staging, "a_events.parquet"))
     raw = spark.read.schema(_events_schema(spark, sf_dir)).parquet(staging)

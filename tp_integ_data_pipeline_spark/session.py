@@ -20,17 +20,11 @@ from pyspark.sql import SparkSession
 # SPARK_GRAFT_CPUS the width is the cores this process may run on.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
-# AQE coalescing floor every query starts from: Spark's stock 1m.
-# plans/registry.apply_query_confs lowers it to 128k for the few
-# compute-dense joins that measured a win.
-AQE_MIN_PARTITION_SIZE = "1m"
-
 # Runtime engine confs, shared by get_session (builder) and
 # tune_for_session (an externally created session).
 ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": AQE_MIN_PARTITION_SIZE,
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Runtime bloom-filter semi-join reduction: on a selective join
     # the big side is pre-filtered by a bloom filter built from the

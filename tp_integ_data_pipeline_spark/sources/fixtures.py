@@ -42,10 +42,6 @@ def load_table(
     consumers whose row-local work is heavy pass it. Relational facts
     regressed when spread: their consumers aggregate in the scan stage,
     so the extra exchange only costs."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.schema(file_schema(spark, path)).parquet(path)
     ts_type = dict(df.dtypes).get("ts") if name == "events" else None

@@ -32,19 +32,6 @@ from tp_integ_data_pipeline_spark.schemas import LOCALITIES, WEATHER_RAW, align_
 Fetcher = Callable[[str], str]
 
 
-def http_fetcher(timeout: int = 10) -> Fetcher:
-    """Real driver-side HTTP GET (S3/S4). Import-gated: `requests` is
-    optional in this environment."""
-    import requests  # noqa: PLC0415 — optional dependency
-
-    def fetch(url: str) -> str:
-        resp = requests.get(url, timeout=timeout)
-        resp.raise_for_status()
-        return resp.text
-
-    return fetch
-
-
 def check_api_error(payload: str) -> None:
     """F13: error-key sniff on the raw response (main.py:185-186)."""
     head = json.loads(payload)

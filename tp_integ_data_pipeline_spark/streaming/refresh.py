@@ -59,6 +59,7 @@ deterministically).
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import time
@@ -66,6 +67,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tp_integ_data_pipeline_spark.plans.curation import (
     ADMIT_IDX,
@@ -117,6 +119,10 @@ def _spread_batch(bdf: DataFrame) -> DataFrame:
 # (r12 advice). A leading underscore keeps Spark's parquet reader from
 # treating the marker as data.
 _COMMIT_MARKER = "_DRAIN_COMMITTED"
+# The staged arrival's schema, written beside its batch files by
+# stage_arrival (a leading underscore keeps it out of parquet reads),
+# so the drain reads the staging dir without inferring it.
+_ARRIVAL_SCHEMA = "_arrival_schema.json"
 
 
 def split_arrival(arriving: DataFrame, n_batches: int, order_col: str = "doc_id") -> DataFrame:
@@ -154,6 +160,8 @@ def stage_arrival(
     if cache_key is not None and key in _ARRIVAL_STAGING_CACHE:
         return _ARRIVAL_STAGING_CACHE[key]
     staging = scratch_dir(prefix="refresh_arrival_")
+    with open(os.path.join(staging, _ARRIVAL_SCHEMA), "w") as fh:
+        fh.write(arriving.schema.json())
     now = time.time()
     arriving = arriving.localCheckpoint(eager=False)
     for b in range(1, n_batches + 1):
@@ -171,27 +179,18 @@ def stage_arrival(
     return staging
 
 
-# The drain sink's data columns, in write order. The read-back selects
+# The drain sink's data columns, in write order, with their types: the
+# read-back passes the schema (no footer-inference job) and selects
 # exactly these — never "everything minus the partition column" — so a
 # future data column named like the partition dir cannot be silently
 # dropped, and the partition-discovery `epoch` column never leaks into
 # callers' schemas.
-SINK_COLS = [
-    "doc_id",
-    "source",
-    "n_words",
-    "is_bench",
-    "dup_batch",
-    "dup_corpus",
-    "too_short",
-    "low_quality",
-    "contaminated",
-    "stage_idx",
-    "batch_id",
-    "n_tokens",
-    "seq_id",
-    "seq_offset",
-]
+SINK_SCHEMA = (
+    "doc_id long, source string, n_words int, is_bench boolean, dup_batch boolean, "
+    "dup_corpus boolean, too_short boolean, low_quality boolean, contaminated boolean, "
+    "stage_idx int, batch_id int, n_tokens long, seq_id long, seq_offset long"
+)
+SINK_COLS = [field.split()[0] for field in SINK_SCHEMA.split(", ")]
 
 
 def committed_epochs(sink: str) -> list[int]:
@@ -365,7 +364,8 @@ def run_refresh_drain(
     production paths."""
     sink = sink or scratch_dir(prefix="refresh_sink_")
     ckpt = ckpt or scratch_dir(prefix="refresh_ckpt_")
-    staged = spark.read.parquet(staging)
+    with open(os.path.join(staging, _ARRIVAL_SCHEMA)) as fh:
+        staged = spark.read.schema(StructType.fromJson(json.load(fh))).parquet(staging)
 
     def admit_batch(bdf: DataFrame, epoch_id: int) -> None:
         # foreachBatch is at-least-once: a trigger that fails after its
@@ -436,4 +436,4 @@ def run_refresh_drain(
     # epoch=N partition dirs exist only for write idempotency — select
     # the explicit data-column list (never drop("epoch"), which would
     # eat a real column of that name) so callers see the batch schema
-    return spark.read.parquet(sink).select(*SINK_COLS)
+    return spark.read.schema(SINK_SCHEMA).parquet(sink).select(*SINK_COLS)
