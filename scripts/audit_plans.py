@@ -62,7 +62,7 @@ BNLJ_ALLOWED = {
     "q86_part_value_concentration": {"scalar_aggs": 1, "filtered_batches": []},  # total value
     "q90_corpus_dedup": {"scalar_aggs": 1, "filtered_batches": []},  # n_docs
     # (q93's suite doc-count guard no longer BNLJs: since round 11,
-    # plans/curation.bounded_bench_grams evaluates the bound via a
+    # operators/admission.bounded_bench_grams evaluates the bound via a
     # union-row over the gram relation — no crossJoin in the plan)
     "q109_stream_corpus_dedup": {"scalar_aggs": 1, "filtered_batches": []},  # n_docs
     # 1-row centroid-list attach (ivf_assign), planned once per reference
@@ -168,7 +168,7 @@ BNLJ_ALLOWED = {
     # 1-row split-point scalar attached lazily to select the NEW
     # half's bench docs (the q254/q257 rule — no construction job).
     # Appears twice: the new-suite grams and their suite-size guard
-    # count (curation.bounded_bench_grams) both read those bench docs.
+    # count (admission.bounded_bench_grams) both read those bench docs.
     "q260_refresh_retro_contam": {"scalar_aggs": 2, "filtered_batches": []},
     # two 1-row bookkeeping rollups (kept-corpus totals × streamed
     # batch totals) joined into the single carry-state row — the

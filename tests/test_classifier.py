@@ -18,7 +18,7 @@ from tp_integ_data_pipeline_spark.operators.classifier import (
     stationarity_residuals,
 )
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-from tp_integ_data_pipeline_spark.plans.round8_queries import _BIAS, _D, _FROZEN
+from tp_integ_data_pipeline_spark.plans.classifier_queries import _BIAS, _D, _FROZEN
 
 
 def test_feature_bucket_matches_duckdb(spark):
@@ -242,7 +242,7 @@ def test_irls_tol_margin_below_grading_boundary(spark, sf_dir):
     hard non-convergence error. Asserts the constant's headroom AND
     that a model trained at the production tolerance recomputes a RAW
     (pre-round) residual with at least 2× margin under the boundary."""
-    from tp_integ_data_pipeline_spark.plans.round8_queries import _IRLS_TOL
+    from tp_integ_data_pipeline_spark.plans.classifier_queries import _IRLS_TOL
 
     assert _IRLS_TOL <= 5e-7 / 4  # ≥4× headroom below the boundary
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
@@ -283,7 +283,7 @@ def test_q242_nonconvergence_raises_explicitly(spark, sf_dir, monkeypatch):
     UNCONVERGED model must surface as an explicit ValueError from the
     query, never a silent hash mismatch. Forcing 0 Newton iterations
     leaves β = 0, whose residual g_j = Σ x(y − 0.5) is nonzero."""
-    from tp_integ_data_pipeline_spark.plans import round8_queries as r8
+    from tp_integ_data_pipeline_spark.plans import classifier_queries as r8
 
     monkeypatch.setattr(r8, "_IRLS_ITERS", 0)
     with pytest.raises(ValueError, match="did not converge"):

@@ -1,36 +1,42 @@
 """Boundary semantics for the corpus-curation operators
-(plans/curation.py): n-gram windows, chunk strides, shard stability."""
+(plans/curation.py, operators/admission.py, operators/text.word_ngrams):
+n-gram windows, chunk strides, shard stability."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.curation import (
     q93_decontam,
     q95_chunking,
     q96_shard_stats,
     q97_curation_pipeline,
-    word_ngrams,
 )
 
 
-def _grams(spark, text: str, n: int) -> list[str]:
-    df = spark.createDataFrame([(text,)], "text string").select(
-        word_ngrams(F.split("text", " "), n).alias("g")
-    )
-    return df.collect()[0].g
+def _grams(spark, words: list[list[str]], n: int) -> list[list[str]]:
+    df = spark.createDataFrame(list(enumerate(words)), "i int, w array<string>")
+    return [r.g for r in df.select("i", word_ngrams("w", n).alias("g")).orderBy("i").collect()]
 
 
 def test_word_ngrams_exact_window(spark):
-    # 8 words -> exactly one 8-gram; 7 words -> none (not null, empty)
-    eight = "a b c d e f g h"
-    assert _grams(spark, eight, 8) == [eight]
-    assert _grams(spark, "a b c d e f g", 8) == []
+    # n words -> exactly one n-gram; 0, 1 and n-1 words -> none (empty,
+    # not null: unguarded, sequence(0, size - n) would count down and
+    # emit out-of-range grams, e.g. for a single-token doc at n = 2)
+    for n in (2, 3, 8):
+        words = [f"w{i}" for i in range(n)]
+        assert _grams(spark, [words, [], words[:1], words[: n - 1]], n) == [
+            [" ".join(words)],
+            [],
+            [],
+            [],
+        ]
 
 
 def test_word_ngrams_count_and_order(spark):
-    g = _grams(spark, "w1 w2 w3 w4 w5", 3)
-    assert g == ["w1 w2 w3", "w2 w3 w4", "w3 w4 w5"]
+    g = _grams(spark, [["w1", "w2", "w3", "w4", "w5"]], 3)
+    assert g == [["w1 w2 w3", "w2 w3 w4", "w3 w4 w5"]]
 
 
 def test_chunking_stride_boundaries(spark, sf_dir):
@@ -120,18 +126,18 @@ def test_bounded_bench_grams_guard_trips_and_passes(spark, monkeypatch):
     exactly the distinct exploded set (the guard costs no rows)."""
     import pytest
 
-    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.operators import admission
 
     bench = spark.createDataFrame(
         [(1, ["a b", "b c"]), (2, ["b c", "c d"])], "doc_id long, g array<string>"
     )
     got = {
-        r.gram for r in curation.bounded_bench_grams(bench, "g").collect()
+        r.gram for r in admission.bounded_bench_grams(bench, "g").collect()
     }
     assert got == {"a b", "b c", "c d"}
-    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 1)
+    monkeypatch.setattr(admission, "MAX_BENCH_SUITE_DOCS", 1)
     with pytest.raises(Exception, match="MAX_BENCH_SUITE_DOCS"):
-        curation.bounded_bench_grams(bench, "g").collect()
+        admission.bounded_bench_grams(bench, "g").collect()
 
 
 def test_bounded_bench_grams_guard_fires_on_empty_gram_set(spark, monkeypatch):
@@ -143,16 +149,14 @@ def test_bounded_bench_grams_guard_fires_on_empty_gram_set(spark, monkeypatch):
     count unconditionally."""
     import pytest
 
-    from pyspark.sql import functions as F
-
-    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.operators import admission
 
     gramless = spark.createDataFrame(
         [(1, "one two"), (2, "three four"), (3, "five six")],
         "doc_id long, text string",
-    )
-    grams8 = curation.word_ngrams(F.split("text", " "), 8)
-    assert curation.bounded_bench_grams(gramless, grams8).count() == 0
-    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 2)
+    ).select(tokens().alias("w"))
+    grams8 = word_ngrams("w", 8)
+    assert admission.bounded_bench_grams(gramless, grams8).count() == 0
+    monkeypatch.setattr(admission, "MAX_BENCH_SUITE_DOCS", 2)
     with pytest.raises(Exception, match="MAX_BENCH_SUITE_DOCS"):
-        curation.bounded_bench_grams(gramless, grams8).collect()
+        admission.bounded_bench_grams(gramless, grams8).collect()

@@ -275,11 +275,11 @@ def test_chain_admission_core_and_carry_on_empty(spark):
     (next refresh starts at offset 0), never a crash or a NULL."""
     from pyspark.sql import types as T
 
-    from tp_integ_data_pipeline_spark.plans.curation import (
+    from tp_integ_data_pipeline_spark.operators.admission import (
         admission_core,
         bounded_bench_grams,
-        word_ngrams,
     )
+    from tp_integ_data_pipeline_spark.operators.text import word_ngrams
     from tp_integ_data_pipeline_spark.plans.refresh_queries import _carry_report
 
     schema = T.StructType(
@@ -298,7 +298,7 @@ def test_chain_admission_core_and_carry_on_empty(spark):
     )
     grams = bounded_bench_grams(
         arrival.select(F.split("text", " ").alias("w")),
-        F.array_distinct(word_ngrams(F.col("w"), 8)),
+        F.array_distinct(word_ngrams("w", 8)),
     )
     adm = admission_core(arrival, kept, grams)
     assert adm.count() == 0

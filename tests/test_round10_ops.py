@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-from tp_integ_data_pipeline_spark.plans.curation import (
+from tp_integ_data_pipeline_spark.operators.admission import (
     ADMISSION_STAGES as _R_STAGES,
     ADMIT_IDX as _ADMIT_IDX,
     PACK_BUDGET as _PACK_BUDGET,
@@ -296,7 +296,7 @@ def test_q260_new_suite_grams_carry_the_suite_guard(spark, monkeypatch):
     Catalyst prunes the gram semi-join and the guard with it."""
     import pytest
 
-    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.operators import admission
     from tp_integ_data_pipeline_spark.plans.refresh_queries import _retro_contam_report
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -306,6 +306,6 @@ def test_q260_new_suite_grams_carry_the_suite_guard(spark, monkeypatch):
     new_bench = spark.createDataFrame([(text,)], "text string").select(
         F.split("text", " ").alias("w")
     )
-    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 0)
+    monkeypatch.setattr(admission, "MAX_BENCH_SUITE_DOCS", 0)
     with pytest.raises(Exception, match="USER_RAISED_EXCEPTION"):
         _retro_contam_report(kept, new_bench).collect()

@@ -21,10 +21,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.plans.curation import (
-    bounded_bench_grams,
-    word_ngrams,
-)
+from tp_integ_data_pipeline_spark.operators.admission import bounded_bench_grams
+from tp_integ_data_pipeline_spark.operators.text import word_ngrams
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 from tp_integ_data_pipeline_spark.streaming.refresh import (
     carried_offset,
@@ -41,7 +39,7 @@ _CLEAN = "alpha bravo chars delta echos foxtr golfs hotel india julie kilos lima
 def _grams(df):
     return bounded_bench_grams(
         df.select(F.split("text", " ").alias("w")),
-        F.array_distinct(word_ngrams(F.col("w"), 8)),
+        F.array_distinct(word_ngrams("w", 8)),
     ).localCheckpoint(eager=True)
 
 
@@ -297,7 +295,7 @@ def test_q268_layout_is_one_continuous_cumsum(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.curation import PACK_BUDGET as _PACK_BUDGET
+    from tp_integ_data_pipeline_spark.operators.admission import PACK_BUDGET as _PACK_BUDGET
     from tp_integ_data_pipeline_spark.plans.refresh_queries import _exist_kept
 
     rows = sorted(
@@ -327,7 +325,7 @@ def test_q269_carry_from_row_equals_rescan(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.curation import ADMIT_IDX as _ADMIT_IDX
+    from tp_integ_data_pipeline_spark.operators.admission import ADMIT_IDX as _ADMIT_IDX
     from tp_integ_data_pipeline_spark.plans.refresh_queries import (
         _carry_report,
         _chain_adm1,
@@ -410,7 +408,7 @@ def _rand_docs(rng, ids, pool, bench_pool):
 def _suite(spark, df):
     return bounded_bench_grams(
         df.select(F.split("text", " ").alias("w")),
-        F.array_distinct(word_ngrams(F.col("w"), 8)),
+        F.array_distinct(word_ngrams("w", 8)),
     )
 
 
@@ -426,7 +424,7 @@ def test_random_chain_batch_equals_streamed(spark, seed):
     neither path was tuned for."""
     import random
 
-    from tp_integ_data_pipeline_spark.plans.curation import (
+    from tp_integ_data_pipeline_spark.operators.admission import (
         ADMIT_IDX as _ADMIT_IDX,
         admission_core,
     )

@@ -32,7 +32,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.plans.curation import (
+from tp_integ_data_pipeline_spark.operators.admission import (
     MEAN_WORDLEN_HI,
     MEAN_WORDLEN_LO,
     MIN_DISTINCT_RATIO,
@@ -40,9 +40,9 @@ from tp_integ_data_pipeline_spark.plans.curation import (
     PACK_BUDGET,
     admission_core,
     bounded_bench_grams,
-    word_ngrams,
 )
-from tp_integ_data_pipeline_spark.plans.curation import ADMIT_IDX as _ADMIT_IDX
+from tp_integ_data_pipeline_spark.operators.admission import ADMIT_IDX as _ADMIT_IDX
+from tp_integ_data_pipeline_spark.operators.text import word_ngrams
 from tp_integ_data_pipeline_spark.plans.refresh_queries import _carry_report_from_scalars
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 from tp_integ_data_pipeline_spark.streaming.refresh import (
@@ -61,7 +61,7 @@ _FLAG_COLS = [
 def _suite_grams(spark, texts_df):
     return bounded_bench_grams(
         texts_df.select(F.split("text", " ").alias("w")),
-        F.array_distinct(word_ngrams(F.col("w"), 8)),
+        F.array_distinct(word_ngrams("w", 8)),
     ).localCheckpoint(eager=True)
 
 

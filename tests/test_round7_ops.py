@@ -55,10 +55,8 @@ def test_segment_blocks_covers_all_words_in_order(spark):
 def test_q180_rebuild_preserves_non_duplicated_documents(spark, sf_dir):
     """A document none of whose lines appear elsewhere (or appear
     first there) must rebuild to exactly its original text."""
-    from tp_integ_data_pipeline_spark.plans.round7_queries import (
-        _LINE_W,
-        q180_line_dedup_rebuild,
-    )
+    from tp_integ_data_pipeline_spark.operators.dedup import LINE_W as _LINE_W
+    from tp_integ_data_pipeline_spark.plans.dedup_queries import q180_line_dedup_rebuild
     from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
     out = q180_line_dedup_rebuild(spark, sf_dir)
@@ -212,9 +210,7 @@ def test_repetition_signals_flag_planted_loops(spark, tmp_path):
         }
     )
     pdf.to_parquet(tmp_path / "documents.parquet")
-    from tp_integ_data_pipeline_spark.plans.round7_queries import (
-        q183_repetition_signals,
-    )
+    from tp_integ_data_pipeline_spark.plans.text_queries import q183_repetition_signals
 
     out = {r.doc_id: r for r in q183_repetition_signals(spark, str(tmp_path)).collect()}
     assert out[1].flagged == 1
@@ -253,7 +249,7 @@ def test_cdc_shared_run_chunks_identically_at_any_offset(spark, tmp_path):
         }
     )
     pdf.to_parquet(tmp_path / "documents.parquet")
-    from tp_integ_data_pipeline_spark.plans.round7_queries import q184_cdc_chunks
+    from tp_integ_data_pipeline_spark.plans.dedup_queries import q184_cdc_chunks
 
     out = {r.doc_id: r for r in q184_cdc_chunks(spark, str(tmp_path)).collect()}
     # interior chunks of the shared run align after the first
@@ -577,7 +573,7 @@ def test_consecutive_line_collapse_keeps_nonadjacent_repeats(spark, tmp_path):
     """Doc = lines A A B A: collapses to A B A (adjacent dup removed,
     the non-adjacent repeat of A survives — unlike q180)."""
     from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-    from tp_integ_data_pipeline_spark.plans.round7_queries import _LINE_W
+    from tp_integ_data_pipeline_spark.operators.dedup import LINE_W as _LINE_W
 
     line_a = " ".join(["a"] * _LINE_W)
     line_b = " ".join(["b"] * _LINE_W)
@@ -1787,27 +1783,6 @@ def test_mutual_information_independent_and_determined(spark, tmp_path):
 # --------------------------------------------------------------------------
 # r7 ADVICE regressions
 # --------------------------------------------------------------------------
-def test_bigrams_expr_guard(spark):
-    """Single-token and empty word arrays yield ZERO bigrams — the
-    unguarded form descended sequence(1, 0) = [1, 0] and emitted two
-    NULL bigrams per single-token doc (r7 ADVICE, round7_queries
-    _bigrams_expr)."""
-    from pyspark.sql import functions as F
-
-    from tp_integ_data_pipeline_spark.plans.round7_queries import _bigrams_expr
-
-    df = spark.createDataFrame(
-        [(1, ["a"]), (2, []), (3, ["a", "b", "c"])], "id int, w array<string>"
-    )
-    rows = (
-        df.select("id", F.explode(_bigrams_expr("w")).alias("g"))
-        .orderBy("id", "g")
-        .collect()
-    )
-    assert [(r.id, r.g) for r in rows] == [(3, "a b"), (3, "b c")]
-    assert all(r.g is not None for r in rows)
-
-
 def test_rank_summaries_nonstring_key(spark):
     """rank_summaries derives the output key type from the input
     schema — an integer key must round-trip as an integer, not a

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
-from tp_integ_data_pipeline_spark.plans.curation import FUNNEL_STAGES as _STAGES, KEPT_IDX as _KEPT_IDX
+from tp_integ_data_pipeline_spark.operators.admission import FUNNEL_STAGES as _STAGES, KEPT_IDX as _KEPT_IDX
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
 _PRIORITY = [("f_dup", 2), ("f_short", 3), ("f_quality", 4), ("f_contam", 5)]
@@ -278,7 +278,7 @@ def test_funnel_bench_grams_carry_the_suite_guard(spark, monkeypatch):
     prunes the contamination join, so no guard runs on any path."""
     import pytest
 
-    from tp_integ_data_pipeline_spark.plans import curation
+    from tp_integ_data_pipeline_spark.operators import admission
     from tp_integ_data_pipeline_spark.plans.refresh_queries import funnel_verdicts
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -286,6 +286,6 @@ def test_funnel_bench_grams_carry_the_suite_guard(spark, monkeypatch):
         [(0, text, "en", "s1", 55), (1, text, "en", "s1", 55), (2, "one two", "en", "s2", 7)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    monkeypatch.setattr(curation, "MAX_BENCH_SUITE_DOCS", 0)
+    monkeypatch.setattr(admission, "MAX_BENCH_SUITE_DOCS", 0)
     with pytest.raises(Exception, match="USER_RAISED_EXCEPTION"):
         funnel_verdicts(docs).select("doc_id", "contaminated", "stage_idx").collect()

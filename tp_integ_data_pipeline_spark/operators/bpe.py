@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.text import tokens
+
 
 def _word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
-    words = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    words = docs.select(F.explode(tokens(text_col)).alias("word"))
     return (
         words.filter(F.length("word") > 0)
         .groupBy("word")

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.joins import session_width_repartition
+from tp_integ_data_pipeline_spark.operators.text import tokens
 
 
 def feature_bucket(col: F.Column, n_buckets: int) -> F.Column:
@@ -54,7 +55,7 @@ def hashed_word_features(
     (j = n_buckets, x = 1.0) is appended per doc so the trainer can
     treat the intercept uniformly."""
     toks = docs.select(
-        F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("w")
+        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("w")
     ).where(F.col("w") != "")
     feats = (
         toks.select("id", feature_bucket(F.col("w"), n_buckets).alias("j"))

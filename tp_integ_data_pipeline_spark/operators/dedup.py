@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.joins import session_width_repartition
+from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 
 # --------------------------------------------------------------------------
 # Exact dedup (X1)
@@ -72,20 +73,8 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     so downstream consumers pay only their own algorithmic shuffle
     (groupBy id for signatures, shuffle on sh for the inverted index).
     """
-    # Materialize the token array as a column first — referencing
-    # split() inside the position lambda would recompute it per
-    # position (O(len²) per doc).
-    toked = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
-    grams = F.when(
-        F.size(F.col("__toks")) >= k,
-        F.expr(
-            f"transform(sequence(0, size(__toks) - {k}), "
-            f"i -> concat_ws(' ', slice(__toks, i + 1, {k})))"
-        ),
-    ).otherwise(F.array())
-    return toked.select("id", F.explode(F.array_distinct(grams)).alias("sh"))
+    toked = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__toks"))
+    return toked.select("id", F.explode(F.array_distinct(word_ngrams("__toks", k))).alias("sh"))
 
 
 def shingle_sql(table: str, id_col: str, text_col: str, k: int = 3) -> str:
@@ -431,7 +420,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     hashes)."""
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+        F.explode(tokens(text_col)).alias("tok"),
     ).select(
         "id",
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("h1"),
@@ -539,7 +528,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
     # small-star mins and are swept by its final distinct — one fewer
     # exchange per round.
     return (
-        sym.join(mins, "x")
+        sym.join(mins.hint("shuffle_hash"), "x")
         .filter(F.col("y") > F.col("x"))
         .select(F.col("y").alias("u"), F.col("m").alias("v"))
     )
@@ -551,7 +540,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     edges must be min-oriented ``(u, v)`` with ``u > v``."""
     mins = edges.groupBy("u").agg(F.min("v").alias("m"))
     leaves = (
-        edges.join(mins, "u")
+        edges.join(mins.hint("shuffle_hash"), "u")
         .filter(F.col("v") != F.col("m"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
@@ -572,6 +561,10 @@ def dup_clusters(
     the edge set toward a star forest rooted at each component's
     minimum node, converging in O(log n) rounds — on the tiny
     cliques/chains of a near-dup graph (diameter ≤ ~4) typically 2.
+    Both star joins are pinned to a shuffled hash join built on the
+    per-node mins: left to AQE, a join of two tiny sides became a
+    broadcast whose build side followed whichever shuffle finished
+    first, so a round's job count varied from run to run.
     That replaces the previous O(diameter)-round min-label propagation
     whose per-round driver ``count()`` + eager ``localCheckpoint`` made
     q87/q90 the slowest queries at every SF. Here a round is two edge
@@ -722,7 +715,7 @@ def ordered_token_sets(toks: DataFrame) -> DataFrame:
     every consumer reads it at least twice (prefix explode + both
     verify attaches) — and because it is the natural unit to CACHE
     when several queries join the same corpus at different thresholds
-    (q175 at 0.6, q185 at 0.5 — plans/round6_queries._ordered_sets)."""
+    (q175 at 0.6, q185 at 0.5 — plans/similarity_queries._ordered_sets)."""
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__f"))
     return (
         toks.join(freq, "tok")
@@ -930,6 +923,9 @@ def containment_join(
 # block): here exactly ONE copy of each distinct line survives — the
 # corpus-first occurrence — so unique content is never lost.
 # --------------------------------------------------------------------------
+LINE_W = 6  # synthetic "line" width (fixture text carries no newlines)
+
+
 def segment_blocks(
     docs: DataFrame,
     width: int,
@@ -941,7 +937,7 @@ def segment_blocks(
     "line" unit for fixture text that carries no newlines (real
     corpora would split on '\\n' instead; the downstream machinery is
     identical). One explode, no shuffle."""
-    words = F.split(F.col(text_col), " ")
+    words = tokens(text_col)
     starts = F.sequence(F.lit(1), F.greatest(F.size(words), F.lit(1)), F.lit(width))
     return (
         docs.select(F.col(id_col), words.alias("__w"), F.explode(starts).alias("__i"))
@@ -970,7 +966,7 @@ def line_dedup_keep_first(
 
     Returns the surviving (id, pos, line) rows; callers reassemble
     documents with an order-preserving re-concat (see
-    plans/round7_queries.q180)."""
+    plans/dedup_queries.q180)."""
     winners = blocks.groupBy(line_col).agg(
         F.min(F.struct(F.col(id_col).alias("wi"), F.col(pos_col).alias("wp"))).alias("__w")
     )

@@ -19,12 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.text import tokens
+
 
 def postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct (token, id) posting rows — the exploded index form the
     search path consumes; one explode + one distinct, token-keyed."""
     return (
-        docs.select(F.col(id_col).alias("id"), F.explode(F.split(text_col, " ")).alias("token"))
+        docs.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("token"))
         .filter(F.col("token") != "")
         .distinct()
     )
@@ -67,7 +69,7 @@ def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     the text split (size(), no explode/shuffle)."""
     return docs.select(
         F.col(id_col).alias("id"),
-        F.size(F.filter(F.split(text_col, " "), lambda t: t != "")).alias("dl"),
+        F.size(F.filter(tokens(text_col), lambda t: t != "")).alias("dl"),
     )
 
 
@@ -77,7 +79,7 @@ def term_frequencies(
     """(token, id, tf) rows — the frequency-bearing posting form BM25
     consumes (vs :func:`postings`' distinct membership form)."""
     return (
-        docs.select(F.col(id_col).alias("id"), F.explode(F.split(text_col, " ")).alias("token"))
+        docs.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token", "id")
         .agg(F.count(F.lit(1)).alias("tf"))

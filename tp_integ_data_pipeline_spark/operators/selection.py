@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
-from tp_integ_data_pipeline_spark.operators.text import char_ngrams
+from tp_integ_data_pipeline_spark.operators.text import char_ngrams, tokens, word_ngrams
 
 
 def hash_bucket(col: F.Column, n_buckets: int) -> F.Column:
@@ -47,20 +47,6 @@ def hash_bucket(col: F.Column, n_buckets: int) -> F.Column:
     return (
         F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % F.lit(n_buckets)
     )
-
-
-def _uni_bigrams(text_col: str) -> F.Column:
-    """Word unigrams + bigrams as one array (the DSIR feature set).
-    Expression-level; [] bigram tail for 1-word docs."""
-    w = F.split(F.col(text_col), " ")
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.array_join(F.slice(w, i, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(w, bigrams)
 
 
 def dsir_weights(
@@ -84,10 +70,10 @@ def dsir_weights(
     """
     base = (
         docs.select(
-            F.col(id_col).alias("id"),
-            is_target.alias("__t"),
-            F.explode(_uni_bigrams(text_col)).alias("__g"),
+            F.col(id_col).alias("id"), is_target.alias("__t"), tokens(text_col).alias("__w")
         )
+        # the DSIR feature set: word unigrams + bigrams
+        .select("id", "__t", F.explode(F.concat("__w", word_ngrams("__w", 2))).alias("__g"))
         .select("id", "__t", hash_bucket(F.col("__g"), n_buckets).alias("bucket"))
         .localCheckpoint(eager=False)
     )
@@ -165,7 +151,7 @@ def bpe_pair_counts(
     trainers use. Pairs are the character 2-grams of each word
     (``text.char_ngrams``: empty for single-char words), and the final
     rollup is the second and last shuffle."""
-    words = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    words = docs.select(F.explode(tokens(text_col)).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("wf"))
     pairs = vocab.select("wf", F.explode(char_ngrams("word", 2)).alias("pair"))
     return pairs.groupBy("pair").agg(F.sum("wf").cast("long").alias("cnt"))

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.text import tokens
+
 
 def position_grams(
     df: DataFrame, id_col: str, text_col: str, k: int
@@ -55,7 +57,7 @@ def position_grams(
     byte-reproducible in any engine with md5, which is what makes the
     whole operator DuckDB-oracle-able."""
     toked = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
+        F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
     )
     grams = F.when(
         F.size("__toks") >= k,
@@ -155,7 +157,7 @@ def strip_spans(
     )
     toked = df.select(
         F.col(id_col).alias("id"),
-        F.split(F.col(text_col), " ").alias("__toks"),
+        tokens(text_col).alias("__toks"),
     )
     joined = toked.join(per_doc, toked.id == per_doc.__sid, "left").drop("__sid")
     keep = F.filter(

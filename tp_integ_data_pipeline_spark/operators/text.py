@@ -19,6 +19,23 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
+def word_ngrams(words_col: str, n: int) -> Column:
+    """Word n-grams of the token-array column ``words_col`` as
+    space-joined strings in position order; [] below ``n`` words.
+
+    The engine's one builder of word k-grams. The ``size >= n`` guard
+    also keeps the range ascending: below it ``sequence(0, size - n)``
+    would count DOWN and read slices past the end. The caller
+    materializes the token array as a named column first, so the
+    position lambda reads it instead of re-splitting the text per
+    position. No explode: a row-local ``array_distinct`` stays cheap."""
+    grams = F.expr(
+        f"transform(sequence(0, size({words_col}) - {n}), "
+        f"i -> concat_ws(' ', slice({words_col}, i + 1, {n})))"
+    )
+    return F.when(F.size(words_col) >= n, grams).otherwise(F.array())
+
+
 def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col))
 

@@ -26,8 +26,7 @@ from tp_integ_data_pipeline_spark.plans import observe_queries  # noqa: E402,F40
 from tp_integ_data_pipeline_spark.plans import timeseries_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import graph_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import linkage_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round5_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round6_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round7_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import round8_queries  # noqa: E402,F401
+from tp_integ_data_pipeline_spark.plans import stats_queries  # noqa: E402,F401
+from tp_integ_data_pipeline_spark.plans import event_queries  # noqa: E402,F401
+from tp_integ_data_pipeline_spark.plans import classifier_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import refresh_queries  # noqa: E402,F401

@@ -1,10 +1,10 @@
-"""Round-8 operator family: distributed quality classifier — hashed
-word features + IRLS-trained logistic regression + frozen-weight
-relational inference (q241–q245). The fastText-style learned quality
-filter that the curation suite previously approximated with hand
-rules (q94 quality rules, q113 surprisal, q193 backoff-LM score).
-No reference-repo counterpart (reference main.py:46-454 carries no ML
-surface) — SURVEY.md §2.10 extension, round-7 VERDICT item 7.
+"""Distributed quality classifier: hashed word features +
+IRLS-trained logistic regression + frozen-weight relational inference
+(q241–q247). The fastText-style learned quality filter that the
+curation suite otherwise approximates with hand rules (q94 quality
+rules, q113 surprisal, q193 backoff-LM score). No reference-repo
+counterpart (reference main.py:46-454 carries no ML surface) —
+SURVEY.md §2.10 extension.
 
 Oracle strategy: the FEATURIZE and SCORE paths are pure relational
 plans over an engine-portable md5 bucket hash, so DuckDB replays them
@@ -21,12 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.classifier import (
+    _weights_df,
     hashed_word_features,
     logreg_irls_train,
     score_frozen,
     stationarity_residuals,
-    _weights_df,
 )
+from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -56,7 +57,7 @@ _IRLS_TOL = 1e-7
 # (Lazy: building a Column requires an active SparkContext.)
 def _rule_label() -> F.Column:
     return (
-        F.size(F.filter(F.split("text", " "), lambda w: w.isin("spark", "vector")))
+        F.size(F.filter(tokens(), lambda w: w.isin("spark", "vector")))
         >= 3
     ).cast("double")
 _RULE_SQL = (
@@ -474,7 +475,7 @@ def q247_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(j, float(v)) for j, v in sorted(_FROZEN.items())], "j int, beta double"
     )
     toks = (
-        docs.select(F.col("doc_id"), F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.col("doc_id"), F.explode(tokens()).alias("w"))
         .where(F.col("w") != "")
     )
     vocab = (

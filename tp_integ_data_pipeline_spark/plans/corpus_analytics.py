@@ -1,5 +1,7 @@
 """Corpus-analytics queries: dense global IDs, vocabulary-growth
-(Heaps-law) curves, PMI collocations, exact-percentile length trimming.
+(Heaps-law) curves, PMI collocations, exact-percentile length trimming,
+per-source n-gram overlap, novelty and diversity, token-distribution
+drift, prompt-prefix sharing and the one-row dataset card.
 
 No reference-repo counterpart — SURVEY.md §2.10 extension surface: the
 "measure and re-key the corpus" verbs of a 100 TB curation job. Every
@@ -12,7 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.dedup import LINE_W, segment_blocks
 from tp_integ_data_pipeline_spark.operators.packing import global_cumsum
+from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -80,7 +84,7 @@ def q129_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         (F.col("doc_id") % _N_GROWTH_SHARDS).alias("shard"),
-        F.explode(F.split("text", " ")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     tok_tot = toks.groupBy("shard").agg(F.count(F.lit(1)).alias("n_tokens"))
     first_seen = toks.groupBy("tok").agg(F.min("shard").alias("shard"))
@@ -144,7 +148,7 @@ def q130_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dp BEFORE the global top-k so cross-engine libm ULPs cannot flip
     the cut."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", " ").alias("a"))
+    t = docs.select("doc_id", tokens().alias("a"))
     uni = t.select(F.explode("a").alias("tok"))
     uni_c = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     n_uni = uni.agg(F.count(F.lit(1)).cast("double").alias("n_uni"))
@@ -397,11 +401,9 @@ def q134_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion row-local from that array — never a gram-keyed self-join
     of the corpus against itself (the oracle's shape: fine at check
     scale, quadratic scan at 100 TB)."""
-    from tp_integ_data_pipeline_spark.plans.curation import word_ngrams
-
     docs = load_table(spark, sf_dir, "documents")
     grams = (
-        docs.select("source", F.split("text", " ").alias("w"))
+        docs.select("source", tokens().alias("w"))
         .select("source", F.explode(word_ngrams("w", 3)).alias("gram"))
         .distinct()
     )
@@ -471,9 +473,400 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.pmod(F.xxhash64("doc_id"), F.lit(16)).alias("shard"),
-        F.explode(F.split("text", " ")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     kept, cutoffs = shard_topk_partials(toks, key="tok", shard="shard", c=200_000)
     return merge_shard_topk(kept, cutoffs, key="tok", shard="shard", k=20).select(
         "tok", "lower", "upper", "rank"
+    )
+
+
+# --------------------------------------------------------------------------
+# q167 — per-source n-gram novelty attribution (data valuation)
+# --------------------------------------------------------------------------
+@query(
+    "q167_source_novelty",
+    oracle="""
+    WITH grams AS (
+        SELECT DISTINCT source,
+               a[i] || ' ' || a[i + 1] || ' ' || a[i + 2] AS gram
+        FROM (SELECT source, string_split(text, ' ') AS a FROM documents),
+             UNNEST(range(1, len(a) - 1)) AS r(i)
+    ),
+    owner AS (SELECT gram, MIN(source) AS first_source FROM grams GROUP BY gram)
+    SELECT g.source,
+           COUNT(*) AS n_grams,
+           COUNT(CASE WHEN o.first_source = g.source THEN 1 END) AS n_novel,
+           ROUND(COUNT(CASE WHEN o.first_source = g.source THEN 1 END)
+                 * 1.0 / COUNT(*), 6) AS novelty_rate
+    FROM grams g JOIN owner o USING (gram)
+    GROUP BY g.source
+    ORDER BY g.source
+    """,
+)
+def q167_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """What does each source ADD to the corpus? Every distinct word-
+    3-gram is attributed to its first owner under a fixed priority
+    (source name order — deterministic, engine-portable); per source:
+    distinct grams, grams it alone introduces, novelty rate. The
+    data-valuation complement of q134's pairwise overlap: overlap says
+    sources share material, novelty says which source you could DROP
+    with least loss. Shape: the distinct (source, gram) relation feeds
+    one gram-keyed min-aggregate and one source-keyed rollup — two
+    bounded shuffles, never a per-pair comparison (novelty rate is
+    strictly in (0, 1] — no -0.0 trap)."""
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    grams = (
+        docs.select("source", tokens().alias("w"))
+        .select("source", F.explode(word_ngrams("w", 3)).alias("gram"))
+        .distinct()
+        .localCheckpoint(eager=False)  # feeds owner agg AND the rollup
+    )
+    owner = grams.groupBy("gram").agg(F.min("source").alias("first_source"))
+    return (
+        grams.join(owner, "gram")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_grams"),
+            F.count(F.when(F.col("first_source") == F.col("source"), 1)).alias("n_novel"),
+            F.round(
+                F.count(F.when(F.col("first_source") == F.col("source"), 1))
+                * F.lit(1.0)
+                / F.count(F.lit(1)),
+                6,
+            ).alias("novelty_rate"),
+        )
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------------
+# q191 — shared-prefix (prompt-cache) analysis
+# --------------------------------------------------------------------------
+_PFX_W = 8
+
+
+@query(
+    "q191_prefix_cache_share",
+    oracle=f"""
+    WITH t AS (
+        SELECT doc_id, string_split(text, ' ') AS w FROM documents
+    ),
+    p AS (
+        SELECT doc_id,
+               array_to_string(w[1:{_PFX_W}], ' ') AS prefix,
+               LEAST(len(w), {_PFX_W}) AS pfx_tok
+        FROM t
+    ),
+    g AS (
+        SELECT prefix, pfx_tok, COUNT(*) AS n_docs,
+               CAST(MIN(doc_id) AS BIGINT) AS first_doc
+        FROM p GROUP BY prefix, pfx_tok
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+           CAST(SUM(CASE WHEN n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS shared_groups,
+           CAST(SUM(n_docs) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN n_docs >= 2 THEN (n_docs - 1) * pfx_tok ELSE 0 END) AS BIGINT)
+               AS cacheable_tokens,
+           CAST(SUM(first_doc) AS BIGINT) AS group_checksum
+    FROM g
+    """,
+)
+def q191_prefix_cache_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prompt-prefix cache analysis: group documents by their first
+    8 tokens and report how many share a prefix and how many tokens a
+    prefix cache would save (every repeat of a shared prefix skips
+    its pfx_tok tokens — the KV-cache-sharing win a serving stack
+    gets from templated prompts). One row-local prefix projection,
+    one map-side-combined groupBy, a 1-row corpus rollup; the
+    group_checksum (sum of per-group min doc ids) pins the exact
+    grouping, not just the counts."""
+    docs = load_table(spark, sf_dir, "documents")
+    w = tokens()
+    p = docs.select(
+        "doc_id",
+        F.concat_ws(" ", F.slice(w, 1, _PFX_W)).alias("prefix"),
+        F.least(F.size(w), F.lit(_PFX_W)).alias("pfx_tok"),
+    )
+    g = p.groupBy("prefix", "pfx_tok").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.min("doc_id").cast("long").alias("first_doc"),
+    )
+    return g.agg(
+        F.count(F.lit(1)).cast("long").alias("n_groups"),
+        F.sum(F.when(F.col("n_docs") >= 2, 1).otherwise(0)).cast("long").alias("shared_groups"),
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum(
+            F.when(F.col("n_docs") >= 2, (F.col("n_docs") - 1) * F.col("pfx_tok")).otherwise(0)
+        )
+        .cast("long")
+        .alias("cacheable_tokens"),
+        F.sum("first_doc").cast("long").alias("group_checksum"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q192 — per-source token-distribution JS divergence vs the corpus
+# --------------------------------------------------------------------------
+_JSD_B = 512  # hashed-vocab width: bounded forever, broadcast-able
+
+
+@query(
+    "q192_source_token_jsd",
+    oracle=f"""
+    WITH tok AS (
+        SELECT source,
+               CAST(('0x' || substr(md5(t.tok), 1, 8)) AS BIGINT) % {_JSD_B} AS b
+        FROM documents, UNNEST(string_split(text, ' ')) AS t(tok)
+    ),
+    sc AS (SELECT source, b, COUNT(*) AS c FROM tok GROUP BY 1, 2),
+    stot AS (SELECT source, SUM(c) AS n FROM sc GROUP BY 1),
+    corpus AS (SELECT b, SUM(c) AS cc FROM sc GROUP BY 1),
+    ctot AS (SELECT SUM(cc) AS cn FROM corpus),
+    grid AS (
+        SELECT s.source, g.range AS b,
+               (COALESCE(sc.c, 0) + 1.0) / (s.n + {_JSD_B}) AS p,
+               (COALESCE(corpus.cc, 0) + 1.0) / ((SELECT cn FROM ctot) + {_JSD_B}) AS q
+        FROM stot s
+        CROSS JOIN range(0, {_JSD_B}) g
+        LEFT JOIN sc ON sc.source = s.source AND sc.b = g.range
+        LEFT JOIN corpus ON corpus.b = g.range
+    )
+    SELECT source,
+           ROUND(SUM(0.5 * p * ln(2 * p / (p + q)) + 0.5 * q * ln(2 * q / (p + q))), 6)
+               AS jsd
+    FROM grid GROUP BY source ORDER BY source
+    """,
+)
+def q192_source_token_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Which source is most off-distribution: Jensen-Shannon
+    divergence between each source's hashed-token distribution and
+    the whole-corpus distribution (Laplace-smoothed over a FIXED
+    512-bucket hashed vocab — the q112 bounded-feature-space trick,
+    so the per-source histograms stay broadcast-able at any corpus
+    size and the md5 bucketing replays exactly in DuckDB). JSD is
+    symmetric and bounded (unlike q170's PSI) — the corpus-drift
+    score a mixture owner tracks per feed. Every term is
+    nonnegative (p·ln(2p/(p+q)) + q·ln(2q/(p+q)) >= 0 pairwise), so
+    no -0.0 trap; ln's last-ULP libm variance dies under ROUND(,6)
+    (the q170 convention). One token explode -> (source, bucket)
+    map-side counts; everything after is bucket-grid-sized."""
+    from tp_integ_data_pipeline_spark.operators.selection import hash_bucket
+
+    docs = load_table(spark, sf_dir, "documents")
+    tok = docs.select("source", F.explode(tokens()).alias("__t")).select(
+        "source", hash_bucket(F.col("__t"), _JSD_B).alias("b")
+    )
+    sc = tok.groupBy("source", "b").agg(F.count(F.lit(1)).alias("c"))
+    sc = sc.localCheckpoint(eager=False)  # feeds stot, corpus, and the grid join
+    stot = sc.groupBy("source").agg(F.sum("c").alias("n"))
+    corpus = sc.groupBy("b").agg(F.sum("c").alias("cc"))
+    ctot = corpus.agg(F.sum("cc").alias("cn"))
+    # full 0..B-1 grid via a ROW-LOCAL sequence explode per source —
+    # never a relation-against-relation cross join (B is a constant;
+    # the only BNLJ left is the 1-row corpus-total scalar). Laplace
+    # smoothing is defined over the FULL hashed vocab on both engines,
+    # so never-observed buckets contribute identically.
+    grid = (
+        stot.select(
+            "source",
+            "n",
+            F.explode(F.sequence(F.lit(0), F.lit(_JSD_B - 1))).alias("b"),
+        )
+        .join(sc, ["source", "b"], "left")
+        .join(F.broadcast(corpus), "b", "left")
+        .crossJoin(F.broadcast(ctot))
+        .select(
+            "source",
+            ((F.coalesce(F.col("c"), F.lit(0)) + 1.0) / (F.col("n") + _JSD_B)).alias("p"),
+            (
+                (F.coalesce(F.col("cc"), F.lit(0)) + 1.0) / (F.col("cn") + _JSD_B)
+            ).alias("q"),
+        )
+    )
+    p, q = F.col("p"), F.col("q")
+    term = 0.5 * p * F.log(2 * p / (p + q)) + 0.5 * q * F.log(2 * q / (p + q))
+    return (
+        grid.groupBy("source")
+        .agg(F.round(F.sum(term), 6).alias("jsd"))
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------------
+# q195 — n-gram diversity / self-repetition per source
+# --------------------------------------------------------------------------
+@query(
+    "q195_ngram_diversity",
+    oracle="""
+    WITH d AS (SELECT source, string_split(text, ' ') AS w FROM documents),
+    utok AS (
+        SELECT source, t.tok AS g FROM d, UNNEST(w) AS t(tok)
+    ),
+    uc AS (
+        SELECT source, g, CAST(COUNT(*) AS BIGINT) AS c FROM utok GROUP BY 1, 2
+    ),
+    us AS (
+        SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
+               CAST(COUNT(*) AS BIGINT) AS d_unigrams
+        FROM uc GROUP BY 1
+    ),
+    ttok AS (
+        SELECT source, w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS g
+        FROM d, UNNEST(range(1, len(w) - 1)) AS t(i)
+    ),
+    tc AS (
+        SELECT source, g, CAST(COUNT(*) AS BIGINT) AS c FROM ttok GROUP BY 1, 2
+    ),
+    ts AS (
+        SELECT source, CAST(SUM(c) AS BIGINT) AS n_trigrams,
+               CAST(COUNT(*) AS BIGINT) AS d_trigrams
+        FROM tc GROUP BY 1
+    ),
+    spread AS (
+        SELECT g, CAST(COUNT(*) AS BIGINT) AS ns FROM tc GROUP BY 1
+    ),
+    uniq AS (
+        SELECT tc.source,
+               CAST(SUM(CASE WHEN s.ns = 1 THEN 1 ELSE 0 END) AS BIGINT) AS u_tri
+        FROM tc JOIN spread s ON s.g = tc.g GROUP BY 1
+    )
+    SELECT us.source, us.n_tokens, us.d_unigrams,
+           ROUND(CAST(us.d_unigrams AS DOUBLE) / us.n_tokens, 6) AS ttr,
+           ts.n_trigrams, ts.d_trigrams,
+           ROUND(CAST(ts.d_trigrams AS DOUBLE) / ts.n_trigrams, 6) AS tri_ttr,
+           ROUND(CAST(ts.n_trigrams AS DOUBLE) / ts.d_trigrams, 6) AS rep_factor,
+           ROUND(CAST(uniq.u_tri AS DOUBLE) / ts.d_trigrams, 6) AS uniq_tri_share
+    FROM us JOIN ts ON ts.source = us.source JOIN uniq ON uniq.source = us.source
+    ORDER BY us.source
+    """,
+)
+def q195_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus diversity report per source (the self-repetition /
+    mode-collapse check run on synthetic and scraped feeds alike):
+    unigram type-token ratio, trigram type-token ratio, trigram
+    repetition factor (occurrences per distinct trigram), and the
+    share of the source's distinct trigrams that appear in NO other
+    source (content uniqueness — the complement of q134's overlap
+    and q167's novelty-over-time). All graded doubles are ratios of
+    exact nonnegative integers at 6 dp.
+
+    Scale shape: trigrams materialize row-locally in the token array
+    (no join, no window); (source, gram) counts are map-side
+    combinable; the uniqueness pass reuses the SAME distinct
+    (source, trigram) relation (checkpointed once) keyed by trigram —
+    cost tracks the distinct-gram count, never pairs of sources."""
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    toked = docs.select("source", tokens().alias("w"))
+
+    uc = (
+        toked.select("source", F.explode("w").alias("g"))
+        .groupBy("source", "g")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    us = uc.groupBy("source").agg(
+        F.sum("c").alias("n_tokens"), F.count(F.lit(1)).alias("d_unigrams")
+    )
+    tc = (
+        toked.select("source", F.explode(word_ngrams("w", 3)).alias("g"))
+        .groupBy("source", "g")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    tc = tc.localCheckpoint(eager=False)  # feeds ts, spread, and uniq
+    ts = tc.groupBy("source").agg(
+        F.sum("c").alias("n_trigrams"), F.count(F.lit(1)).alias("d_trigrams")
+    )
+    spread = tc.groupBy("g").agg(F.count(F.lit(1)).alias("ns"))
+    uniq = (
+        tc.join(spread, "g")
+        .groupBy("source")
+        .agg(F.sum(F.when(F.col("ns") == 1, 1).otherwise(0)).alias("u_tri"))
+    )
+    return (
+        us.join(ts, "source")
+        .join(uniq, "source")
+        .select(
+            "source",
+            "n_tokens",
+            "d_unigrams",
+            F.round(F.col("d_unigrams").cast("double") / F.col("n_tokens"), 6).alias(
+                "ttr"
+            ),
+            "n_trigrams",
+            "d_trigrams",
+            F.round(F.col("d_trigrams").cast("double") / F.col("n_trigrams"), 6).alias(
+                "tri_ttr"
+            ),
+            F.round(F.col("n_trigrams").cast("double") / F.col("d_trigrams"), 6).alias(
+                "rep_factor"
+            ),
+            F.round(F.col("u_tri").cast("double") / F.col("d_trigrams"), 6).alias(
+                "uniq_tri_share"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------------
+# q238 — one-row dataset card (corpus profile capstone)
+# --------------------------------------------------------------------------
+@query(
+    "q238_dataset_card",
+    oracle=f"""
+    WITH b AS (
+        SELECT doc_id, (i - 1) // {LINE_W} AS pos,
+               array_to_string(w[i:i+{LINE_W - 1}], ' ') AS line
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+             UNNEST(range(1, greatest(len(w), 1) + 1, {LINE_W})) AS t(i)
+    ),
+    lines AS (
+        SELECT CAST(COUNT(*) AS DOUBLE) AS n_lines,
+               CAST(COUNT(DISTINCT line) AS DOUBLE) AS n_uniq
+        FROM b
+    ),
+    d AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+               CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
+               CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
+               ROUND(AVG(CAST(n_chars AS DOUBLE)), 6) AS mean_chars
+        FROM documents
+    )
+    SELECT d.n_docs, d.total_tokens, d.n_langs, d.n_sources, d.mean_chars,
+           ROUND(1.0 - lines.n_uniq / lines.n_lines, 6) AS dup_line_share
+    FROM d, lines
+    """,
+)
+def q238_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-row DATASET CARD: the corpus profile a data release ships
+    with — doc/token/language/source counts, mean length, and the
+    duplicate-line share (1 − distinct/total over q180's 6-word line
+    unit, the Falcon-style dedup headroom number). Composes the
+    engine's existing segmentation into the single summary artifact.
+
+    Scale shape: one scan feeds a global rollup (count-distincts are
+    the only shuffles, each key-bounded); the line relation is the
+    row-local segment_blocks explode with one distinct rollup; the
+    two 1-row summaries cross-join (BNLJ_ALLOWED)."""
+    docs = load_table(spark, sf_dir, "documents")
+    d = docs.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.size(tokens())).cast("long").alias("total_tokens"),
+        F.countDistinct("lang").cast("long").alias("n_langs"),
+        F.countDistinct("source").cast("long").alias("n_sources"),
+        F.round(F.avg(F.col("n_chars").cast("double")), 6).alias("mean_chars"),
+    )
+    blocks = segment_blocks(docs.select("doc_id", "text"), LINE_W)
+    lines = blocks.agg(
+        F.count(F.lit(1)).cast("double").alias("n_lines"),
+        F.countDistinct("line").cast("double").alias("n_uniq"),
+    )
+    return d.crossJoin(F.broadcast(lines)).select(
+        "n_docs",
+        "total_tokens",
+        "n_langs",
+        "n_sources",
+        "mean_chars",
+        F.round(1.0 - F.col("n_uniq") / F.col("n_lines"), 6).alias("dup_line_share"),
     )

@@ -23,228 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.admission import bounded_bench_grams
+from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
-
-
-def _words(text_col: str = "text") -> F.Column:
-    return F.split(F.col(text_col), " ")
-
-
-# The decontamination broadcast contract, pinned structurally (r10
-# verdict item 6): broadcasting the benchmark gram set is only safe
-# because an eval suite is a FIXED human-curated artifact — thousands
-# of docs, bounded forever — while the corpus grows without bound. The
-# test fixture stands the suite in as the doc_id%97 slice, which DOES
-# grow with the corpus, so the contract needs teeth: every gram
-# broadcast built through bounded_bench_grams carries an in-plan guard
-# that fails the query (not silently degrades it) if the suite side
-# ever exceeds this many documents. 1M suite docs ≈ well past any real
-# eval battery, still ~10⁴× smaller than a 100 TB corpus.
-MAX_BENCH_SUITE_DOCS = 1_000_000
-
-# Admission-funnel thresholds read by admission_core below — the one
-# funnel behind the one-shot funnel (q248–q254), the single and chained
-# refreshes (q255–q260, q267–q271) and the streamed drain
-# (streaming/refresh.py, q261–q266). The DuckDB oracles interpolate the
-# SAME constants into their SQL, so both engines move together.
-MIN_WORDS = 10  # docs below this word count are too_short
-MEAN_WORDLEN_LO = 3.0  # quality gate: mean word length band
-MEAN_WORDLEN_HI = 10.0
-MIN_DISTINCT_RATIO = 0.3  # quality gate: distinct-word ratio floor
-PACK_BUDGET = 512  # tokens per training sequence (q100 convention)
-
-# admission_core's first-fail stage ladders (stage_idx = position + 1).
-# Without a standing corpus there is no dup_vs_corpus stage, so the
-# one-shot funnel grades 6 stages and every refresh grades 7.
-FUNNEL_STAGES = [
-    "bench_holdout",
-    "exact_dup",
-    "too_short",
-    "low_quality",
-    "contaminated",
-    "kept",
-]
-ADMISSION_STAGES = [
-    "bench_holdout",
-    "dup_in_batch",
-    "dup_vs_corpus",
-    "too_short",
-    "low_quality",
-    "contaminated",
-    "admitted",
-]
-KEPT_IDX = len(FUNNEL_STAGES)  # stage_idx of one-shot survivors
-ADMIT_IDX = len(ADMISSION_STAGES)  # stage_idx of admitted arrivals
-
-
-def bounded_bench_grams(bench_docs: DataFrame, grams_col) -> DataFrame:
-    """Distinct benchmark grams (one ``gram`` column) with the
-    suite-size contract ENFORCED IN THE PLAN: a 1-row suite doc-count
-    aggregate (Keys:[] — ≤1 row at any scale, no job at
-    plan-construction time) is UNIONED into the gram relation as a
-    null-gram row whose projection asserts the bound, then filtered
-    back out. The assert therefore executes on every evaluation of the
-    gram relation INCLUDING when the gram set itself is empty (every
-    suite doc shorter than the gram width) — the crossJoin form this
-    replaces produced zero joined rows in that case and never
-    evaluated its guard. The guard expression PRODUCES the ``gram``
-    column the filter consumes, so Catalyst cannot prune it.
-    ``grams_col`` is the per-doc gram-array column or expression.
-
-    PRECONDITION: the gram arrays must not contain NULL elements — the
-    guard row is tagged as a null gram and filtered back out, so a
-    caller-produced NULL gram would be silently dropped with it. Every
-    in-repo caller builds grams via word_ngrams (space-joined slices of
-    a split() array: never null), which satisfies this by construction;
-    a caller with nullable grams must coalesce them first."""
-    g = F.col(grams_col) if isinstance(grams_col, str) else grams_col
-    grams = bench_docs.select(
-        F.explode(F.array_distinct(g)).alias("gram")
-    ).distinct()
-    guard_row = bench_docs.agg(F.count(F.lit(1)).alias("__n_bench")).select(
-        F.assert_true(
-            F.col("__n_bench") <= MAX_BENCH_SUITE_DOCS,
-            F.concat(
-                F.lit("benchmark suite exceeds MAX_BENCH_SUITE_DOCS: "),
-                F.col("__n_bench").cast("string"),
-                F.lit(
-                    " docs — the decontamination broadcast would be"
-                    " corpus-proportional (plans/curation.py contract)"
-                ),
-            ),
-        )
-        .cast("string")
-        .alias("gram")
-    )
-    return grams.unionByName(guard_row).filter(F.col("gram").isNotNull())
-
-
-def word_ngrams(words_col, n: int) -> F.Column:
-    """Word-level n-grams as space-joined strings; [] for short docs.
-
-    Expression-level (sequence + slice + array_join inside codegen):
-    no explode until the caller chooses to, so row-local dedup via
-    array_distinct stays cheap.
-    """
-    w = F.col(words_col) if isinstance(words_col, str) else words_col
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.array_join(F.slice(w, i, n), " "),
-    )
-    return F.when(F.size(w) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def doc_grams() -> F.Column:
-    """Distinct word-8-grams of the split-words column ``w`` (q93's rule)."""
-    return F.array_distinct(word_ngrams(F.col("w"), 8))
-
-
-def suite_grams(bench_docs: DataFrame) -> DataFrame:
-    """The benchmark-gram set of ``bench_docs`` (a ``text`` column):
-    every distinct word-8-gram, behind bounded_bench_grams' suite-size
-    guard. Every admission_core caller builds its grams here."""
-    return bounded_bench_grams(
-        bench_docs.select(F.split("text", " ").alias("w")), doc_grams()
-    )
-
-
-def admission_core(
-    arrival: DataFrame,
-    kept: DataFrame | None,
-    bench_grams: DataFrame,
-    seen: DataFrame | None = None,
-) -> DataFrame:
-    """The per-doc admission funnel, written once for the one-shot
-    funnel, the single and chained refreshes and the streamed drain.
-
-    ``arrival`` needs (doc_id, text); its other columns pass through in
-    order (lang/n_chars for the batch families, batch_id for the
-    stream). Bench membership is the doc_id % 97 convention and bench
-    docs are held out at stage 1. ``bench_grams`` is a suite_grams
-    relation. ``kept`` is the standing kept corpus (a ``text`` column,
-    unique texts): when given, a doc whose text it holds fails
-    ``dup_corpus`` and the ladder is ADMISSION_STAGES; when None there
-    is no such stage and the ladder is FUNNEL_STAGES. ``seen`` (a
-    ``text`` column) is the streamed drain's cross-batch state: a text
-    in it counts as an earlier copy, so the doc fails ``dup_batch``.
-
-    Returns the arrival's pass-through columns, then n_words, is_bench,
-    dup_batch, [dup_corpus,] too_short, low_quality, contaminated and
-    stage_idx (the first failing stage, or the survivor index). Shape:
-    ONE text-keyed keep-first window, one text-keyed equi-join per
-    state relation, one broadcast semi-join against the bounded
-    benchmark grams, all else row-local."""
-    keep = [c for c in arrival.columns if c != "text"]
-    base = arrival.select(
-        *keep,
-        "text",
-        F.split("text", " ").alias("w"),
-        (F.col("doc_id") % 97 == 0).alias("is_bench"),
-    )
-    nb = base.filter(~F.col("is_bench"))
-    hits = (
-        nb.select("doc_id", F.explode(doc_grams()).alias("gram"))
-        .join(F.broadcast(bench_grams), "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    n_words = F.size("w")
-    sum_len = F.aggregate(
-        F.transform("w", lambda x: F.length(x)),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    mean_wl = sum_len * F.lit(1.0) / n_words
-    distinct_ratio = F.size(F.array_distinct("w")) * F.lit(1.0) / n_words
-    verd = nb.withColumn(
-        "rn", F.row_number().over(W.partitionBy("text").orderBy("doc_id"))
-    ).join(hits, "doc_id", "left")
-    dup = F.col("rn") > 1
-    if seen is not None:
-        verd = verd.join(
-            seen.select("text").withColumn("__seen", F.lit(1)), "text", "left"
-        )
-        dup = dup | F.col("__seen").isNotNull()
-    flags = [("dup_batch", dup)]
-    if kept is not None:
-        # kept texts are unique (keep-first), so the probe cannot fan out
-        verd = verd.join(
-            kept.select("text").withColumn("__ck", F.lit(1)), "text", "left"
-        )
-        flags.append(("dup_corpus", F.col("__ck").isNotNull()))
-    flags += [
-        ("too_short", n_words < MIN_WORDS),
-        (
-            "low_quality",
-            ~(
-                mean_wl.between(MEAN_WORDLEN_LO, MEAN_WORDLEN_HI)
-                & (distinct_ratio >= MIN_DISTINCT_RATIO)
-            ),
-        ),
-        ("contaminated", F.col("__hit").isNotNull()),
-    ]
-    verd = verd.select(
-        *keep,
-        n_words.alias("n_words"),
-        F.lit(False).alias("is_bench"),
-        *[c.alias(name) for name, c in flags],
-    )
-    bench_rows = base.filter("is_bench").select(
-        *keep,
-        n_words.alias("n_words"),
-        F.lit(True).alias("is_bench"),
-        *[F.lit(False).alias(name) for name, _ in flags],
-    )
-    stage_idx = F.when(F.col("is_bench"), 1)
-    for i, (name, _) in enumerate(flags, start=2):
-        stage_idx = stage_idx.when(F.col(name), i)
-    return verd.unionByName(bench_rows).withColumn(
-        "stage_idx", stage_idx.otherwise(len(flags) + 2).cast("int")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -284,8 +66,10 @@ def q93_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     — bounded by the benchmark, not the corpus — and the corpus makes
     one pass: explode row-local-distinct grams, semi-join, re-group.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True).select(
-        "doc_id", "lang", word_ngrams(_words(), 8).alias("g")
+    docs = (
+        load_table(spark, sf_dir, "documents", spread=True)
+        .select("doc_id", "lang", tokens().alias("w"))
+        .select("doc_id", "lang", word_ngrams("w", 8).alias("g"))
     )
     bench_grams = bounded_bench_grams(
         docs.filter(F.col("doc_id") % 97 == 0), "g"
@@ -339,7 +123,7 @@ def q94_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold comparisons are bit-stable across engines.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = _words()
+    w = tokens()
     n_words = F.size(w)
     sum_len = F.aggregate(
         F.transform(w, lambda x: F.length(x)),
@@ -386,7 +170,7 @@ def q95_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression work, parallel in the docs' existing partitioning, no
     shuffle at all (the final orderBy is presentation-only).
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", _words().alias("w"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", tokens().alias("w"))
     starts = F.sequence(F.lit(1), F.greatest(F.size("w"), F.lit(1)), F.lit(56))
     return (
         docs.select("doc_id", "w", F.explode(starts).alias("chunk_start"))
@@ -486,7 +270,7 @@ def q97_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    w = _words()
+    w = tokens()
     n_words = F.size(w)
     sum_len = F.aggregate(
         F.transform(w, lambda x: F.length(x)),
@@ -598,8 +382,8 @@ def q99_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n-grams, array_distinct, one IEEE division for the threshold) —
     zero shuffle before the per-source rollup; the integer gram
     totals make the aggregate bit-stable across engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    g = word_ngrams(_words(), 3)
+    docs = load_table(spark, sf_dir, "documents").select("source", tokens().alias("w"))
+    g = word_ngrams("w", 3)
     n_grams = F.size(g)
     n_distinct = F.size(F.array_distinct(g))
     dup_frac = (n_grams - n_distinct) * F.lit(1.0) / n_grams
@@ -664,7 +448,7 @@ def q100_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.size(_words()).cast("long").alias("n_tokens")
+        "doc_id", F.size(tokens()).cast("long").alias("n_tokens")
     )
     packed = pack_sequences(docs, budget=512)
     return sequence_stats(packed, budget=512).orderBy("seq_id")
@@ -713,7 +497,7 @@ def q107_pack_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.operators.packing import pack_token_runs
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.size(_words()).cast("long").alias("n_tokens")
+        "doc_id", F.size(tokens()).cast("long").alias("n_tokens")
     )
     return pack_token_runs(docs, budget=512).orderBy("seq_id", "slot")
 
@@ -853,7 +637,7 @@ def q104_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window). The md5 of every rebuilt document must
     match the oracle's, proving order-exact reassembly."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("w")
+        "doc_id", tokens().alias("w")
     )
     starts = F.sequence(F.lit(1), F.greatest(F.size("w"), F.lit(1)), F.lit(8))
     blocks = docs.select("doc_id", "w", F.explode(starts).alias("i")).select(

@@ -1,4 +1,5 @@
-"""Dedup queries (X1/X2) over the `documents` / `embeddings` fixtures.
+"""Dedup queries (X1/X2) over the `documents` / `embeddings` fixtures:
+document-, line-, chunk- and URL-level dedup, and MinHash calibration.
 
 Oracle note: the LSH query's oracle is the EXACT pairwise Jaccard —
 valid because the band scheme's miss probability at the 0.6 threshold
@@ -11,16 +12,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.dedup import (
+    LINE_W,
     NUM_PERM,
     dup_clusters,
     dup_stats,
+    line_dedup_keep_first,
     minhash_near_dup_pairs,
     minhash_signatures,
     pair_jaccard,
+    segment_blocks,
     shingles,
     simhash_near_dup_pairs,
 )
+from tp_integ_data_pipeline_spark.operators.selection import hash_bucket
 from tp_integ_data_pipeline_spark.operators.similarity import cosine_pairs
+from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_dir
 
@@ -727,3 +733,521 @@ def q103_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= 0.6)
         .orderBy("a", "b")
     )
+
+
+# --------------------------------------------------------------------------
+# q180 — corpus-wide line dedup (keep-first) + document reassembly
+# --------------------------------------------------------------------------
+@query(
+    "q180_line_dedup_rebuild",
+    oracle=f"""
+    WITH b AS (
+        SELECT doc_id, (i - 1) // {LINE_W} AS pos,
+               array_to_string(w[i:i+{LINE_W - 1}], ' ') AS line
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+             UNNEST(range(1, greatest(len(w), 1) + 1, {LINE_W})) AS t(i)
+    ),
+    kept AS (
+        SELECT doc_id, pos, line FROM (
+            SELECT doc_id, pos, line,
+                   ROW_NUMBER() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
+            FROM b
+        ) WHERE rn = 1
+    ),
+    reb AS (
+        SELECT doc_id, COUNT(*) AS n_kept,
+               string_agg(line, ' ' ORDER BY pos) AS txt
+        FROM kept GROUP BY doc_id
+    ),
+    tot AS (SELECT doc_id, COUNT(*) AS n_lines FROM b GROUP BY doc_id)
+    SELECT d.doc_id, t.n_lines,
+           CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
+           md5(COALESCE(r.txt, '')) AS rebuilt_md5
+    FROM documents d JOIN tot t USING (doc_id) LEFT JOIN reb r USING (doc_id)
+    ORDER BY d.doc_id
+    """,
+)
+def q180_line_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Falcon/CCNet-granularity exact dedup: segment every document
+    into 6-word lines, keep only the corpus-FIRST occurrence of each
+    distinct line (lexicographically smallest (doc_id, pos) — unique
+    and deterministic), and reassemble the survivors in original
+    order. The complement of q104's boilerplate strip (which drops
+    EVERY copy of a frequent block): here exactly one copy of each
+    line survives, so no unique content is lost. All relational —
+    one segment explode, one struct-min groupBy on the line key, one
+    line-keyed join back, one order-preserving re-concat (array_sort
+    over (pos, line) structs; no data-sized window). The md5 of every
+    rebuilt document must match the oracle's, proving both the winner
+    choice and order-exact reassembly."""
+    docs = load_table(spark, sf_dir, "documents")
+    blocks = segment_blocks(docs, LINE_W)
+    kept = line_dedup_keep_first(blocks)
+    reb = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "line"))),
+                lambda s: s["line"],
+            ),
+            " ",
+        ).alias("txt"),
+    )
+    tot = blocks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_lines"))
+    return (
+        tot.join(reb, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_lines",
+            F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
+            F.md5(F.coalesce(F.col("txt"), F.lit(""))).alias("rebuilt_md5"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# q184 — content-defined chunking (rolling-boundary CDC)
+# --------------------------------------------------------------------------
+# Boundary rule shared by both engines: word position i (1-based)
+# ENDS a chunk when i >= 4 and the 4-gram ending at i hashes to
+# 0 mod 17 (first-8-hex-md5 — the engine-portable hash_bucket rule).
+# Expected chunk length ~17 words; boundaries derive from CONTENT, so
+# identical runs in different documents chunk identically — the
+# property that makes chunk-granular dedup/versioning work.
+@query(
+    "q184_cdc_chunks",
+    oracle="""
+    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    g AS (
+        SELECT doc_id, CAST(i AS INT) AS p,
+               CASE WHEN i >= 4 AND
+                    (CAST(('0x' || substr(md5(array_to_string(w[i-3:i], ' ')), 1, 8)) AS BIGINT) % 17) = 0
+                    THEN 1 ELSE 0 END AS bnd,
+               w[i] AS word
+        FROM t, UNNEST(range(1, len(w) + 1)) AS u(i)
+    ),
+    c AS (
+        SELECT doc_id, p, word,
+               SUM(bnd) OVER (PARTITION BY doc_id ORDER BY p
+                   ROWS UNBOUNDED PRECEDING) - bnd AS chunk
+        FROM g
+    ),
+    ch AS (
+        SELECT doc_id, chunk, COUNT(*) AS n_words,
+               string_agg(word, ' ' ORDER BY p) AS ctext
+        FROM c GROUP BY 1, 2
+    ),
+    df AS (SELECT ctext, COUNT(DISTINCT doc_id) AS df FROM ch GROUP BY 1)
+    SELECT ch.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_chunks,
+           ROUND(AVG(ch.n_words), 6) AS avg_chunk_words,
+           CAST(SUM(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_chunks,
+           CAST(SUM(CAST(('0x' || substr(md5(ch.ctext), 1, 8)) AS BIGINT)) AS BIGINT) AS chunk_checksum
+    FROM ch JOIN df USING (ctext)
+    GROUP BY ch.doc_id ORDER BY ch.doc_id
+    """,
+)
+def q184_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-defined chunking: split each document at positions
+    where the rolling 4-gram hash hits 0 mod 17 (~17-word expected
+    chunks), then report per-doc chunk count, mean width, how many
+    chunks also appear verbatim in OTHER documents (the CDC dedup
+    signal — boundaries follow content, so shared runs chunk
+    identically regardless of their offset in the doc), and a
+    checksum over chunk-content hashes pinning the exact boundary
+    set. Boundary flags are computed ROW-LOCALLY inside the token
+    array (one transform, no O(len^2)); the only windows are per-doc
+    prefix sums (keyed, bounded by doc length); chunk df is one
+    map-side-combinable groupBy on the chunk text. At 100 TB the
+    chunk relation replaces the doc relation at ~17x the row count
+    but bounded row width — the unit the incremental near-dup index
+    (q103) and RTBF erasure operate on in a chunk-store design."""
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    toked = docs.select("doc_id", tokens().alias("w"))
+    # positions 1-3 end no 4-gram; position i >= 4 ends the 4-gram i - 3
+    flags = F.concat(
+        F.array_repeat(F.lit(0), F.least(F.size("w"), F.lit(3))),
+        F.transform(word_ngrams("w", 4), lambda g: (hash_bucket(g, 17) == 0).cast("int")),
+    )
+    from pyspark.sql.window import Window as W
+
+    pos = (
+        toked.withColumn("f", flags)
+        .select("doc_id", F.posexplode(F.arrays_zip("w", "f")).alias("p0", "z"))
+        .select(
+            "doc_id",
+            (F.col("p0") + 1).alias("p"),
+            F.col("z.w").alias("word"),
+            F.col("z.f").alias("bnd"),
+        )
+    )
+    w_cum = W.partitionBy("doc_id").orderBy("p").rowsBetween(W.unboundedPreceding, 0)
+    chunked = pos.withColumn("chunk", F.sum("bnd").over(w_cum) - F.col("bnd"))
+    ch = chunked.groupBy("doc_id", "chunk").agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("p", "word"))),
+                lambda s: s["word"],
+            ),
+            " ",
+        ).alias("ctext"),
+    )
+    df_rel = ch.groupBy("ctext").agg(F.countDistinct("doc_id").alias("df"))
+    chash = F.conv(F.substring(F.md5("ctext"), 1, 8), 16, 10).cast("long")
+    return (
+        ch.join(df_rel, "ctext")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_chunks"),
+            F.round(F.avg("n_words"), 6).alias("avg_chunk_words"),
+            F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
+            .cast("long")
+            .alias("n_shared_chunks"),
+            F.sum(chash).cast("long").alias("chunk_checksum"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# q186 — canonical-URL normalization + variant-collapse dedup
+# --------------------------------------------------------------------------
+# Seven deterministic messy forms of each logical page (the fixture
+# has no URL column; the CANONICALIZATION chain is the real machinery
+# and both engines replay the same decoration): clean, uppercased
+# scheme+host, explicit default port, fragment, utm-only query,
+# trailing slash — all of which must collapse to one canonical — and
+# a mixed query whose non-tracking param must SURVIVE (distinct
+# canonical).
+_MESSY_URL_SPARK = """
+CASE CAST(doc_id % 7 AS INT)
+  WHEN 0 THEN 'https://www.example.org/item/' || CAST(doc_id DIV 7 AS STRING)
+  WHEN 1 THEN 'HTTPS://WWW.EXAMPLE.ORG/item/' || CAST(doc_id DIV 7 AS STRING)
+  WHEN 2 THEN 'https://www.example.org:443/item/' || CAST(doc_id DIV 7 AS STRING)
+  WHEN 3 THEN 'https://www.example.org/item/' || CAST(doc_id DIV 7 AS STRING) || '#frag'
+  WHEN 4 THEN 'https://www.example.org/item/' || CAST(doc_id DIV 7 AS STRING) || '?utm_source=feed&utm_campaign=x'
+  WHEN 5 THEN 'https://www.example.org/item/' || CAST(doc_id DIV 7 AS STRING) || '/'
+  ELSE 'https://www.example.org/item/' || CAST(doc_id DIV 7 AS STRING) || '?keep=1&utm_medium=z'
+END
+"""
+_MESSY_URL_DUCK = _MESSY_URL_SPARK.replace("AS STRING", "AS VARCHAR").replace(
+    "doc_id DIV 7", "doc_id // 7"
+)
+
+
+@query(
+    "q186_url_canonical_dedup",
+    oracle=f"""
+    WITH raw AS (SELECT doc_id, {_MESSY_URL_DUCK} AS url FROM documents),
+    canon AS (
+        SELECT doc_id, url,
+          regexp_replace(
+            regexp_replace(
+              regexp_replace(
+                regexp_replace(
+                  regexp_replace(
+                    regexp_replace(
+                      regexp_replace(
+                        regexp_replace(
+                          regexp_replace(
+                            regexp_replace(
+                              CASE WHEN regexp_extract(regexp_replace(url, '#.*$', ''), '^([^:/?#]+://[^/?#]*)', 1) = ''
+                                   THEN regexp_replace(url, '#.*$', '')
+                                   ELSE lower(regexp_extract(regexp_replace(url, '#.*$', ''), '^([^:/?#]+://[^/?#]*)', 1))
+                                        || regexp_extract(regexp_replace(url, '#.*$', ''), '^[^:/?#]+://[^/?#]*(.*)$', 1)
+                              END,
+                              '^(http://[^/:?#]+):80($|[/?#])', '\\1\\2'),
+                            '^(https://[^/:?#]+):443($|[/?#])', '\\1\\2'),
+                          '([?&])utm_[^&]*&', '\\1'),
+                        '([?&])utm_[^&]*&', '\\1'),
+                      '([?&])utm_[^&]*&', '\\1'),
+                    '[?&]utm_[^&]*$', ''),
+                  '\\?&', '?'),
+                '[?&]$', ''),
+              '([^:/])/$', '\\1'),
+            '^$', '') AS canonical
+        FROM raw
+    )
+    SELECT canonical,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(DISTINCT url) AS BIGINT) AS n_raw_forms,
+           CAST(MIN(doc_id) AS BIGINT) AS first_doc
+    FROM canon GROUP BY canonical ORDER BY canonical
+    """,
+)
+def q186_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recrawl/variant dedup by canonical URL: normalize each fetch's
+    URL (operators/selection.canonicalize_url — fragment strip,
+    scheme+authority lowercase, default-port drop, utm_* removal with
+    separator mending, trailing-slash strip; all row-local regexps
+    both engines replay) and collapse fetches of the same logical
+    page. Six planted messy forms per page must fold into ONE
+    canonical; the mixed-query form must KEEP its non-tracking param
+    as a distinct canonical. first_doc pins the exact membership (a
+    canonicalization bug moves a doc across groups and flips it)."""
+    from tp_integ_data_pipeline_spark.operators.selection import canonicalize_url
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.expr(_MESSY_URL_SPARK).alias("url")
+    )
+    canon = docs.withColumn("canonical", canonicalize_url("url"))
+    return (
+        canon.groupBy("canonical")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.countDistinct("url").cast("long").alias("n_raw_forms"),
+            F.min("doc_id").cast("long").alias("first_doc"),
+        )
+        .orderBy("canonical")
+    )
+
+
+# --------------------------------------------------------------------------
+# q197 — collapse consecutive duplicate lines (row-local cleaner)
+# --------------------------------------------------------------------------
+@query(
+    "q197_consecutive_line_collapse",
+    oracle=f"""
+    WITH b AS (
+        SELECT doc_id, (i - 1) // {LINE_W} AS pos,
+               array_to_string(w[i:i + {LINE_W - 1}], ' ') AS line
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+             UNNEST(range(1, greatest(len(w), 1) + 1, {LINE_W})) AS t(i)
+    ),
+    k AS (
+        SELECT doc_id, pos, line,
+               CASE WHEN line = LAG(line) OVER (PARTITION BY doc_id ORDER BY pos)
+                    THEN 0 ELSE 1 END AS keep
+        FROM b
+    )
+    SELECT doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(keep) AS BIGINT) AS n_kept,
+           md5(string_agg(CASE WHEN keep = 1 THEN line END, ' ' ORDER BY pos))
+               AS rebuilt_md5
+    FROM k GROUP BY doc_id ORDER BY doc_id
+    """,
+)
+def q197_consecutive_line_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 'blank-line/stutter' cleaner every HTML-extraction pipeline
+    runs: collapse CONSECUTIVE duplicate lines inside each document
+    (keep the first of each run), leaving non-adjacent repeats alone —
+    the order-sensitive complement of q180's corpus-wide keep-first.
+    Lines are the q180 6-word segments; output pins the rebuilt text
+    by md5.
+
+    Scale shape: the whole operator is ROW-LOCAL — segment, compare
+    each line to its predecessor, and rebuild inside ONE projection
+    over the token array (no explode, no window, no shuffle beyond
+    the output sort). The oracle replays it relationally with
+    LAG-over-position; the engine never pays that window."""
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    lines = F.expr(
+        f"""transform(
+              sequence(1, (size(split(text, ' ')) + {LINE_W - 1}) div {LINE_W}),
+              i -> array_join(slice(split(text, ' '), (i - 1) * {LINE_W} + 1,
+                              {LINE_W}), ' '))"""
+    )
+    kept = F.expr(
+        "filter(__lines, (x, i) -> i = 0 OR x != element_at(__lines, i))"
+    )
+    return (
+        docs.select("doc_id", lines.alias("__lines"))
+        .select(
+            "doc_id",
+            F.size("__lines").cast("long").alias("n_lines"),
+            kept.alias("__kept"),
+        )
+        .select(
+            "doc_id",
+            "n_lines",
+            F.size("__kept").cast("long").alias("n_kept"),
+            F.md5(F.array_join("__kept", " ")).alias("rebuilt_md5"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# q215 — duplicate-line frequency spectrum + Hill tail exponent
+# --------------------------------------------------------------------------
+@query(
+    "q215_dup_spectrum",
+    oracle=f"""
+    WITH b AS (
+        SELECT array_to_string(w[i:i+{LINE_W - 1}], ' ') AS line
+        FROM (SELECT string_split(text, ' ') AS w FROM documents),
+             UNNEST(range(1, greatest(len(w), 1) + 1, {LINE_W})) AS t(i)
+    ),
+    lf AS (SELECT line, COUNT(*) AS cnt FROM b GROUP BY 1),
+    spec AS (
+        SELECT CAST(cnt AS BIGINT) AS freq,
+               CAST(COUNT(*) AS BIGINT) AS n_lines
+        FROM lf GROUP BY 1
+    ),
+    hill AS (
+        SELECT ROUND(
+                   1.0 + SUM(CASE WHEN freq >= 2 THEN n_lines ELSE 0 END)
+                       / NULLIF(SUM(CASE WHEN freq >= 2
+                                         THEN n_lines * ln(freq / 2.0) END), 0.0),
+                   6
+               ) AS hill_alpha
+        FROM spec
+    )
+    SELECT s.freq, s.n_lines, h.hill_alpha
+    FROM spec s, hill h
+    ORDER BY s.freq
+    """,
+)
+def q215_dup_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate-line frequency spectrum (how many distinct 6-word
+    lines occur exactly k times corpus-wide) plus the Hill maximum-
+    likelihood tail exponent at xmin=2 — the corpus-health analytic
+    behind dedup planning: a heavy tail (small alpha) means boilerplate
+    dominates and line-level dedup (q180) pays; alpha is NULL when no
+    line repeats (the estimator is undefined on an empty tail).
+
+    Scale shape: the line relation is segment_blocks' row-local
+    explode of the per-document word array (the SAME segmentation
+    q180 dedups, one scan); groupBy(line) is the single data-sized
+    shuffle; the spectrum rollup is ≤ max-frequency rows and the Hill
+    scalar is a 1-row broadcast attach over it (BNLJ_ALLOWED
+    scalar_aggs)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lines = segment_blocks(docs, LINE_W).select("line")
+    lf = lines.groupBy("line").agg(F.count(F.lit(1)).alias("cnt"))
+    spec = (
+        lf.groupBy(F.col("cnt").cast("long").alias("freq"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_lines"))
+        .localCheckpoint(eager=False)  # feeds the Hill scalar AND the output
+    )
+    hill = spec.agg(
+        F.round(
+            1.0
+            + F.sum(F.when(F.col("freq") >= 2, F.col("n_lines")).otherwise(0))
+            / F.nullif(
+                F.sum(
+                    F.when(
+                        F.col("freq") >= 2,
+                        F.col("n_lines") * F.log(F.col("freq") / 2.0),
+                    )
+                ),
+                F.lit(0.0),
+            ),
+            6,
+        ).alias("hill_alpha")
+    )
+    return (
+        spec.crossJoin(F.broadcast(hill))
+        .select("freq", "n_lines", "hill_alpha")
+        .orderBy("freq")
+    )
+
+
+# --------------------------------------------------------------------------
+# q228 — MinHash estimator calibration against exact Jaccard
+# --------------------------------------------------------------------------
+_MHC_H = 16
+_MHC_T = 0.5
+_MHC_DOCS = 300
+
+
+def _mhc_oracle() -> str:
+    from tp_integ_data_pipeline_spark.operators.dedup import shingle_sql
+
+    return f"""
+    WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < {_MHC_DOCS}),
+    {shingle_sql("base", "doc_id", "text", 3)},
+    n AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY 1),
+    i AS (
+        SELECT a.id AS a, b.id AS b, COUNT(*) AS inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND a.id < b.id
+        GROUP BY 1, 2
+    ),
+    pairs AS (
+        SELECT a, b,
+               inter * 1.0 / (na.n + nb.n - inter) AS j
+        FROM i JOIN n na ON na.id = i.a JOIN n nb ON nb.id = i.b
+        WHERE inter * 1.0 / (na.n + nb.n - inter) >= {_MHC_T}
+    ),
+    mh AS (
+        SELECT id, t.h,
+               MIN(CAST(('0x' || substr(md5(CAST(t.h AS VARCHAR) || ':' || sh), 1, 8))
+                        AS BIGINT)) AS m
+        FROM sh, UNNEST(range({_MHC_H})) AS t(h)
+        GROUP BY 1, 2
+    ),
+    est AS (
+        SELECT p.a, p.b, p.j,
+               AVG(CASE WHEN x.m = y.m THEN 1.0 ELSE 0.0 END) AS e
+        FROM pairs p
+        JOIN mh x ON x.id = p.a
+        JOIN mh y ON y.id = p.b AND y.h = x.h
+        GROUP BY 1, 2, 3
+    )
+    SELECT a, b, ROUND(j, 6) AS jaccard, ROUND(e, 6) AS minhash_est,
+           ROUND(ABS(e - j), 6) AS abs_err
+    FROM est ORDER BY a, b
+    """
+
+
+@query("q228_minhash_calibration", oracle=_mhc_oracle())
+def q228_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-accuracy calibration: for every high-similarity pair
+    (exact 3-shingle Jaccard ≥ 0.5 over the first 300 docs), the
+    H=16 MinHash estimate — match fraction of per-function minima
+    under the portable first-8-hex-md5 hash — next to the exact value
+    and |error|. This PROVES the MinHash machinery's estimator
+    quality inside the hash-checked gate itself (the q42 LSH path's
+    recall tests sample; this measures the estimator bias directly,
+    and DuckDB replays the identical 16 hash functions).
+
+    Scale shape: shingles explode row-locally ONCE (checkpointed for
+    the three consumers); signatures are a (id, h)-keyed rollup of
+    the ×16 explode; exact pairs use the inverted-index join with the
+    threshold prune; the estimate join is pair×H-bounded."""
+    from tp_integ_data_pipeline_spark.operators.dedup import pair_jaccard, shingles
+
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") < _MHC_DOCS
+    )
+    sh = shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=False)
+    pairs = (
+        pair_jaccard(sh)
+        .where(F.col("jaccard") >= _MHC_T)
+        .localCheckpoint(eager=False)
+    )
+    mh = (
+        sh.select(
+            "id", F.explode(F.sequence(F.lit(0), F.lit(_MHC_H - 1))).alias("h"), "sh"
+        )
+        .groupBy("id", "h")
+        .agg(
+            F.min(
+                F.expr(
+                    "CAST(conv(substr(md5(concat(CAST(h AS STRING), ':', sh)), 1, 8),"
+                    " 16, 10) AS BIGINT)"
+                )
+            ).alias("m")
+        )
+    )
+    est = (
+        pairs.join(mh.select(F.col("id").alias("a"), "h", F.col("m").alias("ma")), "a")
+        .join(
+            mh.select(F.col("id").alias("b"), "h", F.col("m").alias("mb")),
+            ["b", "h"],
+        )
+        .groupBy("a", "b", "jaccard")
+        .agg(
+            F.avg(F.when(F.col("ma") == F.col("mb"), 1.0).otherwise(0.0)).alias("e")
+        )
+    )
+    return est.select(
+        "a",
+        "b",
+        F.round("jaccard", 6).alias("jaccard"),
+        F.round("e", 6).alias("minhash_est"),
+        F.round(F.abs(F.col("e") - F.col("jaccard")), 6).alias("abs_err"),
+    ).orderBy("a", "b")

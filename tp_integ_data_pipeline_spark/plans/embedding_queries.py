@@ -1,5 +1,6 @@
-"""Embedding second-moment queries: distributed covariance and PCA
-whitening (operators/embed_stats.py). No reference-repo counterpart —
+"""Embedding queries: distributed covariance and PCA whitening
+(operators/embed_stats.py), quantization, and embedding-cosine near-dup
+clusters. No reference-repo counterpart —
 SURVEY.md §2.10 extension surface for the embedding side of a training
 pipeline (decorrelation before quantization/ANN, drift detection,
 SemDeDup preprocessing)."""
@@ -9,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.dedup import dup_clusters
 from tp_integ_data_pipeline_spark.operators.embed_stats import (
     covariance_matrix,
     fit_pca,
@@ -18,6 +20,7 @@ from tp_integ_data_pipeline_spark.operators.quantize import (
     quantize_codes,
     reconstruction_report,
 )
+from tp_integ_data_pipeline_spark.operators.similarity import cosine_pairs
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -218,3 +221,52 @@ def q137_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     ex = quantize_codes(emb, "embedding", "vec_id", levels=255)
     return reconstruction_report(ex).orderBy("dim")
+
+
+# --------------------------------------------------------------------------
+# q159 — embedding-cosine near-dup clusters (the embedding-side analogue
+# of q87's MinHash clusters; completes the dedup-family matrix)
+# --------------------------------------------------------------------------
+_COS_TAU = 0.45
+
+
+@query(
+    "q159_embedding_dup_clusters",
+    oracle=f"""
+    WITH RECURSIVE pairs AS (
+        SELECT a.vec_id AS a, b.vec_id AS b
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
+              (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
+               sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+              >= {_COS_TAU}
+    ),
+    sym AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
+    reach(src, dst) AS (
+        SELECT a AS src, a AS dst FROM sym
+        UNION
+        SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a
+    ),
+    membership AS (SELECT src AS id, MIN(dst) AS cluster FROM reach GROUP BY src)
+    SELECT cluster, COUNT(*) AS n_members, MIN(id) AS canonical
+    FROM membership GROUP BY cluster
+    ORDER BY cluster
+    """,
+)
+def q159_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup CLUSTERS: threshold the blocked-numpy
+    cosine pairs (q44's operator) at {_COS_TAU}, run the large-star/
+    small-star connected-components loop (q87's operator), and report
+    per-cluster size + min-id canonical. The engine side composes the
+    two scale paths (blocked matmul, O(log n) CC rounds); the oracle
+    recomputes the identical clusters with a quadratic join + recursive
+    CTE — fine at check scale, the point at 100 TB is precisely that
+    the engine does NOT do that."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = cosine_pairs(emb, threshold=_COS_TAU).select("a", "b")
+    membership = dup_clusters(pairs)
+    return (
+        membership.groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n_members"), F.min("id").alias("canonical"))
+        .orderBy("cluster")
+    )

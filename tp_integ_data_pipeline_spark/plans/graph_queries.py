@@ -1,5 +1,6 @@
-"""Link-analysis queries (operators/graph.py) over a supplier↔customer
-graph derived from lineitem ⋈ orders. No reference-repo counterpart —
+"""Link-analysis queries (operators/graph.py): PageRank over a
+supplier↔customer graph derived from lineitem ⋈ orders, and triangle
+counting over the parts-bought-together graph. No reference-repo counterpart —
 SURVEY.md §2.10 extension surface: the rank-side companion to the
 connected-components dedup loop (web-graph authority signals feeding
 corpus keep/drop decisions).
@@ -14,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.operators.graph import pagerank
+from tp_integ_data_pipeline_spark.operators.graph import pagerank, triangle_count
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -87,3 +88,44 @@ def q141_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.round("rank", 6).alias("rank"))
         .orderBy("node")
     )
+
+
+# --------------------------------------------------------------------------
+# q163 — triangle counting on the part co-occurrence graph
+# --------------------------------------------------------------------------
+@query(
+    "q163_triangle_count",
+    oracle="""
+    WITH e AS (
+        SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
+        FROM lineitem a JOIN lineitem b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+    FROM e e1 JOIN e e2 ON e1.p2 = e2.p1 JOIN e e3
+      ON e3.p1 = e1.p1 AND e3.p2 = e2.p2
+    """,
+)
+def q163_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Triangles in the parts-bought-together graph. Edge construction
+    is ROW-LOCAL (per-order sorted part set exploded into pairs — lines
+    per order are bounded, never a fact self-join), and the count runs
+    the degree-oriented algorithm (operators/graph.triangle_count):
+    every node's out-adjacency is O(sqrt(m)) after orientation, so the
+    wedge join survives celebrity parts at 100 TB. The oracle is the
+    naive three-way self-join — fine at check scale, the contrast is
+    the point."""
+    li = load_table(spark, sf_dir, "lineitem")
+    per_order = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    )
+    pair_expr = F.expr(
+        "flatten(transform(ps, (x, i) -> "
+        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS src, y AS dst))))"
+    )
+    edges = (
+        per_order.select(F.explode(pair_expr).alias("e"))
+        .select("e.src", "e.dst")
+        .distinct()
+    )
+    return triangle_count(edges)

@@ -1,4 +1,4 @@
-"""MERGE end-state queries (SURVEY.md §2.8 M1/M2).
+"""MERGE end-state queries (SURVEY.md §2.8 M1/M2) and CDC-log compaction.
 
 The DuckDB oracle expresses the merge RESULT as a SELECT (set algebra
 over target/stage), which is exactly the plain-Spark rewrite's
@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tp_integ_data_pipeline_spark.operators.change_feed import compact_cdc
 from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_dir
@@ -462,3 +463,46 @@ def q151_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.read().select("o_orderkey", "o_custkey", "o_totalprice").orderBy(
         "o_orderkey"
     )
+
+
+# --------------------------------------------------------------------------
+# q155 — CDC changelog compaction to the latest-state snapshot
+# --------------------------------------------------------------------------
+@query(
+    "q155_cdc_compaction",
+    oracle="""
+    WITH feed AS (
+        SELECT user_id % 500 AS k, ts, event_id AS seq,
+               CASE WHEN event_type = 'purchase' THEN 'delete' ELSE 'upsert' END AS op,
+               value
+        FROM events
+    ),
+    ranked AS (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY ts DESC, seq DESC) AS rn
+        FROM feed
+    )
+    SELECT k, ROUND(value, 6) AS value, ts, seq
+    FROM ranked WHERE rn = 1 AND op <> 'delete'
+    ORDER BY k
+    """,
+)
+def q155_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Collapse a CDC event log (built from the events table: purchases
+    act as deletes) to its latest-state snapshot. The engine compacts
+    via ONE max_by aggregate per key — no window, no full-log sort,
+    map-side combinable — while the oracle ranks with a window: the
+    hash-match proves the aggregate picks the identical last row under
+    the (ts, seq) total order, including dropping delete-terminated
+    keys."""
+    ev = load_table(spark, sf_dir, "events")
+    feed = ev.select(
+        (F.col("user_id") % 500).alias("k"),
+        "ts",
+        F.col("event_id").alias("seq"),
+        F.when(F.col("event_type") == "purchase", F.lit("delete"))
+        .otherwise(F.lit("upsert"))
+        .alias("op"),
+        "value",
+    )
+    snap = compact_cdc(feed, ["k"], "ts", "seq", op_col="op")
+    return snap.select("k", F.round("value", 6).alias("value"), "ts", "seq").orderBy("k")

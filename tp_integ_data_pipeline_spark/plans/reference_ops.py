@@ -23,6 +23,7 @@ from tp_integ_data_pipeline_spark.functions.reference import (
     wind_cardinal_sql,
 )
 from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
+from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.relational import _dsum, dsum_sql
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
@@ -172,7 +173,7 @@ def q32_none_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q33_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_toks"),

@@ -1,6 +1,6 @@
 """Corpus-refresh family (q248–q271): the reference's operating mode —
 a periodic re-run that admits only unseen rows (main.py:80–114) — as
-lazy plans over ONE per-doc admission funnel, ``curation.admission_core``.
+lazy plans over ONE per-doc admission funnel, ``operators/admission.admission_core``.
 
 Four query groups share that funnel:
 
@@ -27,7 +27,7 @@ Four query groups share that funnel:
 Scale shape at 100 TB: each admission is one text-keyed window, one
 text-keyed equi-join against the standing corpus (the irreducible
 dedup shuffle), and one broadcast semi-join against the benchmark
-grams, whose suite size is guarded in-plan (curation.suite_grams).
+grams, whose suite size is guarded in-plan (admission.suite_grams).
 Reports are rollups to ≤ stages × groups rows with at most 1-row
 scalar attaches (BNLJ_ALLOWED); packing is the distributed prefix sum
 plus ONE carried integer folded in as a lazy 1-row broadcast. Each
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.plans.curation import (
+from tp_integ_data_pipeline_spark.operators.admission import (
     ADMISSION_STAGES,
     ADMIT_IDX,
     FUNNEL_STAGES,
@@ -60,9 +60,11 @@ from tp_integ_data_pipeline_spark.plans.curation import (
     doc_grams,
     suite_grams,
 )
+from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
+from tp_integ_data_pipeline_spark.streaming.refresh import stream_refresh_admission
 
 # the documents columns every batch funnel reads
 _DOC_COLS = ("doc_id", "source", "lang", "n_chars", "text")
@@ -405,10 +407,6 @@ def _admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streamed refresh relation: ONE micro-batch drain per
     (session, corpus), read by q261–q266."""
-    # imported here: streaming.refresh imports this package's curation
-    from tp_integ_data_pipeline_spark.streaming.refresh import (
-        stream_refresh_admission,
-    )
 
     def build() -> DataFrame:
         # no corpus-scan spread: the drain widens each staged batch
@@ -743,10 +741,10 @@ def _retro_contam_report(kept, new_bench_w) -> DataFrame:
     suite's 8-grams, and the rate. ``new_bench_w`` needs only a ``w``
     split-words column — shared by q260, streamed q266 and chained
     q271. The new-suite grams are broadcast, so they carry the
-    suite-size guard (``curation.bounded_bench_grams``)."""
+    suite-size guard (``admission.bounded_bench_grams``)."""
     grams = doc_grams()
     new_grams = bounded_bench_grams(new_bench_w, grams)
-    kw = kept.select("doc_id", "source", F.split("text", " ").alias("w"))
+    kw = kept.select("doc_id", "source", tokens().alias("w"))
     hits = (
         kw.select("doc_id", F.explode(grams).alias("gram"))
         .join(F.broadcast(new_grams), "gram", "left_semi")
@@ -1531,7 +1529,7 @@ def q260_refresh_retro_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_bench = (
         docs.crossJoin(F.broadcast(mid))
         .filter((F.col("doc_id") >= F.col("m")) & (F.col("doc_id") % 97 == 0))
-        .select(F.split("text", " ").alias("w"))
+        .select(tokens().alias("w"))
     )
     return _retro_contam_report(kept, new_bench)
 
@@ -1700,7 +1698,7 @@ def q266_stream_retro_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
         sr.filter(F.col("stage_idx") == 1)
         .select("doc_id")
         .join(docs, "doc_id")
-        .select(F.split("text", " ").alias("w"))
+        .select(tokens().alias("w"))
     )
     return _retro_contam_report(kept, new_bench)
 
@@ -1894,6 +1892,6 @@ def q271_chain_retro_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             (F.col("doc_id") >= F.col("m2")) & (F.col("doc_id") % 97 == 0)
         )
-        .select(F.split("text", " ").alias("w"))
+        .select(tokens().alias("w"))
     )
     return _retro_contam_report(_chain_kept1(spark, sf_dir), new_bench)

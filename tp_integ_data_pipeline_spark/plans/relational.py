@@ -4,7 +4,8 @@ The reference itself only exercises scans, projections, one broadcast
 left join and anti-join dedup; the engine ships the full relational
 surface (agg, window, set-ops, rollup/pivot, sort/limit) as thin
 Catalyst-native plans, each differentially tested against a DuckDB
-oracle.
+oracle, plus the skew verbs (salted hot-key join, key-skew profile) and
+market-basket pair lift.
 
 Determinism contract with the oracle: every floating-point aggregate
 is summed as DECIMAL (exact, order-independent) and cast back to
@@ -20,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
+from tp_integ_data_pipeline_spark.operators.skew import salted_join
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -575,4 +577,220 @@ def q20_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), _dsum(F.col("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "total_value")
         .orderBy("win_start", "event_type")
+    )
+
+_N_SALTS = 8
+
+
+# --------------------------------------------------------------------------
+# q154 — skew-mitigated (salted) join == plain join, plus the skew report
+# --------------------------------------------------------------------------
+@query(
+    "q154_salted_join",
+    oracle="""
+    WITH fact AS (
+        SELECT CASE WHEN l_orderkey % 10 < 4 THEN 1 ELSE l_suppkey END AS sk,
+               l_extendedprice
+        FROM lineitem
+    ),
+    dim AS (SELECT s_suppkey AS sk, s_nationkey FROM supplier)
+    SELECT d.s_nationkey,
+           COUNT(*) AS n_rows,
+           CAST(SUM(CAST(f.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+    FROM fact f JOIN dim d USING (sk)
+    GROUP BY d.s_nationkey
+    ORDER BY d.s_nationkey
+    """,
+)
+def q154_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hot-key join under DELIBERATE skew: 40% of the fact lands on one
+    key (sk=1), the regime where a plain shuffle join stalls one
+    reducer at 100 TB. The engine runs the SALTED join — fact key
+    extended with a deterministic xxhash64 salt, dim exploded once per
+    salt, join on (key, salt) — while the oracle runs the plain join:
+    the hash-match proves salting preserves row multiplicity exactly.
+    The dim's replication factor (n_salts=8) is the bounded cost that
+    buys an 8-way spread of the hot key."""
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
+    fact = li.select(
+        F.when(F.col("l_orderkey") % 10 < 4, F.lit(1))
+        .otherwise(F.col("l_suppkey"))
+        .alias("sk"),
+        "l_extendedprice",
+    )
+    dim = sup.select(F.col("s_suppkey").alias("sk"), "s_nationkey")
+    joined = salted_join(fact, dim, ["sk"], n_salts=_N_SALTS)
+    return (
+        joined.groupBy("s_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("revenue"),
+        )
+        .orderBy("s_nationkey")
+    )
+
+
+# --------------------------------------------------------------------------
+# q194 — key-skew profiler (the salted-join/salted-agg prescription)
+# --------------------------------------------------------------------------
+@query(
+    "q194_key_skew_profile",
+    oracle="""
+    WITH pk AS (
+        SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM events GROUP BY 1, 2
+    ),
+    prof AS (
+        SELECT event_type,
+               CAST(COUNT(*) AS BIGINT) AS n_keys,
+               CAST(SUM(cnt) AS BIGINT) AS n_rows,
+               CAST(MAX(cnt) AS BIGINT) AS max_cnt,
+               CAST(SUM(cnt * cnt) AS BIGINT) AS s2
+        FROM pk GROUP BY 1
+    )
+    SELECT event_type, n_keys, n_rows, max_cnt,
+           ROUND(CAST(max_cnt AS DOUBLE) / n_rows, 6) AS top1_share,
+           ROUND(CAST(max_cnt * n_keys AS DOUBLE) / n_rows, 6) AS skew,
+           ROUND(sqrt(CAST(n_keys * s2 - n_rows * n_rows AS DOUBLE)) / n_rows, 6)
+               AS cv,
+           (max_cnt * n_keys + n_rows - 1) // n_rows AS salt_factor
+    FROM prof ORDER BY event_type
+    """,
+)
+def q194_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shuffle-key skew diagnostic: for each event_type, profile the
+    user_id key distribution a join/agg on (event_type, user_id) would
+    shuffle on — key count, max key frequency, hottest-key share,
+    skew = max/mean, coefficient of variation, and the recommended
+    salting fan-out ceil(max/mean) (the factor q154's salted join and
+    q29's salted agg take as input). CV uses the order-independent
+    integer identity sqrt(k·Σc² − (Σc)²)/Σc — every value inside
+    sqrt is an exact BIGINT at test scale (a 100 TB deployment widens
+    the Σc² accumulator to DECIMAL(38,0); the identity is unchanged),
+    int→double conversion is correctly rounded on both engines, and
+    all outputs are nonnegative so no −0.0 trap. salt_factor uses
+    integer ceil-div ((a+b−1) div b) — FLOOR/CEIL on doubles never
+    touches a graded integer.
+
+    Scale shape: one map-side-combinable (type, user) count, then a
+    #types-row rollup — two keyed shuffles, the second tiny. This is
+    the cheap pre-flight a pipeline runs BEFORE committing to a join
+    strategy at 100 TB."""
+    ev = load_table(spark, sf_dir, "events")
+    pk = ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("cnt"))
+    prof = pk.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum("cnt").alias("n_rows"),
+        F.max("cnt").alias("max_cnt"),
+        F.sum(F.col("cnt") * F.col("cnt")).alias("s2"),
+    )
+    n_keys, n_rows, max_cnt, s2 = (
+        F.col("n_keys"),
+        F.col("n_rows"),
+        F.col("max_cnt"),
+        F.col("s2"),
+    )
+    return prof.select(
+        "event_type",
+        "n_keys",
+        "n_rows",
+        "max_cnt",
+        F.round(max_cnt.cast("double") / n_rows, 6).alias("top1_share"),
+        F.round((max_cnt * n_keys).cast("double") / n_rows, 6).alias("skew"),
+        F.round(
+            F.sqrt((n_keys * s2 - n_rows * n_rows).cast("double")) / n_rows, 6
+        ).alias("cv"),
+        F.expr("(max_cnt * n_keys + n_rows - 1) div n_rows").alias("salt_factor"),
+    ).orderBy("event_type")
+
+
+# --------------------------------------------------------------------------
+# q209 — market-basket pair lift (association mining)
+# --------------------------------------------------------------------------
+@query(
+    "q209_basket_pair_lift",
+    oracle="""
+    WITH items AS (
+        SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+    ),
+    n AS (SELECT CAST(COUNT(DISTINCT ok) AS DOUBLE) AS n_orders FROM items),
+    pc AS (SELECT pk, COUNT(*) AS n_ok FROM items GROUP BY 1),
+    pairs AS (
+        SELECT a.pk AS p1, b.pk AS p2, COUNT(*) AS pair_cnt
+        FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
+        GROUP BY 1, 2
+    )
+    SELECT p.p1, p.p2, CAST(p.pair_cnt AS BIGINT) AS pair_cnt,
+           CAST(c1.n_ok AS BIGINT) AS n1, CAST(c2.n_ok AS BIGINT) AS n2,
+           ROUND(p.pair_cnt / n.n_orders, 6) AS support,
+           ROUND(CAST(p.pair_cnt AS DOUBLE) / c1.n_ok, 6) AS confidence,
+           ROUND(p.pair_cnt * n.n_orders / (c1.n_ok * c2.n_ok), 6) AS lift
+    FROM pairs p
+    JOIN pc c1 ON c1.pk = p.p1
+    JOIN pc c2 ON c2.pk = p.p2
+    CROSS JOIN n
+    WHERE p.pair_cnt >= 2
+    ORDER BY p.p1, p.p2
+    """,
+)
+def q209_basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Market-basket association mining: for every part pair co-bought
+    in >= 2 orders, support / confidence / lift vs independence — the
+    recommendation / co-occurrence verb.
+
+    Scale shape: pairs are expanded ROW-LOCALLY from the per-order
+    sorted item array (one groupBy(order) shuffle; fan-out bounded by
+    basket size squared, ~21 pairs for TPC-H's <= 7 items), never via
+    an order-keyed self-join relation; the >= 2 floor prunes before
+    the part-frequency joins; the n_orders denominator is a 1-row
+    broadcast attach (BNLJ_ALLOWED scalar_aggs). The count-based
+    floor (not a top-k on a double) keeps the output set identical
+    across engines."""
+    items = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .distinct()
+        .localCheckpoint(eager=False)  # feeds baskets, part counts, n_orders
+    )
+    baskets = items.groupBy("ok").agg(
+        F.array_sort(F.collect_set("pk")).alias("ps")
+    ).localCheckpoint(eager=False)  # feeds the pair fan-out AND n_orders
+    pc = items.groupBy("pk").agg(F.count(F.lit(1)).alias("n_ok"))
+    n = baskets.agg(F.count(F.lit(1)).cast("double").alias("n_orders"))
+    pairs = (
+        baskets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) -> "
+                    "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS p1, y AS p2))))"
+                )
+            ).alias("pr")
+        )
+        .select("pr.p1", "pr.p2")
+        .groupBy("p1", "p2")
+        .agg(F.count(F.lit(1)).alias("pair_cnt"))
+        .where(F.col("pair_cnt") >= 2)
+    )
+    return (
+        pairs.join(pc.withColumnRenamed("pk", "p1").withColumnRenamed("n_ok", "n1"), "p1")
+        .join(pc.withColumnRenamed("pk", "p2").withColumnRenamed("n_ok", "n2"), "p2")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "p1",
+            "p2",
+            F.col("pair_cnt").cast("long").alias("pair_cnt"),
+            F.col("n1").cast("long").alias("n1"),
+            F.col("n2").cast("long").alias("n2"),
+            F.round(F.col("pair_cnt") / F.col("n_orders"), 6).alias("support"),
+            F.round(
+                F.col("pair_cnt").cast("double") / F.col("n1"), 6
+            ).alias("confidence"),
+            F.round(
+                F.col("pair_cnt") * F.col("n_orders") / (F.col("n1") * F.col("n2")), 6
+            ).alias("lift"),
+        )
+        .orderBy("p1", "p2")
     )

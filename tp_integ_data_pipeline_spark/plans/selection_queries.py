@@ -1,6 +1,8 @@
 """Data-selection and corpus-analytics queries: DSIR importance
 weights (q112), trigram-LM surprisal scoring (q113), BPE first-merge
-pair counts (q114), and event retention cohorts (q115).
+pair counts (q114), event retention cohorts (q115), weighted and
+stratified sampling (q119, q158), per-domain caps (q182) and
+backoff-LM quality scoring (q193).
 
 q112/q113 are the two model-free data-SELECTION verbs (pick
 target-like documents; rank by LM surprisal) that sit between
@@ -17,9 +19,13 @@ from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.selection import (
     bpe_pair_counts,
+    domain_cap,
     dsir_weights,
     trigram_surprisal,
+    url_host,
 )
+from tp_integ_data_pipeline_spark.operators.text import tokens
+from tp_integ_data_pipeline_spark.operators.timeseries import stratified_sample
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -450,7 +456,7 @@ def q125_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (broadcast); token stream aggregates once per (source,
     in-vocab) — two corpus-token shuffles total, no collect."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
+    toks = docs.select("source", F.explode(tokens()).alias("tok"))
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -592,4 +598,257 @@ def q153_bpe_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_occurrences",
             F.length("token").cast("long").alias("token_chars"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# q158 — deterministic exact-k stratified sample
+# --------------------------------------------------------------------------
+_STRAT_K = 5
+
+
+@query(
+    "q158_stratified_sample",
+    oracle=f"""
+    WITH ranked AS (
+        SELECT lang, source, doc_id, n_chars,
+               ROW_NUMBER() OVER (
+                   PARTITION BY lang, source
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        FROM documents
+    )
+    SELECT lang, source, doc_id, n_chars
+    FROM ranked WHERE rk <= {_STRAT_K}
+    ORDER BY lang, source, doc_id
+    """,
+)
+def q158_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact {_STRAT_K}-per-(lang, source) sample, ranked by a content
+    hash of the id so the draw is uniform-ish yet BIT-reproducible
+    across engines and runs (md5 exists in both; xxhash64 does not in
+    DuckDB). The stratum window is keyed (partition columns present →
+    plan-gate clean) and Spark's rank-limit pushdown keeps per-task
+    state at k rows per stratum."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        stratified_sample(docs, ["lang", "source"], "doc_id", _STRAT_K)
+        .select("lang", "source", "doc_id", "n_chars")
+        .orderBy("lang", "source", "doc_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# q182 — per-domain page caps over a URL column
+# --------------------------------------------------------------------------
+# Same deterministic URL on both engines; only the string-cast type
+# name differs (Spark: STRING, DuckDB: VARCHAR).
+_URL_EXPR = "'https://' || source || '-' || CAST(doc_id % 5 AS VARCHAR) || '.example.com/page/' || CAST(doc_id AS VARCHAR)"
+_URL_EXPR_SPARK = _URL_EXPR.replace("AS VARCHAR", "AS STRING")
+
+
+@query(
+    "q182_domain_cap",
+    oracle=f"""
+    WITH u AS (
+        SELECT doc_id, n_chars, {_URL_EXPR} AS url FROM documents
+    ),
+    h AS (
+        SELECT doc_id, n_chars,
+               lower(regexp_extract(url, '^[a-z][a-z0-9+.\\-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host
+        FROM u
+    ),
+    ranked AS (
+        SELECT host, doc_id, n_chars,
+               ROW_NUMBER() OVER (PARTITION BY host ORDER BY n_chars DESC, doc_id) AS rn
+        FROM h
+    ),
+    kept AS (SELECT * FROM ranked WHERE rn <= 3)
+    SELECT h.host,
+           COUNT(*) AS n_docs,
+           CAST(COUNT(k.doc_id) AS BIGINT) AS n_kept,
+           CAST(COALESCE(SUM(k.n_chars), 0) AS BIGINT) AS kept_chars,
+           CAST(COALESCE(SUM(k.doc_id), 0) AS BIGINT) AS kept_id_checksum
+    FROM h LEFT JOIN kept k ON h.doc_id = k.doc_id
+    GROUP BY h.host ORDER BY h.host
+    """,
+)
+def q182_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RefinedWeb/Gopher-style per-site page cap: derive each page's
+    host from its URL (deterministic synthetic URL — the fixture has
+    no URL column; host EXTRACTION is the real, RE2-portable
+    machinery), keep at most 3 pages per host preferring longer
+    documents (n_chars desc, doc_id tiebreak), and report per-host
+    keep stats with the kept id-set checksummed so the oracle pins
+    the exact selection. The cap is the salted two-phase top-N
+    (operators/selection.domain_cap) — no windows, hot hosts spread
+    over 16 tasks, each shuffle row bounded by the cap."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "n_chars", F.expr(_URL_EXPR_SPARK).alias("url")
+    )
+    hosts = docs.withColumn("host", url_host("url")).drop("url")
+    kept = domain_cap(
+        hosts,
+        "host",
+        3,
+        [(-F.col("n_chars")).alias("neg_chars"), F.col("doc_id").alias("tb")],
+        "doc_id",
+    )
+    kept_stats = kept.groupBy("host").agg(
+        F.count(F.lit(1)).cast("long").alias("n_kept"),
+        F.sum("n_chars").cast("long").alias("kept_chars"),
+        F.sum("doc_id").cast("long").alias("kept_id_checksum"),
+    )
+    totals = hosts.groupBy("host").agg(F.count(F.lit(1)).alias("n_docs"))
+    return (
+        totals.join(kept_stats, "host", "left")
+        .select(
+            "host",
+            "n_docs",
+            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+            F.coalesce("kept_chars", F.lit(0)).cast("long").alias("kept_chars"),
+            F.coalesce("kept_id_checksum", F.lit(0)).cast("long").alias("kept_id_checksum"),
+        )
+        .orderBy("host")
+    )
+
+
+# --------------------------------------------------------------------------
+# q193 — stupid-backoff bigram LM: train on one slice, score the other
+# --------------------------------------------------------------------------
+@query(
+    "q193_backoff_lm_score",
+    oracle="""
+    WITH tr AS (
+        SELECT doc_id, string_split(text, ' ') AS w
+        FROM documents WHERE doc_id % 2 = 0
+    ),
+    te AS (
+        SELECT doc_id, string_split(text, ' ') AS w
+        FROM documents WHERE doc_id % 2 = 1
+    ),
+    uni AS (
+        SELECT t.tok AS w, CAST(COUNT(*) AS BIGINT) AS c1
+        FROM tr, UNNEST(w) AS t(tok) GROUP BY 1
+    ),
+    scal AS (
+        SELECT CAST(SUM(c1) AS BIGINT) AS n_tok,
+               CAST(COUNT(*) AS BIGINT) AS vocab
+        FROM uni
+    ),
+    bi AS (
+        SELECT w[i] AS w1, w[i + 1] AS w2, CAST(COUNT(*) AS BIGINT) AS c2
+        FROM tr, UNNEST(range(1, len(w))) AS t(i) GROUP BY 1, 2
+    ),
+    bi2 AS (
+        SELECT b.w1, b.w2, b.c2, u.c1 AS c1w1
+        FROM bi b JOIN uni u ON u.w = b.w1
+    ),
+    occ AS (
+        SELECT doc_id, w[i] AS w1, w[i + 1] AS w2
+        FROM te, UNNEST(range(1, len(w))) AS t(i)
+    ),
+    sc AS (
+        SELECT o.doc_id,
+               CASE WHEN b.c2 IS NOT NULL
+                    THEN CAST(b.c2 AS DOUBLE) / CAST(b.c1w1 AS DOUBLE)
+                    ELSE CAST(2 * (COALESCE(u2.c1, 0) + 1) AS DOUBLE)
+                         / CAST(5 * (s.n_tok + s.vocab) AS DOUBLE)
+               END AS p,
+               CASE WHEN b.c2 IS NOT NULL THEN 1 ELSE 0 END AS hit
+        FROM occ o
+        LEFT JOIN bi2 b ON b.w1 = o.w1 AND b.w2 = o.w2
+        LEFT JOIN uni u2 ON u2.w = o.w2
+        CROSS JOIN scal s
+    )
+    SELECT doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+           CAST(SUM(hit) AS BIGINT) AS n_hits,
+           ROUND(CAST(SUM(hit) AS DOUBLE) / COUNT(*), 6) AS hit_rate,
+           ROUND(SUM(ln(p)) / COUNT(*), 6) + 0 AS avg_ll
+    FROM sc GROUP BY doc_id ORDER BY doc_id
+    """,
+)
+def q193_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style LM quality scoring without KenLM: train a
+    stupid-backoff bigram model (Brants et al. 2007 — score is
+    c(w1 w2)/c(w1), backing off to 0.4-weighted Laplace-smoothed
+    unigrams, no normalization) on the even-doc_id half of the corpus
+    and score every odd-doc_id document: per-doc mean log-score (the
+    perplexity-filter proxy) and seen-bigram hit rate. Cross-engine
+    hash rules: every ln() argument is ONE division of two exact
+    integers (bit-identical both engines; ln's last-ULP variance dies
+    under ROUND(,6) — the q192 convention), and avg_ll is
+    negative-capable so it gets `+ 0` after ROUND.
+
+    Scale shape: bigrams are materialized ROW-LOCALLY inside the token
+    array (no self-join), counted with one map-side-combinable keyed
+    agg each; the model (unigram + bigram relations) is
+    vocab/vocab²-bounded and attaches to the scored occurrences by
+    plain equi-joins on the gram key; the only cross join is the 1-row
+    (n_tok, vocab) scalar. No window anywhere; output is one row per
+    scored doc."""
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    arr = tokens()
+    pair_structs = F.when(
+        F.size(arr) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(arr) - 1),
+            lambda i: F.struct(
+                F.element_at(arr, i).alias("w1"),
+                F.element_at(arr, i + 1).alias("w2"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    train = docs.where(F.col("doc_id") % 2 == 0)
+    test = docs.where(F.col("doc_id") % 2 == 1)
+
+    uni = (
+        train.select(F.explode(arr).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c1"))
+    )
+    uni = uni.localCheckpoint(eager=False)  # feeds scal, bi2, and the w2 backoff join
+    scal = uni.agg(F.sum("c1").alias("n_tok"), F.count(F.lit(1)).alias("vocab"))
+    bi = (
+        train.select(F.explode(pair_structs).alias("p"))
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c2"))
+    )
+    bi2 = bi.join(uni.select(F.col("w").alias("w1"), F.col("c1").alias("c1w1")), "w1")
+
+    occ = test.select("doc_id", F.explode(pair_structs).alias("p")).select(
+        "doc_id", "p.w1", "p.w2"
+    )
+    joined = (
+        occ.join(bi2, ["w1", "w2"], "left")
+        .join(
+            uni.select(F.col("w").alias("w2"), F.col("c1").alias("c1w2")),
+            "w2",
+            "left",
+        )
+        .crossJoin(F.broadcast(scal))
+    )
+    p = F.when(
+        F.col("c2").isNotNull(),
+        F.col("c2").cast("double") / F.col("c1w1").cast("double"),
+    ).otherwise(
+        (2 * (F.coalesce(F.col("c1w2"), F.lit(0)) + 1)).cast("double")
+        / (5 * (F.col("n_tok") + F.col("vocab"))).cast("double")
+    )
+    hit = F.when(F.col("c2").isNotNull(), 1).otherwise(0)
+    return (
+        joined.select("doc_id", p.alias("p"), hit.alias("hit"))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum("hit").alias("n_hits"),
+            F.round(F.sum("hit").cast("double") / F.count(F.lit(1)), 6).alias(
+                "hit_rate"
+            ),
+            (F.round(F.sum(F.log("p")) / F.count(F.lit(1)), 6) + F.lit(0)).alias(
+                "avg_ll"
+            ),
+        )
+        .orderBy("doc_id")
     )

@@ -9,7 +9,7 @@ re-fetches and inserts only unseen rows); the batch refresh
 plan. This module is the streamed form: the arriving half lands as K
 doc_id-ordered micro-batches (file source, mtime-ordered,
 maxFilesPerTrigger=1 — the q232 staging recipe) and each batch passes
-the SAME funnel (plans/curation.admission_core). Every cross-batch
+the SAME funnel (operators/admission.admission_core). Every cross-batch
 input of a micro-batch is already on disk when the batch runs:
 
 1. seen texts: the staged arrival's non-bench texts whose batch_id is
@@ -69,7 +69,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from tp_integ_data_pipeline_spark.plans.curation import (
+from tp_integ_data_pipeline_spark.operators.admission import (
     ADMIT_IDX,
     PACK_BUDGET,
     admission_core,
