@@ -1783,6 +1783,26 @@ def test_mutual_information_independent_and_determined(spark, tmp_path):
 # --------------------------------------------------------------------------
 # r7 ADVICE regressions
 # --------------------------------------------------------------------------
+def test_bigrams_expr_guard(spark):
+    """Single-token and empty word arrays yield ZERO bigrams. Unguarded,
+    sequence(1, 0) = [1, 0] descends and emits two NULL bigrams per
+    single-token doc; q239 builds its bigrams with word_ngrams(w, 2)."""
+    from pyspark.sql import functions as F
+
+    from tp_integ_data_pipeline_spark.operators.text import word_ngrams
+
+    df = spark.createDataFrame(
+        [(1, ["a"]), (2, []), (3, ["a", "b", "c"])], "id int, w array<string>"
+    )
+    rows = (
+        df.select("id", F.explode(word_ngrams("w", 2)).alias("g"))
+        .orderBy("id", "g")
+        .collect()
+    )
+    assert [(r.id, r.g) for r in rows] == [(3, "a b"), (3, "b c")]
+    assert all(r.g is not None for r in rows)
+
+
 def test_rank_summaries_nonstring_key(spark):
     """rank_summaries derives the output key type from the input
     schema — an integer key must round-trip as an integer, not a
