@@ -236,12 +236,14 @@ def main() -> None:
     import gc
 
     for _pass in range(2):
-        # Session-scoped relation caches (plans/session_cache.py: shared
-        # MinHash pairs/clusters, prefix-join ordered sets) reset at
-        # PASS granularity: within a pass, shared prework is computed
-        # once — real pipeline semantics, each row = marginal cost given
-        # the pass's earlier queries — while min-of-2 never degenerates
-        # to timing a cache hit for the query that built the relation.
+        # The session memo (plans/session_cache.py, the one place
+        # queries share prework: MinHash pairs/clusters, prefix-join
+        # ordered sets, refresh relations, the IVF model, staged stream
+        # inputs) resets at PASS granularity: within a pass, shared
+        # prework is computed once — real pipeline semantics, each row =
+        # marginal cost given the pass's earlier queries — while min-of-2
+        # never degenerates to timing a cache hit for the query that
+        # built the relation or staged the input.
         from tp_integ_data_pipeline_spark.plans.session_cache import _CACHES
 
         _CACHES.clear()

@@ -45,7 +45,7 @@ def _grams(df):
 
 def _stage(spark, rows, n_batches=4):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    return stage_arrival(split_arrival(df, n_batches), n_batches, None)
+    return stage_arrival(split_arrival(df, n_batches), n_batches)
 
 
 _ARRIVAL = [
@@ -154,21 +154,23 @@ def test_recovered_offset_matches_committed_prefix(spark):
 
 
 def test_explicit_arriving_rejects_cache_key(spark):
-    """The staging cache is keyed by (cache_key, n_batches) alone, so
-    it cannot distinguish two different explicit `arriving` relations —
-    the documented contract is now a checked one (r12 advice)."""
+    """Nothing below the query plans memoizes a staged arrival: two
+    drains over different explicit arrivals in one process, with the
+    same batch count, each return their own arrival's doc_ids."""
     docs = spark.createDataFrame(
-        [(100, "s1", _CLEAN)], "doc_id long, source string, text string"
+        [(100, "s1", _CLEAN + " one"), (104, "s2", _CLEAN + " two")],
+        "doc_id long, source string, text string",
     )
     kept = spark.createDataFrame(
         [(50, "s1", 10, "another kept doc")],
         "doc_id long, source string, n_words int, text string",
     )
-    with pytest.raises(ValueError, match="cache_key"):
-        stream_refresh_admission(
-            spark, docs, kept, n_batches=2,
-            cache_key="k", arriving=docs.select("doc_id", "source", "text"),
+    for ids in ([100], [104]):
+        arriving = docs.filter(F.col("doc_id").isin(ids))
+        out = stream_refresh_admission(
+            spark, docs, kept, n_batches=2, arriving=arriving
         )
+        assert [r.doc_id for r in out.collect()] == ids
 
 
 _B1 = "secret bench marker words eight exact tokens lineup plus extra tail words"

@@ -266,7 +266,7 @@ _B2 = "novel second suite marker eight fresh exact tokens lineup with more words
 
 def _stage(spark, rows, n_batches):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    return stage_arrival(split_arrival(df, n_batches), n_batches, None)
+    return stage_arrival(split_arrival(df, n_batches), n_batches)
 
 
 @pytest.mark.parametrize(

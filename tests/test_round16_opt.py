@@ -102,7 +102,7 @@ def test_flush_staging_two_files(spark, tmp_path):
         ("2024-01-01T00:00:00", "view"): 1,
         ("2024-01-01T00:15:00", "click"): 1,
     }
-    staging = SQ._FLUSH_STAGING_CACHE[str(tmp_path)]
+    staging = SQ._flush_staging(spark, str(tmp_path))
     files = sorted(os.listdir(staging))
     assert len([f for f in files if f.endswith(".parquet")]) == 2
 

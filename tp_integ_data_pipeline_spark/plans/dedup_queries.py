@@ -28,6 +28,7 @@ from tp_integ_data_pipeline_spark.operators.selection import hash_bucket
 from tp_integ_data_pipeline_spark.operators.similarity import cosine_pairs
 from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.registry import query
+from tp_integ_data_pipeline_spark.plans.session_cache import per_session
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_dir
 
 # The verified MinHash-LSH pair relation (k=3, t=0.6 over the full
@@ -37,6 +38,7 @@ from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_di
 # connected-components labeling built on it (the q175/q185 ordered-sets
 # discipline, plans/session_cache.py). Each consumer still expresses
 # the full logical plan; the oracle differential is unaffected.
+@per_session
 def _corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached (id, sig, n) MinHash signatures of the FULL
     documents table (k=3, NUM_PERM) — the threshold- AND split-
@@ -45,40 +47,27 @@ def _corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental index (q103's add takes the id < mid slice, its
     probe the rest). Fixed-width rows (NUM_PERM longs + n per doc), so
     the lazy checkpoint is index-sized, never corpus-text-sized."""
-    from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents", spread=True)
-        sh = shingles(docs, "doc_id", "text", k=3)
-        return minhash_signatures(
-            sh, num_perm=NUM_PERM, with_sizes=True
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "minhash_sigs", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    sh = shingles(docs, "doc_id", "text", k=3)
+    return minhash_signatures(
+        sh, num_perm=NUM_PERM, with_sizes=True
+    ).localCheckpoint(eager=False)
 
 
+@per_session
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents", spread=True)
-        return minhash_near_dup_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.6,
-            sig=_corpus_sigs(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "minhash_pairs", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    return minhash_near_dup_pairs(
+        docs, "doc_id", "text", k=3, threshold=0.6,
+        sig=_corpus_sigs(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
+@per_session
 def _minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
-
-    def build() -> DataFrame:
-        return dup_clusters(
-            _minhash_pairs(spark, sf_dir).select("a", "b")
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "minhash_clusters", (sf_dir,), build)
+    return dup_clusters(
+        _minhash_pairs(spark, sf_dir).select("a", "b")
+    ).localCheckpoint(eager=False)
 
 
 # DuckDB CTEs mirroring operators.dedup.shingles / pair_jaccard (k=3).

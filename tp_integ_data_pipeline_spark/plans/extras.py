@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.skew import salted_agg
 from tp_integ_data_pipeline_spark.plans.registry import query
+from tp_integ_data_pipeline_spark.plans.similarity_queries import ivf_centroids
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
 
@@ -112,32 +113,16 @@ def q39_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q52 — IVF-style ANN: offline-trained coarse quantizer + probed exact
 # re-rank (approximate → rows-only check; recall tested vs brute force
-# in tests/). Training (ivf_fit / KMeans) runs ONCE per (sf_dir,
-# n_cells) and the n_cells-row centroid table is cached as model rows —
-# the query call itself is training-free and its plan carries no
-# per-centroid literals (in production the centroids live in a catalog
-# table written by the offline job).
+# in tests/). The model is similarity_queries.ivf_centroids, trained
+# once per (session, corpus) and shared with q101 and q139.
 # --------------------------------------------------------------------------
-_IVF_MODELS: dict[tuple[str, int, int], list] = {}
-
-
-def _ivf_centroids(spark: SparkSession, sf_dir: str, n_cells: int = 16, seed: int = 42):
-    key = (sf_dir, n_cells, seed)
-    if key not in _IVF_MODELS:
-        from tp_integ_data_pipeline_spark.operators.similarity import ivf_fit
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_MODELS[key] = ivf_fit(emb, n_cells=n_cells, seed=seed).collect()
-    return spark.createDataFrame(_IVF_MODELS[key], "cell int, centroid array<double>")
-
-
 @query("q52_ann_ivf")
 def q52_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.operators.similarity import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    centroids = _ivf_centroids(spark, sf_dir, n_cells=16)
+    centroids = ivf_centroids(spark, sf_dir, 16, 42)
     return ivf_topk(emb, queries_df, centroids, k=5, n_probe=4).orderBy("q_id", "rank")
 
 
@@ -214,7 +199,7 @@ def q101_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = _ivf_centroids(spark, sf_dir, n_cells=16)
+    centroids = ivf_centroids(spark, sf_dir, 16, 42)
     engine = semantic_dedup(emb, centroids, threshold=0.45)
     audit = semantic_dedup_exact_replica(emb, centroids, threshold=0.45)
     return (

@@ -62,7 +62,7 @@ from tp_integ_data_pipeline_spark.operators.admission import (
 )
 from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
-from tp_integ_data_pipeline_spark.plans.session_cache import session_cached
+from tp_integ_data_pipeline_spark.plans.session_cache import per_session
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 from tp_integ_data_pipeline_spark.streaming.refresh import stream_refresh_admission
 
@@ -339,13 +339,11 @@ def funnel_verdicts(docs: DataFrame) -> DataFrame:
     )
 
 
+@per_session
 def _funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        return funnel_verdicts(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "funnel_verdicts", (sf_dir,), build)
+    return funnel_verdicts(
+        load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False)
 
 
 def existing_kept(docs: DataFrame) -> DataFrame:
@@ -368,12 +366,10 @@ def existing_kept(docs: DataFrame) -> DataFrame:
     return kept.join(ex.select("doc_id", "text"), "doc_id")
 
 
+@per_session
 def _exist_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-        return existing_kept(docs).localCheckpoint(eager=False)
-
-    return session_cached(spark, "refresh_exist_kept", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
+    return existing_kept(docs).localCheckpoint(eager=False)
 
 
 def refresh_admission_verdicts(docs: DataFrame, kept: DataFrame) -> DataFrame:
@@ -394,36 +390,27 @@ def refresh_admission_verdicts(docs: DataFrame, kept: DataFrame) -> DataFrame:
     return admission_core(new, kept, bench_grams)
 
 
+@per_session
 def _admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return refresh_admission_verdicts(
-            docs, _exist_kept(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "refresh_admission", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents")
+    return refresh_admission_verdicts(
+        docs, _exist_kept(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
+@per_session
 def _stream_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streamed refresh relation: ONE micro-batch drain per
     (session, corpus), read by q261–q266."""
-
-    def build() -> DataFrame:
-        # no corpus-scan spread: the drain widens each staged batch
-        # itself (refresh._spread_batch), and at local[4], sf0.1 q261
-        # ran faster without it (5.2 vs 5.7 s, min of 3)
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        return stream_refresh_admission(
-            spark,
-            docs,
-            _exist_kept(spark, sf_dir),
-            n_batches=_N_BATCHES,
-            cache_key=sf_dir,
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "stream_refresh", (sf_dir,), build)
+    # no corpus-scan spread: the drain widens each staged batch
+    # itself (refresh._spread_batch), and at local[4], sf0.1 q261
+    # ran faster without it (5.2 vs 5.7 s, min of 3)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    return stream_refresh_admission(
+        spark, docs, _exist_kept(spark, sf_dir), n_batches=_N_BATCHES
+    ).localCheckpoint(eager=False)
 
 
 def _chain_bounds(docs: DataFrame) -> DataFrame:
@@ -436,68 +423,59 @@ def _chain_bounds(docs: DataFrame) -> DataFrame:
     )
 
 
+@per_session
 def _chain_adm1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Refresh-1 admission: the m..m2 arrival against the standing kept
     corpus, suite = bench docs visible through m2 (yesterday's suite +
     the bench docs THIS refresh delivers)."""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-        based = docs.crossJoin(F.broadcast(_chain_bounds(docs)))
-        arr1 = based.filter(
-            (F.col("doc_id") >= F.col("m")) & (F.col("doc_id") < F.col("m2"))
-        ).drop("m", "m2")
-        suite1 = suite_grams(
-            based.filter(
-                (F.col("doc_id") % 97 == 0) & (F.col("doc_id") < F.col("m2"))
-            )
+    docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
+    based = docs.crossJoin(F.broadcast(_chain_bounds(docs)))
+    arr1 = based.filter(
+        (F.col("doc_id") >= F.col("m")) & (F.col("doc_id") < F.col("m2"))
+    ).drop("m", "m2")
+    suite1 = suite_grams(
+        based.filter(
+            (F.col("doc_id") % 97 == 0) & (F.col("doc_id") < F.col("m2"))
         )
-        return admission_core(
-            arr1, _exist_kept(spark, sf_dir), suite1
-        ).localCheckpoint(eager=False)
+    )
+    return admission_core(
+        arr1, _exist_kept(spark, sf_dir), suite1
+    ).localCheckpoint(eager=False)
 
-    return session_cached(spark, "chain_adm1", (sf_dir,), build)
 
-
+@per_session
 def _chain_kept1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GROWN corpus after refresh 1: K1 = standing kept ∪ refresh-1
     admitted (texts recovered by id-keyed join). Texts stay unique by
     construction (K0 is keep-first-unique; admitted texts are
     batch-unique and not in K0), so downstream probes never fan out.
     Shape: (doc_id, source, n_words, text)."""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        k0 = _exist_kept(spark, sf_dir).select(
-            "doc_id", "source", "n_words", "text"
-        )
-        adm1_kept = (
-            _chain_adm1(spark, sf_dir)
-            .filter(F.col("stage_idx") == ADMIT_IDX)
-            .select("doc_id", "source", "n_words")
-            .join(docs, "doc_id")
-        )
-        return k0.unionByName(
-            adm1_kept.select("doc_id", "source", "n_words", "text")
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "chain_kept1", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    k0 = _exist_kept(spark, sf_dir).select(
+        "doc_id", "source", "n_words", "text"
+    )
+    adm1_kept = (
+        _chain_adm1(spark, sf_dir)
+        .filter(F.col("stage_idx") == ADMIT_IDX)
+        .select("doc_id", "source", "n_words")
+        .join(docs, "doc_id")
+    )
+    return k0.unionByName(
+        adm1_kept.select("doc_id", "source", "n_words", "text")
+    ).localCheckpoint(eager=False)
 
 
+@per_session
 def _chain_adm2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Refresh-2 admission: the >= m2 arrival against the GROWN corpus
     K1, suite = all bench docs."""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-        based = docs.crossJoin(F.broadcast(_chain_bounds(docs)))
-        arr2 = based.filter(F.col("doc_id") >= F.col("m2")).drop("m", "m2")
-        suite2 = suite_grams(docs.filter(F.col("doc_id") % 97 == 0))
-        return admission_core(
-            arr2, _chain_kept1(spark, sf_dir), suite2
-        ).localCheckpoint(eager=False)
-
-    return session_cached(spark, "chain_adm2", (sf_dir,), build)
+    docs = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
+    based = docs.crossJoin(F.broadcast(_chain_bounds(docs)))
+    arr2 = based.filter(F.col("doc_id") >= F.col("m2")).drop("m", "m2")
+    suite2 = suite_grams(docs.filter(F.col("doc_id") % 97 == 0))
+    return admission_core(
+        arr2, _chain_kept1(spark, sf_dir), suite2
+    ).localCheckpoint(eager=False)
 
 
 # --------------------------------------------------------------------------

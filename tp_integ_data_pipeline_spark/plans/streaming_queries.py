@@ -19,6 +19,7 @@ from pyspark.sql.types import StructType
 
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.relational import dsum_sql
+from tp_integ_data_pipeline_spark.plans.session_cache import per_session
 from tp_integ_data_pipeline_spark.sources.fixtures import file_schema, scratch_dir
 from tp_integ_data_pipeline_spark.streaming.ingest import run_stream_to_memory
 
@@ -355,12 +356,9 @@ def q143_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("c_mktsegment", "event_type")
 
 
-
-_FLUSH_STAGING_CACHE: dict[str, str] = {}
-
-
-def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    """Events file stream whose final windows FLUSH: the fixture is
+@per_session
+def _flush_staging(spark: SparkSession, sf_dir: str) -> str:
+    """Staging dir of the flushed events stream: the fixture is
     staged as TWO mtime-ordered top-level files consumed with
     maxFilesPerTrigger=1 — file 1 is the real data PLUS far-future
     sentinel 1 (user_id −1, event_type '__flush', +1 day past the real
@@ -379,16 +377,12 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> "DataFrame":
     write DIRECTORIES (part files are promoted to plain top-level
     files) nor orders equal-mtime files (the real data is ONE staged
     file so an out-of-order first batch can't mark the rest late).
-    Callers exclude the sentinels (user_id < 0 / '__flush')."""
+    The staged data and sentinels are pure functions of the fixture
+    dir, so q232, q235 and q236 share one staging per session."""
     import glob as _glob
     import time
 
     schema = _events_schema(spark, sf_dir)
-    cached = _FLUSH_STAGING_CACHE.get(sf_dir)
-    if cached is not None:
-        return _normalize_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(cached)
-        )
     staging = scratch_dir(prefix="events_flush_")
     src = f"{sf_dir}/events.parquet"
     now = time.time()
@@ -425,10 +419,17 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> "DataFrame":
     flush = os.path.join(staging, "zz_flush2.parquet")
     shutil.move(_glob.glob(os.path.join(tmp, "*.parquet"))[0], flush)
     os.utime(flush, (now + 2, now + 2))
-    _FLUSH_STAGING_CACHE[sf_dir] = staging  # staged data + sentinels are
-    # pure functions of the fixture dir — reuse across queries in-process
+    return staging
+
+
+def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events file stream whose final windows FLUSH, read from the
+    session's `_flush_staging` dir. Callers exclude the sentinels
+    (user_id < 0 / '__flush')."""
     return _normalize_ts(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staging)
+        spark.readStream.schema(_events_schema(spark, sf_dir))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_flush_staging(spark, sf_dir))
     )
 
 

@@ -260,15 +260,20 @@ def _ship_package(spark: SparkSession) -> None:
     worker process must be able to `import tp_integ_data_pipeline_spark`
     itself — which fails when the harness launches from another cwd.
     addPyFile of a package zip puts it on every worker's sys.path.
+
+    The zip is built in a private directory, removed at exit: a local
+    executor copies an added file lazily, at its first task, and fails
+    that task if the file changed since it was added, which a path
+    shared with other processes (another checkout's session) allows.
     """
     if getattr(spark, "_tp_integ_pkg_shipped", False):
         return
     import zipfile
 
+    from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "tp_integ_data_pipeline_spark_pkg.zip"
-    )
+    zpath = os.path.join(scratch_dir(prefix="tp_integ_pkg_"), "tp_integ_data_pipeline_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             if "__pycache__" in dirpath:

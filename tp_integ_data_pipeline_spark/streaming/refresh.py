@@ -78,16 +78,6 @@ from tp_integ_data_pipeline_spark.operators.admission import (
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
 from tp_integ_data_pipeline_spark.streaming.ingest import _start_file_stream
 
-# Staged arrival dirs reused across queries in-process (the q232
-# staging-cache pattern). CONTRACT: a cache_key must fully determine
-# the staged CONTENT — callers key by the fixture dir, whose `arriving`
-# derivation is fixed (the doc_id >= max div 2 split); a caller staging
-# a DIFFERENT relation must use a different key (or None to bypass).
-# stream_refresh_admission ENFORCES this: an explicit `arriving`
-# override rejects cache_key outright (r12 advice), since the key
-# cannot know what relation it would alias.
-_ARRIVAL_STAGING_CACHE: dict[tuple[str, int], str] = {}
-
 # Micro-batch spread width (see admit_batch): fixed, widen-only. The
 # drain's outputs are integer/boolean relations, so unlike the corpus
 # scan spread there is no float-fold layout contract to pin — the
@@ -145,20 +135,13 @@ def split_arrival(arriving: DataFrame, n_batches: int, order_col: str = "doc_id"
     )
 
 
-def stage_arrival(
-    arriving: DataFrame,
-    n_batches: int,
-    cache_key: str | None = None,
-) -> str:
+def stage_arrival(arriving: DataFrame, n_batches: int) -> str:
     """Writes each batch_id slice of ``arriving`` (already split) to
     its own TOP-LEVEL parquet file with strictly ascending mtimes, so
     a maxFilesPerTrigger=1 file stream delivers the batches in order
     (the q232 gotchas baked in: part files promoted out of Spark write
     directories; distinct mtimes because the source does not order
     equal-mtime files). Returns the staging dir."""
-    key = (cache_key, n_batches)
-    if cache_key is not None and key in _ARRIVAL_STAGING_CACHE:
-        return _ARRIVAL_STAGING_CACHE[key]
     staging = scratch_dir(prefix="refresh_arrival_")
     with open(os.path.join(staging, _ARRIVAL_SCHEMA), "w") as fh:
         fh.write(arriving.schema.json())
@@ -174,8 +157,6 @@ def stage_arrival(
         dst = os.path.join(staging, f"batch{b:04d}.parquet")
         shutil.move(parts[0], dst)
         os.utime(dst, (now - 100 + b, now - 100 + b))
-    if cache_key is not None:
-        _ARRIVAL_STAGING_CACHE[key] = staging
     return staging
 
 
@@ -266,7 +247,6 @@ def stream_refresh_admission(
     docs: DataFrame,
     kept: DataFrame,
     n_batches: int = 4,
-    cache_key: str | None = None,
     arriving: DataFrame | None = None,
     bench_docs: DataFrame | None = None,
 ) -> DataFrame:
@@ -291,16 +271,6 @@ def stream_refresh_admission(
     ``bench_docs`` overrides the benchmark suite (a ``text`` column;
     default: the doc_id%97 slice of ``docs``) — the suite refresh N+1
     sees includes the bench docs earlier refreshes delivered."""
-    if arriving is not None and cache_key is not None:
-        # the staging cache is keyed by (cache_key, n_batches) alone —
-        # it cannot tell two different `arriving` relations apart, so a
-        # reused key would silently return the OTHER relation's staged
-        # batches. Make the documented contract a checked one (r12
-        # advice): explicit arrivals always stage fresh.
-        raise ValueError(
-            "cache_key is only valid for the default arrival derivation; "
-            "pass cache_key=None when supplying an explicit `arriving`"
-        )
     if arriving is None:
         mid = docs.agg(F.expr("max(doc_id) div 2").alias("m"))
         arriving = (
@@ -309,9 +279,7 @@ def stream_refresh_admission(
             .drop("m")
             .select("doc_id", "source", "text")
         )
-    staging = stage_arrival(
-        split_arrival(arriving, n_batches), n_batches, cache_key
-    )
+    staging = stage_arrival(split_arrival(arriving, n_batches), n_batches)
 
     # refresh-level inputs, materialized ONCE before the loop: the
     # standing kept corpus (in production a lake table — the eager
