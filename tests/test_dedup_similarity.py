@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import sys
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.dedup import (
@@ -11,12 +15,35 @@ from tp_integ_data_pipeline_spark.operators.dedup import (
     shingles,
     simhash_near_dup_pairs,
 )
+from tp_integ_data_pipeline_spark.operators.layout import estimated_bytes
 from tp_integ_data_pipeline_spark.operators.similarity import (
     ann_topk_srp,
     cosine_pairs,
     knn_bruteforce,
 )
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+import build_jobs  # noqa: E402
+
+
+@contextmanager
+def _grid(spark, emb, n_blocks: int):
+    """Lower the session's split size (scoped to the block) so that
+    ``cosine_pairs`` plans ``emb`` as an ``n_blocks`` block grid."""
+    key = "spark.sql.files.openCostInBytes"
+    size = estimated_bytes(emb.select("vec_id", "embedding"))
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(-(-size // n_blocks)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_exact_dedup_keeps_min_key(spark):
@@ -108,7 +135,10 @@ def test_cosine_pairs_blocked_matches_knn(spark, sf_dir):
     """The blocked numpy all-pairs path agrees with the expression-fold
     knn path on shared (query, neighbor) cells."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
-    rows = cosine_pairs(emb, threshold=-1.1, n_blocks=4).collect()
+    with _grid(spark, emb, 4):
+        blocked = cosine_pairs(emb, threshold=-1.1)
+    assert "FlatMapGroupsInPandas" in _plan(blocked)
+    rows = blocked.collect()
     pairs = {(r.a, r.b): r.cos6 for r in rows}
     knn = knn_bruteforce(emb, emb.filter(F.col("vec_id") < 5), k=3).collect()
     # every unordered pair exactly ONCE (a list-level check: a dict
@@ -120,6 +150,58 @@ def test_cosine_pairs_blocked_matches_knn(spark, sf_dir):
     for r in knn:
         key = (min(r.q_id, r.n_id), max(r.q_id, r.n_id))
         assert abs(pairs[key] - r.cos6) < 2e-6
+
+
+def test_cosine_pairs_one_task_matches_grid(spark, sf_dir):
+    """The one-task path (vectors that fit one split) and the block grid
+    return the same rows, each unordered pair once, with negative ids
+    routed by pmod, at every threshold tried."""
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < 60)
+        .select((F.col("vec_id") - 30).alias("vec_id"), "embedding")
+    )
+    for threshold in (-1.1, 0.1):
+        one = cosine_pairs(emb, threshold=threshold)
+        with _grid(spark, emb, 4):
+            grid = cosine_pairs(emb, threshold=threshold)
+        assert "FlatMapGroupsInPandas" not in _plan(one)
+        assert "FlatMapGroupsInPandas" in _plan(grid)
+        rows, grid_rows = sorted(one.collect()), sorted(grid.collect())
+        assert rows == grid_rows
+        assert len({(r.a, r.b) for r in rows}) == len(rows)
+        assert all(r.a < r.b for r in rows)
+        assert min(r.a for r in rows) == -30
+    assert len(rows) < 60 * 59 / 2  # the 0.1 threshold drops pairs
+
+
+def test_cosine_pairs_empty_and_single_vector(spark, sf_dir):
+    """No vectors, or one, give no pairs on both paths."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    for few in (emb.filter(F.col("vec_id") < 0), emb.filter(F.col("vec_id") == 3)):
+        one = cosine_pairs(few, threshold=-1.1)
+        with _grid(spark, few, 4):
+            grid = cosine_pairs(few, threshold=-1.1)
+        assert "FlatMapGroupsInPandas" not in _plan(one)
+        assert "FlatMapGroupsInPandas" in _plan(grid)
+        assert one.count() == 0 and grid.count() == 0
+
+
+def test_cosine_pairs_one_split_plan_has_no_exchange(spark, sf_dir):
+    """Vectors that fit one split are verified by one Python task with
+    no exchange beneath it, and choosing that plan starts no job."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    built = []
+    jobs = build_jobs.jobs_started(
+        spark, "cosine:build", lambda: built.append(cosine_pairs(emb, threshold=0.45))
+    )
+    assert jobs == 0
+    pairs = built[0]
+    assert pairs.collect()
+    plan = _plan(pairs)
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan
+    assert "Generate" not in plan
 
 
 def test_ann_srp_is_subset_of_bruteforce_candidates(spark, sf_dir):

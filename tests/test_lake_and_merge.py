@@ -120,6 +120,19 @@ def test_full_write_dedups_null_key(spark, tmp_path):
     ]
 
 
+def test_full_write_batch_skip_null_key(spark, tmp_path):
+    """With batch_skip, a batch whose only key is a NULL already in the
+    table is skipped: NULL counts as present, as on the per-row path."""
+    lake = DataLake(spark, str(tmp_path))
+    schema = "id int, name string"
+    lake.write_full("localid", spark.createDataFrame([(None, "x"), (1, "La Plata")], schema), ["id"])
+    lake.write_full("localid", spark.createDataFrame([(None, "x")], schema), ["id"], batch_skip=True)
+    assert sorted(lake.read("localid").collect(), key=lambda r: r.name) == [
+        (1, "La Plata"),
+        (None, "x"),
+    ]
+
+
 def test_scd1_upsert_semantics(spark):
     target = spark.createDataFrame(
         [(1, "La Plata", 100.0), (2, "Quilmes", 200.0)], ["id", "name", "pop"]

@@ -12,7 +12,9 @@ expression — JVM-side arithmetic, no UDF.
 
 ``sized_for_write`` writes a small frame as one file, however many
 partitions happen to feed it — the small-file half of Delta's optimized
-writes, without the extra shuffle.
+writes, without the extra shuffle. Its plan-time size test,
+``split_count``, also sizes the exact cosine kernel
+(``similarity.cosine_pairs``).
 
 No reference-repo counterpart — SURVEY.md §2.10 extension surface.
 """
@@ -99,28 +101,49 @@ def zorder_dataframe(
 
 def _read_size_bytes(df: DataFrame) -> int | None:
     """Bytes of the relations the frame's optimized plan reads: the sum
-    of its leaves' size estimates (file sizes, for a scan)."""
+    of its leaves' size estimates (file sizes, for a scan). None when a
+    leaf has no size of its own and reports Spark's unknown-size default
+    (``spark.sql.defaultSizeInBytes``), as an RDD-backed frame does."""
     try:
+        unknown = int(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        return sum(int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size()))
+        sizes = [int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size())]
     except Exception:
         return None
+    return None if any(s >= unknown for s in sizes) else sum(sizes)
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The frame's size as a plan-time choice reads it, without a Spark
+    job: the smaller of Catalyst's estimate for it and the bytes of the
+    relations it reads. Join estimates multiply their sides, and a merge
+    writes no more than it reads, while a frame that fans out (e.g. by
+    an explode) can outgrow its inputs. None when the frame reads a
+    relation of unknown size."""
+    read = _read_size_bytes(df)
+    if read is None:
+        return None
+    plan = plan_size_bytes(df)
+    return read if plan is None else min(plan, read)
+
+
+def split_count(df: DataFrame) -> int | None:
+    """How many scan splits the frame's estimated size fills, at least
+    one: Spark reads a scan of at most ``spark.sql.files.openCostInBytes``
+    (from the live session) as one partition. None when the frame reads
+    a relation of unknown size."""
+    size = estimated_bytes(df)
+    if size is None:
+        return None
+    split = _parse_size_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
+    return max(1, -(-size // split))
 
 
 def sized_for_write(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to one partition when it fits in one scan split,
-    so a small warehouse version or lake batch is written as one file
-    and every later scan of it is one task.
-
-    Spark splits a scan of at most ``spark.sql.files.openCostInBytes``
-    (read from the live session) into one partition, so that is the
-    limit. The frame's size is the smaller of Catalyst's estimate for
-    it and the bytes of the relations it reads: join estimates multiply
-    their sides, and a merge writes no more than it reads (a frame that
-    fans out, e.g. by an explode, can outgrow its inputs and then lands
-    as one larger file). A larger frame, or one with no estimate, is
-    returned unchanged, so a mid-size or large write keeps the
-    parallelism its plan gives it."""
-    sizes = [s for s in (plan_size_bytes(df), _read_size_bytes(df)) if s is not None]
-    limit = _parse_size_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
-    return df.coalesce(1) if sizes and min(sizes) <= limit else df
+    """``df`` coalesced to one partition when it fits in one scan split
+    (``split_count``), so a small warehouse version or lake batch is
+    written as one file and every later scan of it is one task. A frame
+    that outgrows its inputs lands as one larger file. A larger frame,
+    or one of unknown size, is returned unchanged, so a mid-size or
+    large write keeps the parallelism its plan gives it."""
+    return df.coalesce(1) if split_count(df) == 1 else df

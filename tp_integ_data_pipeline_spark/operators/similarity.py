@@ -16,11 +16,15 @@ values — no Python, no explode of the vector dimension.
 
 from __future__ import annotations
 
-import math
 import random
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from tp_integ_data_pipeline_spark.operators.layout import split_count
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -45,37 +49,98 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# Left rows verified per matmul: a verify task holds one
+# _CHUNK_ROWS × block similarity matrix at a time, not block².
+_CHUNK_ROWS = 1024
+
+
+def _pairs_at_least(
+    l_ids: np.ndarray,
+    lm: np.ndarray,
+    r_ids: np.ndarray,
+    rm: np.ndarray,
+    threshold: float,
+    same: bool,
+) -> Iterator[pd.DataFrame]:
+    """The verify kernel: one ``(a, b, cos)`` frame per chunk of
+    ``_CHUNK_ROWS`` left rows, holding the pairs whose cosine is
+    ``>= threshold``, with ``a < b``. ``lm``/``rm`` are unit rows.
+
+    ``same`` means left and right are one block sorted by id: a chunk is
+    then compared only with the rows from its own start on (the upper
+    triangle), and ``a < b`` drops the rest, so each unordered pair is
+    computed once. Otherwise the blocks are disjoint, each pair appears
+    once and its ids are ordered."""
+    for s in range(0, len(l_ids), _CHUNK_ROWS):
+        lo = s if same else 0
+        sims = lm[s : s + _CHUNK_ROWS] @ rm[lo:].T
+        li, ri = np.nonzero(sims >= threshold)
+        a, b, c = l_ids[s + li], r_ids[lo + ri], sims[li, ri]
+        if same:
+            keep = a < b
+            a, b, c = a[keep], b[keep], c[keep]
+        else:
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        yield pd.DataFrame({"a": a, "b": b, "cos": c})
+
+
+def _unit_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, vectors / their norms)`` of a non-empty ``(id, v)`` frame,
+    sorted by id."""
+    pdf = pdf.sort_values("id", kind="stable")
+    m = np.stack(pdf["v"].to_numpy()).astype("float64")
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    return pdf["id"].to_numpy(), m
+
+
 def cosine_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    n_blocks: int = 8,
 ) -> DataFrame:
-    """All pairs (a < b) with cosine >= threshold — exact, via
-    block-partitioned numpy matmul.
+    """All pairs (a < b) with cosine >= threshold — exact, via numpy
+    matmul in Python workers (BLAS inside, one Arrow roundtrip; the
+    expression-fold version of this was ~40× slower).
 
-    Each vector is replicated to the ~n_blocks block-pairs it belongs
-    to (replication factor ≈ n_blocks/2 + 1), then every block-pair
-    group computes an L·Rᵀ similarity matrix vectorized inside
-    applyInPandas. No cross join, no driver collect; executor memory
-    bounds are (corpus/n_blocks)² per task — pick n_blocks ≈
-    √(n_vectors·d / task_budget) at scale. The naive expression-fold
-    version of this was ~40× slower (per-pair norm recomputation, no
-    vectorization) — this is the Arrow/pandas "slow path" used
-    correctly: one Python roundtrip, BLAS inside.
+    The plan follows the vector frame's size in scan splits, read from
+    Catalyst's estimate at build time (``layout.split_count``; no Spark
+    job):
+
+    - Vectors that fit one split are coalesced to one partition and
+      verified by one ``mapInPandas`` task: no explode, exchange or sort.
+    - Larger frames run a block grid of n_blocks = their split count,
+      about one split of vectors per block (a frame of unknown size gets
+      one block per shuffle partition). Vector ``id`` goes to block
+      ``pmod(id, n_blocks)`` and is copied to the n_blocks block pairs
+      it belongs to (n_blocks − blk as the left side, blk as the right),
+      so replication, and the shuffle, is n_blocks × the frame; each
+      block-pair group is verified in ``applyInPandas``.
+
+    Both paths call one kernel that verifies ``_CHUNK_ROWS`` rows at a
+    time, so a task holds chunk × block similarities, not block².
     """
-    import numpy as np
-    import pandas as pd
+    e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    schema = "a long, b long, cos double"
+    n_blocks = split_count(e)
 
+    if n_blocks == 1:
+
+        def one_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            frames = [b for b in batches if len(b)]
+            if frames:
+                ids, m = _unit_rows(pd.concat(frames))
+                yield from _pairs_at_least(ids, m, ids, m, threshold, same=True)
+
+        pairs = e.coalesce(1).mapInPandas(one_task, schema=schema)
+        return pairs.select("a", "b", F.round("cos", 6).alias("cos6"))
+
+    if n_blocks is None:
+        n_blocks = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # pmod, not %: Spark's % takes the dividend's sign, so a negative id
     # would get a negative blk that no routing branch pairs with the
     # non-negative blocks — those pairs would be silently dropped.
-    e = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.col(id_col), F.lit(n_blocks)).alias("blk"),
-    )
+    e = e.withColumn("blk", F.pmod(F.col("id"), F.lit(n_blocks)))
     left = e.select(
         "id",
         "v",
@@ -110,25 +175,12 @@ def cosine_pairs(
             return pd.DataFrame({"a": [], "b": [], "cos": []}).astype(
                 {"a": "int64", "b": "int64", "cos": "float64"}
             )
-        lm = np.stack(lf["v"].to_numpy()).astype("float64")
-        rm = np.stack(rt["v"].to_numpy()).astype("float64")
-        lm /= np.linalg.norm(lm, axis=1, keepdims=True)
-        rm /= np.linalg.norm(rm, axis=1, keepdims=True)
-        sims = lm @ rm.T
-        li, ri = np.nonzero(sims >= threshold)
-        a = lf["id"].to_numpy()[li]
-        b = rt["id"].to_numpy()[ri]
-        c = sims[li, ri]
-        if diag:
-            # every unordered pair appears twice (L/R symmetric) — keep a<b
-            keep = a < b
-            a, b, c = a[keep], b[keep], c[keep]
-        else:
-            # disjoint blocks: each unordered pair appears once; order ids
-            a, b = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"a": a, "b": b, "cos": c})
+        l_ids, lm = _unit_rows(lf)
+        r_ids, rm = (l_ids, lm) if diag else _unit_rows(rt)
+        frames = _pairs_at_least(l_ids, lm, r_ids, rm, threshold, same=diag)
+        return pd.concat(frames, ignore_index=True)
 
-    pairs = both.groupBy("pa", "pb").applyInPandas(block, schema="a long, b long, cos double")
+    pairs = both.groupBy("pa", "pb").applyInPandas(block, schema=schema)
     return pairs.select("a", "b", F.round("cos", 6).alias("cos6"))
 
 
@@ -340,8 +392,6 @@ def semantic_dedup_exact_replica(
     operator itself (SemDeDup confines pairwise work to cells); one
     Arrow batch per cell. Mutation-tested in tests/test_round14_ops.py
     (a flipped keep flag is detected)."""
-    import numpy as np
-    import pandas as pd
 
     def replica(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["n_id"].to_numpy()

@@ -26,6 +26,21 @@ from pyspark.sql.types import StructType
 from tp_integ_data_pipeline_spark.operators.layout import sized_for_write
 
 
+def _key_join(df: DataFrame, existing: DataFrame, keys: list[str], how: str) -> DataFrame:
+    """``df`` semi- or anti-joined with ``existing`` on ``keys``,
+    null-safe: a NULL key component matches a NULL, as in SQL DISTINCT,
+    so a NULL-keyed row counts as present (a plain equi-join's NULL ≠
+    NULL would re-append every null-keyed re-delivery forever).
+    eqNullSafe still plans as a hash join (EqualNullSafe is an equi-join
+    key), so this costs nothing vs ``on=keys``. No distinct on the
+    existing side: a semi- or anti-join only tests existence."""
+    probe_keys = existing.select(*keys).alias("__probe")
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & F.col(f"__in.{k}").eqNullSafe(F.col(f"__probe.{k}"))
+    return df.alias("__in").join(probe_keys, cond, how)
+
+
 class DataLake:
     """Partition-aware parquet lake rooted at `root`."""
 
@@ -164,18 +179,7 @@ class DataLake:
             for d in disjuncts[1:]:
                 cond = cond | d
             probe = existing.filter(cond)
-        # Null-safe anti-join: dedup must treat NULL key components as
-        # equal (SQL DISTINCT semantics) — a plain equi-join's NULL ≠
-        # NULL would re-append every null-keyed re-delivery forever.
-        # eqNullSafe still plans as a hash join (EqualNullSafe is an
-        # equi-join key), so this costs nothing vs `on=dedup_keys`. No
-        # distinct on the probe side: an anti-join only tests existence.
-        probe_keys = probe.select(*dedup_keys).alias("__probe")
-        incoming = df.alias("__in")
-        cond = F.lit(True)
-        for k in dedup_keys:
-            cond = cond & F.col(f"__in.{k}").eqNullSafe(F.col(f"__probe.{k}"))
-        return incoming.join(probe_keys, cond, "left_anti")
+        return _key_join(df, probe, dedup_keys, "left_anti")
 
     def write_incremental(
         self,
@@ -229,17 +233,14 @@ class DataLake:
 
         `batch_skip=True` reproduces the reference's policy verbatim
         (main.py:127-133: if ANY id already present, skip the whole
-        batch); default is the per-row anti-join improvement, null-safe
-        like the reference's `isin` (NaN counts as present).
-        """
+        batch); default is the per-row anti-join improvement. Both key
+        checks are null-safe like the reference's `isin` (NaN counts as
+        present)."""
         existing = self.read(table)
         deduped = df
         if existing is not None:
             if batch_skip:
-                overlap = df.join(
-                    existing.select(*dedup_keys).distinct(), dedup_keys, "left_semi"
-                ).limit(1)
-                if len(overlap.take(1)) > 0:
+                if _key_join(df, existing, dedup_keys, "left_semi").take(1):
                     return
             else:
                 deduped = self._dedup_against_existing(df, existing, dedup_keys, None)
