@@ -139,12 +139,14 @@ def test_scan_spread_gate_and_determinism(spark, sf_dir):
 
 
 def test_parse_bytes():
-    from tp_integ_data_pipeline_spark.sources.fixtures import _parse_bytes
+    from tp_integ_data_pipeline_spark.operators.joins import parse_size_bytes
 
-    assert _parse_bytes("128m") == 128 * 1024**2
-    assert _parse_bytes("1g") == 1024**3
-    assert _parse_bytes("134217728") == 128 * 1024**2
-    assert _parse_bytes("64KB") == 64 * 1024
+    assert parse_size_bytes("128m") == 128 * 1024**2
+    assert parse_size_bytes("1g") == 1024**3
+    assert parse_size_bytes("134217728") == 128 * 1024**2
+    assert parse_size_bytes("64KB") == 64 * 1024
+    assert parse_size_bytes("134217728b") == 128 * 1024**2
+    assert parse_size_bytes("1p") == 1024**5
 
 
 def test_shim_opt_out_env(monkeypatch, spark):

@@ -36,14 +36,21 @@ def test_spread_is_bound_in_the_plan(spark, sf_dir):
 
 
 def test_worker_shim_engagement_probe(spark):
-    """VERDICT item 9: the probe must report the shim ACTIVE on this
-    session (and would print a loud warning instead of silently
-    no-opping on a Spark that ignores the hook)."""
-    from tp_integ_data_pipeline_spark.session import verify_worker_shim
-
+    """One 1-task Python job asks the WORKER whether the shim engaged.
+    The shim's zipimport patch is the marker: it is applied when the
+    shim module is imported, which only happens through the daemon's
+    spark.python.worker.module hook. That hook is an internal conf set
+    through the live SparkEnv, so a Spark that ignores it fails here
+    instead of silently running stock (correct, slower) workers."""
     if os.environ.get("SPARK_GRAFT_NO_WORKER_SHIM") == "1":
         pytest.skip("shim opted out")
-    assert verify_worker_shim(spark) is True
+
+    def engaged(_):
+        import zipimport
+
+        return bool(getattr(zipimport.zipimporter, "_engine_mtime_patched", False))
+
+    assert spark.sparkContext.parallelize([0], 1).map(engaged).collect() == [True]
 
 
 def test_irls_warm_start_same_optimum(spark):

@@ -423,48 +423,6 @@ def test_stream_static_broadcast_enrichment(spark, sf_dir, tmp_path):
     assert got == batch
 
 
-def test_transform_with_state_counter(spark, tmp_path):
-    """Spark 4 transformWithState running counter == batch aggregation.
-    SKIPPED where google.protobuf is absent (the TWS driver worker
-    requires it; this container ships Spark without protobuf)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    import uuid
-
-    from tp_integ_data_pipeline_spark.streaming.stateful import (
-        transform_with_state_counter,
-    )
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    df = spark.createDataFrame([(1, 10.0), (1, 5.0), (2, 1.0)], ["user_id", "value"])
-    df.coalesce(1).write.parquet(str(src / "f1"))
-    import glob
-    import shutil
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    shutil.copy(glob.glob(f"{src}/f1/part-*.parquet")[0], flat / "b0.parquet")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = spark.readStream.schema(df.schema).parquet(str(flat))
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        transform_with_state_counter(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.user_id: (r.n_events, r.total_value) for r in spark.table(name).collect()}
-    assert got == {1: (2, 15.0), 2: (1, 1.0)}
-
-
 def test_microbatch_ingest_with_curation_transform(spark, tmp_path):
     """Streaming curation: a per-batch transform (quality gate + token
     count) runs before dedup/append, and replaying the stream from

@@ -15,18 +15,17 @@ from pyspark.sql import functions as F
 _DEFAULT_BROADCAST_THRESHOLD = 10 * 1024 * 1024  # Spark's autoBroadcastJoinThreshold default
 
 
-def _parse_size_bytes(value) -> int:
-    """Parse a Spark size conf value ('10485760', '10MB', '-1') to bytes."""
-    s = str(value).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-                      ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s) * mult)
+_SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def parse_size_bytes(value) -> int:
+    """Parse a Spark size conf value to bytes: a bare count ('10485760',
+    '-1'), a count in bytes as Spark renders an explicitly set conf
+    ('134217728b'), or k/m/g/t/p with or without a trailing 'b'
+    ('128m', '64KB')."""
+    s = str(value).strip().lower().removesuffix("b")
+    mult = _SIZE_UNITS.get(s[-1:], 1)
+    return int(float(s[:-1] if mult > 1 else s) * mult)
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -72,7 +71,7 @@ def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFr
     if threshold_bytes is None:
         try:
             raw = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            threshold_bytes = _parse_size_bytes(raw)
+            threshold_bytes = parse_size_bytes(raw)
         except Exception:
             threshold_bytes = _DEFAULT_BROADCAST_THRESHOLD
     if threshold_bytes <= 0:

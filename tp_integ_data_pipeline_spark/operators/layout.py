@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tp_integ_data_pipeline_spark.operators.joins import _parse_size_bytes, plan_size_bytes
+from tp_integ_data_pipeline_spark.operators.joins import parse_size_bytes, plan_size_bytes
 
 Z_BITS = 16  # per-column resolution for zorder_dataframe's quantized path
 
@@ -135,7 +135,7 @@ def split_count(df: DataFrame) -> int | None:
     size = estimated_bytes(df)
     if size is None:
         return None
-    split = _parse_size_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
+    split = parse_size_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
     return max(1, -(-size // split))
 
 

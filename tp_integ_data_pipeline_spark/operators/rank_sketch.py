@@ -34,6 +34,8 @@ covering the estimates themselves.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -85,21 +87,10 @@ def rank_summaries(
     # atomic key_col; hard-coding `string` silently coerced non-string
     # keys — r7 ADVICE)
     key_type = df.schema[key_col].dataType.simpleString()
-    schema = f"key {key_type}, v double, w double"
     partials = salted.groupBy("key", "__salt").applyInPandas(
-        lambda _, pdf: compact_group(pdf), schema=schema
+        lambda _, pdf: compact_group(pdf), schema=f"key {key_type}, v double, w double"
     )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.lexsort((pdf["w"].to_numpy(), pdf["v"].to_numpy()))
-        v = pdf["v"].to_numpy(dtype=np.float64)[order]
-        w = pdf["w"].to_numpy(dtype=np.float64)[order]
-        cv, cw = _compact(v, w, k)
-        return pd.DataFrame({"key": pdf["key"].iloc[0], "v": cv, "w": cw})
-
-    return partials.groupBy("key").applyInPandas(
-        lambda _, pdf: merge_group(pdf), schema=schema
-    )
+    return merge_summaries(partials, k=k)
 
 
 def summary_quantiles(summary: DataFrame, probs: list[float]) -> DataFrame:
@@ -171,18 +162,17 @@ def rank_error_audit(
     )
 
 
-def merge_summaries(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
-    """Merge two summary relations (key, v, w) into one — the
+def merge_summaries(*summaries: DataFrame, k: int = 256) -> DataFrame:
+    """Merge summary relations (key, v, w) into one — the
     persist-and-re-aggregate verb: yesterday's summary + today's
-    summary without rescanning either day's raw data. Concatenate and
-    recompact per key; adds at most one W/k rank perturbation per
+    summary without rescanning either day's raw data, and the second
+    level of ``rank_summaries`` over its per-salt partials. Concatenate
+    and recompact per key; adds at most one W/k rank perturbation per
     merge level (tests bound a whole binary merge tree empirically).
-    Same applyInPandas shape as the fit path: each key's input is
-    <= 2k rows."""
-    import numpy as np
-    import pandas as pd
-
-    both = a.unionByName(b)
+    Each key's input is <= len(summaries)·k rows for summaries of <= k
+    points; sorting by (v, w) first makes the result independent of row
+    arrival order."""
+    both = functools.reduce(DataFrame.unionByName, summaries)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.lexsort((pdf["w"].to_numpy(), pdf["v"].to_numpy()))
@@ -191,10 +181,9 @@ def merge_summaries(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
         cv, cw = _compact(v, w, k)
         return pd.DataFrame({"key": pdf["key"].iloc[0], "v": cv, "w": cw})
 
-    # derive the key type from the input summaries (same r7-ADVICE fix
-    # as rank_summaries — a hard-coded string key silently coerced or
-    # failed non-string keys)
-    key_type = a.schema["key"].dataType.simpleString()
+    # the key type follows the input summaries (a hard-coded string key
+    # silently coerced or failed non-string keys)
+    key_type = both.schema["key"].dataType.simpleString()
     return both.groupBy("key").applyInPandas(
         lambda _, pdf: merge_group(pdf), schema=f"key {key_type}, v double, w double"
     )

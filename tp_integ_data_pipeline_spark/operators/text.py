@@ -82,19 +82,40 @@ def char_ngrams(text_col: str = "text", k: int = 3) -> Column:
     )
 
 
-def lang_profiles(labeled: DataFrame, text_col="text", lang_col="lang", k=3, top_n=20) -> DataFrame:
-    """Top-`top_n` character k-grams per language from a labeled corpus
-    → (lang, gram) profile relation. Ties broken by gram asc."""
-    grams = labeled.select(
-        F.col(lang_col).alias("lang"), F.explode(char_ngrams(text_col, k)).alias("gram")
-    )
-    counts = grams.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c"))
+def _top_grams(counts: DataFrame, top_n: int) -> DataFrame:
+    """(lang, gram, c) counts → the top-`top_n` grams per lang as a
+    (lang, gram) profile relation. Ties broken by gram asc."""
     w = W.partitionBy("lang").orderBy(F.col("c").desc(), "gram")
     return (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= top_n)
         .select("lang", "gram")
     )
+
+
+def _best_lang(ids: DataFrame, doc_grams: DataFrame, profiles: DataFrame) -> DataFrame:
+    """Argmax over langs of each doc's distinct-gram hits against the
+    (lang, gram) profiles, ties broken by lang asc; an id in `ids` with
+    no hit → 'und'. Returns (id, predicted_lang)."""
+    scores = (
+        doc_grams.join(F.broadcast(profiles), "gram")
+        .groupBy("id", "lang")
+        .agg(F.count(F.lit(1)).alias("score"))
+    )
+    w = W.partitionBy("id").orderBy(F.col("score").desc(), "lang")
+    best = scores.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    return ids.join(best.select("id", F.col("lang").alias("predicted_lang")), "id", "left").select(
+        "id", F.coalesce("predicted_lang", F.lit("und")).alias("predicted_lang")
+    )
+
+
+def lang_profiles(labeled: DataFrame, text_col="text", lang_col="lang", k=3, top_n=20) -> DataFrame:
+    """Top-`top_n` character k-grams per language from a labeled corpus
+    → (lang, gram) profile relation. Ties broken by gram asc."""
+    grams = labeled.select(
+        F.col(lang_col).alias("lang"), F.explode(char_ngrams(text_col, k)).alias("gram")
+    )
+    return _top_grams(grams.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c")), top_n)
 
 
 def lang_id(docs: DataFrame, profiles: DataFrame, id_col="doc_id", text_col="text", k=3) -> DataFrame:
@@ -118,18 +139,7 @@ def lang_id(docs: DataFrame, profiles: DataFrame, id_col="doc_id", text_col="tex
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(char_ngrams(text_col, k))).alias("gram"),
     )
-    scores = (
-        doc_grams.join(F.broadcast(profiles), "gram")
-        .groupBy("id", "lang")
-        .agg(F.count(F.lit(1)).alias("score"))
-    )
-    w = W.partitionBy("id").orderBy(F.col("score").desc(), "lang")
-    best = scores.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return (
-        docs.select(F.col(id_col).alias("id"))
-        .join(best.select("id", F.col("lang").alias("predicted_lang")), "id", "left")
-        .select("id", F.coalesce("predicted_lang", F.lit("und")).alias("predicted_lang"))
-    )
+    return _best_lang(docs.select(F.col(id_col).alias("id")), doc_grams, profiles)
 
 
 def lang_profile_and_id(
@@ -160,26 +170,9 @@ def lang_profile_and_id(
         F.col(lang_col).alias("lang"),
         F.explode(char_ngrams(text_col, k)).alias("gram"),
     ).localCheckpoint(eager=False)
-    counts = base.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c"))
-    w = W.partitionBy("lang").orderBy(F.col("c").desc(), "gram")
-    profiles = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .select(F.col("lang").alias("plang"), "gram")
-    )
+    profiles = _top_grams(base.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c")), top_n)
     doc_grams = base.select("id", "gram").dropDuplicates(["id", "gram"])
-    scores = (
-        doc_grams.join(F.broadcast(profiles), "gram")
-        .groupBy("id", "plang")
-        .agg(F.count(F.lit(1)).alias("score"))
-    )
-    w2 = W.partitionBy("id").orderBy(F.col("score").desc(), "plang")
-    best = scores.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") == 1)
-    return (
-        labeled.select(F.col(id_col).alias("id"))
-        .join(best.select("id", F.col("plang").alias("predicted_lang")), "id", "left")
-        .select("id", F.coalesce("predicted_lang", F.lit("und")).alias("predicted_lang"))
-    )
+    return _best_lang(labeled.select(F.col(id_col).alias("id")), doc_grams, profiles)
 
 
 def fingerprint(text_col: str = "text", k: int = 8) -> Column:

@@ -20,13 +20,14 @@ Scale notes (design point: 1000 executors, 100 TB corpus):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.admission import bounded_bench_grams
+from tp_integ_data_pipeline_spark.operators.dedup import exact_dedup
 from tp_integ_data_pipeline_spark.operators.text import tokens, word_ngrams
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
+from tp_integ_data_pipeline_spark.sources.shards import shard_id
 
 
 # --------------------------------------------------------------------------
@@ -208,12 +209,8 @@ def q96_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance audit (a skewed shard here means a straggling data-loader
     at training time)."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10).cast("int"),
-        F.lit(16),
-    )
     return (
-        docs.select(shard.alias("shard"), "n_chars", "doc_id")
+        docs.select(shard_id("doc_id", 16).alias("shard"), "n_chars", "doc_id")
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -262,14 +259,7 @@ def q97_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q76's digits), shard assignment (q96's) — Catalyst fuses the
     post-dedup steps into the same stage, so the corpus is shuffled
     exactly once (on text) before the final group-by."""
-    docs = load_table(spark, sf_dir, "documents")
-    canon = (
-        docs.withColumn(
-            "rn", F.row_number().over(W.partitionBy("text").orderBy("doc_id"))
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    canon = exact_dedup(load_table(spark, sf_dir, "documents"), ["text"], "doc_id")
     w = tokens()
     n_words = F.size(w)
     sum_len = F.aggregate(
@@ -282,13 +272,11 @@ def q97_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (sum_len * F.lit(1.0) / n_words).between(3.0, 10.0)
         & (F.size(F.array_distinct(w)) * F.lit(1.0) / n_words >= 0.3)
     )
-    h = F.md5(F.col("doc_id").cast("string"))
-    d = F.conv(F.substring(h, 1, 1), 16, 10).cast("int")
+    d = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10).cast("int")
     split = F.when(d < 12, "train").when(d < 14, "val").otherwise("test")
-    shard = F.pmod(F.conv(F.substring(h, 1, 2), 16, 10).cast("int"), F.lit(16))
     return (
         canon.filter(keep)
-        .select(split.alias("split"), "n_chars", shard.alias("shard"))
+        .select(split.alias("split"), "n_chars", shard_id("doc_id", 16).alias("shard"))
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -194,36 +194,6 @@ def _shim_dir() -> str:
     return d
 
 
-def verify_worker_shim(spark: SparkSession) -> bool:
-    """One tiny (1-task) Python job that asks the WORKER whether the
-    shim actually engaged (the zipimport patch is the marker: it is
-    applied at shim import, which only happens via the daemon's
-    spark.python.worker.module hook). Round-15 VERDICT item 9: the
-    hook is an internal conf set through the live SparkEnv, so a Spark
-    upgrade could silently no-op it — this makes that loud. Returns
-    True/False; logs on failure instead of raising (the shim fails
-    open by design — stock workers are slower, never wrong)."""
-    if os.environ.get("SPARK_GRAFT_NO_WORKER_SHIM") == "1":
-        return False
-
-    def probe(_):
-        import zipimport
-
-        return bool(getattr(zipimport.zipimporter, "_engine_mtime_patched", False))
-
-    try:
-        engaged = spark.sparkContext.parallelize([0], 1).map(probe).collect()[0]
-    except Exception:  # pragma: no cover - probe is diagnostics only
-        return False
-    if not engaged:
-        print(
-            "[session] WARNING: python-worker shim did NOT engage "
-            "(spark.python.worker.module hook ignored — Spark upgrade?); "
-            "running with stock workers (correct, slower)."
-        )
-    return bool(engaged)
-
-
 def _install_worker_shim(spark: SparkSession) -> None:
     """Best-effort activation on a live session (works for both the
     engine-built session and the driver harness's own session): the

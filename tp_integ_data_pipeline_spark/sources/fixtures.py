@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tp_integ_data_pipeline_spark.operators.joins import parse_size_bytes
+
 FIXTURE_TABLES = (
     "region",
     "nation",
@@ -113,9 +115,7 @@ def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> 
     is light the extra exchange costs more than it saves."""
     try:
         size = os.path.getsize(path)
-        max_split = int(
-            _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-        )
+        max_split = parse_size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
         # lower bound: on a small file the 32-task wave costs more
         # than the serial map work it spreads (the sf0.01 corpora stay
         # single-task)
@@ -148,22 +148,6 @@ _SPREAD_MIN_BYTES = 512 * 1024
 _SPREAD_PARTITIONS = 32
 
 _SPREAD_FALLBACK_WARNED = False
-
-
-def _parse_bytes(v: str) -> int:
-    """Spark size-string → bytes. Handles Spark's own renderings too:
-    a bare trailing 'b' ('134217728b' — returned when the conf was set
-    explicitly) and t/p units (r15 ADVICE)."""
-    v = v.strip().lower()
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "p": 1024**5}
-    for suffix, mult in units.items():
-        if v.endswith(suffix + "b"):
-            return int(float(v[:-2]) * mult)
-        if v.endswith(suffix):
-            return int(float(v[:-1]) * mult)
-    if v.endswith("b"):
-        return int(float(v[:-1]))
-    return int(v)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=FIXTURE_TABLES) -> None:

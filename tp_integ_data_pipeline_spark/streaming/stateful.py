@@ -49,64 +49,3 @@ def stateful_user_counter(events_stream: DataFrame) -> DataFrame:
         )
     )
 
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4 arbitrary-state API.
-# ENVIRONMENT-GATED: executing this operator requires `google.protobuf`
-# in the Python env (Spark's TWS driver worker speaks protobuf to the
-# JVM; verified failure mode: STREAMING_PYTHON_RUNNER_INITIALIZATION_
-# FAILURE / ImportError google.protobuf.descriptor). This container has
-# no protobuf and installs are off-limits, so the operator ships
-# implemented + import-gated with a skip-gated test; q64's
-# applyInPandasWithState covers the exercised custom-stateful path.
-# --------------------------------------------------------------------------
-try:  # pragma: no cover - import-gated for older runtimes
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserCounterProcessor(StatefulProcessor):
-        """Per-user running (count, sum) on the new transformWithState
-        API: typed ValueState in the state store (RocksDB-backed on a
-        real cluster), explicit init/close lifecycle — the successor to
-        applyInPandasWithState with first-class state types, timers and
-        TTL support."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "counter", "n bigint, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    def transform_with_state_counter(events_stream: DataFrame) -> DataFrame:
-        return (
-            events_stream.select("user_id", "value")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                UserCounterProcessor(),
-                outputStructType=COUNTER_OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-
-except ImportError:  # pragma: no cover
-    UserCounterProcessor = None
-
-    def transform_with_state_counter(events_stream: DataFrame) -> DataFrame:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0"
-        )
