@@ -179,7 +179,7 @@ def scale_probe(spark, sf_dir: str) -> dict:
     # inflate 10×; replicas keep the vocab and the learned merge
     # sequence IDENTICAL while word frequencies scale 10×). Healthy =
     # sublinear wall time (each round is one vocab-sized count with a
-    # 1-row argmax; only the first _word_vocab count sees 10× tokens)
+    # 1-row argmax; only the first word_vocab count sees 10× tokens)
     # and the exact same merges. A superlinear ratio flags a
     # lineage/storage leak across the checkpointed rounds.
     from tp_integ_data_pipeline_spark.operators.bpe import train_bpe

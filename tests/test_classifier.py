@@ -9,13 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.classifier import (
-    _weights_df,
     feature_bucket,
     hashed_word_features,
     logreg_irls_train,
     margins,
     score_frozen,
     stationarity_residuals,
+    weights_df,
 )
 from tp_integ_data_pipeline_spark.plans.registry import QUERIES
 from tp_integ_data_pipeline_spark.plans.classifier_queries import _BIAS, _D, _FROZEN
@@ -80,7 +80,7 @@ def test_irls_recovers_planted_separator(spark):
         .collect()[0][0]
     )
     assert int(np.argmax(beta[:d])) == j_pos
-    m = margins(feats, _weights_df(spark, beta))
+    m = margins(feats, weights_df(spark, beta))
     acc = (
         m.join(labels, "id")
         .select(((F.col("p") >= 0.5).cast("double") == F.col("y")).cast("double").alias("ok"))
@@ -89,7 +89,7 @@ def test_irls_recovers_planted_separator(spark):
     )
     assert acc == 1.0
     # stationarity: the invariant q242 is graded on
-    res = stationarity_residuals(feats, labels, _weights_df(spark, beta), l2=1.0)
+    res = stationarity_residuals(feats, labels, weights_df(spark, beta), l2=1.0)
     assert res.agg(F.max(F.abs("grad_res"))).collect()[0][0] == 0.0
 
 
@@ -187,9 +187,9 @@ def test_irls_all_one_class(spark):
     labels = df.select(F.col("doc_id").alias("id"), "y")
     beta = logreg_irls_train(spark, feats, labels, d=9, n_iters=8, l2=1.0)
     assert np.all(np.isfinite(beta))
-    res = stationarity_residuals(feats, labels, _weights_df(spark, beta), l2=1.0)
+    res = stationarity_residuals(feats, labels, weights_df(spark, beta), l2=1.0)
     assert res.agg(F.max(F.abs("grad_res"))).collect()[0][0] == 0.0
-    m = margins(feats, _weights_df(spark, beta))
+    m = margins(feats, weights_df(spark, beta))
     assert all(r.p > 0.5 for r in m.collect())
 
 
@@ -229,7 +229,7 @@ def test_irls_early_stop_matches_fixed_schedule(spark, sf_dir):
         spark, feats, labels, d=_D + 1, n_iters=25, l2=1.0, tol=5e-7
     )
     assert np.abs(fixed - tol).max() < 1e-6
-    res = stationarity_residuals(feats, labels, _weights_df(spark, tol), l2=1.0)
+    res = stationarity_residuals(feats, labels, weights_df(spark, tol), l2=1.0)
     assert res.agg(F.max(F.abs("grad_res"))).collect()[0][0] == 0.0
 
 
@@ -259,7 +259,7 @@ def test_irls_tol_margin_below_grading_boundary(spark, sf_dir):
     beta = logreg_irls_train(
         spark, feats, labels, d=_D + 1, n_iters=25, l2=1.0, tol=_IRLS_TOL
     )
-    w = _weights_df(spark, beta)
+    w = weights_df(spark, beta)
     m = margins(feats, w)
     gd = (
         feats.join(labels, "id")

@@ -1,6 +1,7 @@
 """Module layout gate: query and test modules are named by operator
 family, not by round, the layers beneath the query plans (operators,
-sources, streaming, functions) never import them, no module keeps
+sources, streaming, functions) never import them, no package module
+imports another's underscore-prefixed name, no module keeps
 a memo dict of its own (cross-query reuse goes through
 plans/session_cache.py), and every top-level definition in the package
 is reached from a query, module-level code or an entry point."""
@@ -70,6 +71,20 @@ def test_modules_named_by_family_and_layered():
         if m == PLANS or m.startswith(PLANS + ".")
     ]
     assert upward == []
+
+
+def test_no_private_import_across_modules():
+    """A name that another package module imports is public: it carries
+    no leading underscore."""
+    private = [
+        f"{p.relative_to(PKG).as_posix()} imports {node.module}.{a.name}"
+        for p in PKG.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG.name)
+        for a in node.names
+        if a.name.startswith("_")
+    ]
+    assert private == []
 
 
 def _module_dicts(tree: ast.Module) -> list[str]:

@@ -68,7 +68,7 @@ def test_q47_range_join_covers_id_time_disorder(spark, tmp_path):
     pair; an a_id < b_id join predicate would drop it."""
     import datetime
 
-    from tp_integ_data_pipeline_spark.plans.batteries import q47_range_join
+    from tp_integ_data_pipeline_spark.plans.event_queries import q47_range_join
 
     base = datetime.datetime(2024, 1, 1, 0, 0, 0)
     rows = [

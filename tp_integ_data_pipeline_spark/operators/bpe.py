@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from tp_integ_data_pipeline_spark.operators.text import tokens
 
 
-def _word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
+def word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
     words = docs.select(F.explode(tokens(text_col)).alias("word"))
     return (
         words.filter(F.length("word") > 0)
@@ -100,7 +100,7 @@ def train_bpe(
     and run the remaining rounds driver-side over it."""
     import gc
 
-    base = vocab if vocab is not None else _word_vocab(docs, text_col)
+    base = vocab if vocab is not None else word_vocab(docs, text_col)
     # filter the trailing '' that split's limit=-1 keeps: without it
     # training sees a phantom end-of-word symbol the apply path
     # (_tokenize_word = list(word)) never sees, and merges learned
@@ -179,7 +179,7 @@ def apply_bpe(
     train→apply workflow."""
     import pandas as pd
 
-    vocab = vocab if vocab is not None else _word_vocab(docs, text_col)
+    vocab = vocab if vocab is not None else word_vocab(docs, text_col)
     mlist = list(merges)
 
     def tok(batches):

@@ -73,7 +73,7 @@ def hashed_word_features(
     return feats
 
 
-def _weights_df(spark: SparkSession, beta: np.ndarray) -> DataFrame:
+def weights_df(spark: SparkSession, beta: np.ndarray) -> DataFrame:
     return spark.createDataFrame(
         [(int(j), float(b)) for j, b in enumerate(beta)], "j int, beta double"
     )

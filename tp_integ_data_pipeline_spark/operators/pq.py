@@ -192,8 +192,8 @@ def ivf_pq_topk(
     again (an id equi-join back into the bucketed corpus).
     """
     from tp_integ_data_pipeline_spark.operators.similarity import (
-        _nearest_cells,
-        _with_centroid_list,
+        nearest_cells,
+        with_centroid_list,
     )
 
     if inverted is None:
@@ -201,11 +201,11 @@ def ivf_pq_topk(
 
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
     probed = (
-        _with_centroid_list(q, centroids)
+        with_centroid_list(q, centroids)
         .select(
             "q_id",
             "qv",
-            F.explode(_nearest_cells(F.col("qv"), F.col("__cs"), n_probe)).alias("p"),
+            F.explode(nearest_cells(F.col("qv"), F.col("__cs"), n_probe)).alias("p"),
         )
         .select("q_id", "qv", F.col("p.cell").alias("cell"))
     )

@@ -232,7 +232,7 @@ def ivf_fit(
     return emb.sparkSession.createDataFrame(rows, "cell int, centroid array<double>")
 
 
-def _nearest_cells(vec: Column, cs: Column, n: int) -> Column:
+def nearest_cells(vec: Column, cs: Column, n: int) -> Column:
     """Array of the `n` nearest (sq-dist, cell) structs from the
     broadcast centroid list `cs` — row-local higher-order-function work,
     no shuffle, no per-centroid plan literals."""
@@ -254,7 +254,7 @@ def _nearest_cells(vec: Column, cs: Column, n: int) -> Column:
     return F.slice(F.sort_array(scored), 1, n)
 
 
-def _with_centroid_list(df: DataFrame, centroids: DataFrame) -> DataFrame:
+def with_centroid_list(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Attach the full centroid table as ONE broadcast array column
     (`__cs`) — the model travels as data, not as plan literals, so the
     plan size is independent of n_cells."""
@@ -276,9 +276,9 @@ def ivf_assign(
     scan only n_probe/n_cells of the corpus."""
     e = emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv"))
     return (
-        _with_centroid_list(e, centroids)
+        with_centroid_list(e, centroids)
         .select(
-            "n_id", "nv", _nearest_cells(F.col("nv"), F.col("__cs"), 1)[0]["cell"].alias("cell")
+            "n_id", "nv", nearest_cells(F.col("nv"), F.col("__cs"), 1)[0]["cell"].alias("cell")
         )
     )
 
@@ -306,11 +306,11 @@ def ivf_topk(
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
     probed = (
-        _with_centroid_list(q, centroids)
+        with_centroid_list(q, centroids)
         .select(
             "q_id",
             "qv",
-            F.explode(_nearest_cells(F.col("qv"), F.col("__cs"), n_probe)).alias("p"),
+            F.explode(nearest_cells(F.col("qv"), F.col("__cs"), n_probe)).alias("p"),
         )
         .select("q_id", "qv", F.col("p.cell").alias("cell"))
     )

@@ -97,6 +97,27 @@ def grouped_median(df: DataFrame, keys: list[str], val: str, out: str) -> DataFr
     return mid.groupBy(*keys).agg(F.avg("__v").alias(out))
 
 
+def exact_moments(df: DataFrame, key: str) -> DataFrame:
+    """Per-``key`` raw moments of the DECIMAL columns ``x`` and ``y``:
+    ``n`` and the sums ``sx``, ``sy``, ``sxy``, ``sxx`` and ``syy``,
+    each summed exactly in DECIMAL and then cast to double. An exact sum
+    does not depend on the partial-aggregation order, so statistics
+    derived from these moments by one double expression tree are
+    bit-identical across partitionings and engines (q88, q189). Cast
+    the inputs to DECIMAL before calling: the engines round the DECIMAL
+    cast of a double product differently. One map-side-combined
+    rollup."""
+    x, y = F.col("x"), F.col("y")
+    return df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).cast("double").alias("sx"),
+        F.sum(y).cast("double").alias("sy"),
+        F.sum(x * y).cast("double").alias("sxy"),
+        F.sum(x * x).cast("double").alias("sxx"),
+        F.sum(y * y).cast("double").alias("syy"),
+    )
+
+
 def robust_outliers(
     df: DataFrame, keys: list[str], val: str, z: float = 3.5
 ) -> DataFrame:

@@ -11,13 +11,7 @@ from tp_integ_data_pipeline_spark.plans import similarity_queries  # noqa: E402,
 from tp_integ_data_pipeline_spark.plans import text_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import merge_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import streaming_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import advanced  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import extras  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import udtf_lake_queries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import batteries  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import tpch_more  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import ml_data  # noqa: E402,F401
-from tp_integ_data_pipeline_spark.plans import tpch_wide  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import curation  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import selection_queries  # noqa: E402,F401
 from tp_integ_data_pipeline_spark.plans import embedding_queries  # noqa: E402,F401

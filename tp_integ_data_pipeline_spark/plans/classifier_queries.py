@@ -21,11 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tp_integ_data_pipeline_spark.operators.classifier import (
-    _weights_df,
     hashed_word_features,
     logreg_irls_train,
     score_frozen,
     stationarity_residuals,
+    weights_df,
 )
 from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
@@ -214,7 +214,7 @@ def q242_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         tol=_IRLS_TOL,
         beta0=beta_init,
     )
-    w_df = _weights_df(spark, beta)
+    w_df = weights_df(spark, beta)
     res = stationarity_residuals(feats, labels, w_df, l2=_L2).localCheckpoint(
         eager=True
     )

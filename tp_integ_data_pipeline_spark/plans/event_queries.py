@@ -1,14 +1,16 @@
 """Product-analytics queries over the `events` table: sequenced
 funnels, cohort retention, transition matrices, new vs returning
 users, A/B readouts (two-proportion z-test, sample-ratio check,
-difference-in-differences), attribution, session entry paths and
-concurrency, and time-to-purchase survival. No reference-repo
+difference-in-differences), attribution, gap sessionization, session
+entry paths and concurrency, a bucketized range self-join, and
+time-to-purchase survival. No reference-repo
 counterpart — SURVEY.md §2.10 extension surface."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
@@ -505,8 +507,6 @@ def q218_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique-key precondition holds by construction); only its
     ≤ n_buckets offset table is ever partitionless. The day peak is a
     map-side-combinable rollup of the boundary relation."""
-    from pyspark.sql.window import Window as W
-
     from tp_integ_data_pipeline_spark.operators.packing import global_cumsum
 
     ev = load_table(spark, sf_dir, "events")
@@ -595,8 +595,6 @@ def q221_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass (first_value + ignore-nulls last over the shifted
     frame) — no self-joins, no per-purchase scans; the channel
     rollups and their full-outer alignment are event-type-bounded."""
-    from pyspark.sql.window import Window as W
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     uw = W.partitionBy("user_id").orderBy("ts", "event_id")
     w = ev.select(
@@ -628,6 +626,23 @@ def q221_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("lc", F.lit(0)).cast("long").alias("last_conv"),
         )
         .orderBy("channel")
+    )
+
+
+def _sessionized(ev: DataFrame) -> DataFrame:
+    """``ev`` with ``sess_id``, each user's running session number: a
+    new session starts after a gap of 30 minutes or more, and
+    ``(ts, event_id)`` breaks ties. Two user-partitioned window
+    passes (q28, q222)."""
+    uw = W.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
+    new_sess = F.when(
+        (us - F.lag(us).over(uw) >= 1800 * 1000 * 1000) | F.lag("ts").over(uw).isNull(),
+        1,
+    ).otherwise(0)
+    return ev.withColumn("new_sess", new_sess).withColumn(
+        "sess_id",
+        F.sum("new_sess").over(uw.rowsBetween(W.unboundedPreceding, W.currentRow)),
     )
 
 
@@ -677,19 +692,8 @@ def q222_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-session collected triples (sessions are gap-bounded, not
     data-sized); the path rollup is bounded by |event types|³ and the
     final top-k is a TakeOrdered over that bounded relation."""
-    from pyspark.sql.window import Window as W
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    uw = W.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts"))
-    new_sess = F.when(
-        (us - F.lag(us).over(uw) >= 1800 * 1000 * 1000) | F.lag("ts").over(uw).isNull(),
-        1,
-    ).otherwise(0)
-    s = ev.withColumn("new_sess", new_sess).withColumn(
-        "sess_id",
-        F.sum("new_sess").over(uw.rowsBetween(W.unboundedPreceding, W.currentRow)),
-    )
+    s = _sessionized(ev)
     paths = s.groupBy("user_id", "sess_id").agg(
         F.array_join(
             F.slice(
@@ -780,8 +784,6 @@ def q223_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     after operates on the day-bounded duration relation
     (observation-span rows — GLOBAL_WINDOW_ALLOWED precedent) with
     the user total as a 1-row broadcast scalar (BNLJ_ALLOWED)."""
-    from pyspark.sql.window import Window as W
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     us = F.unix_micros(F.col("ts"))
     u = ev.groupBy("user_id").agg(
@@ -1001,4 +1003,101 @@ def q233_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "srm_flag",
         )
         .orderBy("arm")
+    )
+
+
+# --------------------------------------------------------------------------
+# q28 — sessionization via window gap analysis
+# --------------------------------------------------------------------------
+@query(
+    "q28_sessionization",
+    oracle="""
+    WITH g AS (
+        SELECT user_id, ts, event_id,
+               CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER
+                        (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
+                    OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                    THEN 1 ELSE 0 END AS new_sess
+        FROM events
+    ),
+    s AS (
+        SELECT user_id,
+               CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_id
+        FROM g
+    ),
+    per_sess AS (SELECT user_id, sess_id, COUNT(*) AS n FROM s GROUP BY 1, 2)
+    SELECT user_id,
+           CAST(MAX(sess_id) AS BIGINT) AS n_sessions,
+           CAST(MAX(n) AS BIGINT) AS largest_session
+    FROM per_sess
+    GROUP BY user_id
+    ORDER BY user_id
+    """,
+)
+def q28_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sess = _sessionized(load_table(spark, sf_dir, "events"))
+    per_sess = sess.groupBy("user_id", "sess_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        per_sess.groupBy("user_id")
+        .agg(F.max("sess_id").alias("n_sessions"), F.max("n").alias("largest_session"))
+        .orderBy("user_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# q47 — range join via bucketization (guide: "bucketize the range key +
+# equi-join on bucket + filter"). Pairs of events by the same user
+# within 60 s of each other.
+# --------------------------------------------------------------------------
+@query(
+    "q47_range_join",
+    oracle="""
+    SELECT a.user_id, COUNT(*) AS n_close_pairs
+    FROM events a JOIN events b
+      ON a.user_id = b.user_id
+     AND a.event_id < b.event_id
+     AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 60000000
+    GROUP BY a.user_id
+    ORDER BY a.user_id
+    """,
+)
+def q47_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-join on (user, minute-bucket ± 1) prunes the quadratic
+    candidate space to adjacent buckets, then the exact |Δt| ≤ 60 s
+    predicate filters — the scalable form of an interval self-join
+    (a raw theta-join would be O(n²) per user). Only the left side is
+    bucket-exploded (2×). Pairing is SYMMETRIC (a_id != b_id, then
+    canonicalized to (least, greatest) ids before distinct): for any
+    qualifying pair the orientation whose a-side sits in the earlier
+    bucket always matches, so coverage never depends on event ids
+    being ordered like timestamps — an a_id < b_id join predicate
+    would silently drop boundary-straddling pairs whose smaller id is
+    the later event."""
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
+    us = F.unix_micros(F.col("ts"))
+    minute = (us / F.lit(60_000_000)).cast("long")
+    left = ev.select(
+        "user_id", F.col("event_id").alias("a_id"), us.alias("a_us"), minute.alias("m")
+    ).withColumn("bucket", F.explode(F.array(F.col("m"), F.col("m") + 1))).drop("m")
+    right = ev.select(
+        "user_id", F.col("event_id").alias("b_id"), us.alias("b_us"), minute.alias("bucket")
+    )
+    pairs = (
+        left.join(right, ["user_id", "bucket"])
+        .filter(
+            (F.col("a_id") != F.col("b_id"))
+            & (F.abs(F.col("a_us") - F.col("b_us")) <= 60_000_000)
+        )
+        .select(
+            "user_id",
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+        )
+        .distinct()
+    )
+    return (
+        pairs.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_close_pairs"))
+        .orderBy("user_id")
     )

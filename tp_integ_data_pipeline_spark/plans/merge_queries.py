@@ -1,4 +1,5 @@
-"""MERGE end-state queries (SURVEY.md §2.8 M1/M2) and CDC-log compaction.
+"""MERGE end-state queries (SURVEY.md §2.8 M1/M2), CDC-log compaction and
+the lake write path (S6) inside a checked query.
 
 The DuckDB oracle expresses the merge RESULT as a SELECT (set algebra
 over target/stage), which is exactly the plain-Spark rewrite's
@@ -15,6 +16,7 @@ from tp_integ_data_pipeline_spark.operators.change_feed import compact_cdc
 from tp_integ_data_pipeline_spark.operators.merge_ops import insert_if_absent, scd1_upsert
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table, scratch_dir
+from tp_integ_data_pipeline_spark.sources.lake import DataLake
 
 
 def _customer_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,3 +508,46 @@ def q155_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap = compact_cdc(feed, ["k"], "ts", "seq", op_col="op")
     return snap.select("k", F.round("value", 6).alias("value"), "ts", "seq").orderBy("k")
+
+
+# --------------------------------------------------------------------------
+# q45 — lake write path inside the checked query (S6)
+# --------------------------------------------------------------------------
+@query(
+    "q45_lake_roundtrip",
+    oracle="""
+    SELECT strftime(l_shipdate, '%m-%d-%y') AS fecha_partic,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '2001-10-01'
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def q45_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6 write path INSIDE the checked query: land a lineitem slice in
+    a hive-partitioned lake (twice — idempotency via anti-join dedup),
+    read it back through partition discovery, aggregate. The oracle is
+    the direct query: the lake roundtrip must be value-invisible."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") >= F.lit("2001-10-01").cast("timestamp")
+    )
+    staged = li.withColumn("fecha_partic", F.date_format("l_shipdate", "MM-dd-yy"))
+    lake = DataLake(spark, scratch_dir(prefix="lake_q45_"))
+    keys = ["l_orderkey", "l_linenumber"]
+    # probe_partitions=True: fecha_partic is derived from l_shipdate,
+    # which is fixed per (l_orderkey, l_linenumber) — key → partition FD
+    lake.write_incremental("li", staged, ["fecha_partic"], dedup_keys=keys, probe_partitions=True)
+    lake.write_incremental("li", staged, ["fecha_partic"], dedup_keys=keys, probe_partitions=True)  # no-op re-run
+    back = lake.read("li")
+    return (
+        back.groupBy("fecha_partic")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias(
+                "total_price"
+            ),
+        )
+        .orderBy("fecha_partic")
+    )

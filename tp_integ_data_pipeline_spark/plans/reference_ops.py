@@ -25,7 +25,7 @@ from tp_integ_data_pipeline_spark.functions.reference import (
 from tp_integ_data_pipeline_spark.operators.joins import maybe_broadcast
 from tp_integ_data_pipeline_spark.operators.text import tokens
 from tp_integ_data_pipeline_spark.plans.registry import query
-from tp_integ_data_pipeline_spark.plans.relational import _dsum, dsum_sql
+from tp_integ_data_pipeline_spark.plans.relational import dsum, dsum_sql
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
 
@@ -69,7 +69,7 @@ def q00_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("order_date", date_ddmmyyyy("o_orderdate"))
         .groupBy(F.col("r_name").alias("region"), "order_date")
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
             F.countDistinct("o_orderkey").alias("n_orders"),
         )

@@ -574,15 +574,11 @@ def q153_bpe_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence plus the compression this merge table bought
     (chars-per-token fertility). Completes q114 (one counting round)
     into the actual train→apply tokenizer workflow."""
-    from tp_integ_data_pipeline_spark.operators.bpe import (
-        _word_vocab,
-        apply_bpe,
-        train_bpe,
-    )
+    from tp_integ_data_pipeline_spark.operators.bpe import apply_bpe, train_bpe, word_vocab
 
     docs = load_table(spark, sf_dir, "documents")
     # ONE corpus-token shuffle feeds both train and apply
-    vocab = _word_vocab(docs, "text").localCheckpoint(eager=False)
+    vocab = word_vocab(docs, "text").localCheckpoint(eager=False)
     merges = train_bpe(docs, n_merges=8, vocab=vocab)
     toked = apply_bpe(docs, merges, vocab=vocab)
     return (

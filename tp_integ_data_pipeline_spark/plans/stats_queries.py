@@ -1,17 +1,20 @@
 """Statistics, data-quality and sketch queries: DQ audit batteries
 (null/range/enum checks, functional dependencies, referential
 integrity, Benford, reconciliation), mergeable sketches (count-min,
-KMV, Bloom, rank sketch), exact grouped quantiles, drift and dependence
-measures (PSI, WOE/IV, correlation, chi-squared, mutual information,
-calibration, jackknife, rater agreement) and release audits
-(k-anonymity, l-diversity). No reference-repo counterpart — SURVEY.md
+KMV, Bloom, rank sketch) and the approximate-aggregate audit, exact
+grouped quantiles and medians, exact moments, a grouped-agg pandas
+UDAF, drift and dependence measures (PSI, WOE/IV, correlation,
+chi-squared, mutual information, calibration, jackknife, rater
+agreement) and release audits (k-anonymity, l-diversity). No reference-repo counterpart — SURVEY.md
 §2.10 extension operators; file:line citations live on the operator
 docstrings they delegate to."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from tp_integ_data_pipeline_spark.operators.privacy import k_anonymity_report
 from tp_integ_data_pipeline_spark.operators.quality_audit import (
@@ -26,9 +29,9 @@ from tp_integ_data_pipeline_spark.operators.rank_sketch import (
 )
 from tp_integ_data_pipeline_spark.operators.sketches import cms_build, cms_estimate
 from tp_integ_data_pipeline_spark.operators.text import tokens
-from tp_integ_data_pipeline_spark.operators.timeseries import robust_outliers
+from tp_integ_data_pipeline_spark.operators.timeseries import exact_moments, robust_outliers
 from tp_integ_data_pipeline_spark.plans.registry import query
-from tp_integ_data_pipeline_spark.sources.fixtures import load_table
+from tp_integ_data_pipeline_spark.sources.fixtures import load_table, register_views
 
 
 # --------------------------------------------------------------------------
@@ -2010,3 +2013,233 @@ def q240_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("mi_raw") / F.nullif(F.col("h_joint"), F.lit(0.0)), 6) + 0
         ).alias("nmi"),
     )
+
+
+# --------------------------------------------------------------------------
+# q24 — discrete median per group (deterministic positional pick)
+# --------------------------------------------------------------------------
+@query(
+    "q24_median_disc",
+    oracle="""
+    SELECT event_type, value AS median_value FROM (
+        SELECT event_type, value,
+               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
+               COUNT(*) OVER (PARTITION BY event_type) AS n
+        FROM events
+    )
+    WHERE rn = (n + 1) // 2
+    ORDER BY event_type
+    """,
+)
+def q24_median_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = W.partitionBy("event_type").orderBy("value", "event_id")
+    wn = W.partitionBy("event_type")
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .withColumn("n", F.count(F.lit(1)).over(wn))
+        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
+        .select("event_type", F.col("value").alias("median_value"))
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# q26 — approximate aggregates, graded through the SQL-checkable
+# error-contract AUDIT (upgraded from rows-only in r14, the q181 shape)
+# --------------------------------------------------------------------------
+# The sketches (HLL++ approx_count_distinct, Greenwald-Khanna-style
+# percentile_approx) are not SQL — their published CONTRACTS are:
+# |hll - exact| within 3x the rsd (0.05 default) of the exact distinct
+# count, and the approx median an ACTUAL data value whose exact rank
+# sits within n/accuracy (+1 tie slack) of 0.5n. Exact counts are SQL;
+# when the sketches honor their contracts the booleans are constant
+# TRUE — so DuckDB predicts the whole relation. At 100 TB a pipeline
+# runs the approx side alone; this audit (one extra broadcast-join
+# pass, itself fully distributed) is what certifies the sketch against
+# its contract at validation SFs.
+@query(
+    "q26_approx_aggregates",
+    oracle="""
+    SELECT l_returnflag,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
+           TRUE AS approx_distinct_ok,
+           TRUE AS median_rank_ok,
+           TRUE AS median_in_data
+    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+    """,
+)
+def q26_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    agg = li.groupBy("l_returnflag").agg(
+        F.approx_count_distinct("l_partkey").alias("approx_parts"),
+        F.percentile_approx("l_extendedprice", 0.5).alias("med"),
+        F.countDistinct("l_partkey").alias("exact_parts"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    audited = (
+        li.select("l_returnflag", "l_extendedprice")
+        .join(F.broadcast(agg), "l_returnflag")
+        .groupBy("l_returnflag", "approx_parts", "med", "exact_parts", "n")
+        .agg(
+            F.sum((F.col("l_extendedprice") < F.col("med")).cast("long")).alias(
+                "cnt_lt"
+            ),
+            F.sum((F.col("l_extendedprice") <= F.col("med")).cast("long")).alias(
+                "cnt_le"
+            ),
+            F.max(F.col("l_extendedprice") == F.col("med")).alias("median_in_data"),
+        )
+    )
+    # with duplicate values rank is an interval [cnt_lt, cnt_le]; the
+    # target 0.5n must land within it, extended by the GK rank-error
+    # n/accuracy (default accuracy 10000) plus 1 for the ceil
+    slack = F.col("n") / F.lit(10000) + F.lit(1)
+    target = F.lit(0.5) * F.col("n")
+    return audited.select(
+        "l_returnflag",
+        F.col("n").cast("long").alias("n"),
+        F.col("exact_parts").cast("long").alias("exact_parts"),
+        (
+            F.abs(F.col("approx_parts") - F.col("exact_parts"))
+            <= F.lit(3 * 0.05) * F.col("exact_parts")
+        ).alias("approx_distinct_ok"),
+        (
+            (target >= F.col("cnt_lt") - slack) & (target <= F.col("cnt_le") + slack)
+        ).alias("median_rank_ok"),
+        "median_in_data",
+    ).orderBy("l_returnflag")
+
+
+# --------------------------------------------------------------------------
+# q136 — grouped-aggregate pandas UDF (UDAF), registered and called
+# from SQL — completes the custom-function family (q37 scalar
+# pandas_udf, q44 applyInPandas, q46 UDTF)
+# --------------------------------------------------------------------------
+@query(
+    "q136_grouped_agg_udaf",
+    oracle="""
+    SELECT l_returnflag,
+           COUNT(*) AS n,
+           ROUND(EXP(AVG(LN(l_extendedprice))), 6) AS gmean_price
+    FROM lineitem
+    GROUP BY l_returnflag
+    ORDER BY l_returnflag
+    """,
+)
+def q136_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom aggregate (geometric mean) as a GROUPED_AGG pandas UDF —
+    the UDAF surface: Arrow ships each group's column once, numpy
+    reduces it, and the result is usable BOTH from the DataFrame agg
+    API and from SQL via spark.udf.register. Geometric mean is chosen
+    as a real custom metric that still has an exact SQL form
+    (exp(avg(ln))) so the UDAF answer is oracle-checkable; rounded to
+    6 dp because the two engines (and any two partition orders) sum
+    logs in different orders. Scale note: GROUPED_AGG materializes one
+    group per Arrow batch — fine for bounded groups like returnflag;
+    unbounded-group metrics should use expression-level partial aggs
+    instead (the q88 pattern)."""
+    import numpy as np
+
+    @F.pandas_udf("double")
+    def gmean(s: pd.Series) -> float:
+        return float(np.exp(np.log(s.to_numpy(dtype="float64")).mean()))
+
+    spark.udf.register("gmean", gmean)
+    register_views(spark, sf_dir, ["lineitem"])
+    # A GROUPED_AGG pandas UDF cannot share an Aggregate with built-in
+    # (non-pandas) aggregates — Spark restriction — so the count rides
+    # a separate 4-row aggregate joined back on the group key.
+    return spark.sql(
+        """
+        WITH g AS (
+            SELECT l_returnflag, ROUND(gmean(l_extendedprice), 6) AS gmean_price
+            FROM lineitem GROUP BY l_returnflag
+        ),
+        c AS (
+            SELECT l_returnflag, COUNT(*) AS n FROM lineitem GROUP BY l_returnflag
+        )
+        SELECT c.l_returnflag, c.n, g.gmean_price
+        FROM c JOIN g USING (l_returnflag)
+        ORDER BY c.l_returnflag
+        """
+    )
+
+
+# --------------------------------------------------------------------------
+# q88 — statistics battery (corr / stddev / covariance per group).
+# Spark's corr()/stddev() stream doubles in partition order, so their
+# low bits differ from DuckDB's sequential pass. Both engines get the
+# IDENTICAL result here by computing the raw moments (n, Σx, Σy, Σxy,
+# Σx², Σy²) as exact DECIMAL sums and deriving the statistics with the
+# same double expression tree — every operation is then an IEEE
+# correctly-rounded function of identical inputs.
+#
+# The moments come from `exact_moments`, whose inputs are cast to
+# DECIMAL *before* multiplying (casting the double product showed up
+# as a 1-ULP corr mismatch). The raw columns are 2-decimal-clean
+# (verified: max |v·100 − round(v·100)| ≤ 1e-9 over the fixture), so
+# DECIMAL(18,2) casts are exact and every product/sum after them is
+# exact integer arithmetic in both engines.
+#
+# Derived statistics are reported at 10 dp (round() in both engines):
+# the moments are identical, but each engine's DECIMAL→DOUBLE cast of
+# the huge Σxy/Σx²/Σy² decimals is separately rounded and can differ
+# in the last bit, which surfaced as a 1-ULP corr mismatch at
+# sf0.001. 10 dp is far inside double precision for these magnitudes
+# and matches the q54 round-before-compare contract.
+# --------------------------------------------------------------------------
+@query(
+    "q88_stats_moments",
+    oracle="""
+    SELECT l_returnflag,
+           n,
+           round(sx / n, 10) AS mean_qty,
+           round((sxx - sx * sx / n) / (n - 1), 10) AS var_qty,
+           round(sqrt((sxx - sx * sx / n) / (n - 1)), 10) AS stddev_qty,
+           round((sxy - sx * sy / n) / (n - 1), 10) + 0 AS covar_qty_price,
+           round((sxy - sx * sy / n)
+             / (sqrt(sxx - sx * sx / n) * sqrt(syy - sy * sy / n)), 10) + 0 AS corr_qty_price
+    FROM (
+        SELECT l_returnflag,
+               COUNT(*) AS n, CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
+               CAST(SUM(x * y) AS DOUBLE) AS sxy, CAST(SUM(x * x) AS DOUBLE) AS sxx, CAST(SUM(y * y) AS DOUBLE) AS syy
+        FROM (SELECT l_returnflag,
+                     CAST(l_quantity AS DECIMAL(18,2)) AS x,
+                     CAST(l_extendedprice AS DECIMAL(18,2)) AS y
+              FROM lineitem)
+        GROUP BY l_returnflag
+    )
+    ORDER BY l_returnflag
+    """,
+)
+def q88_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    l = load_table(spark, sf_dir, "lineitem")
+    base = l.select(
+        "l_returnflag",
+        F.col("l_quantity").cast("decimal(18,2)").alias("x"),
+        F.col("l_extendedprice").cast("decimal(18,2)").alias("y"),
+    )
+    mom = exact_moments(base, "l_returnflag")
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
+    return mom.select(
+        "l_returnflag",
+        "n",
+        F.round(sx / n, 10).alias("mean_qty"),
+        F.round((sxx - sx * sx / n) / (n - 1), 10).alias("var_qty"),
+        F.round(F.sqrt((sxx - sx * sx / n) / (n - 1)), 10).alias("stddev_qty"),
+        # + 0.0 normalizes IEEE -0.0: DuckDB's ROUND keeps the sign of a
+        # tiny-negative pre-image, Spark's BigDecimal round drops it —
+        # numerically equal, hash-different (the q126 round-5 lesson).
+        (F.round((sxy - sx * sy / n) / (n - 1), 10) + F.lit(0.0)).alias("covar_qty_price"),
+        (
+            F.round(
+                (sxy - sx * sy / n)
+                / (F.sqrt(sxx - sx * sx / n) * F.sqrt(syy - sy * sy / n)),
+                10,
+            )
+            + F.lit(0.0)
+        ).alias("corr_qty_price"),
+    ).orderBy("l_returnflag")

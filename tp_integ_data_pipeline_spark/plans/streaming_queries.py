@@ -4,7 +4,9 @@ These run REAL streaming plans (file micro-batch source → stateful
 operators → memory sink, availableNow trigger) synchronously and
 return the final result table, so the driver's batch-style compare
 still applies. The events file is staged into a temp dir because the
-fixture dir mixes all tables.
+fixture dir mixes all tables. The one batch query here, q63's
+session_window, sits beside its streaming twin q232: both answer to
+one oracle.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql.types import StructType
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.plans.relational import dsum_sql
 from tp_integ_data_pipeline_spark.plans.session_cache import per_session
-from tp_integ_data_pipeline_spark.sources.fixtures import file_schema, scratch_dir
+from tp_integ_data_pipeline_spark.sources.fixtures import file_schema, load_table, scratch_dir
 from tp_integ_data_pipeline_spark.streaming.ingest import run_stream_to_memory
 
 
@@ -217,17 +219,10 @@ def q64_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_integ_data_pipeline_spark.streaming.stateful import stateful_user_counter
 
     stream = _events_stream(spark, sf_dir)
-    name = f"q64_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_user_counter(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    out = run_stream_to_memory(
+        stateful_user_counter(stream), f"q64_out_{uuid.uuid4().hex[:8]}", "update"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id")
+    return out.orderBy("user_id")
 
 
 @query(
@@ -433,9 +428,11 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q232_stream_session_window",
-    oracle="""
+# --------------------------------------------------------------------------
+# q63/q232 — session windows (10-minute gap), batch and streaming: one
+# gap-island oracle for both
+# --------------------------------------------------------------------------
+_SESSION_WINDOW_SQL = """
     WITH g AS (
         SELECT user_id, ts, event_id,
                CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER
@@ -453,8 +450,23 @@ def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
     FROM s GROUP BY user_id, sess_id
     ORDER BY user_id, session_start
-    """,
-)
+    """
+
+
+@query("q63_session_window", oracle=_SESSION_WINDOW_SQL)
+def q63_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native session_window (10-minute gap) — oracle reproduces the
+    merge semantics with gap-island SQL."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
+        .orderBy("user_id", "session_start")
+    )
+
+
+@query("q232_stream_session_window", oracle=_SESSION_WINDOW_SQL)
 def q232_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4/T5: STREAMING session windows (10-minute gap) with watermarked
     append output — the stateful window kind whose state merges as

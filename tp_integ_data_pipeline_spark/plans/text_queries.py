@@ -1,11 +1,12 @@
 """Text-analysis (X4) and multimodal (X5) queries over `documents`:
 text statistics and quality signals, inverted-index and BM25 search,
-image and audio payload analysis."""
+image and audio payload analysis, and a Python UDTF tokenizer."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import udtf
 
 from tp_integ_data_pipeline_spark.operators.dedup import LINE_W, segment_blocks
 from tp_integ_data_pipeline_spark.operators.multimodal import (
@@ -668,3 +669,47 @@ def q225_audio_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_frames",
         (F.col("doc_id") % 5 == 0).alias("planted"),
     ).orderBy("doc_id", "start_frame")
+
+
+# --------------------------------------------------------------------------
+# q46 — Python UDTF (§2.9 UDTF surface)
+# --------------------------------------------------------------------------
+@udtf(returnType="tok string, pos int")
+class SplitTokens:
+    """Python UDTF (Spark 4): one row per token with its position —
+    the table-function generalization of the reference's row-wise
+    Series.apply surface."""
+
+    def eval(self, text: str):
+        if text:
+            for i, tok in enumerate(text.split(" ")):
+                yield tok, i
+
+
+@query(
+    "q46_udtf_tokens",
+    oracle="""
+    SELECT tok, COUNT(*) AS n
+    FROM (
+        SELECT unnest(string_split(text, ' ')) AS tok,
+               unnest(range(len(string_split(text, ' ')))) AS pos
+        FROM documents
+    )
+    WHERE pos < 3
+    GROUP BY tok
+    ORDER BY tok
+    """,
+)
+def q46_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leading-token histogram via a LATERAL Python UDTF join."""
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    spark.udtf.register("split_tokens", SplitTokens)
+    return spark.sql(
+        """
+        SELECT s.tok, COUNT(*) AS n
+        FROM documents, LATERAL split_tokens(text) s
+        WHERE s.pos < 3
+        GROUP BY s.tok
+        ORDER BY s.tok
+        """
+    )

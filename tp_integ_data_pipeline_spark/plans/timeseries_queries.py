@@ -1,6 +1,7 @@
 """Time-series surface over the events table: regular-grid resampling
 with gap fill + forward fill (the hypertable `time_bucket_gapfill` /
-`locf` verb), linear interpolation, as-of joins, decayed aggregates,
+`locf` verb), linear interpolation, as-of joins, sliding windows,
+decayed aggregates,
 trend lines, gaps-and-islands, CUSUM changepoints, trailing
 percentiles and seasonal decomposition. No reference-repo counterpart
 — SURVEY.md §2.10 extension surface; q12 (lag gaps) detects holes,
@@ -15,7 +16,7 @@ from pyspark.sql.window import Window as W
 
 from tp_integ_data_pipeline_spark.operators.asof import asof_join
 from tp_integ_data_pipeline_spark.operators.islands import id_gaps
-from tp_integ_data_pipeline_spark.operators.timeseries import interpolate_linear
+from tp_integ_data_pipeline_spark.operators.timeseries import exact_moments, interpolate_linear
 from tp_integ_data_pipeline_spark.plans.registry import query
 from tp_integ_data_pipeline_spark.sources.fixtures import load_table
 
@@ -381,12 +382,10 @@ def q189_trend_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type least-squares trend of value over time:
     slope (per day), intercept (at the 2024-01-01 origin), and R² —
     the drift-detection regression a metrics pipeline fits per
-    series. The q88 determinism recipe: inputs cast to DECIMAL
-    (microsecond ints, 2-dp values), moments summed EXACTLY in
-    DECIMAL (order-independent — partial-agg order can't flip a
-    bit), and the closed-form double arithmetic mirrored expression-
-    for-expression in both engines, so even cancellation-heavy terms
-    are bit-identical. One map-side-combined rollup, row-local
+    series. Inputs cast to DECIMAL (microsecond ints, 2-dp values),
+    moments from `exact_moments`, and the closed-form double
+    arithmetic mirrored expression-for-expression in both engines, so
+    even cancellation-heavy terms are bit-identical. Row-local
     finish."""
     ev = load_table(spark, sf_dir, "events")
     base_us = F.unix_micros(F.lit("2024-01-01 00:00:00").cast("timestamp"))
@@ -395,15 +394,7 @@ def q189_trend_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") - base_us).cast("decimal(19,0)").alias("x"),
         F.col("value").cast("decimal(18,2)").alias("y"),
     )
-    x, y = F.col("x"), F.col("y")
-    mom = base.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
+    mom = exact_moments(base, "event_type")
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     slope_us = (n * sxy - sx * sy) / (n * sxx - sx * sx)
@@ -672,4 +663,77 @@ def q229_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(F.col("n") - F.col("trend") - e, 6) + 0).alias("residual"),
         )
         .orderBy("day")
+    )
+
+
+# --------------------------------------------------------------------------
+# q27 — as-of join (backward): last click before each purchase
+# --------------------------------------------------------------------------
+@query(
+    "q27_asof_join",
+    oracle="""
+    WITH tagged AS (
+        SELECT user_id, ts, event_id, 0 AS side, ts AS r_ts
+        FROM events WHERE event_type = 'click'
+        UNION ALL
+        SELECT user_id, ts, event_id, 1 AS side, NULL AS r_ts
+        FROM events WHERE event_type = 'purchase'
+    ),
+    w AS (
+        SELECT *,
+               LAST_VALUE(r_ts IGNORE NULLS) OVER (
+                   PARTITION BY user_id ORDER BY ts, side, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS asof_ts
+        FROM tagged
+    )
+    SELECT event_id, user_id, asof_ts AS last_click_ts
+    FROM w WHERE side = 1
+    ORDER BY event_id
+    """,
+)
+def q27_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "event_id")
+    # click_id breaks ties between clicks at one ts; the click's ts is
+    # the carried right value
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("last_click_ts"),
+    )
+    joined = asof_join(
+        purchases, clicks, key="user_id", left_ts="ts", right_ts="ts",
+        right_seq="click_id", right_vals=["last_click_ts"],
+    )
+    return joined.select("event_id", "user_id", "last_click_ts").orderBy("event_id")
+
+
+# --------------------------------------------------------------------------
+# q62 — sliding time windows (the session windows are q63/q232)
+# --------------------------------------------------------------------------
+@query(
+    "q62_sliding_window",
+    oracle="""
+    SELECT win_start, event_type, COUNT(*) AS n
+    FROM (
+        SELECT unnest([time_bucket(INTERVAL '15 minutes', ts),
+                       time_bucket(INTERVAL '15 minutes', ts) - INTERVAL '15 minutes'])
+                   AS win_start,
+               event_type
+        FROM events
+    )
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+)
+def q62_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """30-minute windows sliding every 15 — each event lands in 2."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("win_start"), "event_type", "n")
+        .orderBy("win_start", "event_type")
     )

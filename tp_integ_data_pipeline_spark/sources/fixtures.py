@@ -112,33 +112,28 @@ def _spread_unsplittable_scan(spark: SparkSession, df: DataFrame, path: str) -> 
     The spread is a per-consumer choice bound in the plan: the
     gram/shingle/token and vector consumers win (local[4], sf0.1: q57
     3.8 -> 1.5 s, q198 3.0 -> 1.2 s), while on consumers whose map work
-    is light the extra exchange costs more than it saves."""
-    try:
-        size = os.path.getsize(path)
-        max_split = parse_size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-        # lower bound: on a small file the 32-task wave costs more
-        # than the serial map work it spreads (the sf0.01 corpora stay
-        # single-task)
-        if size > max_split or size < _SPREAD_MIN_BYTES:
-            return df
-        # FIXED partition count, not defaultParallelism: the spread
-        # changes which rows fold together in first-level float
-        # partials, so the layout must be a pure function of the file
-        # (the r4 determinism lesson — q173's ROUND(AVG) flipped one
-        # ULP when the layout followed core count). Round-robin from a
-        # single-split scan is deterministic (file order in, fixed
-        # cycle out, sortBeforeRepartition pinning retries), so a
-        # constant count makes every downstream fold identical on any
-        # machine/core count.
-        return df.repartition(_SPREAD_PARTITIONS)
-    except Exception as exc:  # pragma: no cover - conservative fallback
-        # A silently-disabled spread looks exactly like a performance
-        # regression (r15 ADVICE): make the fallback visible once.
-        global _SPREAD_FALLBACK_WARNED
-        if not _SPREAD_FALLBACK_WARNED:
-            _SPREAD_FALLBACK_WARNED = True
-            print(f"[fixtures] corpus-scan spread disabled: {exc!r}")
+    is light the extra exchange costs more than it saves.
+
+    ``load_table`` has stat'ed the file already (``file_schema``), so a
+    malformed ``spark.sql.files.maxPartitionBytes`` is the one thing
+    left that can raise here, and it does."""
+    size = os.path.getsize(path)
+    max_split = parse_size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    # lower bound: on a small file the 32-task wave costs more
+    # than the serial map work it spreads (the sf0.01 corpora stay
+    # single-task)
+    if size > max_split or size < _SPREAD_MIN_BYTES:
         return df
+    # FIXED partition count, not defaultParallelism: the spread
+    # changes which rows fold together in first-level float
+    # partials, so the layout must be a pure function of the file
+    # (the r4 determinism lesson — q173's ROUND(AVG) flipped one
+    # ULP when the layout followed core count). Round-robin from a
+    # single-split scan is deterministic (file order in, fixed
+    # cycle out, sortBeforeRepartition pinning retries), so a
+    # constant count makes every downstream fold identical on any
+    # machine/core count.
+    return df.repartition(_SPREAD_PARTITIONS)
 
 
 _SPREAD_MIN_BYTES = 512 * 1024
@@ -146,8 +141,6 @@ _SPREAD_MIN_BYTES = 512 * 1024
 # Deterministic spread width (see _spread_unsplittable_scan): a
 # constant, so the float-fold layout never follows the environment.
 _SPREAD_PARTITIONS = 32
-
-_SPREAD_FALLBACK_WARNED = False
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=FIXTURE_TABLES) -> None:

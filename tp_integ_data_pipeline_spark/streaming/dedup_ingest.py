@@ -48,7 +48,7 @@ from tp_integ_data_pipeline_spark.operators.dedup import (
 )
 from tp_integ_data_pipeline_spark.operators.neardup_index import NearDupIndex
 from tp_integ_data_pipeline_spark.sources.lake import DataLake
-from tp_integ_data_pipeline_spark.streaming.ingest import _start_file_stream
+from tp_integ_data_pipeline_spark.streaming.ingest import start_file_stream
 
 
 def dedup_ingest_batch(
@@ -177,6 +177,6 @@ def start_neardup_ingest(
             verify=verify,
         )
 
-    return _start_file_stream(
+    return start_file_stream(
         spark, source_dir, schema, sink, max_files_per_trigger, checkpoint_dir, interval_seconds
     )

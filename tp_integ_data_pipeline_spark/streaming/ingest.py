@@ -72,12 +72,12 @@ def start_microbatch_ingest(
     # Restart-safe with a checkpoint: source offsets are checkpointed,
     # and the anti-join dedup inside the sink makes batch replay
     # idempotent → effectively-once lake appends across crashes.
-    return _start_file_stream(
+    return start_file_stream(
         spark, source_dir, schema, sink, max_files_per_trigger, checkpoint_dir, interval_seconds
     )
 
 
-def _start_file_stream(
+def start_file_stream(
     spark: SparkSession,
     source_dir: str,
     schema,

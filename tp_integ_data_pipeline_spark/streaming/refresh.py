@@ -76,7 +76,7 @@ from tp_integ_data_pipeline_spark.operators.admission import (
     suite_grams,
 )
 from tp_integ_data_pipeline_spark.sources.fixtures import scratch_dir
-from tp_integ_data_pipeline_spark.streaming.ingest import _start_file_stream
+from tp_integ_data_pipeline_spark.streaming.ingest import start_file_stream
 
 # Micro-batch spread width (see admit_batch): fixed, widen-only. The
 # drain's outputs are integer/boolean relations, so unlike the corpus
@@ -400,7 +400,7 @@ def run_refresh_drain(
         if fault_hook is not None:
             fault_hook(int(epoch_id), "after_commit_marker")
 
-    _start_file_stream(spark, staging, staged.schema, admit_batch, 1, ckpt, None).awaitTermination()
+    start_file_stream(spark, staging, staged.schema, admit_batch, 1, ckpt, None).awaitTermination()
     # epoch=N partition dirs exist only for write idempotency — select
     # the explicit data-column list (never drop("epoch"), which would
     # eat a real column of that name) so callers see the batch schema
